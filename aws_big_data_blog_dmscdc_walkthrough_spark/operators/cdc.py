@@ -14,7 +14,7 @@ Spark-first re-expression of the reference incremental merge
   and Op != 'D'`` rule (DMSCDC_LoadIncremental.py:71-73);
 - instead of the reference's driver-side ``collect()`` of impacted file
   names and ``coalesce(1)`` single-file rewrite, the merge prunes the
-  target with a *broadcast semi-join* on the batch's distinct keys: only
+  target with a *broadcast semi-join* on the batch's keys: only
   impacted target rows enter the window shuffle; untouched rows are
   unioned back untouched (and, in the lake-write path, never rewritten).
   At 100 TB this is the difference between shuffling the change batch
@@ -34,11 +34,17 @@ OP_UPDATE = "U"
 OP_DELETE = "D"
 
 # Change batches are normally tiny next to the target, so broadcasting
-# their distinct keys is the right default — but a backfill / bulk-reload
-# batch with 10^8+ distinct PKs would OOM the driver if broadcast
-# unconditionally. Above this estimated size the key joins fall back to
-# a plain shuffled semi/anti join (AQE still converts back to broadcast
-# at runtime if the post-distinct set turns out small).
+# their keys is the right default — but a backfill / bulk-reload batch
+# with 10^8+ PKs would OOM the driver if broadcast unconditionally. Above
+# this estimated size the key joins fall back to a plain shuffled
+# semi/anti join (AQE still converts back to broadcast at runtime if the
+# key set turns out small).
+# The key frames are the RAW key multiset (``changes.select(*pks)``, no
+# distinct: semi/anti joins ignore duplicates), so a batch with many ops
+# per key broadcasts each key once per op. That is bounded by the
+# batch's row count, and the guard below already sees it: Catalyst's
+# size estimate is the pre-distinct one either way (size-only stats do
+# not shrink through an Aggregate).
 BROADCAST_KEYS_MAX_BYTES = 64 << 20
 
 # Catalyst reports spark.sql.defaultSizeInBytes (Long.MaxValue, possibly
@@ -88,22 +94,6 @@ def stamp_initial(df: DataFrame, op_col: str = OP_COL) -> DataFrame:
     Mirrors DMSCDC_LoadInitial.py:31 (``withColumn("Op", lit("I"))``).
     """
     return df.withColumn(op_col, F.lit(OP_INSERT))
-
-
-def sequence_changes(
-    df: DataFrame,
-    primary_keys: Sequence[str],
-    order_by: Sequence[str],
-    rownum_col: str = "_rownum",
-) -> DataFrame:
-    """Number multiple operations on the same key within a batch.
-
-    Mirrors DMSCDC_LoadIncremental.py:62,66 (``row_number`` over
-    ``partition by pk order by sortpath``): the largest rownum is the
-    latest operation for that key.
-    """
-    window = Window.partitionBy(*primary_keys).orderBy(*order_by)
-    return df.withColumn(rownum_col, F.row_number().over(window))
 
 
 def latest_changes(

@@ -1870,8 +1870,10 @@ def _substring_dup_direct(
         if sh.size == 0:
             yield empty
             return
-        # duplicate ids merge like the distributed groupBy(id, _h)
-        codes, uniq = pd.factorize(pdf[id_col], sort=False)
+        # duplicate ids merge like the distributed groupBy(id, _h), and
+        # null ids form one group of their own there too (the default NA
+        # sentinel -1 would make np.bincount raise)
+        codes, uniq = pd.factorize(pdf[id_col], sort=False, use_na_sentinel=False)
         doc_of_win = codes[sh_row]
         # corpus-wide per-hash totals: a window is duplicated iff its
         # hash occurs >= 2 times anywhere (same doc included)

@@ -21,7 +21,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..sources import catalog, lake_writer, landing
 from ..state.store import JsonStateStore, TableState
@@ -41,22 +40,32 @@ class RunReport:
     tables: list[TableReport] = field(default_factory=list)
 
 
-def prepare_dms_batch(df, primary_keys):
+def prepare_dms_batch(df):
     """Stamp op/seq the way the reference sequences DMS files: the file
     name is the major order (lexical = chronological for DMS), the row's
     physical position WITHIN the file the minor
     (DMSCDC_LoadIncremental.py:62-66). Rows must carry an ``Op`` column;
-    output carries ``op`` + a struct ``_seq`` usable by apply_changes.
+    output carries ``op`` + a struct ``_seq = (_file, _fpos)`` usable by
+    apply_changes.
+
+    The reference numbers each key's ops with ``row_number() over
+    (partition by pk order by sortpath)``; only the ORDER of a key's ops
+    matters to latest-wins, and the (file, position) pair the window
+    sorts by already gives that order. So the pair itself is the seq: no
+    window, hence no shuffle in any plan that reads the batch. It is also
+    delivery-invariant — a row's seq does not depend on which other
+    files were read with it (a per-key counter does).
 
     The within-file position comes from the ``_metadata.row_index``
     hidden column where the format provides it (Parquet — DMS's parquet
     S3 target): ordering by file name alone leaves same-key rows from
-    ONE file in nondeterministic post-shuffle order, so an I-then-U
-    pair in a single file could rank the stale insert as latest.
+    ONE file in nondeterministic order, so an I-then-U pair in a single
+    file could rank the stale insert as latest.
     Formats without row_index (JSON/CSV landings) fall back to
     ``monotonically_increasing_id`` captured AT SCAN TIME — it encodes
     (scan partition, row-in-partition), which preserves within-file
-    row order for unsplit files (CDC batch files are small). Frames with
+    row order for unsplit files (CDC batch files are small), though its
+    values depend on the scan's partitioning. Frames with
     no ``_metadata`` at all (non-file sources, e.g. a createDataFrame
     batch in tests) fall back to ``input_file_name()`` (empty string
     there — the scan-time monotonic id then carries the ordering alone).
@@ -71,16 +80,12 @@ def prepare_dms_batch(df, primary_keys):
         staged = df.withColumn("_file", F.input_file_name()).withColumn(
             "_fpos", F.monotonically_increasing_id()
         )
-    w = Window.partitionBy(*primary_keys).orderBy(
-        F.col("_file"), F.col("_fpos")
-    )
     return (
-        staged.withColumn("_rownum", F.row_number().over(w))
-        .withColumn("_seq", F.struct(F.col("_file"), F.col("_rownum")))
+        staged.withColumn("_seq", F.struct(F.col("_file"), F.col("_fpos")))
         .withColumnRenamed("Op", "op")
         # also drop a MATERIALIZED _metadata column (the streaming path
         # selects it explicitly; on raw file scans this is a no-op)
-        .drop("_file", "_fpos", "_rownum", "_metadata")
+        .drop("_file", "_fpos", "_metadata")
     )
 
 
@@ -150,8 +155,7 @@ def process_table(
             )
         else:
             changes = prepare_dms_batch(
-                landing.read_incremental(spark, folder, new_files, state.schema_ddl),
-                state.primary_keys,
+                landing.read_incremental(spark, folder, new_files, state.schema_ddl)
             )
             lake_writer.merge_incremental(
                 spark,

@@ -1146,9 +1146,11 @@ def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(i, COV_DIMS)
         ]
     )
+    # try_divide: a constant dimension (zero variance) gets a NULL corr,
+    # as the DuckDB oracle's division gives, not an ANSI divide-by-zero
     terms = ", ".join(
         f"named_struct('i', {i}, 'j', {j}, 'cov', _c{i}_{j}, "
-        f"'corr', _c{i}_{j} / (sqrt(_c{i}_{i}) * sqrt(_c{j}_{j})))"
+        f"'corr', try_divide(_c{i}_{j}, sqrt(_c{i}_{i}) * sqrt(_c{j}_{j})))"
         for i in range(COV_DIMS)
         for j in range(i, COV_DIMS)
     )
@@ -1254,9 +1256,10 @@ def _emb_covariance_direct(emb) -> DataFrame:
             cols["i"].append(i)
             cols["j"].append(j)
             cols["cov"].append(cov[(i, j)])
-            cols["corr"].append(
-                cov[(i, j)] / (np.sqrt(cov[(i, i)]) * np.sqrt(cov[(j, j)]))
-            )
+            # a zero divisor (a constant dimension) is NULL, as try_divide
+            # gives in the distributed plan; numpy would give inf/NaN
+            den = np.sqrt(cov[(i, i)]) * np.sqrt(cov[(j, j)])
+            cols["corr"].append(None if den == 0 else cov[(i, j)] / den)
         yield pd.DataFrame(cols)
 
     return (

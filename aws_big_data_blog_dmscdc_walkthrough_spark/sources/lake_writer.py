@@ -168,7 +168,7 @@ def write_initial(
             spark, out_path, recursive=bool(partition_keys)
         )
         stats = manifest_mod.stats_for_commit(
-            spark, out_path, files, list(stats_cols)
+            spark, out_path, files, list(stats_cols), schema=stamped.schema
         )
         manifest_mod.commit_manifest(
             spark, out_path, files, stats=stats,
@@ -339,7 +339,7 @@ def merge_on_read_incremental(
         return  # empty batch: nothing to commit
     live = man["files"] + added
     stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), man
+        spark, out_path, live, list(stats_cols), man, schema=survivors.schema
     )
     carried = man.get("delete_files") or []
     manifest_mod.commit_manifest(
@@ -783,7 +783,8 @@ def scd2_merge_on_read(
         ]
         live_files = man["files"] + added
         stats = manifest_mod.stats_for_commit(
-            spark, out_path, live_files, list(stats_cols), man
+            spark, out_path, live_files, list(stats_cols), man,
+            schema=appended.schema,
         )
         carried = man.get("delete_files") or []
         # merge into the carried properties: bucket count validated
@@ -870,7 +871,7 @@ def _append_with_optional_manifest(
         added = [f for f in after if f not in before]
         live = (prev["files"] if prev else sorted(before)) + added
         stats = manifest_mod.stats_for_commit(
-            spark, out_path, live, list(stats_cols), prev
+            spark, out_path, live, list(stats_cols), prev, schema=out.schema
         )
         manifest_mod.commit_manifest(
             spark, out_path, live, stats=stats, schema_json=out.schema.json(),
@@ -943,10 +944,11 @@ def _merge_partitioned(
     # NULLs. Type changes raise (see cdc.align_schemas).
     target, changes = cdc.align_schemas(target, changes, extra_cols=(op_col, seq_col))
 
-    # size-guarded broadcast: a backfill batch with 10^8+ distinct PKs
-    # degrades to a shuffled semi-join instead of OOMing the driver
+    # size-guarded broadcast: a backfill batch with 10^8+ PKs degrades
+    # to a shuffled semi-join instead of OOMing the driver. No distinct:
+    # the semi/anti joins ignore duplicate keys (cdc.BROADCAST_KEYS_MAX_BYTES)
     change_keys = cdc._maybe_broadcast(
-        changes.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
+        changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
     )
     new_parts = changes.select(*part_cols).distinct()
     old_parts = (
@@ -981,14 +983,26 @@ def _merge_partitioned(
 
     merged = cdc.apply_changes(
         impacted_target, changes, pks, seq_col, op_col, prune_keys=change_keys
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    if use_manifest:
+        _commit_partitioned_merge(
+            spark, merged, out_path, part_cols, impacted_rows,
+            prev_manifest, before_files, retain_history, stats_cols,
+        )
+        return
+    merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if use_manifest:
-            _commit_partitioned_merge(
-                spark, merged, out_path, part_cols, impacted_rows,
-                prev_manifest, before_files, retain_history, stats_cols,
-            )
-            return
+        # an impacted partition whose rows were ALL deleted (or moved away)
+        # yields zero merged rows, so dynamic overwrite never touches its
+        # directory — it is dropped explicitly below. The partition list
+        # is collected BEFORE the write: this collect fills the cache the
+        # write then reads, whereas after it the write's recacheByPath
+        # has dropped the cache and the collect would re-run the whole
+        # merge against the just-rewritten files.
+        merged_parts = {
+            tuple(r[c] for c in part_cols)
+            for r in merged.select(*part_cols).distinct().collect()
+        }
         # dynamic overwrite: only partitions present in `merged` swap.
         # The per-write option (Spark 3.0+) makes this safe under a
         # caller-owned vanilla session too — static overwrite here would
@@ -999,14 +1013,6 @@ def _merge_partitioned(
             .partitionBy(*part_cols)
             .parquet(out_path)
         )
-        # an impacted partition whose rows were ALL deleted (or moved away)
-        # yields zero merged rows, so dynamic overwrite never touches its
-        # directory — drop it explicitly. merged is persisted, so this
-        # reads the cache, not the just-replaced files.
-        merged_parts = {
-            tuple(r[c] for c in part_cols)
-            for r in merged.select(*part_cols).distinct().collect()
-        }
         emptied = [
             r for r in impacted_rows
             if tuple(r[c] for c in part_cols) not in merged_parts
@@ -1058,7 +1064,8 @@ def _commit_partitioned_merge(
     }
     live = [f for f in prev_live if f not in superseded] + added
     stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), prev_manifest
+        spark, out_path, live, list(stats_cols), prev_manifest,
+        schema=merged.schema,
     )
     manifest_mod.commit_manifest(
         spark, out_path, live, stats=stats, schema_json=merged.schema.json(),
@@ -1092,7 +1099,7 @@ def _merge_unpartitioned_cow(
     """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87).
 
     1. discover impacted files: ``input_file_name()`` tag + broadcast
-       semi-join on the batch's distinct keys, column-pruned to pk only;
+       semi-join on the batch's keys, column-pruned to pk only;
     2. merge ONLY those files' rows with the batch;
     3. append the survivors as new files (the write commits through
        Spark's ``_temporary`` staging, so readers never see partial
@@ -1129,7 +1136,7 @@ def _merge_unpartitioned_cow(
         target_df = spark.read.option("mergeSchema", "true").parquet(out_path)
     tagged = target_df.withColumn("_file", F.input_file_name())
     change_keys = cdc._maybe_broadcast(
-        changes.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
+        changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
     )
     impacted_files = [
         r["_file"]
@@ -1140,7 +1147,9 @@ def _merge_unpartitioned_cow(
     ]
 
     if impacted_files:
-        old = spark.read.option("mergeSchema", "true").parquet(*impacted_files)
+        # target_df's schema is already merged over every live file, so
+        # the impacted subset reads with it — no second inference job
+        old = spark.read.schema(target_df.schema).parquet(*impacted_files)
         if prev_manifest is not None:
             # the impacted-file re-read bypasses read_table, so apply the
             # committed deletion vectors here too — otherwise DV-deleted
@@ -1173,7 +1182,8 @@ def _merge_unpartitioned_cow(
         )
         live = [f for f in prev_live if f not in impacted_names] + added
         stats = manifest_mod.stats_for_commit(
-            spark, out_path, live, list(stats_cols), prev_manifest
+            spark, out_path, live, list(stats_cols), prev_manifest,
+            schema=merged.schema,
         )
         manifest_mod.commit_manifest(
             spark, out_path, live, stats=stats, schema_json=merged.schema.json()
@@ -1397,7 +1407,7 @@ def compact_table(
         after = manifest_mod.list_data_files(spark, path, recursive)
         added = [f for f in after if f not in before]
         stats = manifest_mod.stats_for_commit(
-            spark, path, added, list(stats_cols)
+            spark, path, added, list(stats_cols), schema=out.schema
         )
         manifest_mod.commit_manifest(
             spark, path, added, stats=stats, schema_json=out.schema.json(),

@@ -40,6 +40,7 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_mmanifest.json"
 DELETES_DIR = "_deletes"
@@ -159,13 +160,21 @@ def _pad_temporal(s):
 
 
 def compute_file_stats(
-    spark: SparkSession, path: str, files: list[str], cols: list[str]
+    spark: SparkSession,
+    path: str,
+    files: list[str],
+    cols: list[str],
+    schema: StructType,
 ) -> dict[str, dict]:
     """Per-file min/max of ``cols`` — ONE distributed aggregation
     grouped on ``input_file_name()``, not a driver loop over footers, so
     stats collection costs a single scan however many files there are.
     Output rows are bounded by file count (small), so the collect is
     driver-safe.
+
+    ``schema`` is the committed table's schema: the files are read with
+    its types for ``cols`` only, so no schema-inference job runs (a file
+    written before a column was added reads it as NULL).
 
     ``files`` may be partition-relative paths; output keys match the
     given names (Spark part files carry write-UUID basenames, so a
@@ -182,7 +191,8 @@ def compute_file_stats(
         aggs.append(F.min(c).alias(f"_min_{c}"))
         aggs.append(F.max(c).alias(f"_max_{c}"))
     rows = (
-        spark.read.option("mergeSchema", "true").parquet(*paths)
+        spark.read.schema(StructType([schema[c] for c in cols]))
+        .parquet(*paths)
         .groupBy(F.input_file_name().alias("_f"))
         .agg(*aggs)
         .collect()
@@ -206,17 +216,20 @@ def stats_for_commit(
     files: list[str],
     cols: list[str],
     prev: dict | None = None,
+    *,
+    schema: StructType,
 ) -> dict[str, dict] | None:
     """Stats map for a new commit: reuse the previous manifest's stats
     for files that are still live (data files are immutable once
     written), scan ONLY the newly added ones. Keeps per-commit stats
-    cost proportional to the delta, not the table."""
+    cost proportional to the delta, not the table. ``schema`` is the
+    commit's table schema (see :func:`compute_file_stats`)."""
     if not cols:
         return None
     prev_stats = (prev or {}).get("stats", {})
     have = {f: prev_stats[f] for f in files if f in prev_stats}
     missing = [f for f in files if f not in have]
-    new = compute_file_stats(spark, path, missing, cols) if missing else {}
+    new = compute_file_stats(spark, path, missing, cols, schema) if missing else {}
     return {**have, **new}
 
 

@@ -95,11 +95,12 @@ def start_cdc_stream(
         if batch_df.isEmpty():
             return
         if history_mode:
-            # NOT prepare_dms_batch's _seq: its rownum is a per-key
-            # counter over however many files this delivery grouped
-            # together, so the same change row gets a DIFFERENT seq when
-            # a replay re-batches the files — and history seqs persist.
-            # (file_path, row_index) is file-physical: delivery-invariant.
+            # The same file-physical (file_path, row_index) pair as
+            # prepare_dms_batch's _seq — delivery-invariant, so a replay
+            # that re-batches the files re-derives identical seqs — but
+            # flattened to one byte-ordered string: history seqs persist
+            # in the manifest's JSON high-water mark, which holds str/int
+            # only (lake_writer._seq_mark), not a struct.
             sess = batch_df.sparkSession
             flat = (
                 batch_df.withColumn(
@@ -134,7 +135,7 @@ def start_cdc_stream(
                     ),
                 )
             return
-        changes = prepare_dms_batch(batch_df, primary_keys)
+        changes = prepare_dms_batch(batch_df)
         if merge_on_read:
             lake_writer.merge_on_read_incremental(
                 batch_df.sparkSession, changes, out_path, primary_keys,

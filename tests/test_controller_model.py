@@ -1,0 +1,175 @@
+"""Controller path against a plain-Python latest-wins model.
+
+Four tables — one per table mode the controller serves (keyed
+copy-on-write; keyed + manifest + file stats; keyed + partitioned;
+keyless insert-only) — receive the same DMS landing: a full load, then
+three CDC files over two passes. The files hold same-key chains inside
+one file and across files (I→U, U→U, U→D, D→I), an update that moves a
+row to another partition, and deletes that empty a partition. After
+each pass every lake table must equal the model of the files consumed
+so far.
+"""
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from aws_big_data_blog_dmscdc_walkthrough_spark.pipeline import controller
+from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+from aws_big_data_blog_dmscdc_walkthrough_spark.state.store import JsonStateStore
+
+SCHEMA = "m"
+MODES = {
+    "cow": dict(primary_key="id"),
+    "manifest": dict(
+        primary_key="id", extra={"use_manifest": True, "stats_cols": "id,name"}
+    ),
+    "part": dict(primary_key="id", partition_key="grp"),
+    "keyless": dict(),
+}
+
+LOAD = [(1, "one", "a"), (2, "two", "a"), (3, "three", "b"), (4, "four", "b"),
+        (5, "five", "a"), (6, "six", "c"), (7, "seven", "c"), (8, "eight", "a")]
+
+# (Op, id, name, grp) — delete images carry the key and the old partition
+CDC = [
+    [  # file 1: chains inside one file
+        ("U", 1, "one-1", "a"), ("U", 1, "one-2", "a"),        # U→U
+        ("U", 2, "two-1", "a"), ("D", 2, "two-1", "a"),        # U→D
+        ("I", 20, "twenty", "b"), ("U", 20, "twenty-1", "b"),  # I→U
+        ("D", 3, "three", "b"),
+        ("U", 4, "four-1", "b"),
+        ("U", 5, "five-1", "b"),                               # a → b
+    ],
+    [  # file 2: chains across files
+        ("I", 3, "three-again", "a"),                          # D→I
+        ("U", 4, "four-2", "b"),                               # U→U
+        ("I", 21, "twenty-one", "c"),
+        ("D", 6, "six", "c"), ("D", 7, "seven", "c"),
+    ],
+    [  # file 3, next pass: across passes
+        ("D", 21, "twenty-one", "c"),                          # I→D, c now empty
+        ("U", 20, "twenty-2", "a"),                            # b → a
+        ("I", 22, "twenty-two", "b"),
+    ],
+]
+
+
+def _write(rows, names, path):
+    cols = list(zip(*rows))
+    types = {"Op": pa.string(), "id": pa.int64(), "name": pa.string(), "grp": pa.string()}
+    pq.write_table(
+        pa.table({n: pa.array(c, types[n]) for n, c in zip(names, cols)}), path
+    )
+
+
+def _cdc_name(i):
+    return f"20240101-00000000{i + 1}.parquet"
+
+
+def _land(landing, files):
+    for mode in MODES:
+        d = os.path.join(landing, SCHEMA, mode)
+        os.makedirs(d, exist_ok=True)
+        if not os.path.exists(os.path.join(d, "LOAD00000001.parquet")):
+            _write(LOAD, ["id", "name", "grp"], os.path.join(d, "LOAD00000001.parquet"))
+        for i in files:
+            _write(CDC[i], ["Op", "id", "name", "grp"], os.path.join(d, _cdc_name(i)))
+
+
+def _keyed_model(n_files):
+    state = {r[0]: r for r in LOAD}
+    for rows in CDC[:n_files]:
+        for op, rid, name, grp in rows:
+            if op == "D":
+                state.pop(rid, None)
+            else:
+                state[rid] = (rid, name, grp)
+    return sorted(state.values())
+
+
+def _keyless_model(n_files):
+    out = list(LOAD)
+    for rows in CDC[:n_files]:
+        out += [(rid, name, grp) for op, rid, name, grp in rows if op == "I"]
+    return sorted(out)
+
+
+def _lake_rows(spark, path, mode):
+    df = manifest.read_table(spark, path) if mode == "manifest" else spark.read.parquet(path)
+    return sorted((r.id, r.name, r.grp) for r in df.select("id", "name", "grp").collect())
+
+
+def _check(spark, lake, n_files):
+    for mode in MODES:
+        want = _keyless_model(n_files) if mode == "keyless" else _keyed_model(n_files)
+        assert _lake_rows(spark, f"{lake}/{SCHEMA}/{mode}", mode) == want, mode
+
+
+def test_controller_modes_match_latest_wins_model(spark, tmp_path):
+    landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
+    store = JsonStateStore(str(tmp_path / "state.json"))
+    _land(landing, [])
+    controller.run_once(spark, landing, lake, store)  # registers, inactive
+    for st in store.all():
+        for k, v in MODES[st.table].items():
+            setattr(st, k, v)
+        st.active = True
+        store.put(st)
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(t.did_initial and not t.error for t in report.tables), report
+    _check(spark, lake, 0)
+
+    _land(landing, [0, 1])
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
+    _check(spark, lake, 2)
+
+    _land(landing, [2])
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(t.incremental_files == 1 and not t.error for t in report.tables), report
+    _check(spark, lake, 3)
+    # the deletes emptied partition c: its directory is gone
+    assert not os.path.exists(f"{lake}/{SCHEMA}/part/grp=c")
+
+    # the manifest table's file stats cover every live file and agree
+    # with the rows the file holds
+    path = f"{lake}/{SCHEMA}/manifest"
+    man = manifest.read_manifest(spark, path)
+    assert set(man["stats"]) == set(man["files"])
+    for f, st in man["stats"].items():
+        ids = pq.read_table(os.path.join(path, f), columns=["id"])["id"].to_pylist()
+        assert (st["id"]["min"], st["id"]["max"]) == (min(ids), max(ids))
+
+
+@pytest.fixture()
+def cdc_files(tmp_path):
+    paths = []
+    for i in range(len(CDC)):
+        p = str(tmp_path / _cdc_name(i))
+        _write(CDC[i], ["Op", "id", "name", "grp"], p)
+        paths.append(p)
+    return paths
+
+
+def test_sequencing_plan_has_no_exchange(spark, cdc_files):
+    batch = controller.prepare_dms_batch(spark.read.parquet(*cdc_files))
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_seq_does_not_depend_on_which_files_are_read(spark, cdc_files):
+    def seqs(paths):
+        batch = controller.prepare_dms_batch(spark.read.parquet(*paths))
+        return {(r.op, r.id, r.name): r._seq for r in batch.collect()}
+
+    together = seqs(cdc_files)
+    for p in cdc_files:
+        alone = seqs([p])
+        assert alone == {k: together[k] for k in alone}
+    # and the seq orders the chains the way the files do
+    assert together[("U", 1, "one-1")] < together[("U", 1, "one-2")]
+    assert together[("D", 3, "three")] < together[("I", 3, "three-again")]
+    assert together[("I", 21, "twenty-one")] < together[("D", 21, "twenty-one")]

@@ -119,3 +119,47 @@ def test_emb_covariance_fused_and_distributed_paths_agree(spark):
         dd._scan_sizes = orig
     assert fused and fused == dist
     release_persisted()
+
+
+def test_emb_covariance_paths_agree_on_constant_dimensions(spark, tmp_path):
+    """A constant dimension has zero variance: every corr that divides by
+    it is NULL in both paths (the fused kernel must not emit numpy's
+    inf/NaN), and every other cov/corr double stays bit-identical."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
+
+    src = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
+    emb = np.array(src["embedding"].to_pylist(), dtype=np.float32)
+    const = {3: 0.0, 5: 0.5}
+    for dim, v in const.items():
+        emb[:, dim] = v
+    pq.write_table(
+        src.set_column(
+            src.schema.get_field_index("embedding"),
+            "embedding",
+            pa.array(emb.tolist(), pa.list_(pa.float32())),
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+
+    def run():
+        release_persisted()
+        return sorted(
+            (r.i, r.j, r.cov, r.corr)
+            for r in corpus_ml.emb_covariance(spark, str(tmp_path)).collect()
+        )
+
+    fused = run()  # small scan -> fused path
+    orig = dd._scan_sizes
+    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
+    try:
+        dist = run()
+    finally:
+        dd._scan_sizes = orig
+    assert fused and fused == dist
+    for i, j, _, corr in fused:
+        assert (corr is None) == (i in const or j in const), (i, j, corr)
+    release_persisted()

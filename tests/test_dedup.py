@@ -924,3 +924,36 @@ def test_substring_fused_and_distributed_paths_agree(spark):
         dd._scan_sizes = orig
     assert fused and fused == dist
     dd.release_persisted()
+
+
+def test_substring_fused_and_distributed_paths_agree_on_null_ids(spark):
+    """Null ids form one group of their own in both paths, as the
+    distributed groupBy(id, hash) makes them (the fused kernel's factorize
+    must not drop them into a -1 code)."""
+    from pyspark.sql import functions as F
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = docs.withColumn(
+        "doc_id", F.when(F.col("doc_id") % 7 == 0, None).otherwise(F.col("doc_id"))
+    )
+
+    def run():
+        dd.release_persisted()
+        rows = dd.substring_dup_report(docs, "doc_id", "text", k=8).collect()
+        return sorted(
+            ((r.doc_id is None, r.doc_id or 0), r.n_windows, r.n_dup_windows, r.dup_frac)
+            for r in rows
+        )
+
+    fused = run()  # small scan -> fused path
+    orig = dd._scan_sizes
+    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
+    try:
+        dist = run()
+    finally:
+        dd._scan_sizes = orig
+    assert fused == dist
+    assert sum(1 for r in fused if r[0][0]) == 1  # exactly one null-id row
+    dd.release_persisted()

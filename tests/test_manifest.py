@@ -608,7 +608,7 @@ def test_zorder_compaction_skips_on_both_columns(spark, tmp_path):
     files = manifest.list_data_files(spark, out)
     manifest.commit_manifest(
         spark, out, files,
-        stats=manifest.compute_file_stats(spark, out, files, ["x", "y"]),
+        stats=manifest.compute_file_stats(spark, out, files, ["x", "y"], df.schema),
     )
 
     n_files = lake_writer.compact_table(

@@ -151,7 +151,6 @@ def test_full_flow_with_manifest_and_feed_via_state_flags(spark, env):
     }
 
 
-@pytest.mark.slow
 def test_partitioned_cow_only_touches_impacted_partitions(spark, env):
     _write_initial(spark, env)
     store = JsonStateStore(env["state"])
@@ -192,7 +191,6 @@ def test_partitioned_cow_only_touches_impacted_partitions(spark, env):
     assert got == {(1001, "tools"), (1003, "tools"), (1004, "toys")}
 
 
-@pytest.mark.slow
 def test_multiple_incremental_files_ordered(spark, env):
     _write_initial(spark, env)
     store = JsonStateStore(env["state"])
@@ -575,7 +573,7 @@ def test_same_file_op_order_is_deterministic(spark, tmp_path):
         "Op string, id long, name string",
     ).coalesce(1).write.parquet(src)
     for _ in range(3):  # repeated runs: same winner every time
-        batch = prepare_dms_batch(spark.read.parquet(src), ["id"])
+        batch = prepare_dms_batch(spark.read.parquet(src))
         target = spark.createDataFrame([], "id long, name string")
         merged = cdc.apply_changes(target, batch, ["id"], "_seq")
         rows = {r.id: r.name for r in merged.collect()}
