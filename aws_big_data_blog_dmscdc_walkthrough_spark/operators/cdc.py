@@ -61,11 +61,14 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     Reads the ANALYZED plan's stats, not the optimized plan's: the
     size-only stats visitor propagates the same file-scan bytes through
     either, but the optimizer pass costs ~10 ms of driver time per call
-    (measured: identical estimates, 6× cheaper) — and this probe runs on
-    every merge. Where the two could differ (optimizer-pruned subtrees)
-    the analyzed estimate is LARGER, i.e. conservative: it declines a
-    borderline broadcast rather than risking driver OOM, and AQE still
-    re-broadcasts at runtime if the built side turns out small."""
+    (measured: identical estimates, 6× cheaper) — and this probe runs
+    twice on every keyed lake merge: the key broadcast guard here, and
+    the rewrite's file sizing (``lake_writer._coalesce_to_open_cost``).
+    Where the two could differ (optimizer-pruned subtrees) the analyzed
+    estimate is LARGER, i.e. conservative: it declines a borderline
+    broadcast rather than risking driver OOM (AQE still re-broadcasts
+    at runtime if the built side turns out small), and it sizes a
+    rewrite to more files, never fewer."""
     try:
         return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 - estimate only; caller degrades safely

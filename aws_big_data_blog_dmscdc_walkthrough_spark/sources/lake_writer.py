@@ -3,7 +3,8 @@
 Reference behavior being re-expressed:
   * initial load overwrites, optionally partitioned, after counting
     distinct partitions just to pick a repartition factor
-    (DMSCDC_LoadInitial.py:33-37) — here AQE sizes output instead;
+    (DMSCDC_LoadInitial.py:33-37) — here the scan's split planner sizes
+    it (a scan→write has no shuffle for AQE to coalesce);
   * incremental merge rewrites ONLY the data-lake files containing
     changed keys, then deletes them with boto3 and appends replacements
     with coalesce(1) (DMSCDC_LoadIncremental.py:68-87).
@@ -29,6 +30,11 @@ Scale-correct replacements:
     driver materialization is the impacted-file path list (bounded by
     files actually containing changed keys — the same list the
     reference's boto3 loop holds).
+  * both copy-on-write rewrites coalesce to one task per
+    ``spark.sql.files.openCostInBytes`` of Catalyst's size estimate
+    (``_coalesce_to_open_cost``) instead of the reference's coalesce(1):
+    a small rewrite writes one file per table or touched partition, a
+    large one keeps its parallelism, and no shuffle is added.
 """
 
 from __future__ import annotations
@@ -879,6 +885,22 @@ def _append_with_optional_manifest(
         )
 
 
+def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
+    """Cap a merge rewrite at one task per ``openCostInBytes`` of
+    Catalyst's size estimate, so no rewrite emits files smaller than
+    what the scan planner charges every later reader to open one.
+
+    ``coalesce`` never adds a shuffle or raises the partition count: a
+    rewrite larger than ``openCost × upstream tasks`` keeps its plan
+    unchanged. Frames with no real estimate (placeholder stats) are
+    written as they are."""
+    est = cdc._plan_size_bytes(df)
+    if est is None or est >= cdc._UNKNOWN_SIZE_SENTINEL:
+        return df
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return df.coalesce(max(1, -(-est // conf.filesOpenCostInBytes())))
+
+
 def _merge_partitioned(
     spark: SparkSession,
     changes: DataFrame,
@@ -981,9 +1003,9 @@ def _merge_partitioned(
             F.broadcast(impacted_parts), part_cols, "left_semi"
         )
 
-    merged = cdc.apply_changes(
+    merged = _coalesce_to_open_cost(cdc.apply_changes(
         impacted_target, changes, pks, seq_col, op_col, prune_keys=change_keys
-    )
+    ))
     if use_manifest:
         _commit_partitioned_merge(
             spark, merged, out_path, part_cols, impacted_rows,
@@ -1168,9 +1190,9 @@ def _merge_unpartitioned_cow(
     old = old.select(*data_cols)
     old, changes = cdc.align_schemas(old, changes, extra_cols=(op_col, seq_col))
 
-    merged = cdc.apply_changes(
+    merged = _coalesce_to_open_cost(cdc.apply_changes(
         old, changes, pks, seq_col, op_col, prune_keys=change_keys
-    )
+    ))
     merged.write.mode("append").parquet(out_path)
 
     impacted_names = {f.rsplit("/", 1)[-1] for f in impacted_files}
@@ -1324,11 +1346,12 @@ def compact_table(
 ) -> int:
     """Bin-pack a table's small files toward ``target_file_bytes``.
 
-    Continuous CDC merges accrete small files (every micro-batch appends
-    or swaps a few); scan cost then degrades to file-open overhead. The
-    reference never compacts (its ``coalesce(1)`` per merge IS its
-    compaction, at the cost of single-writer merges). Here compaction is
-    an explicit maintenance pass, like Delta/Iceberg OPTIMIZE:
+    A keyed merge already sizes its rewrite to the scan's open cost
+    (``_coalesce_to_open_cost``), so its tables do not fragment. What
+    still accretes is keyless appends (one file per landing file per
+    batch), and no merge restores clustering: a rewrite mixes updated
+    keys into whatever file they land in. Compaction is the explicit
+    maintenance pass for both, like Delta/Iceberg OPTIMIZE:
 
       * total bytes come from the filesystem listing (no data job);
       * the rewrite repartitions to ceil(bytes / target) output files —

@@ -7,9 +7,12 @@ three CDC files over two passes. The files hold same-key chains inside
 one file and across files (I→U, U→U, U→D, D→I), an update that moves a
 row to another partition, and deletes that empty a partition. After
 each pass every lake table must equal the model of the files consumed
-so far.
+so far, and every keyed merge must have rewritten its table into one
+file per table (or per touched partition): the tables are far below
+one ``openCostInBytes``.
 """
 
+import glob
 import os
 
 import pyarrow as pa
@@ -102,10 +105,28 @@ def _lake_rows(spark, path, mode):
     return sorted((r.id, r.name, r.grp) for r in df.select("id", "name", "grp").collect())
 
 
-def _check(spark, lake, n_files):
+def _data_files(path):
+    """Visible parquet files under ``path``, relative to it."""
+    return [
+        os.path.relpath(p, path)
+        for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
+    ]
+
+
+def _check(spark, lake, n_files, n_load_files):
     for mode in MODES:
         want = _keyless_model(n_files) if mode == "keyless" else _keyed_model(n_files)
         assert _lake_rows(spark, f"{lake}/{SCHEMA}/{mode}", mode) == want, mode
+    # file layout: the keyed merges write one file per table / partition
+    assert len(_data_files(f"{lake}/{SCHEMA}/cow")) == 1
+    man = manifest.read_manifest(spark, f"{lake}/{SCHEMA}/manifest")
+    assert len(man["files"]) == 1, man["files"]
+    part = f"{lake}/{SCHEMA}/part"
+    live = {f"grp={g}" for _, _, g in _keyed_model(n_files)}
+    assert sorted(os.path.dirname(f) for f in _data_files(part)) == sorted(live)
+    assert {n for n in os.listdir(part) if n.startswith("grp=")} == live
+    # keyless appends are not merges: one file per consumed landing file
+    assert len(_data_files(f"{lake}/{SCHEMA}/keyless")) == n_load_files + n_files
 
 
 def test_controller_modes_match_latest_wins_model(spark, tmp_path):
@@ -120,19 +141,18 @@ def test_controller_modes_match_latest_wins_model(spark, tmp_path):
         store.put(st)
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.did_initial and not t.error for t in report.tables), report
-    _check(spark, lake, 0)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    _check(spark, lake, 0, n_load)
 
     _land(landing, [0, 1])
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
-    _check(spark, lake, 2)
+    _check(spark, lake, 2, n_load)
 
     _land(landing, [2])
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.incremental_files == 1 and not t.error for t in report.tables), report
-    _check(spark, lake, 3)
-    # the deletes emptied partition c: its directory is gone
-    assert not os.path.exists(f"{lake}/{SCHEMA}/part/grp=c")
+    _check(spark, lake, 3, n_load)
 
     # the manifest table's file stats cover every live file and agree
     # with the rows the file holds

@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from aws_big_data_blog_dmscdc_walkthrough_spark.operators import cdc
 from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
 
 
@@ -22,6 +23,14 @@ def _file_bytes(path_glob):
     return {
         os.path.basename(p): open(p, "rb").read() for p in glob.glob(path_glob)
     }
+
+
+def _data_files(path):
+    """Visible parquet files under ``path``, relative to it."""
+    return [
+        os.path.relpath(p, path)
+        for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
+    ]
 
 
 def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path):
@@ -161,6 +170,72 @@ def test_fully_deleted_partition_with_brace_value_removed(spark, tmp_path):
     got = spark.read.parquet(out).collect()
     assert {r.id for r in got} == {1}
     assert not os.path.isdir(out + "/dept=a}b")
+
+
+@pytest.mark.parametrize("partition_keys", [[], ["dept"]])
+def test_merge_rewrite_scales_out_past_one_open_cost(
+    spark, tmp_path, monkeypatch, partition_keys
+):
+    # The rewrite is coalesced to ceil(estimate / openCostInBytes) tasks.
+    # With a few-KiB open cost a ~3k-row rewrite spans several open
+    # costs: it must still split across files, never past that bound.
+    key = "spark.sql.files.openCostInBytes"
+    open_cost = 4096
+    estimates = []
+    real = lake_writer._coalesce_to_open_cost
+
+    def spy(df):
+        estimates.append(cdc._plan_size_bytes(df))
+        return real(df)
+
+    monkeypatch.setattr(lake_writer, "_coalesce_to_open_cost", spy)
+    out = str(tmp_path / "t")
+    rows = {i: (i, f"name-{i:05d}", f"d{i % 3}") for i in range(3000)}
+    changes = (
+        [("U", 1, i, f"upd-{i}", f"d{(i + 1) % 3}") for i in range(0, 3000, 7)]
+        + [("D", 2, i, None, None) for i in range(0, 3000, 11)]
+        + [("I", 3, i, f"new-{i}", f"d{i % 3}") for i in range(3000, 3100)]
+    )
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(open_cost))
+    try:
+        lake_writer.write_initial(
+            spark.createDataFrame(
+                list(rows.values()), "id long, name string, dept string"
+            ).repartition(4),
+            out, partition_keys,
+        )
+        # a file-backed batch, as the controller reads it: real size stats
+        _changes(spark, changes).write.parquet(str(tmp_path / "batch"))
+        before = set(_data_files(out))
+        lake_writer.merge_incremental(
+            spark, spark.read.parquet(str(tmp_path / "batch")), out, ["id"],
+            partition_keys=partition_keys,
+        )
+        added = sorted(set(_data_files(out)) - before)
+    finally:
+        spark.conf.set(key, prev)
+
+    (est,) = estimates
+    assert est is not None and est < cdc._UNKNOWN_SIZE_SENTINEL
+    bound = -(-est // open_cost)
+    per_rewrite = {}
+    for f in added:
+        per_rewrite.setdefault(os.path.dirname(f), []).append(f)
+    assert len(per_rewrite) == (3 if partition_keys else 1)
+    for files in per_rewrite.values():
+        assert 1 < len(files) <= bound, (len(files), bound)
+
+    for op, _, i, name, dept in changes:
+        if op == "D":
+            rows.pop(i, None)
+        else:
+            rows[i] = (i, name, dept)
+    got = sorted(
+        (r.id, r.name, r.dept)
+        for r in spark.read.parquet(out).select("id", "name", "dept").collect()
+    )
+    assert got == sorted(rows.values())
 
 
 def test_change_feed_publishes_and_filters_batches(spark, tmp_path):

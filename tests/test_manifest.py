@@ -417,13 +417,15 @@ def test_predicate_without_stats_reads_everything(spark, tmp_path):
     assert [r.id for r in df.collect()] == [1]
 
 
-@pytest.mark.slow
 def test_stats_survive_cow_merge(spark, tmp_path):
     out = str(tmp_path / "t")
     _init_ranged(spark, out)
-    # update one key in the middle file; other files' stats must carry over
+    # update one key in the middle file; other files' stats must carry over.
+    # The batch is file-backed, as the controller reads it, so the merge
+    # has a size estimate and coalesces its rewrite.
+    _changes(spark, [("U", 2, 105, "upd")]).write.parquet(str(tmp_path / "batch"))
     lake_writer.merge_incremental(
-        spark, _changes(spark, [("U", 2, 105, "upd")]), out, ["id"],
+        spark, spark.read.parquet(str(tmp_path / "batch")), out, ["id"],
         use_manifest=True, stats_cols=["id"],
     )
     man = manifest.read_manifest(spark, out)

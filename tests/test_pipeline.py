@@ -75,7 +75,6 @@ def test_inactive_table_skipped(spark, env):
     assert not os.path.exists(f"{env['lake']}/sampledb/product")
 
 
-@pytest.mark.slow
 def test_full_flow_initial_then_incremental(spark, env):
     _write_initial(spark, env)
     store = JsonStateStore(env["state"])
