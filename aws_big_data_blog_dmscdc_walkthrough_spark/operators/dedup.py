@@ -40,12 +40,7 @@ from ..functions.hashing import (  # noqa: F401  (re-exported; plans import from
     SIMHASH_BAND_SUBSET,
     SIMHASH_HALF_BITS,
     minhash_signature,
-    poly_hash,
 )
-
-
-def word_tokens(col):
-    return F.split(F.trim(col), r"\s+")
 
 
 # Frames persisted by spread()/the pair operators, so long-lived sessions
@@ -1450,7 +1445,7 @@ def append_signature_store(
     layout is recorded in ``_store_meta.json`` on first append and
     validated on every later append/match (a mismatched
     ``rows_per_band`` would silently match nothing). On a cluster,
-    write ``bands`` bucketed by ``_bk`` (sources/bucketed.py) so the
+    write ``bands`` bucketed by ``_bk`` (``DataFrameWriter.bucketBy``) so the
     per-ingest candidate join is shuffle-free on the store side."""
     _check_store_banding(docs.sparkSession, path, rows_per_band, create=True)
     sh = (
@@ -1636,38 +1631,6 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # no-op either way.
     return spread(df, min_bytes=0).select(
         F.col(id_col), simhash_pandas()(F.col(text_col)).alias("simhash")
-    )
-
-
-def _simhash_signatures_hof(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Pure-JVM twin of simhash_signatures (parity reference, unused on
-    the hot path): explode tokens → 60 SUM(CASE) votes → bit assembly."""
-    toks = spread(df).select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tk")
-    )
-    hashed = toks.select(
-        F.col(id_col),
-        poly_hash(F.col("_tk")).alias("_h1"),
-        poly_hash(F.col("_tk"), POLY_MUL2, POLY_MOD2).alias("_h2"),
-    )
-    votes = []
-    for half, col in (("1", "_h1"), ("2", "_h2")):
-        for i in range(SIMHASH_HALF_BITS):
-            bit = F.shiftright(F.col(col), i).bitwiseAND(F.lit(1))
-            votes.append(
-                F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"_v{half}_{i}")
-            )
-    voted = hashed.groupBy(id_col).agg(*votes)
-    lo = sum(
-        (F.when(F.col(f"_v1_{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")) * F.lit(1 << i))
-        for i in range(SIMHASH_HALF_BITS)
-    )
-    hi = sum(
-        (F.when(F.col(f"_v2_{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")) * F.lit(1 << i))
-        for i in range(SIMHASH_HALF_BITS)
-    )
-    return voted.select(
-        F.col(id_col), (hi * F.lit(1 << SIMHASH_HALF_BITS) + lo).alias("simhash")
     )
 
 

@@ -87,6 +87,7 @@ def test_tfidf_pin_engages_on_spread_frames(spark, tmp_path):
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
         SPREAD_MIN_INPUT_BYTES,
+        _estimated_scan_partitions,
         release_persisted,
         spread,
     )
@@ -106,7 +107,17 @@ def test_tfidf_pin_engages_on_spread_frames(spark, tmp_path):
         .write.parquet(big_p)
     )
     release_persisted()
-    big = spread(spark.read.parquet(big_p))
+    # an open cost past the file size keeps the ~4 MiB file one
+    # (under-split) task on any core count, so spread engages
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024 * 1024))
+    try:
+        raw = spark.read.parquet(big_p)
+        assert _estimated_scan_partitions(raw) < spark.sparkContext.defaultParallelism
+        big = spread(raw)
+    finally:
+        spark.conf.set(key, prev)
     n_spread = len(dedup._PERSISTED)
     assert n_spread >= 1  # spread itself repartitioned+persisted
     corpus_stats.tfidf_top_terms(big, k=1).count()

@@ -627,6 +627,7 @@ def test_spread_adaptive_size_gate(spark, tmp_path):
 
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
         SPREAD_MIN_INPUT_BYTES,
+        _estimated_scan_partitions,
         release_persisted,
         scan_bytes,
         spread,
@@ -651,7 +652,18 @@ def test_spread_adaptive_size_gate(spark, tmp_path):
         F.sha2(F.col("id").cast("string"), 256).alias("s")
     ).coalesce(1).write.parquet(big_p)
     big = spark.read.parquet(big_p)
-    out_big = spread(big)
+    # Spark splits one file into bytes-per-core chunks, so on a host with
+    # few cores the ~4 MiB file is already split to defaultParallelism and
+    # spread rightly passes it through. An open cost past the file size
+    # keeps it one task on any host.
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024 * 1024))
+    try:
+        assert _estimated_scan_partitions(big) < spark.sparkContext.defaultParallelism
+        out_big = spread(big)
+    finally:
+        spark.conf.set(key, prev)
     assert out_big is not big
     assert out_big.storageLevel.useMemory or out_big.storageLevel.useDisk
     # round-11 regression (the r10 tfidf pin break): the repartitioned
