@@ -1445,7 +1445,7 @@ def append_signature_store(
     layout is recorded in ``_store_meta.json`` on first append and
     validated on every later append/match (a mismatched
     ``rows_per_band`` would silently match nothing). On a cluster,
-    write ``bands`` bucketed by ``_bk`` (``DataFrameWriter.bucketBy``) so the
+    write ``bands`` bucketed by ``_bk`` (sources/bucketed.py) so the
     per-ingest candidate join is shuffle-free on the store side."""
     _check_store_banding(docs.sparkSession, path, rows_per_band, create=True)
     sh = (

@@ -6,7 +6,8 @@ imported) from the entry surfaces: the driver contract
 every ``streaming/`` module, the root benches and audits, and
 ``perfbench/``. Imports inside functions count, including relative
 ``from . import x``. A module that no entry surface reaches is a
-capability nothing uses: delete it, or wire it to an entry surface.
+capability nothing uses: delete it, wire it to an entry surface, or
+list it in ``UNWIRED`` with the reason it stays.
 """
 from __future__ import annotations
 
@@ -24,6 +25,20 @@ ROOT_SCRIPTS = [
     "plan_audit.py",
     "scale_data.py",
 ]
+
+# Library modules kept although no entry surface imports them, each with
+# its reason. The list is exact: a module that becomes reachable, or is
+# deleted, must leave it too.
+UNWIRED = {
+    f"{PKG}.operators.bpe": "BPE vocabulary trainer; the bpe_tokens query "
+    "in plans/corpus_ml.py is a regex count and does not use it",
+    f"{PKG}.sources.bucketed": "bucketed catalog writes for co-located "
+    "joins; append_signature_store's docstring points cluster users at it",
+    f"{PKG}.sources.delta_log": "read-only Delta transaction-log reader for "
+    "pointing the read surface at an existing Delta table",
+    f"{PKG}.sources.dms_json": "DMS Kinesis/Kafka JSON envelopes normalised "
+    "to the file-landing change shape, for stream targets",
+}
 
 
 def _package_modules() -> dict[str, str]:
@@ -95,9 +110,15 @@ def _unreached() -> list[str]:
 
 def test_every_package_module_is_reached_from_an_entry_surface():
     unreached = _unreached()
-    assert not unreached, (
-        "package modules no entry surface imports (delete them, or wire "
-        "them to an entry surface): " + ", ".join(unreached)
+    unlisted = [m for m in unreached if m not in UNWIRED]
+    assert not unlisted, (
+        "package modules no entry surface imports (delete them, wire "
+        "them to an entry surface, or list them in UNWIRED with a "
+        "reason): " + ", ".join(unlisted)
+    )
+    stale = sorted(set(UNWIRED) - set(unreached))
+    assert not stale, (
+        "UNWIRED lists modules that are reached or gone: " + ", ".join(stale)
     )
 
 
