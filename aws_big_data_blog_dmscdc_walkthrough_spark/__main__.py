@@ -21,10 +21,12 @@ beside the hourly merge):
                 (registers every lake folder, runs the query — the
                 reference README's Athena step, locally)
     ... compact --path <table> [--target-file-bytes N] [--cluster-by c]
-                [--partition-keys a,b] [--manifest] [--zorder]
+                [--stats-cols c] [--zorder]
+                (commits through the table's manifest; the partition
+                layout comes from the table itself)
     ... vacuum  --path <table> [--retain-versions N] [--keep-feed-batches N]
-    ... delete  --path <table> --col c --op '=' --value v   (manifest tables;
-                merge-on-read position delete, no data files rewritten)
+    ... delete  --path <table> --col c --op '=' --value v   (merge-on-read
+                position delete, no data files rewritten)
 """
 
 from __future__ import annotations
@@ -75,9 +77,7 @@ def _compact(args) -> int:
         spark,
         args.path,
         target_file_bytes=args.target_file_bytes,
-        partition_keys=_split(args.partition_keys),
         cluster_by=_split(args.cluster_by),
-        use_manifest=args.manifest,
         stats_cols=_split(args.stats_cols),
         zorder=args.zorder,
     )
@@ -182,10 +182,8 @@ def main(argv: list[str] | None = None) -> int:
     c_p = sub.add_parser("compact", help="bin-pack a table's small files")
     c_p.add_argument("--path", required=True)
     c_p.add_argument("--target-file-bytes", type=int, default=128 * 1024 * 1024)
-    c_p.add_argument("--partition-keys", default="")
     c_p.add_argument("--cluster-by", default="")
     c_p.add_argument("--stats-cols", default="")
-    c_p.add_argument("--manifest", action="store_true")
     c_p.add_argument(
         "--zorder",
         action="store_true",
@@ -200,7 +198,7 @@ def main(argv: list[str] | None = None) -> int:
     s_p.add_argument("--limit", type=int, default=100)
     s_p.set_defaults(fn=_sql)
 
-    v_p = sub.add_parser("vacuum", help="reclaim unreferenced files (manifest tables)")
+    v_p = sub.add_parser("vacuum", help="reclaim unreferenced files")
     v_p.add_argument("--path", required=True)
     v_p.add_argument("--retain-versions", type=int, default=1)
     v_p.add_argument(
@@ -218,7 +216,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     v_p.set_defaults(fn=_vacuum)
 
-    d_p = sub.add_parser("delete", help="merge-on-read position delete (manifest tables)")
+    d_p = sub.add_parser("delete", help="merge-on-read position delete")
     d_p.add_argument("--path", required=True)
     d_p.add_argument("--col", required=True)
     d_p.add_argument("--op", required=True, choices=["=", "<", "<=", ">", ">="])

@@ -194,8 +194,8 @@ def build_file_bloom_index(
     """One pass over the table: per-(file, word) ``bit_or`` bitmap rows.
 
     Written to ``<table>/_bloom_index_<col>`` — underscore-prefixed, so
-    table reads never see it and ``_swap_rewrite`` carries it across
-    compactions. Each row records the modulus ``m`` so lookups don't
+    table reads never see it and compaction (which replaces data files
+    only) leaves it in place. Each row records the modulus ``m`` so lookups don't
     depend on the caller remembering the build sizing. Re-run after
     compaction (old file names vanish; their index rows go stale but
     only cost false scans of nothing — vanished files list no data).

@@ -121,8 +121,7 @@ def process_table(
                 return report
             df = landing.read_initial(spark, folder, state.schema_ddl)
             lake_writer.write_initial(
-                df, out_path, state.partition_keys,
-                use_manifest=state.use_manifest, stats_cols=state.stats_cols,
+                df, out_path, state.partition_keys, stats_cols=state.stats_cols
             )
             state.last_full_load_ts = load_ts
             # last_incremental_file is kept: files at-or-before the mark
@@ -149,7 +148,6 @@ def process_table(
             lake_writer.merge_incremental(
                 spark, raw, out_path, primary_keys=[],
                 partition_keys=state.partition_keys, seq_col="_seq", op_col="op",
-                use_manifest=state.use_manifest,
                 retain_history=state.retain_history,
                 stats_cols=state.stats_cols, change_feed=state.change_feed,
             )
@@ -165,7 +163,6 @@ def process_table(
                 state.partition_keys,
                 seq_col="_seq",
                 op_col="op",
-                use_manifest=state.use_manifest,
                 retain_history=state.retain_history,
                 stats_cols=state.stats_cols,
                 change_feed=state.change_feed,

@@ -9,25 +9,33 @@ Reference behavior being re-expressed:
     changed keys, then deletes them with boto3 and appends replacements
     with coalesce(1) (DMSCDC_LoadIncremental.py:68-87).
 
+Every write commits through one protocol (``_commit_write``): append
+the new files beside the live ones, commit the new live-file list as the
+next ``_mmanifest.json`` version (sources/manifest.py), then delete
+every listed data file that version does not reference. Manifest readers
+see exactly one version at every point; the raw directory, which
+``catalog.register_table`` exposes, holds exactly the live files after
+every commit, so a crashed attempt's orphans go with the next commit. A
+table with no manifest yet (a plain ``df.write`` directory) is adopted
+on its first write from its directory listing.
+
 Scale-correct replacements:
-  * partitioned tables: impacted-PARTITION copy-on-write via dynamic
-    partition overwrite. Impacted partitions are discovered with a PK
-    semi-join against the target (NOT from the batch's partition values
-    alone), so an update that MOVES a row across partitions rewrites the
-    old partition too, and a partition whose rows are all deleted gets
-    its directory dropped. The target scan is pruned with a broadcast
-    semi-join on the impacted partition values — no driver collect in
-    the prune; the only driver materialization is the emptied-partition
-    directory list (directory deletion is inherently a driver FS op,
-    the analogue of the reference's boto3 delete loop at
-    DMSCDC_LoadIncremental.py:83-87).
+  * partitioned tables: impacted-PARTITION copy-on-write. Impacted
+    partitions are discovered with a PK semi-join against the target
+    (NOT from the batch's partition values alone), so an update that
+    MOVES a row across partitions rewrites the old partition too, and a
+    partition whose rows are all deleted loses its files and its
+    directory. The target scan is pruned with a broadcast semi-join on
+    the impacted partition values; the only driver materialization is
+    that partition list (the analogue of the reference's boto3 delete
+    loop at DMSCDC_LoadIncremental.py:83-87).
   * unpartitioned tables: FILE-level copy-on-write matching the
     reference (DMSCDC_LoadIncremental.py:64-87): tag target rows with
     ``input_file_name()``, broadcast-semi-join on the batch's keys to
     find impacted files, merge only those files' rows, append the
-    rewritten survivors as new files, then delete the superseded files.
-    Untouched files are never read in full, never rewritten. The only
-    driver materialization is the impacted-file path list (bounded by
+    rewritten survivors as new files, commit, then delete the superseded
+    files. Untouched files are never read in full, never rewritten. The
+    only driver materialization is the impacted-file list (bounded by
     files actually containing changed keys — the same list the
     reference's boto3 loop holds).
   * both copy-on-write rewrites coalesce to one task per
@@ -43,6 +51,8 @@ import contextlib
 import posixpath
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,8 +60,6 @@ from pyspark.storagelevel import StorageLevel
 
 from ..operators import cdc
 from . import manifest as manifest_mod
-
-HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
 def target_exists(spark: SparkSession, path: str) -> bool:
@@ -133,16 +141,14 @@ def write_initial(
     df: DataFrame,
     out_path: str,
     partition_keys: Sequence[str] = (),
-    use_manifest: bool = False,
     stats_cols: Sequence[str] = (),
 ) -> None:
-    """Full-load overwrite with op stamp (DMSCDC_LoadInitial.py:31-37).
+    """Full-load overwrite with op stamp (DMSCDC_LoadInitial.py:31-37),
+    committed as the table's first manifest version.
 
-    ``use_manifest`` publishes the written file list to
-    ``_mmanifest.json`` so manifest readers get atomic commits from the
-    first load on — partitioned tables record partition-relative paths
-    plus the partition keys. ``stats_cols`` records per-file min/max
-    for those DATA columns in the manifest, enabling file skipping in
+    Partitioned tables record partition-relative paths plus the
+    partition keys. ``stats_cols`` records per-file min/max for those
+    DATA columns in the manifest, enabling file skipping in
     ``manifest.read_table`` (one extra column-pruned scan of the newly
     written files per commit).
 
@@ -150,37 +156,33 @@ def write_initial(
     the overwrite: they are snapshotted beside the table and restored
     after the write. A reload that wiped the feed would restart batch
     numbering at 1, making subscribers holding a high-water mark N
-    silently skip every later batch (the same hazard ``_swap_rewrite``
-    guards against on the compaction path). The manifest history is a
-    FILE sidecar and does not survive a reload — correctly so: the old
-    versions' data files are gone with the overwrite, so carrying their
-    manifests forward would advertise unreadable time travel.
+    silently skip every later batch. The manifest and its history do
+    not survive a reload — correctly so: the old versions' data files
+    are gone with the overwrite, so carrying their manifests forward
+    would advertise unreadable time travel.
     """
     spark = df.sparkSession
     stamped = cdc.stamp_initial(df)
     writer = stamped.write.mode("overwrite")
     if partition_keys:
         # STATIC overwrite for the full reload: the session default is
-        # dynamic (right for merges), but a full load must replace the
-        # WHOLE table — under dynamic mode a partition deleted at the
-        # source would keep its stale directory in the lake forever
+        # dynamic, but a full load must replace the WHOLE table — under
+        # dynamic mode a partition deleted at the source would keep its
+        # stale directory in the lake forever
         writer = writer.option("partitionOverwriteMode", "static").partitionBy(
             *partition_keys
         )
     with _sidecars_preserved(spark, out_path):
         writer.parquet(out_path)
-    if use_manifest:
-        files = manifest_mod.list_data_files(
-            spark, out_path, recursive=bool(partition_keys)
-        )
-        stats = manifest_mod.stats_for_commit(
-            spark, out_path, files, list(stats_cols), schema=stamped.schema
-        )
-        manifest_mod.commit_manifest(
-            spark, out_path, files, stats=stats,
-            schema_json=stamped.drop("op").schema.json(),
-            partition_keys=list(partition_keys),
-        )
+    files = manifest_mod.list_data_files(spark, out_path, recursive=True)
+    stats = manifest_mod.stats_for_commit(
+        spark, out_path, files, list(stats_cols), schema=stamped.schema
+    )
+    manifest_mod.commit_manifest(
+        spark, out_path, files, stats=stats,
+        schema_json=stamped.drop("op").schema.json(),
+        partition_keys=list(partition_keys),
+    )
 
 
 def merge_incremental(
@@ -191,28 +193,21 @@ def merge_incremental(
     partition_keys: Sequence[str] = (),
     seq_col: str = "_seq",
     op_col: str = cdc.OP_COL,
-    use_manifest: bool = False,
     retain_history: bool = False,
     stats_cols: Sequence[str] = (),
     change_feed: bool = False,
 ) -> None:
-    """Apply a change batch to the lake table at ``out_path``.
+    """Apply a change batch to the lake table at ``out_path`` as one
+    manifest commit (``_commit_write``).
 
-    No primary keys, or no existing target → insert-only append
+    No primary keys, or no live target → insert-only append
     (DMSCDC_LoadIncremental.py:56-58). Otherwise latest-wins merge with
-    copy-on-write at partition granularity.
-
-    ``use_manifest``: stage → commit the live-file manifest atomically →
-    delete superseded files, closing the append-then-delete crash window
-    for manifest readers (sources/manifest.py). On a PARTITIONED table
-    this replaces the dynamic-overwrite swap: the rewritten partitions
-    append beside the live files and ONE manifest version commits the
-    change across every touched partition atomically (dynamic overwrite
-    swaps directory-by-directory — a reader mid-merge sees some
-    partitions new, some old). ``retain_history`` additionally KEEPS the
-    superseded files on disk so earlier commits stay readable via
-    ``manifest.read_table(path, version=N)`` until ``manifest.vacuum``
-    reclaims them (Delta/Iceberg-style time travel, minimal form).
+    copy-on-write at partition granularity (partitioned tables; one
+    version spans every touched partition) or file granularity.
+    ``retain_history`` KEEPS the superseded files on disk so earlier
+    commits stay readable via ``manifest.read_table(path, version=N)``
+    until ``manifest.vacuum`` reclaims them (Delta/Iceberg-style time
+    travel, minimal form).
     """
     # WRITE-AHEAD feed, hoisted before every merge branch: publish the
     # batch BEFORE the table commit. A crash in the window leaves a feed
@@ -221,12 +216,13 @@ def merge_incremental(
     # primary keys, replay through apply_changes is idempotent
     # (identical full row images, latest-wins) and the duplicate batch
     # is harmless. For NO-PK (append-only) tables there is nothing to
-    # collapse on, so a crash retry duplicates the batch in feed AND
-    # table alike (the landing file is re-consumed) — at-least-once is
-    # the delivery contract either way; keyless subscribers needing
-    # exactly-once must dedupe on content. The reverse order would
-    # silently LOSE a feed batch on crash, with contiguous batch ids
-    # hiding the gap from every consumer — strictly worse.
+    # collapse on: a crash after the table commit but before the state
+    # advance re-consumes the landing file and duplicates the batch in
+    # feed AND table alike — at-least-once is the delivery contract
+    # either way; keyless subscribers needing exactly-once must dedupe
+    # on content. The reverse order would silently LOSE a feed batch on
+    # crash, with contiguous batch ids hiding the gap from every
+    # consumer — strictly worse.
     # The cheap driver-side schema checks run FIRST: a batch the merge
     # will permanently reject (type change, missing op/seq) must never
     # be published — each retry would append another duplicate feed
@@ -235,35 +231,32 @@ def merge_incremental(
         _precheck_merge_eligible(spark, changes, out_path, primary_keys, seq_col, op_col)
         append_change_feed(spark, changes, out_path, primary_keys, seq_col, op_col)
 
-    if not primary_keys:
-        out = cdc.insert_only(changes, op_col).drop(op_col, seq_col)
-        _append_with_optional_manifest(
-            spark, out, out_path, partition_keys, use_manifest, stats_cols
-        )
+    snap = _snapshot(spark, out_path)
+    if primary_keys and snap.live:
+        if partition_keys:
+            _merge_partitioned(
+                spark, changes, out_path, primary_keys, partition_keys, seq_col,
+                op_col, snap, retain_history, stats_cols,
+            )
+        else:
+            _merge_unpartitioned_cow(
+                spark, changes, out_path, primary_keys, seq_col, op_col, snap,
+                retain_history, stats_cols,
+            )
         return
-
-    if not target_exists(spark, out_path):
+    if primary_keys:
         # deliberate improvement over the reference's first-load shortcut
         # (DMSCDC_LoadIncremental.py:56-58 keeps only Op='I', silently
         # dropping a later update of a key inserted in the same batch):
         # merge against an empty target — latest op per key, minus deletes
         collapsed = cdc.latest_changes(changes, primary_keys, seq_col)
-        out = collapsed.where(F.col(op_col) != cdc.OP_DELETE).drop(op_col, seq_col)
-        _append_with_optional_manifest(
-            spark, out, out_path, partition_keys, use_manifest, stats_cols
-        )
-        return
-
-    if partition_keys:
-        _merge_partitioned(
-            spark, changes, out_path, primary_keys, partition_keys, seq_col, op_col,
-            use_manifest, retain_history, stats_cols,
-        )
+        out = collapsed.where(F.col(op_col) != cdc.OP_DELETE)
     else:
-        _merge_unpartitioned_cow(
-            spark, changes, out_path, primary_keys, seq_col, op_col,
-            use_manifest, retain_history, stats_cols,
-        )
+        out = cdc.insert_only(changes, op_col)
+    _commit_write(
+        spark, out.drop(op_col, seq_col), out_path, partition_keys, snap,
+        stats_cols=stats_cols, retain_history=retain_history,
+    )
 
 
 def merge_on_read_incremental(
@@ -307,16 +300,16 @@ def merge_on_read_incremental(
     survivors = collapsed.where(F.col(op_col) != cdc.OP_DELETE).drop(op_col, seq_col)
 
     if not target_exists(spark, out_path):
-        _append_with_optional_manifest(
-            spark, survivors, out_path, list(partition_keys), True, stats_cols
+        _commit_write(
+            spark, survivors, out_path, partition_keys,
+            _snapshot(spark, out_path), stats_cols=stats_cols,
         )
         return
     man = manifest_mod.read_manifest(spark, out_path)
     if man is None:
         raise ValueError(
-            f"{out_path} has no manifest; merge-on-read requires "
-            "manifest-committed tables (write the first batch through "
-            "this function or use_manifest=True)"
+            f"{out_path} has no manifest; merge-on-read requires a "
+            "manifest-committed table (any lake_writer write commits one)"
         )
 
     keys = cdc._maybe_broadcast(
@@ -430,11 +423,11 @@ def scd2_merge_on_read(
 ) -> None:
     """Incremental SCD2 history maintenance with O(batch) writes.
 
-    The history-table twin of :func:`merge_on_read_incremental`, and the
-    scale fix for the old full-table ``_swap_rewrite`` per micro-batch:
-    a history table only ever GROWS, and the only rows a batch can
-    modify are the impacted keys' OPEN versions (closed versions are
-    immutable by construction). So each fold writes exactly
+    The history-table twin of :func:`merge_on_read_incremental`, with
+    no full-table rewrite per micro-batch: a history table only ever
+    GROWS, and the only rows a batch can modify are the impacted keys'
+    OPEN versions (closed versions are immutable by construction). So
+    each fold writes exactly
 
       * one position-delete file over the superseded open rows,
       * one append holding their closed replacements (``valid_to_seq``
@@ -444,7 +437,7 @@ def scd2_merge_on_read(
     No data file is ever rewritten — per-batch write volume is bounded
     by the batch, never by the table. Read via ``manifest.read_table``
     (the DV anti-join hides superseded open rows); a scheduled
-    ``compact_table(use_manifest=True)`` pass materializes accumulated
+    ``compact_table`` pass materializes accumulated
     DVs so read amplification stays bounded.
 
     ``bucket_partitions=N`` partitions the history by a deterministic
@@ -455,11 +448,11 @@ def scd2_merge_on_read(
     value on every call for a given table — the bucket of an appended
     row must match the creation-time layout (guarded below).
 
-    Replay-safe the same way the swap path was (``scd2_fresh_changes``
-    drops already-recorded seqs), and crash-safe the MOR way: nothing is
-    visible before the manifest commit, so a retry either re-runs the
-    whole fold (crash before commit — first attempt's files are
-    unlisted orphans for ``manifest.vacuum``) or no-ops (crash after).
+    Replay-safe (``scd2_fresh_changes`` drops already-recorded seqs),
+    and crash-safe the MOR way: nothing is visible before the manifest
+    commit, so a retry either re-runs the whole fold (crash before
+    commit — first attempt's files are unlisted orphans for
+    ``manifest.vacuum``) or no-ops (crash after).
 
     Plan-shape note: the fold scans the live table TWICE — a
     column-pruned pass (pk + the two seqs) for the replay guard and a
@@ -518,9 +511,9 @@ def scd2_merge_on_read(
             if hi is not None:
                 props["scd2_seq_hwm"] = hi
                 props[HWM_INVARIANT_FLAG] = 1
-        _append_with_optional_manifest(
-            spark, folded, out_path, part_keys, True, stats_cols,
-            properties=props or None,
+        _commit_write(
+            spark, folded, out_path, part_keys, _snapshot(spark, out_path),
+            stats_cols=stats_cols, properties=props or None,
         )
         return
 
@@ -852,37 +845,73 @@ def _precheck_merge_eligible(
     cdc.align_schemas(target.select(*data_cols), changes, extra_cols=(op_col, seq_col))
 
 
-def _append_with_optional_manifest(
+class _Snapshot(NamedTuple):
+    """A table before a write: its committed manifest (None before the
+    first commit), every listed data file, and the live files — the
+    manifest's list, or the whole listing for a table not yet adopted."""
+
+    manifest: dict | None
+    listed: set[str]
+    live: list[str]
+
+
+def _snapshot(spark: SparkSession, out_path: str) -> _Snapshot:
+    man = manifest_mod.read_manifest(spark, out_path)
+    listed = set(manifest_mod.list_data_files(spark, out_path, recursive=True))
+    return _Snapshot(man, listed, man["files"] if man else sorted(listed))
+
+
+def _commit_write(
     spark: SparkSession,
-    out: DataFrame,
+    df: DataFrame,
     out_path: str,
     partition_keys: Sequence[str],
-    use_manifest: bool,
+    snap: _Snapshot,
+    superseded: set[str] = frozenset(),
     stats_cols: Sequence[str] = (),
+    retain_history: bool = False,
     properties: dict | None = None,
 ) -> None:
-    recursive = bool(partition_keys)
-    if use_manifest:
-        # live = previously committed ∪ newly appended — NOT the raw
-        # directory listing, which could resurrect orphans of a crashed
-        # earlier write into the committed set
-        prev = manifest_mod.read_manifest(spark, out_path)
-        before = set(manifest_mod.list_data_files(spark, out_path, recursive))
-    writer = out.write.mode("append")
+    """The one commit protocol: append ``df`` beside the live files,
+    commit (live − ``superseded``) + the appended files as the next
+    manifest version, then — unless ``retain_history`` — delete every
+    listed data file the new version does not reference.
+
+    A crash before the commit leaves the old version live and the
+    appended files unlisted; a crash after it leaves the superseded
+    files unlisted. Either way the next commit's delete removes them,
+    so the raw directory converges to the live set without ``vacuum``.
+    That delete relies on one writer per table (the controller's
+    per-table thread, as in ``append_change_feed``): another writer's
+    staged, not yet committed files would look unreferenced.
+    """
+    writer = df.write.mode("append")
     if partition_keys:
         writer = writer.partitionBy(*partition_keys)
     writer.parquet(out_path)
-    if use_manifest:
-        after = manifest_mod.list_data_files(spark, out_path, recursive)
-        added = [f for f in after if f not in before]
-        live = (prev["files"] if prev else sorted(before)) + added
-        stats = manifest_mod.stats_for_commit(
-            spark, out_path, live, list(stats_cols), prev, schema=out.schema
-        )
-        manifest_mod.commit_manifest(
-            spark, out_path, live, stats=stats, schema_json=out.schema.json(),
-            partition_keys=list(partition_keys), properties=properties,
-        )
+    after = manifest_mod.list_data_files(spark, out_path, recursive=True)
+    live = [f for f in snap.live if f not in superseded]
+    live += [f for f in after if f not in snap.listed]
+    stats = manifest_mod.stats_for_commit(
+        spark, out_path, live, list(stats_cols), snap.manifest, schema=df.schema
+    )
+    manifest_mod.commit_manifest(
+        spark, out_path, live, stats=stats, schema_json=df.schema.json(),
+        partition_keys=list(partition_keys), properties=properties,
+    )
+    if not retain_history:
+        manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
+
+
+def _read_live(spark: SparkSession, out_path: str, snap: _Snapshot) -> DataFrame:
+    """The snapshot's live files (non-empty), read with merged footers:
+    files written before an additive evolution lack the new columns."""
+    base = out_path.rstrip("/")
+    return (
+        spark.read.option("mergeSchema", "true")
+        .option("basePath", base)
+        .parquet(*[posixpath.join(base, f) for f in snap.live])
+    )
 
 
 def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
@@ -909,9 +938,9 @@ def _merge_partitioned(
     partition_keys: Sequence[str],
     seq_col: str,
     op_col: str,
-    use_manifest: bool = False,
-    retain_history: bool = False,
-    stats_cols: Sequence[str] = (),
+    snap: _Snapshot,
+    retain_history: bool,
+    stats_cols: Sequence[str],
 ) -> None:
     """Impacted-partition copy-on-write.
 
@@ -920,45 +949,17 @@ def _merge_partitioned(
     scan of pk + partition columns only). The second term is what the
     batch's own partition values cannot tell you: a row whose partition
     value changed leaves a stale copy behind, and a fully-deleted
-    partition needs its directory dropped — both cases the reference's
-    PK-join impacted-file discovery (DMSCDC_LoadIncremental.py:68-70)
-    handles and a values-only prune misses.
+    partition must lose its files — both cases the reference's PK-join
+    impacted-file discovery (DMSCDC_LoadIncremental.py:68-70) handles
+    and a values-only prune misses.
 
-    Without a manifest the rewritten partitions swap in via dynamic
-    partition overwrite — atomic per DIRECTORY, not per merge. With
-    ``use_manifest`` the rewrite appends beside the live files and ONE
-    manifest version commits every touched partition atomically
-    (manifest readers never see a half-swapped merge); superseded files
-    are then deleted, or kept for time travel under ``retain_history``.
+    The rewritten partitions append beside the live files, and ONE
+    manifest version supersedes every live file under an impacted
+    partition, so readers never see a half-applied merge.
     """
     pks = list(primary_keys)
     part_cols = list(partition_keys)
-
-    prev_manifest = (
-        manifest_mod.read_manifest(spark, out_path) if use_manifest else None
-    )
-    before_files = (
-        set(manifest_mod.list_data_files(spark, out_path, recursive=True))
-        if use_manifest
-        else set()
-    )
-
-    # mergeSchema: after additive evolution, partitions written before the
-    # evolution lack the new columns; merged-footer read reconciles them.
-    # (A catalog — Delta/Iceberg/metastore — replaces this at real scale;
-    # the parquet-only lake mirrors the reference's Athena-crawler model.)
-    if prev_manifest is not None:
-        base = out_path.rstrip("/")
-        live_paths = [posixpath.join(base, f) for f in prev_manifest["files"]]
-        target = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", base)
-            .parquet(*live_paths)
-            if live_paths
-            else manifest_mod._empty_frame(spark, out_path, prev_manifest)
-        )
-    else:
-        target = spark.read.option("mergeSchema", "true").parquet(out_path)
+    target = _read_live(spark, out_path, snap)
     data_cols = [c for c in target.columns if c not in (op_col, seq_col)]
     target = target.select(*data_cols)
     # additive schema evolution: a batch may carry columns the lake table
@@ -978,21 +979,34 @@ def _merge_partitioned(
         .select(*part_cols)
         .distinct()
     )
-    # Materialize the impacted-partition list BEFORE the overwrite: its
-    # old_parts lineage scans the target's files, which the dynamic
-    # overwrite below replaces — re-evaluating it afterwards would cost a
-    # second full pk+partition scan and can FileNotFound on stale file
-    # listings. The list is bounded by touched-partition count (same
-    # driver-side list the reference's boto3 loop holds).
-    impacted_rows = new_parts.unionByName(old_parts).distinct().collect()
-    impacted_parts = spark.createDataFrame(impacted_rows, new_parts.schema)
+    # One collect of the impacted partitions, bounded by touched-partition
+    # count (the driver-side list the reference's boto3 loop holds). The
+    # typed values prune the target scan; their string casts — the cast
+    # Spark's writer applies to name partition directories — name the
+    # directories whose live files this merge supersedes.
+    n = len(part_cols)
+    impacted_rows = (
+        new_parts.unionByName(old_parts)
+        .distinct()
+        .select(
+            *part_cols, *[F.col(c).cast("string").alias(f"_dir_{c}") for c in part_cols]
+        )
+        .collect()
+    )
+    impacted_parts = spark.createDataFrame(
+        [r[:n] for r in impacted_rows], new_parts.schema
+    )
+    prefixes = tuple(
+        _rel_partition_dir(part_cols, r[n:]) + "/" for r in impacted_rows
+    )
 
     # Prune the target scan to impacted partitions with a broadcast
     # semi-join — no driver collect; dynamic partition pruning skips the
     # untouched directories. An equi-join never matches NULL partition
     # values, so when the table actually has a null-partition directory
     # fall back to a null-safe condition (loses pruning, keeps rows).
-    if _has_null_partition_dir(spark, out_path, part_cols):
+    null_dir = "=" + manifest_mod.HIVE_NULL_PART
+    if any(seg.endswith(null_dir) for f in snap.live for seg in f.split("/")[:-1]):
         cond = None
         for col in part_cols:
             c = target[col].eqNullSafe(impacted_parts[col])
@@ -1006,105 +1020,11 @@ def _merge_partitioned(
     merged = _coalesce_to_open_cost(cdc.apply_changes(
         impacted_target, changes, pks, seq_col, op_col, prune_keys=change_keys
     ))
-    if use_manifest:
-        _commit_partitioned_merge(
-            spark, merged, out_path, part_cols, impacted_rows,
-            prev_manifest, before_files, retain_history, stats_cols,
-        )
-        return
-    merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # an impacted partition whose rows were ALL deleted (or moved away)
-        # yields zero merged rows, so dynamic overwrite never touches its
-        # directory — it is dropped explicitly below. The partition list
-        # is collected BEFORE the write: this collect fills the cache the
-        # write then reads, whereas after it the write's recacheByPath
-        # has dropped the cache and the collect would re-run the whole
-        # merge against the just-rewritten files.
-        merged_parts = {
-            tuple(r[c] for c in part_cols)
-            for r in merged.select(*part_cols).distinct().collect()
-        }
-        # dynamic overwrite: only partitions present in `merged` swap.
-        # The per-write option (Spark 3.0+) makes this safe under a
-        # caller-owned vanilla session too — static overwrite here would
-        # silently delete every untouched partition.
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(out_path)
-        )
-        emptied = [
-            r for r in impacted_rows
-            if tuple(r[c] for c in part_cols) not in merged_parts
-        ]
-        if emptied:
-            jvm = spark._jvm
-            base = jvm.org.apache.hadoop.fs.Path(out_path)
-            fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-            for row in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    _partition_dir(out_path, part_cols, row)
-                )
-                if fs.exists(p):
-                    fs.delete(p, True)
-    finally:
-        merged.unpersist()
-
-
-def _commit_partitioned_merge(
-    spark: SparkSession,
-    merged: DataFrame,
-    out_path: str,
-    part_cols: list[str],
-    impacted_rows,
-    prev_manifest: dict | None,
-    before_files: set[str],
-    retain_history: bool,
-    stats_cols: Sequence[str],
-) -> None:
-    """Manifest-gated publish of a partitioned merge: append the
-    rewritten partitions, commit ONE manifest version spanning every
-    touched partition, then delete (or retain) superseded files.
-
-    Crash windows mirror the unpartitioned COW: before the commit the
-    old version stays fully live (new files are unlisted orphans that
-    ``manifest.vacuum`` reclaims); after it, superseded files are
-    unlisted and equally vacuum-able. Directory readers see duplicates
-    only inside the append→delete window, same as the reference's
-    append-then-boto3-delete."""
-    merged.write.mode("append").partitionBy(*part_cols).parquet(out_path)
-    after = manifest_mod.list_data_files(spark, out_path, recursive=True)
-    added = [f for f in after if f not in before_files]
-    # previously-live files under any impacted partition's directory are
-    # superseded by the rewrite; everything else carries forward
-    prefixes = [_rel_partition_dir(part_cols, row) + "/" for row in impacted_rows]
-    prev_live = prev_manifest["files"] if prev_manifest else sorted(before_files)
-    superseded = {
-        f for f in prev_live if any(f.startswith(px) for px in prefixes)
-    }
-    live = [f for f in prev_live if f not in superseded] + added
-    stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), prev_manifest,
-        schema=merged.schema,
+    _commit_write(
+        spark, merged, out_path, part_cols, snap,
+        superseded={f for f in snap.live if f.startswith(prefixes)},
+        stats_cols=stats_cols, retain_history=retain_history,
     )
-    manifest_mod.commit_manifest(
-        spark, out_path, live, stats=stats, schema_json=merged.schema.json(),
-        partition_keys=part_cols,
-    )
-    if retain_history or not superseded:
-        return
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = out_path.rstrip("/")
-    emptied_dirs = set()
-    for name in sorted(superseded):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{name}"), False)
-        if "/" in name:
-            emptied_dirs.add(name.rsplit("/", 1)[0])
-    manifest_mod.collapse_empty_dirs(jvm, fs, base, emptied_dirs)
 
 
 def _merge_unpartitioned_cow(
@@ -1114,74 +1034,59 @@ def _merge_unpartitioned_cow(
     primary_keys: Sequence[str],
     seq_col: str,
     op_col: str,
-    use_manifest: bool = False,
-    retain_history: bool = False,
-    stats_cols: Sequence[str] = (),
+    snap: _Snapshot,
+    retain_history: bool,
+    stats_cols: Sequence[str],
 ) -> None:
     """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87).
 
     1. discover impacted files: ``input_file_name()`` tag + broadcast
        semi-join on the batch's keys, column-pruned to pk only;
     2. merge ONLY those files' rows with the batch;
-    3. append the survivors as new files (the write commits through
-       Spark's ``_temporary`` staging, so readers never see partial
-       files), then delete the superseded originals.
+    3. append the survivors as new files and commit a version without
+       the impacted files (``_commit_write``), which then deletes them.
 
-    Without a manifest, a crash between append and delete leaves
-    duplicates for directory readers — the same non-atomic window the
-    reference has between its coalesce(1) append and boto3 deletes.
-    With ``use_manifest`` the new live-file list commits atomically
-    BETWEEN append and delete, so manifest readers (manifest.read_table)
-    see exactly one version at every point; a crash leaves only
-    unlisted orphans that ``manifest.vacuum`` reclaims.
+    The reference's coalesce(1) append and boto3 deletes leave a window
+    in which readers see both copies of the merged rows; here the
+    manifest commit sits between append and delete, and the delete
+    completes on the next commit if a crash interrupts it.
     """
     pks = list(primary_keys)
-    prev_manifest = manifest_mod.read_manifest(spark, out_path) if use_manifest else None
-    before_files = (
-        set(manifest_mod.list_data_files(spark, out_path)) if use_manifest else set()
-    )
     # Impacted-file discovery needs input_file_name(), which requires a
     # SINGLE-source plan — read_table's DV anti-join is two sources, so
     # tag a raw read of the live files instead. Skipping the DV filter
     # here is conservative: a file whose only key matches are DV-deleted
     # rows still counts as impacted and simply gets rewritten (its
     # deletes materialize). The DVs ARE applied to the merge input below.
-    if prev_manifest is not None:
-        base = out_path.rstrip("/")
-        live_paths = [posixpath.join(base, f) for f in prev_manifest["files"]]
-        target_df = (
-            spark.read.option("mergeSchema", "true").parquet(*live_paths)
-            if live_paths
-            else spark.read.option("mergeSchema", "true").parquet(out_path).limit(0)
-        )
-    else:
-        target_df = spark.read.option("mergeSchema", "true").parquet(out_path)
+    target_df = _read_live(spark, out_path, snap)
     tagged = target_df.withColumn("_file", F.input_file_name())
     change_keys = cdc._maybe_broadcast(
         changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
     )
-    impacted_files = [
-        r["_file"]
+    # input_file_name() is a URI (a space in the table path reads back
+    # as %20): decode it to the table-relative name the manifest lists
+    impacted = sorted(
+        unquote(posixpath.basename(r["_file"]))
         for r in tagged.join(change_keys, pks, "left_semi")
         .select("_file")
         .distinct()
         .collect()
-    ]
+    )
 
-    if impacted_files:
+    if impacted:
         # target_df's schema is already merged over every live file, so
         # the impacted subset reads with it — no second inference job
-        old = spark.read.schema(target_df.schema).parquet(*impacted_files)
-        if prev_manifest is not None:
-            # the impacted-file re-read bypasses read_table, so apply the
-            # committed deletion vectors here too — otherwise DV-deleted
-            # rows in impacted files would be merged back into the
-            # rewritten output (resurrected)
-            dv = manifest_mod.read_deletion_vectors(spark, out_path, prev_manifest)
-            if dv is not None:
-                old = manifest_mod.apply_deletion_vectors(
-                    old, dv, len(prev_manifest.get("partition_keys") or [])
-                )
+        base = out_path.rstrip("/")
+        old = spark.read.schema(target_df.schema).parquet(
+            *[posixpath.join(base, f) for f in impacted]
+        )
+        # the impacted-file re-read bypasses read_table, so apply the
+        # committed deletion vectors here too — otherwise DV-deleted
+        # rows in impacted files would be merged back into the
+        # rewritten output (resurrected)
+        dv = manifest_mod.read_deletion_vectors(spark, out_path, snap.manifest or {})
+        if dv is not None:
+            old = manifest_mod.apply_deletion_vectors(old, dv)
     else:
         # pure-insert batch: merge against an empty frame with the
         # target's schema so collapsed inserts just append
@@ -1193,84 +1098,32 @@ def _merge_unpartitioned_cow(
     merged = _coalesce_to_open_cost(cdc.apply_changes(
         old, changes, pks, seq_col, op_col, prune_keys=change_keys
     ))
-    merged.write.mode("append").parquet(out_path)
-
-    impacted_names = {f.rsplit("/", 1)[-1] for f in impacted_files}
-    if use_manifest:
-        after = manifest_mod.list_data_files(spark, out_path)
-        added = [f for f in after if f not in before_files]
-        prev_live = (
-            prev_manifest["files"] if prev_manifest else sorted(before_files)
-        )
-        live = [f for f in prev_live if f not in impacted_names] + added
-        stats = manifest_mod.stats_for_commit(
-            spark, out_path, live, list(stats_cols), prev_manifest,
-            schema=merged.schema,
-        )
-        manifest_mod.commit_manifest(
-            spark, out_path, live, stats=stats, schema_json=merged.schema.json()
-        )
-
-    if use_manifest and retain_history:
-        # superseded files back earlier versions; manifest.vacuum with a
-        # retention window is the deferred delete
-        return
-    if impacted_files:
-        jvm = spark._jvm
-        base = jvm.org.apache.hadoop.fs.Path(out_path)
-        fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-        for f in impacted_files:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
+    _commit_write(
+        spark, merged, out_path, (), snap, superseded=set(impacted),
+        stats_cols=stats_cols, retain_history=retain_history,
+    )
 
 
 # Hive's escapePathName character set: exactly the bytes Spark %-encodes
 # when it writes partition directory names (ExternalCatalogUtils
 # .charToEscape). Note '}' is NOT escaped by Spark — including it here
 # would compute a nonexistent directory for values containing '}' and
-# silently skip deleting the emptied partition.
+# miss the live files of that partition.
 _PART_ESCAPE = set('\\"#%\'*/:=?\x7f{[]^') | {chr(c) for c in range(32)}
 
 
-def _escape_part_value(value) -> str:
-    s = str(value)
-    return "".join(
-        "%{:02X}".format(ord(ch)) if ch in _PART_ESCAPE else ch for ch in s
-    )
-
-
-def _rel_partition_dir(partition_keys: Sequence[str], row) -> str:
-    """Table-relative partition directory for a row's partition values,
-    escaped the way Spark writes them."""
+def _rel_partition_dir(partition_keys: Sequence[str], values) -> str:
+    """Table-relative partition directory for string-cast partition
+    values, named the way Spark's writer names it (NULL and the empty
+    string both go to the Hive default partition)."""
     segs = []
-    for key in partition_keys:
-        v = row[key]
-        segs.append(
-            f"{key}={HIVE_NULL_PART}" if v is None else f"{key}={_escape_part_value(v)}"
-        )
+    for key, v in zip(partition_keys, values):
+        if v in (None, ""):
+            v = manifest_mod.HIVE_NULL_PART
+        else:
+            v = "".join(f"%{ord(ch):02X}" if ch in _PART_ESCAPE else ch for ch in v)
+        segs.append(f"{key}={v}")
     return "/".join(segs)
-
-
-def _partition_dir(out_path: str, partition_keys: Sequence[str], row) -> str:
-    return out_path.rstrip("/") + "/" + _rel_partition_dir(partition_keys, row)
-
-
-def _has_null_partition_dir(
-    spark: SparkSession, out_path: str, partition_keys: Sequence[str]
-) -> bool:
-    """True iff any partition level has a ``__HIVE_DEFAULT_PARTITION__``
-    directory (cheap driver glob; no Spark job)."""
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    for i, key in enumerate(partition_keys):
-        segs = ["*"] * i + [f"{key}={HIVE_NULL_PART}"]
-        pattern = jvm.org.apache.hadoop.fs.Path(
-            out_path.rstrip("/") + "/" + "/".join(segs)
-        )
-        matches = fs.globStatus(pattern)
-        if matches is not None and len(matches) > 0:
-            return True
-    return False
 
 
 ZORDER_BITS = 16  # per-column resolution of the interleaved key
@@ -1337,9 +1190,7 @@ def compact_table(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_keys: Sequence[str] = (),
     cluster_by: Sequence[str] = (),
-    use_manifest: bool = False,
     stats_cols: Sequence[str] = (),
     retain_history: bool = False,
     zorder: bool = False,
@@ -1353,10 +1204,18 @@ def compact_table(
     keys into whatever file they land in. Compaction is the explicit
     maintenance pass for both, like Delta/Iceberg OPTIMIZE:
 
-      * total bytes come from the filesystem listing (no data job);
-      * the rewrite repartitions to ceil(bytes / target) output files —
-        per PARTITION when partitioned (dynamic overwrite swaps each);
-      * unpartitioned tables swap through staging, same as merges.
+      * total bytes are the live files' lengths (no data job; sidecars,
+        orphans and retained superseded files do not count);
+      * the rewrite repartitions to ceil(bytes / target) output files,
+        keeping the table's partition layout — the manifest's recorded
+        keys, or for a table with no manifest yet, the ``k=v`` directory
+        levels its files sit under;
+      * it commits like every other write (``_commit_write``): the
+        compacted files append beside the live set, one manifest version
+        supersedes every previously live file, and those are then
+        deleted (kept when ``retain_history`` — earlier versions stay
+        time-travelable until ``manifest.vacuum`` reclaims them).
+        Sidecar directories (``_change_feed``) are never touched.
 
     ``cluster_by`` range-partitions + sorts the rewrite on those
     columns: each output file covers a disjoint value range, so the
@@ -1370,121 +1229,46 @@ def compact_table(
     predicates on any clustered column — Delta/Iceberg
     ``OPTIMIZE ... ZORDER BY``, Spark-native.
 
-    ``use_manifest`` compacts *through* the manifest: the compacted
-    files append beside the live set, the new manifest version commits
-    atomically, and only then are superseded files dropped (kept when
-    ``retain_history`` — earlier versions stay time-travelable until
-    ``manifest.vacuum`` reclaims them). Partitioned tables commit the
-    same way (one atomic version across every partition); the
-    directory-swap and dynamic-overwrite paths would destroy the
-    manifest and its history with the data files they replace.
-
     Returns the number of output files requested.
     """
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    summary = fs.getContentSummary(p)
-    n_files = max(1, int(-(-summary.getLength() // target_file_bytes)))
-
-    df = (
-        manifest_mod.read_table(spark, path)
-        if use_manifest
-        else spark.read.option("mergeSchema", "true").parquet(path)
-    )
-
-    def _clustered(frame: DataFrame) -> DataFrame:
-        if zorder:
-            zk = zorder_key(frame, list(cluster_by))
-            # partition keys lead the range clustering: each task then
-            # covers a contiguous run of partitions, so the dynamic
-            # overwrite emits ~n_files files total instead of one file
-            # per (task × partition) — zk clusters WITHIN a partition
-            lead = [F.col(c) for c in partition_keys]
-            return (
-                frame.withColumn("_zk", zk)
-                .repartitionByRange(n_files, *lead, F.col("_zk"))
-                .sortWithinPartitions(*lead, F.col("_zk"))
-                .drop("_zk")
-            )
-        cols = [F.col(c) for c in (*partition_keys, *cluster_by)]
-        if cluster_by:
-            return frame.repartitionByRange(n_files, *cols).sortWithinPartitions(
-                *cols
-            )
-        if partition_keys:
-            # cluster rows of one partition into few tasks; dynamic
-            # overwrite then swaps each partition directory
-            return frame.repartition(n_files, *cols)
-        return frame.repartition(n_files)
-
-    out = _clustered(df)
-    if use_manifest:
-        recursive = bool(partition_keys)
-        prev = manifest_mod.read_manifest(spark, path)
-        before = set(manifest_mod.list_data_files(spark, path, recursive))
-        writer = out.write.mode("append")
-        if partition_keys:
-            writer = writer.partitionBy(*partition_keys)
-        writer.parquet(path)
-        after = manifest_mod.list_data_files(spark, path, recursive)
-        added = [f for f in after if f not in before]
-        stats = manifest_mod.stats_for_commit(
-            spark, path, added, list(stats_cols), schema=out.schema
-        )
-        manifest_mod.commit_manifest(
-            spark, path, added, stats=stats, schema_json=out.schema.json(),
-            partition_keys=list(partition_keys),
-        )
-        if not retain_history:
-            prev_live = set(prev["files"]) if prev else before
-            base = path.rstrip("/")
-            for name in sorted(prev_live):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{name}"), False)
-    elif partition_keys:
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_keys)
-            .parquet(path)
-        )
+    snap = _snapshot(spark, path)
+    if snap.manifest is not None:
+        part_keys = snap.manifest.get("partition_keys") or []
+    elif snap.live:
+        part_keys = list(manifest_mod._partition_values(snap.live[0]))
     else:
-        _swap_rewrite(spark, out, path)
+        part_keys = []
+    Path, fs = manifest_mod._fs(spark, path)
+    base = path.rstrip("/")
+    live_bytes = sum(
+        fs.getFileStatus(Path(f"{base}/{f}")).getLen() for f in snap.live
+    )
+    n_files = max(1, -(-live_bytes // target_file_bytes))
+
+    df = manifest_mod.read_table(spark, path)
+    lead = [F.col(c) for c in part_keys]
+    if zorder:
+        # partition keys lead the range clustering: each task then
+        # covers a contiguous run of partitions, so the partitioned
+        # write emits ~n_files files total instead of one file per
+        # (task × partition) — the Morton key clusters WITHIN a partition
+        out = (
+            df.withColumn("_zk", zorder_key(df, list(cluster_by)))
+            .repartitionByRange(n_files, *lead, F.col("_zk"))
+            .sortWithinPartitions(*lead, F.col("_zk"))
+            .drop("_zk")
+        )
+    elif cluster_by:
+        cols = [*lead, *[F.col(c) for c in cluster_by]]
+        out = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+    else:
+        # cluster rows of one partition into few tasks
+        out = df.repartition(n_files, *lead)
+    _commit_write(
+        spark, out, path, part_keys, snap, superseded=set(snap.live),
+        stats_cols=stats_cols, retain_history=retain_history,
+    )
     return n_files
-
-
-def _swap_rewrite(spark: SparkSession, df: DataFrame, out_path: str) -> None:
-    """Full rewrite through staging + rename (unpartitioned tables).
-
-    Underscore-prefixed sidecar DIRECTORIES (``_change_feed`` — hidden
-    from parquet reads, so absent from ``df``) are carried from the old
-    directory into the staged one before the swap; otherwise a compact
-    pass would silently destroy the feed and restart batch numbering,
-    making subscribers holding a high-water mark skip all later changes.
-    """
-    jvm = spark._jvm
-    staging = out_path.rstrip("/") + f"__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    p_out = jvm.org.apache.hadoop.fs.Path(out_path)
-    p_stage = jvm.org.apache.hadoop.fs.Path(staging)
-    fs = p_out.getFileSystem(spark._jsc.hadoopConfiguration())
-    for status in fs.listStatus(p_out):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("_"):
-            fs.rename(
-                status.getPath(),
-                jvm.org.apache.hadoop.fs.Path(staging.rstrip("/") + "/" + name),
-            )
-    trash = jvm.org.apache.hadoop.fs.Path(out_path.rstrip("/") + "__old")
-    if fs.exists(trash):
-        fs.delete(trash, True)
-    fs.rename(p_out, trash)
-    fs.rename(p_stage, p_out)
-    fs.delete(trash, True)
-    # the session-wide FileStatusCache has no TTL by default: without a
-    # refresh, a same-session read of this path after the swap resolves
-    # the OLD part files and dies with FILE_NOT_EXIST
-    spark.catalog.refreshByPath(out_path)
 
 
 # ---------------------------------------------------------- change feed

@@ -1,7 +1,7 @@
-"""Manifest-gated atomic commits for unpartitioned lake tables.
+"""Manifest-gated atomic commits: the one way a lake table commits.
 
 Both the reference (coalesce(1) append, then boto3 deletes —
-DMSCDC_LoadIncremental.py:68-87) and this repo's file-level COW have a
+DMSCDC_LoadIncremental.py:68-87) and a plain file-level COW have a
 crash window: a reader between the append and the delete sees old AND
 new copies of the merged rows. Real table formats (Delta/Iceberg) close
 it with a metadata pointer; this module is the minimal form of the same
@@ -12,29 +12,32 @@ idea:
   * readers (``read_table``) load exactly the listed files — orphan
     parquet files from an interrupted write are invisible;
   * writers stage new files with a normal parquet append, then commit
-    the new file list with one atomic rename, then delete superseded
-    files. A crash before the commit leaves the old version intact; a
-    crash after it leaves only harmless unlisted orphans —
-    ``vacuum`` removes them.
+    the new file list with one atomic rename, then delete every listed
+    file the new version does not reference (``delete_data_files``).
+    A crash before the commit leaves the old version intact; either
+    crash leaves only unlisted files, which the table's next commit
+    deletes (``vacuum`` also removes them).
+
+Every ``lake_writer`` write (initial load, append, both copy-on-write
+merges, merge-on-read, compaction) commits here. A table with no
+manifest yet reads as a plain directory and is adopted by its first
+write.
 
 Partitioned tables commit through the same single manifest: ``files``
 entries are paths RELATIVE to the table root (``dept=a/part-x.parquet``),
 the manifest records the partition keys, and a partitioned merge appends
 its rewritten partitions beside the live files then swaps ONE manifest
-pointer — atomic across every touched partition, unlike dynamic
-partition overwrite's directory-at-a-time swaps. ``read_table`` prunes
+pointer — atomic across every touched partition. ``read_table`` prunes
 by partition value (parsed from the path, typed against the probe) AND
 by per-file min/max stats. Merge-on-read deletion vectors remain
 partitioned too: DVs address files by their manifest-relative path
 (= basename on unpartitioned tables, so pre-existing DVs stay valid).
-
-Opt-in: plain-directory readers keep working unchanged when no manifest
-exists.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import posixpath
 
@@ -48,23 +51,36 @@ DV_FILE_COL = "_dv_file"
 DV_POS_COL = "_dv_pos"
 
 
+@functools.lru_cache(maxsize=None)
+def _jclass(jvm, name: str):
+    """The JVM class ``name``, resolved once per gateway: ``jvm.a.b.C``
+    costs one py4j round trip per dotted step, and every commit builds
+    a dozen Hadoop paths."""
+    return functools.reduce(getattr, name.split("."), jvm)
+
+
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """(Hadoop ``Path`` class, the FileSystem serving ``path``)."""
+    Path = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")
+    return Path, Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def _manifest_path(path: str) -> str:
     return path.rstrip("/") + "/" + MANIFEST_NAME
 
 
-def collapse_empty_dirs(jvm, fs, base: str, rel_dirs) -> None:
-    """Delete (now-)empty partition directories left behind by file
-    deletions: deepest first, each walked up at most its own depth so
-    nested partition levels collapse but the table root is never
-    touched. Shared by vacuum and the partitioned-merge cleanup."""
-    for rel in sorted(set(rel_dirs), key=lambda s: -s.count("/")):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{rel}")
+def delete_data_files(spark: SparkSession, path: str, names) -> None:
+    """Delete table-relative data files, then the partition directories
+    they leave empty: deepest first, each walked up at most its own
+    depth so nested partition levels collapse but the table root is
+    never touched. Shared by vacuum and lake_writer's commits."""
+    Path, fs = _fs(spark, path)
+    base = path.rstrip("/")
+    for name in sorted(names):
+        fs.delete(Path(f"{base}/{name}"), False)
+    rel_dirs = {n.rsplit("/", 1)[0] for n in names if "/" in n}
+    for rel in sorted(rel_dirs, key=lambda s: -s.count("/")):
+        p = Path(f"{base}/{rel}")
         for _ in range(rel.count("/") + 1):
             if not (fs.exists(p) and len(fs.listStatus(p)) == 0):
                 break
@@ -95,17 +111,18 @@ def list_data_files(
     root. Flat listing by default; ``recursive`` walks partition
     directories too (hidden ``_``/``.`` entries skipped at every level),
     so a flat table yields identical output either way."""
-    jvm, fs = _fs(spark, path)
-    root = jvm.org.apache.hadoop.fs.Path(path)
+    Path, fs = _fs(spark, path)
+    root = Path(path)
     if not fs.exists(root):
         return []
     out: list[str] = []
+    # skip hidden entries JVM-side: each returned entry costs py4j round
+    # trips, and a local table holds a hidden .crc beside every file
+    visible = _jclass(spark._jvm, "org.apache.hadoop.fs.GlobFilter")("[!._]*")
 
     def walk(p, prefix: str) -> None:
-        for status in fs.listStatus(p):
+        for status in fs.listStatus(p, visible):
             name = status.getPath().getName()
-            if name.startswith((".", "_")):
-                continue
             if status.isFile() and name.endswith(".parquet"):
                 out.append(prefix + name)
             elif recursive and status.isDirectory():
@@ -116,17 +133,21 @@ def list_data_files(
 
 
 def read_manifest(spark: SparkSession, path: str) -> dict | None:
-    jvm, fs = _fs(spark, path)
-    mp = jvm.org.apache.hadoop.fs.Path(_manifest_path(path))
+    Path, fs = _fs(spark, path)
+    mp = Path(_manifest_path(path))
     if not fs.exists(mp):
         return None
-    stream = fs.open(mp)
-    baos = jvm.java.io.ByteArrayOutputStream()
+    return _read_json(spark, fs, mp)
+
+
+def _read_json(spark: SparkSession, fs, p) -> dict:
+    stream = fs.open(p)
     try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
+        # one round trip: py4j returns a byte[] as Python bytes
+        data = _jclass(spark._jvm, "org.apache.commons.io.IOUtils").toByteArray(stream)
     finally:
         stream.close()
-    return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
+    return json.loads(bytes(data).decode("utf-8"))
 
 
 def _stat_encode(v):
@@ -235,8 +256,8 @@ def stats_for_commit(
 
 def list_delete_files(spark: SparkSession, path: str) -> list[str]:
     """Basenames of parquet files under the table's ``_deletes/`` dir."""
-    jvm, fs = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + DELETES_DIR)
+    Path, fs = _fs(spark, path)
+    p = Path(path.rstrip("/") + "/" + DELETES_DIR)
     if not fs.exists(p):
         return []
     out = []
@@ -356,8 +377,8 @@ def commit_manifest(
     if targets_doc:
         doc["dv_targets"] = targets_doc
     payload = json.dumps(doc, sort_keys=True).encode("utf-8")
-    jvm, fs = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
+    Path, fs = _fs(spark, path)
+    tmp = Path(
         path.rstrip("/") + f"/._mmanifest.v{version}.tmp"
     )
     out = fs.create(tmp, True)
@@ -371,7 +392,7 @@ def commit_manifest(
     # point: overwrite=False makes two same-base writers collide on
     # this one path, and Hadoop create(path, false) raises for the
     # loser before its LATEST rename can clobber the winner's.
-    hist = jvm.org.apache.hadoop.fs.Path(_history_path(path, version))
+    hist = Path(_history_path(path, version))
     fs.mkdirs(hist.getParent())
     try:
         hout = fs.create(hist, expected_base_version is None)
@@ -388,29 +409,27 @@ def commit_manifest(
         hout.write(payload)
     finally:
         hout.close()
-    dst = jvm.org.apache.hadoop.fs.Path(_manifest_path(path))
+    dst = Path(_manifest_path(path))
     # ATOMIC pointer swap: FileContext.rename with OVERWRITE replaces
     # the manifest in one metadata op — delete-then-rename would open a
     # window with NO manifest at all, during which a concurrent reader
     # falls back to the raw directory (duplicates + resurrected DV
     # deletes) and a crash makes that state stick. Plain FileSystem
     # rename refuses to clobber, hence FileContext.
-    fctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+    fctx = _jclass(spark._jvm, "org.apache.hadoop.fs.FileContext").getFileContext(
         dst.toUri(), spark._jsc.hadoopConfiguration()
     )
-    overwrite = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    renames = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 1
-    )
-    renames[0] = overwrite
+    rename = _jclass(spark._jvm, "org.apache.hadoop.fs.Options.Rename")
+    renames = spark.sparkContext._gateway.new_array(rename, 1)
+    renames[0] = rename.OVERWRITE
     fctx.rename(tmp, dst, renames)
     return version
 
 
 def list_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed versions with a retained history entry, ascending."""
-    jvm, fs = _fs(spark, path)
-    hist = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + HISTORY_DIR)
+    Path, fs = _fs(spark, path)
+    hist = Path(path.rstrip("/") + "/" + HISTORY_DIR)
     if not fs.exists(hist):
         return []
     out = []
@@ -422,14 +441,8 @@ def list_versions(spark: SparkSession, path: str) -> list[int]:
 
 
 def _read_json_file(spark: SparkSession, uri: str) -> dict:
-    jvm, fs = _fs(spark, uri)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(uri))
-    baos = jvm.java.io.ByteArrayOutputStream()
-    try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
-    finally:
-        stream.close()
-    return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
+    Path, fs = _fs(spark, uri)
+    return _read_json(spark, fs, Path(uri))
 
 
 def _file_may_match(fstats: dict | None, col: str, op: str, value) -> bool:
@@ -790,7 +803,7 @@ def vacuum(
     keep = set(versions[-max(retain_versions, 1):]) | {man["version"]}
     live: set[str] = set(man["files"])
     live_dv: set[str] = set(man.get("delete_files") or [])
-    jvm, fs = _fs(spark, path)
+    Path, fs = _fs(spark, path)
     for v in sorted(keep):
         try:
             doc = _read_json_file(spark, _history_path(path, v))
@@ -798,7 +811,6 @@ def vacuum(
             live_dv |= set(doc.get("delete_files") or [])
         except Exception:
             pass  # history entry may predate retention or be gone
-    removed = []
     now_ms = int(_time.time() * 1000)
 
     def _old_enough(p) -> bool:
@@ -806,26 +818,24 @@ def vacuum(
             return True
         return now_ms - fs.getFileStatus(p).getModificationTime() >= grace_seconds * 1000
 
-    emptied_dirs: set[str] = set()
-    for name in list_data_files(spark, path, recursive=True):
-        if name not in live:
-            target = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + name)
-            if _old_enough(target):
-                fs.delete(target, False)
-                removed.append(name)
-                if "/" in name:
-                    emptied_dirs.add(name.rsplit("/", 1)[0])
-    collapse_empty_dirs(jvm, fs, path.rstrip("/"), emptied_dirs)
+    base = path.rstrip("/")
+    removed = [
+        name
+        for name in list_data_files(spark, path, recursive=True)
+        if name not in live
+        and _old_enough(Path(f"{base}/{name}"))
+    ]
+    delete_data_files(spark, path, removed)
     dv_base = path.rstrip("/") + "/" + DELETES_DIR
     for name in list_delete_files(spark, path):
         if name not in live_dv:
-            target = jvm.org.apache.hadoop.fs.Path(dv_base + "/" + name)
+            target = Path(dv_base + "/" + name)
             if _old_enough(target):
                 fs.delete(target, False)
                 removed.append(DELETES_DIR + "/" + name)
     for v in versions:
         if v not in keep:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(_history_path(path, v)), False)
+            fs.delete(Path(_history_path(path, v)), False)
     return removed
 
 

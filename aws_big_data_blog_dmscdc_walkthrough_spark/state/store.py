@@ -49,7 +49,9 @@ class TableState:
     # --- per-table lake options, carried in `extra` so the record shape
     # stays DynamoDB-compatible (a flat item with an attribute map).
     # A human (or provisioning code) flips these in the state file the
-    # same way the reference flips ActiveFlag.
+    # same way the reference flips ActiveFlag. Keys no property reads
+    # are ignored: every table commits through its manifest, so a
+    # legacy manifest opt-in flag in `extra` is inert.
 
     @staticmethod
     def _flag(value) -> bool:
@@ -67,11 +69,6 @@ class TableState:
                 return False
             raise ValueError(f"unparseable boolean flag: {value!r}")
         return bool(value)
-
-    @property
-    def use_manifest(self) -> bool:
-        """Manifest-gated atomic commits + time travel for this table."""
-        return self._flag(self.extra.get("use_manifest", False))
 
     @property
     def retain_history(self) -> bool:

@@ -128,12 +128,7 @@ def start_cdc_stream(
                 seq_monotonic=True,
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
-                lake_writer.compact_table(
-                    sess, out_path, use_manifest=True,
-                    partition_keys=(
-                        (lake_writer.PK_BUCKET_COL,) if history_buckets else ()
-                    ),
-                )
+                lake_writer.compact_table(sess, out_path)
             return
         changes = prepare_dms_batch(batch_df)
         if merge_on_read:
@@ -143,9 +138,7 @@ def start_cdc_stream(
                 partition_keys=partition_keys,
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
-                lake_writer.compact_table(
-                    batch_df.sparkSession, out_path, use_manifest=True
-                )
+                lake_writer.compact_table(batch_df.sparkSession, out_path)
             return
         lake_writer.merge_incremental(
             batch_df.sparkSession,

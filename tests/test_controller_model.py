@@ -7,9 +7,11 @@ three CDC files over two passes. The files hold same-key chains inside
 one file and across files (I→U, U→U, U→D, D→I), an update that moves a
 row to another partition, and deletes that empty a partition. After
 each pass every lake table must equal the model of the files consumed
-so far, and every keyed merge must have rewritten its table into one
-file per table (or per touched partition): the tables are far below
-one ``openCostInBytes``.
+so far — read through its manifest, straight from the directory, and
+through the catalog table the pass registered — and every keyed merge
+must have rewritten its table into one file per table (or per touched
+partition): the tables are far below one ``openCostInBytes``. A pass
+whose manifest commits crash, rerun, must converge to the same state.
 """
 
 import glob
@@ -26,6 +28,8 @@ from aws_big_data_blog_dmscdc_walkthrough_spark.state.store import JsonStateStor
 SCHEMA = "m"
 MODES = {
     "cow": dict(primary_key="id"),
+    # "use_manifest" is a retired flag: every table commits through its
+    # manifest, and a record that still carries it must simply work
     "manifest": dict(
         primary_key="id", extra={"use_manifest": True, "stats_cols": "id,name"}
     ),
@@ -100,8 +104,7 @@ def _keyless_model(n_files):
     return sorted(out)
 
 
-def _lake_rows(spark, path, mode):
-    df = manifest.read_table(spark, path) if mode == "manifest" else spark.read.parquet(path)
+def _rows(df):
     return sorted((r.id, r.name, r.grp) for r in df.select("id", "name", "grp").collect())
 
 
@@ -116,7 +119,11 @@ def _data_files(path):
 def _check(spark, lake, n_files, n_load_files):
     for mode in MODES:
         want = _keyless_model(n_files) if mode == "keyless" else _keyed_model(n_files)
-        assert _lake_rows(spark, f"{lake}/{SCHEMA}/{mode}", mode) == want, mode
+        path = f"{lake}/{SCHEMA}/{mode}"
+        assert manifest.read_manifest(spark, path) is not None, mode
+        assert _rows(manifest.read_table(spark, path)) == want, mode
+        assert _rows(spark.read.parquet(path)) == want, mode
+        assert _rows(spark.table(f"{SCHEMA}.{mode}")) == want, mode
     # file layout: the keyed merges write one file per table / partition
     assert len(_data_files(f"{lake}/{SCHEMA}/cow")) == 1
     man = manifest.read_manifest(spark, f"{lake}/{SCHEMA}/manifest")
@@ -129,9 +136,13 @@ def _check(spark, lake, n_files, n_load_files):
     assert len(_data_files(f"{lake}/{SCHEMA}/keyless")) == n_load_files + n_files
 
 
-def test_controller_modes_match_latest_wins_model(spark, tmp_path):
+def _loaded_lake(spark, tmp_path):
+    """Landing + lake + store after the registration pass and the
+    initial-load pass, with every table configured for its mode."""
     landing, lake = str(tmp_path / "landing"), str(tmp_path / "lake")
     store = JsonStateStore(str(tmp_path / "state.json"))
+    # the catalog outlives tmp_path: drop tables registered by a prior test
+    spark.sql(f"DROP DATABASE IF EXISTS {SCHEMA} CASCADE")
     _land(landing, [])
     controller.run_once(spark, landing, lake, store)  # registers, inactive
     for st in store.all():
@@ -141,6 +152,11 @@ def test_controller_modes_match_latest_wins_model(spark, tmp_path):
         store.put(st)
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.did_initial and not t.error for t in report.tables), report
+    return landing, lake, store
+
+
+def test_controller_modes_match_latest_wins_model(spark, tmp_path):
+    landing, lake, store = _loaded_lake(spark, tmp_path)
     n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
     _check(spark, lake, 0, n_load)
 
@@ -162,6 +178,31 @@ def test_controller_modes_match_latest_wins_model(spark, tmp_path):
     for f, st in man["stats"].items():
         ids = pq.read_table(os.path.join(path, f), columns=["id"])["id"].to_pylist()
         assert (st["id"]["min"], st["id"]["max"]) == (min(ids), max(ids))
+
+
+def test_crash_before_commit_then_rerun_converges(spark, tmp_path, monkeypatch):
+    """Every table's commit raises once inside a pass (after its files
+    were appended); the rerun must leave each table — manifest,
+    directory and catalog views — equal to the model, with no vacuum."""
+    landing, lake, store = _loaded_lake(spark, tmp_path)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    real_commit = manifest.commit_manifest
+    crashed = set()
+
+    def crash_once(spark_, path, files, **kw):
+        if path not in crashed:
+            crashed.add(path)
+            raise RuntimeError("crash before commit")
+        return real_commit(spark_, path, files, **kw)
+
+    monkeypatch.setattr(manifest, "commit_manifest", crash_once)
+    _land(landing, [0, 1])
+    report = controller.run_once(spark, landing, lake, store)
+    assert all("crash before commit" in t.error for t in report.tables), report
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
+    _check(spark, lake, 2, n_load)
+    assert len(crashed) == len(MODES)
 
 
 @pytest.fixture()

@@ -313,9 +313,8 @@ def test_read_change_feed_before_first_batch_is_empty(spark, tmp_path):
 
 
 def test_compact_preserves_change_feed_sidecar(spark, tmp_path):
-    """compact_table on an unpartitioned non-manifest table must carry
-    the _change_feed sidecar through the directory swap — and batch
-    numbering must continue, not restart, afterwards."""
+    """compact_table must leave the _change_feed sidecar intact — and
+    batch numbering must continue, not restart, afterwards."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
 
     out = str(tmp_path / "t")
@@ -330,7 +329,7 @@ def test_compact_preserves_change_feed_sidecar(spark, tmp_path):
 
     lake_writer.compact_table(spark, out)
 
-    # feed survived the swap; table data intact
+    # feed survived the compaction; table data intact
     feed = lake_writer.read_change_feed(spark, out)
     assert {r.batch for r in feed.collect()} == {1, 2}
     assert {r.id: r.name for r in spark.read.parquet(out).select("id", "name").collect()} == {
@@ -569,3 +568,84 @@ def test_precheck_sees_evolved_columns_across_footers(spark, tmp_path):
     with pytest.raises(ValueError, match="additive-only"):
         lake_writer.merge_incremental(spark, bad, out, ["id"], change_feed=True)
     assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2}
+
+
+def _rows(df):
+    return sorted((r.id, r.name, r.dept) for r in df.select("id", "name", "dept").collect())
+
+
+@pytest.mark.parametrize("partition_keys", [[], ["dept"]])
+def test_plain_directory_adopted_on_first_merge_and_compaction(
+    spark, tmp_path, partition_keys
+):
+    """A table written by plain ``df.write`` (no manifest) is adopted by
+    its first merge and by its first compaction: each commits a manifest
+    listing exactly the table's data files, and the manifest read, the
+    directory read and the model agree."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    rows = [(i, f"n{i}", f"d{i % 2}") for i in range(6)]
+    merged, compacted = str(tmp_path / "merged"), str(tmp_path / "compacted")
+    for out in (merged, compacted):
+        df = spark.createDataFrame(rows, "id long, name string, dept string")
+        df.repartition(2).write.partitionBy(*partition_keys).parquet(out)
+    lake_writer.merge_incremental(
+        spark,
+        _changes(spark, [("U", 1, 0, "zero", "d0"), ("D", 1, 3, None, None)]),
+        merged, ["id"], partition_keys=partition_keys,
+    )
+    lake_writer.compact_table(spark, compacted)
+
+    after_merge = sorted([(0, "zero", "d0")] + [r for r in rows if r[0] not in (0, 3)])
+    for out, want in ((merged, after_merge), (compacted, sorted(rows))):
+        man = manifest.read_manifest(spark, out)
+        assert man is not None, out
+        assert man["files"] == manifest.list_data_files(spark, out, recursive=True)
+        assert man.get("partition_keys", []) == partition_keys
+        assert _rows(manifest.read_table(spark, out)) == want
+        assert _rows(spark.read.parquet(out)) == want
+
+
+def test_unpartitioned_merge_on_path_with_space(spark, tmp_path):
+    """``input_file_name()`` URI-encodes the table path (a space reads
+    back as %20): the impacted files must still be re-read, superseded
+    and deleted."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out = str(tmp_path / "my lake" / "t")
+    lake_writer.write_initial(
+        spark.createDataFrame(
+            [(1, "a", "d"), (2, "b", "d"), (3, "c", "d")],
+            "id long, name string, dept string",
+        ),
+        out,
+    )
+    lake_writer.merge_incremental(
+        spark,
+        _changes(spark, [("U", 1, 1, "a2", "d"), ("D", 1, 2, None, None)]),
+        out, ["id"],
+    )
+    want = [(1, "a2", "d"), (3, "c", "d")]
+    assert _rows(manifest.read_table(spark, out)) == want
+    assert _rows(spark.read.parquet(out)) == want
+
+
+def test_compaction_sizes_output_from_live_files_only(spark, tmp_path):
+    """A large ``_change_feed`` sidecar must not inflate compaction's
+    output file count: the size is the live data files' total length."""
+    df = spark.range(0, 3000).selectExpr(
+        "id", "cast(id * 7919 % 10007 as string) as name"
+    )
+    requested = []
+    for name, feed in (("plain", False), ("with_feed", True)):
+        out = str(tmp_path / name)
+        for i in range(3):
+            df.where(f"id % 3 = {i}").coalesce(1).write.mode("append").parquet(out)
+        if feed:
+            spark.range(0, 20000).selectExpr("uuid() as u").coalesce(1).write.parquet(
+                f"{out}/{lake_writer.CHANGE_FEED_DIR}/batch=1"
+            )
+        requested.append(
+            lake_writer.compact_table(spark, out, target_file_bytes=16 * 1024)
+        )
+    assert requested[0] == requested[1], requested

@@ -19,7 +19,7 @@ def _init(spark, path, n=3):
     df = spark.createDataFrame(
         [(i, f"n{i}") for i in range(n)], "id long, name string"
     ).repartition(3)
-    lake_writer.write_initial(df, path, use_manifest=True)
+    lake_writer.write_initial(df, path)
     return df
 
 
@@ -28,7 +28,7 @@ def test_manifest_read_matches_directory_read(spark, tmp_path):
     _init(spark, out)
     lake_writer.merge_incremental(
         spark, _changes(spark, [("U", 1, 1, "n1b"), ("I", 1, 9, "n9")]),
-        out, ["id"], use_manifest=True,
+        out, ["id"],
     )
     via_manifest = {(r.id, r.name) for r in manifest.read_table(spark, out).collect()}
     via_dir = {(r.id, r.name) for r in spark.read.parquet(out).collect()}
@@ -48,7 +48,6 @@ def test_crash_before_commit_keeps_old_version(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError):
         lake_writer.merge_incremental(
             spark, _changes(spark, [("U", 1, 1, "n1b")]), out, ["id"],
-            use_manifest=True,
         )
     monkeypatch.undo()
     # manifest reader: unchanged old version, no duplicates; the
@@ -82,7 +81,7 @@ def test_crash_after_commit_shows_new_version(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError):
         lake_writer.merge_incremental(
             spark, _changes(spark, [("U", 1, 1, "n1b"), ("D", 2, 0, None)]),
-            out, ["id"], use_manifest=True,
+            out, ["id"],
         )
     monkeypatch.undo()
     got = {(r.id, r.name) for r in manifest.read_table(spark, out).collect()}
@@ -92,7 +91,6 @@ def test_crash_after_commit_shows_new_version(spark, tmp_path, monkeypatch):
     # ...and a follow-up merge against the manifest still works
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 7, "n7")]), out, ["id"],
-        use_manifest=True,
     )
     got2 = {(r.id, r.name) for r in manifest.read_table(spark, out).collect()}
     assert got2 == {(1, "n1b"), (2, "n2"), (7, "n7")}
@@ -104,7 +102,6 @@ def test_manifest_versions_increase(spark, tmp_path):
     v1 = manifest.read_manifest(spark, out)["version"]
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 5, "n5")]), out, ["id"],
-        use_manifest=True,
     )
     v2 = manifest.read_manifest(spark, out)["version"]
     assert v2 == v1 + 1
@@ -122,7 +119,7 @@ def _pinit(spark, path):
         "id long, dept string, v long",
     )
     lake_writer.write_initial(
-        df, path, partition_keys=["dept"], use_manifest=True, stats_cols=["v"]
+        df, path, partition_keys=["dept"], stats_cols=["v"]
     )
     return df
 
@@ -144,7 +141,7 @@ def test_partitioned_manifest_end_to_end(spark, tmp_path):
             ("U", 1, 1, "a", 11), ("D", 1, 3, "b", None), ("U", 1, 2, "b", 21),
         ]),
         out, ["id"], partition_keys=["dept"],
-        use_manifest=True, retain_history=True, stats_cols=["v"],
+        retain_history=True, stats_cols=["v"],
     )  # v2
     got = {(r.id, r.dept, r.v) for r in manifest.read_table(spark, out).collect()}
     assert got == {(1, "a", 11), (2, "b", 21), (4, "b", 40)}
@@ -176,7 +173,7 @@ def test_partitioned_crash_before_commit_keeps_old_version(
     with pytest.raises(RuntimeError):
         lake_writer.merge_incremental(
             spark, _pchanges(spark, [("U", 1, 1, "a", 99)]), out, ["id"],
-            partition_keys=["dept"], use_manifest=True,
+            partition_keys=["dept"],
         )
     monkeypatch.undo()
     # manifest readers: unchanged old version; orphans on disk; vacuum reclaims
@@ -201,7 +198,7 @@ def test_partitioned_crash_after_commit_shows_new_version(
     with pytest.raises(RuntimeError):
         lake_writer.merge_incremental(
             spark, _pchanges(spark, [("U", 1, 1, "a", 99)]), out, ["id"],
-            partition_keys=["dept"], use_manifest=True,
+            partition_keys=["dept"],
         )
     monkeypatch.undo()
     got = {(r.id, r.v) for r in manifest.read_table(spark, out).collect()}
@@ -211,7 +208,7 @@ def test_partitioned_crash_after_commit_shows_new_version(
     # follow-up merge against the committed manifest still works
     lake_writer.merge_incremental(
         spark, _pchanges(spark, [("I", 1, 5, "c", 50)]), out, ["id"],
-        partition_keys=["dept"], use_manifest=True,
+        partition_keys=["dept"],
     )
     got2 = {(r.id, r.v) for r in manifest.read_table(spark, out).collect()}
     assert got2 == {(1, 99), (2, 20), (3, 30), (4, 40), (5, 50)}
@@ -223,7 +220,7 @@ def test_partitioned_merge_drops_emptied_partition(spark, tmp_path):
     lake_writer.merge_incremental(
         spark,
         _pchanges(spark, [("D", 1, 1, "a", None), ("D", 1, 2, "a", None)]),
-        out, ["id"], partition_keys=["dept"], use_manifest=True,
+        out, ["id"], partition_keys=["dept"],
     )
     got = {(r.id, r.dept) for r in manifest.read_table(spark, out).collect()}
     assert got == {(3, "b"), (4, "b")}
@@ -243,18 +240,41 @@ def test_partitioned_compact_through_manifest(spark, tmp_path):
     for i in range(3):  # accrete small files
         lake_writer.merge_incremental(
             spark, _pchanges(spark, [("I", 1, 10 + i, "a", 100 + i)]),
-            out, ["id"], partition_keys=["dept"], use_manifest=True,
+            out, ["id"], partition_keys=["dept"],
         )
     before = {(r.id, r.v) for r in manifest.read_table(spark, out).collect()}
     n_before = len(manifest.read_manifest(spark, out)["files"])
     lake_writer.compact_table(
-        spark, out, partition_keys=["dept"], use_manifest=True, stats_cols=["v"]
+        spark, out, stats_cols=["v"]
     )
     after = {(r.id, r.v) for r in manifest.read_table(spark, out).collect()}
     assert after == before
     man = manifest.read_manifest(spark, out)
     assert len(man["files"]) < n_before
     assert man["partition_keys"] == ["dept"]
+
+
+def test_compact_partitioned_table_keeps_its_layout(spark, tmp_path):
+    """compact_table takes the partition keys from the table: compacted
+    with no layout argument, a partitioned table keeps its partitions
+    and a later merge still sees every row."""
+    out = str(tmp_path / "t")
+    rows = {(i, "a" if i % 2 else "b", 10 * i) for i in range(10)}
+    lake_writer.write_initial(
+        spark.createDataFrame(sorted(rows), "id long, dept string, v long"),
+        out, partition_keys=["dept"],
+    )
+    lake_writer.compact_table(spark, out)
+    man = manifest.read_manifest(spark, out)
+    assert man["partition_keys"] == ["dept"]
+    assert all(f.startswith("dept=") for f in man["files"])
+    lake_writer.merge_incremental(
+        spark, _pchanges(spark, [("U", 1, 1, "a", 11)]), out, ["id"],
+        partition_keys=["dept"],
+    )
+    want = rows - {(1, "a", 10)} | {(1, "a", 11)}
+    assert {(r.id, r.dept, r.v) for r in manifest.read_table(spark, out).collect()} == want
+    assert {(r.id, r.dept, r.v) for r in spark.read.parquet(out).collect()} == want
 
 
 def test_partitioned_delete_where_hides_rows(spark, tmp_path):
@@ -318,7 +338,7 @@ def test_partitioned_mor_compaction_materializes_dvs(spark, tmp_path):
     )
     before = {(r.id, r.dept, r.v) for r in manifest.read_table(spark, out).collect()}
     lake_writer.compact_table(
-        spark, out, partition_keys=["dept"], use_manifest=True, stats_cols=["v"]
+        spark, out, stats_cols=["v"]
     )
     man = manifest.read_manifest(spark, out)
     assert not man.get("delete_files")  # DVs materialized + retired
@@ -331,11 +351,11 @@ def test_time_travel_reads_old_versions(spark, tmp_path):
     _init(spark, out)  # v1
     lake_writer.merge_incremental(
         spark, _changes(spark, [("U", 1, 1, "n1b"), ("D", 2, 0, None)]),
-        out, ["id"], use_manifest=True, retain_history=True,
+        out, ["id"], retain_history=True,
     )  # v2
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 9, "n9")]),
-        out, ["id"], use_manifest=True, retain_history=True,
+        out, ["id"], retain_history=True,
     )  # v3
     assert manifest.list_versions(spark, out) == [1, 2, 3]
 
@@ -352,7 +372,7 @@ def test_vacuum_retention_expires_old_versions(spark, tmp_path):
     _init(spark, out)  # v1
     lake_writer.merge_incremental(
         spark, _changes(spark, [("U", 1, 1, "n1b")]),
-        out, ["id"], use_manifest=True, retain_history=True,
+        out, ["id"], retain_history=True,
     )  # v2
     removed = manifest.vacuum(spark, out, retain_versions=1, grace_seconds=0)
     assert removed  # v1-only files reclaimed
@@ -375,7 +395,7 @@ def _init_ranged(spark, path):
         ).coalesce(1)
         lake_writer.merge_incremental(
             spark, df.select(F.lit("I").alias("op"), F.lit(1).alias("_seq"), "id", "name"),
-            path, [], use_manifest=True, stats_cols=["id"],
+            path, [], stats_cols=["id"],
         )
 
 
@@ -426,7 +446,7 @@ def test_stats_survive_cow_merge(spark, tmp_path):
     _changes(spark, [("U", 2, 105, "upd")]).write.parquet(str(tmp_path / "batch"))
     lake_writer.merge_incremental(
         spark, spark.read.parquet(str(tmp_path / "batch")), out, ["id"],
-        use_manifest=True, stats_cols=["id"],
+        stats_cols=["id"],
     )
     man = manifest.read_manifest(spark, out)
     assert set(man["files"]) == set(man["stats"])  # every live file has stats
@@ -454,14 +474,14 @@ def test_compact_through_manifest_clusters_and_skips(spark, tmp_path):
         lake_writer.merge_incremental(
             spark,
             df.select(F.lit("I").alias("op"), F.lit(1).alias("_seq"), "id", "name"),
-            out, [], use_manifest=True, stats_cols=["id"],
+            out, [], stats_cols=["id"],
         )
     scrambled = manifest.read_table(spark, out, predicate=("id", "<", 10))
     assert len(scrambled.inputFiles()) == 3  # no skipping possible yet
 
     lake_writer.compact_table(
         spark, out, target_file_bytes=2048, cluster_by=["id"],
-        use_manifest=True, stats_cols=["id"],
+        stats_cols=["id"],
     )
     man = manifest.read_manifest(spark, out)
     assert len(man["files"]) > 1  # genuinely multi-file after compaction
@@ -485,7 +505,7 @@ def test_compact_manifest_retain_history_time_travels(spark, tmp_path):
     v_before = manifest.read_manifest(spark, out)["version"]
     lake_writer.compact_table(
         spark, out, target_file_bytes=1 << 30, cluster_by=["id"],
-        use_manifest=True, stats_cols=["id"], retain_history=True,
+        stats_cols=["id"], retain_history=True,
     )
     # old version still readable (files retained), new version compacted
     old = manifest.read_table(spark, out, version=v_before)
@@ -526,7 +546,6 @@ def test_append_after_delete_carries_delete_files_forward(spark, tmp_path):
     # insert-only append commit (does not pass delete_files)
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 10, "n10")]), out, ["id"],
-        use_manifest=True,
     )
     man = manifest.read_manifest(spark, out)
     assert man.get("delete_files"), "delete files dropped by append commit"
@@ -540,11 +559,10 @@ def test_cow_merge_after_delete_does_not_resurrect(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"n{i}") for i in range(6)], "id long, name string"
     ).coalesce(1)  # ONE data file: the merge rewrite hits the DV'd file
-    lake_writer.write_initial(df, out, use_manifest=True)
+    lake_writer.write_initial(df, out)
     manifest.delete_where(spark, out, ("id", "=", 5))
     lake_writer.merge_incremental(
         spark, _changes(spark, [("U", 1, 0, "n0b")]), out, ["id"],
-        use_manifest=True,
     )
     got = {(r.id, r.name) for r in manifest.read_table(spark, out).collect()}
     assert got == {(0, "n0b"), (1, "n1"), (2, "n2"), (3, "n3"), (4, "n4")}
@@ -556,7 +574,7 @@ def test_compaction_materializes_deletes_and_prunes_dvs(spark, tmp_path):
     out = str(tmp_path / "t")
     _init(spark, out, n=8)
     manifest.delete_where(spark, out, ("id", "<", 2))
-    lake_writer.compact_table(spark, out, use_manifest=True)
+    lake_writer.compact_table(spark, out)
     man = manifest.read_manifest(spark, out)
     assert not man.get("delete_files")
     got = {r.id for r in manifest.read_table(spark, out).collect()}
@@ -615,7 +633,7 @@ def test_zorder_compaction_skips_on_both_columns(spark, tmp_path):
 
     n_files = lake_writer.compact_table(
         spark, out, target_file_bytes=8 * 1024,
-        cluster_by=("x", "y"), use_manifest=True, stats_cols=("x", "y"),
+        cluster_by=("x", "y"), stats_cols=("x", "y"),
         zorder=True,
     )
     assert n_files >= 4  # enough output files for skipping to be visible
@@ -668,7 +686,7 @@ def test_zorder_partitioned_table_file_count_bounded(spark, tmp_path):
     df.write.partitionBy("dt").parquet(out)
     n_files = lake_writer.compact_table(
         spark, out, target_file_bytes=16 * 1024,
-        partition_keys=("dt",), cluster_by=("x", "y"), zorder=True,
+        cluster_by=("x", "y"), zorder=True,
     )
     written = glob.glob(f"{out}/dt=*/*.parquet")
     # each task covers a contiguous partition run: ~n_files total files,
@@ -690,7 +708,7 @@ def test_temporal_prune_date_probe_against_timestamp_stats(spark, tmp_path):
     ).coalesce(1)
     lake_writer.merge_incremental(
         spark, df.select(F.lit("I").alias("op"), F.lit(1).alias("_seq"), "id", "ts"),
-        out, [], use_manifest=True, stats_cols=["ts"],
+        out, [], stats_cols=["ts"],
     )
     # probe with a DATE equal to the file's min day: must keep the file
     kept = manifest.read_table(spark, out, predicate=("ts", "=", dt.date(2026, 8, 14)))
@@ -739,7 +757,7 @@ def test_register_manifest_view_partitioned(spark, tmp_path):
     _pinit(spark, out)
     lake_writer.merge_incremental(
         spark, _pchanges(spark, [("U", 1, 1, "a", 99)]), out, ["id"],
-        partition_keys=["dept"], use_manifest=True, retain_history=True,
+        partition_keys=["dept"], retain_history=True,
     )
     catalog.register_manifest_view(spark, out, "pt_view")
     got = {(r.id, r.dept, r.v) for r in spark.sql("SELECT * FROM pt_view").collect()}
@@ -758,7 +776,7 @@ def test_partitioned_manifest_additive_evolution(spark, tmp_path):
     )
     lake_writer.merge_incremental(
         spark, evolved, out, ["id"], partition_keys=["dept"],
-        use_manifest=True, retain_history=True,
+        retain_history=True,
     )
     got = {(r.id, r.v, r.email) for r in manifest.read_table(spark, out).collect()}
     assert got == {

@@ -109,9 +109,9 @@ def test_full_flow_initial_then_incremental(spark, env):
 def test_full_flow_with_manifest_and_feed_via_state_flags(spark, env):
     """Per-table lake options flow from the state record (the
     DynamoDB-shaped `extra` map) through the controller: a table flagged
-    use_manifest/retain_history/change_feed gets atomic commits, time
-    travel across its merges, and a change feed — with zero code at the
-    orchestration call site."""
+    retain_history/change_feed gets time travel across its merges and a
+    change feed — with zero code at the orchestration call site. The
+    retired use_manifest flag is still present and simply ignored."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
         lake_writer,
         manifest,
@@ -178,7 +178,7 @@ def test_partitioned_cow_only_touches_impacted_partitions(spark, env):
     controller.run_once(spark, env["landing"], env["lake"], store)
     rows = {r.id: r for r in spark.read.parquet(f"{env['lake']}/sampledb/product").collect()}
     assert set(rows) == {1001, 1003, 1004}
-    # dynamic overwrite must not have rewritten the untouched partition
+    # the merge must not have rewritten the untouched partition
     tools_after = set(os.listdir(f"{env['lake']}/sampledb/product/dept=tools"))
     assert tools_before == tools_after
     # the partitioned catalog registration (MSCK recovery) serves every
@@ -231,7 +231,7 @@ def test_compact_table_partitioned(spark, tmp_path):
             .write.mode("append").partitionBy("pk_part").parquet(out)
     import glob
     before = len(glob.glob(f"{out}/pk_part=*/*.parquet"))
-    lake_writer.compact_table(spark, out, target_file_bytes=64 * 1024 * 1024, partition_keys=["pk_part"])
+    lake_writer.compact_table(spark, out, target_file_bytes=64 * 1024 * 1024)
     after = len(glob.glob(f"{out}/pk_part=*/*.parquet"))
     assert after < before
     got = spark.read.parquet(out)
@@ -519,14 +519,14 @@ def test_cli_maintenance_subcommands(spark, tmp_path, capsys):
     df = spark.createDataFrame(
         [(i, f"n{i}") for i in range(8)], "id long, name string"
     ).repartition(4)
-    lake_writer.write_initial(df, out, use_manifest=True)
+    lake_writer.write_initial(df, out)
 
     assert main(["delete", "--path", out, "--col", "id", "--op", ">=", "--value", "6"]) == 0
     rep = _json.loads(capsys.readouterr().out)
     assert rep["version"] == 2
     assert {r.id for r in manifest.read_table(spark, out).collect()} == set(range(6))
 
-    assert main(["compact", "--path", out, "--manifest"]) == 0
+    assert main(["compact", "--path", out]) == 0
     rep = _json.loads(capsys.readouterr().out)
     assert rep["output_files"] >= 1
     assert {r.id for r in manifest.read_table(spark, out).collect()} == set(range(6))
