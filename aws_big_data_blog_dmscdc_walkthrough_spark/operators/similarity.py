@@ -1107,11 +1107,12 @@ def write_ivf_partitioned(
     # Stage + swap, for two reasons at once: (a) an index REBUILD must
     # replace the WHOLE layout — the session's dynamic overwrite would
     # keep any cell populated only by the previous assignment serving
-    # stale vectors forever (the hazard write_initial guards with static
-    # overwrite); (b) the spill marker must commit ATOMICALLY with the
-    # data — a marker-less duplicated table would silently halve recall
-    # (readers skip the dedupe), a markered single-assign table only
-    # costs a spurious shuffle. Both land in one directory rename.
+    # stale vectors forever (the hazard a lake reload avoids by
+    # superseding every live file); (b) the spill marker must commit
+    # ATOMICALLY with the data — a marker-less duplicated table would
+    # silently halve recall (readers skip the dedupe), a markered
+    # single-assign table only costs a spurious shuffle. Both land in
+    # one directory rename.
     import uuid as _uuid
 
     spark = df.sparkSession

@@ -5,7 +5,8 @@ Flow per table (/root/reference/DMSCDC_ProcessTable.py):
   1. register unknown tables inactive (human sets keys + activates);
   2. initial load if a LOAD file is newer than the stored mark;
   3. incremental merge of files lexically after the stored high-water
-     mark, then advance the mark.
+     mark, then advance the mark;
+  4. register every loaded table in the catalog, on every pass.
 
 The reference fans out one Glue job per table
 (DMSCDC_Controller.py:91-94); here tables run on a thread pool sharing
@@ -171,10 +172,12 @@ def process_table(
         store.put(state)
         report.incremental_files = len(new_files)
 
-    if register_catalog and (report.did_initial or report.incremental_files):
-        # the reference's crawler step: after data lands, (re-)register
-        # the folder so SQL users query `schema.table` by name — the
-        # recreate also picks up additive schema evolution
+    if register_catalog and (state.last_full_load_ts or state.last_incremental_file):
+        # the reference's crawler step: (re-)register every loaded table
+        # on every pass, as a scheduled crawler does, so SQL users query
+        # `schema.table` by name. A pass that crashed after advancing the
+        # state but before registering is healed by the next pass, and
+        # the recreate also picks up schema and layout changes.
         catalog.register_table(
             spark, out_path, folder.schema, folder.table, state.partition_keys
         )

@@ -12,9 +12,11 @@ target a shared Hive metastore / Glue catalog — the SQL is identical.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from . import manifest as manifest_mod
 
@@ -35,12 +37,14 @@ def register_table(
     """(Re-)register a lake folder as an external catalog table.
 
     Registration is IDEMPOTENT on the common path: when the table
-    already exists with the current data schema, only a refresh (or
-    MSCK partition recovery) runs — no DROP, so concurrent SQL readers
-    never hit a TABLE_OR_VIEW_NOT_FOUND window between micro-batches.
-    Drop + recreate happens only when the lake schema actually changed
-    (additive evolution a stale definition would hide); DROP on an
-    external table never touches data. Returns the qualified name.
+    already exists with the current data schema, location and partition
+    columns, only a refresh (or MSCK partition recovery) runs — no DROP,
+    so concurrent SQL readers never hit a TABLE_OR_VIEW_NOT_FOUND window
+    between micro-batches. Drop + recreate happens only when one of the
+    three changed (additive evolution a stale definition would hide, a
+    table moved to a new path, a reload that changed the partition
+    layout); DROP on an external table never touches data. Returns the
+    qualified name.
     """
     db, tbl = _quote(schema), _quote(table)
     qualified = f"{db}.{tbl}"
@@ -48,11 +52,19 @@ def register_table(
     recreate = True
     if spark.catalog.tableExists(qualified):
         current = spark.read.option("mergeSchema", "true").parquet(path).schema
-        registered = spark.table(qualified).schema
-        data_fields = [
-            (f.name, f.dataType) for f in registered.fields
-        ]
-        recreate = [(f.name, f.dataType) for f in current.fields] != data_fields
+        jss = spark._jsparkSession
+        meta = jss.sessionState().catalog().getTableMetadata(
+            jss.sessionState().sqlParser().parseTableIdentifier(qualified)
+        )
+        registered = StructType.fromJson(json.loads(meta.schema().json()))
+        Path, fs = manifest_mod._fs(spark, path)
+        location = fs.makeQualified(Path(path)).toString()
+        recreate = (
+            [(f.name, f.dataType) for f in current.fields]
+            != [(f.name, f.dataType) for f in registered.fields]
+            or Path(meta.location()).toString() != location
+            or meta.partitionColumnNames().mkString(",") != ",".join(partition_keys)
+        )
     if recreate:
         spark.sql(f"DROP TABLE IF EXISTS {qualified}")
         escaped = path.replace("'", "\\'")

@@ -1,10 +1,11 @@
-"""Lake writes: initial overwrite, incremental merge, copy-on-write.
+"""Lake writes: full load, incremental merge, copy-on-write.
 
 Reference behavior being re-expressed:
-  * initial load overwrites, optionally partitioned, after counting
-    distinct partitions just to pick a repartition factor
-    (DMSCDC_LoadInitial.py:33-37) — here the scan's split planner sizes
-    it (a scan→write has no shuffle for AQE to coalesce);
+  * the full load overwrites the target in place, optionally
+    partitioned, after counting distinct partitions just to pick a
+    repartition factor (DMSCDC_LoadInitial.py:31-37) — here it is one
+    more commit that supersedes every live file, and the scan's split
+    planner sizes the write (a scan→write has no shuffle to coalesce);
   * incremental merge rewrites ONLY the data-lake files containing
     changed keys, then deletes them with boto3 and appends replacements
     with coalesce(1) (DMSCDC_LoadIncremental.py:68-87).
@@ -47,9 +48,7 @@ Scale-correct replacements:
 
 from __future__ import annotations
 
-import contextlib
 import posixpath
-import uuid
 from collections.abc import Sequence
 from typing import NamedTuple
 from urllib.parse import unquote
@@ -82,106 +81,30 @@ def target_exists(spark: SparkSession, path: str) -> bool:
     return False
 
 
-@contextlib.contextmanager
-def _sidecars_preserved(spark: SparkSession, out_path: str):
-    """Snapshot underscore-prefixed sidecar DIRECTORIES out of
-    ``out_path`` for the duration of a whole-directory overwrite, then
-    restore them. Driver-side renames only (no data copy). A crash
-    inside the window leaves the sidecars intact in the
-    ``__sidecars_*`` sibling — recoverable, never deleted.
-
-    The manifest history (``_mmanifest_history``) is deliberately NOT
-    preserved: a full reload deletes every data file the old versions
-    reference, so carrying their manifests forward would advertise
-    time travel into reads that can only fail.
-    """
-    jvm = spark._jvm
-    p_out = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = p_out.getFileSystem(spark._jsc.hadoopConfiguration())
-    holder = out_path.rstrip("/") + f"__sidecars_{uuid.uuid4().hex[:8]}"
-    p_holder = jvm.org.apache.hadoop.fs.Path(holder)
-    moved = []
-    if fs.exists(p_out):
-        for status in fs.listStatus(p_out):
-            name = status.getPath().getName()
-            if name == manifest_mod.HISTORY_DIR:
-                continue
-            if status.isDirectory() and name.startswith("_"):
-                if not moved:
-                    fs.mkdirs(p_holder)
-                fs.rename(
-                    status.getPath(),
-                    jvm.org.apache.hadoop.fs.Path(f"{holder}/{name}"),
-                )
-                moved.append(name)
-    try:
-        yield
-    finally:
-        if moved:
-            # the write may have failed after deleting out_path: recreate
-            # it so the restore renames have a destination (Hadoop rename
-            # returns False rather than raising when the parent is gone)
-            if not fs.exists(p_out):
-                fs.mkdirs(p_out)
-            all_restored = True
-            for name in moved:
-                ok = fs.rename(
-                    jvm.org.apache.hadoop.fs.Path(f"{holder}/{name}"),
-                    jvm.org.apache.hadoop.fs.Path(f"{out_path.rstrip('/')}/{name}"),
-                )
-                all_restored = all_restored and bool(ok)
-            # delete the holder ONLY when every sidecar actually moved
-            # back — a failed rename must leave it recoverable, never
-            # recursively deleted with the sidecar still inside
-            if all_restored and len(fs.listStatus(p_holder)) == 0:
-                fs.delete(p_holder, True)
-
-
 def write_initial(
     df: DataFrame,
     out_path: str,
     partition_keys: Sequence[str] = (),
     stats_cols: Sequence[str] = (),
 ) -> None:
-    """Full-load overwrite with op stamp (DMSCDC_LoadInitial.py:31-37),
-    committed as the table's first manifest version.
+    """Full load (DMSCDC_LoadInitial.py:31-37) as one more commit
+    (``_commit_write``): the load appends beside the old files, one
+    manifest version supersedes them all, then they are deleted. Readers
+    and a reload that crashes at any step see a complete version. The
+    history continues, the reload's ``partition_keys`` are recorded (a
+    reload may change the layout), and sidecar directories such as
+    ``_change_feed`` are untouched, so the feed's batch numbering goes on.
 
-    Partitioned tables record partition-relative paths plus the
-    partition keys. ``stats_cols`` records per-file min/max for those
-    DATA columns in the manifest, enabling file skipping in
-    ``manifest.read_table`` (one extra column-pruned scan of the newly
-    written files per commit).
-
-    Underscore-prefixed sidecar DIRECTORIES (``_change_feed``) survive
-    the overwrite: they are snapshotted beside the table and restored
-    after the write. A reload that wiped the feed would restart batch
-    numbering at 1, making subscribers holding a high-water mark N
-    silently skip every later batch. The manifest and its history do
-    not survive a reload — correctly so: the old versions' data files
-    are gone with the overwrite, so carrying their manifests forward
-    would advertise unreadable time travel.
+    No data file carries the reference's ``Op`` column: the table schema
+    is the load's columns through every later merge. ``stats_cols``
+    records per-file min/max of those columns for ``manifest.read_table``
+    file skipping.
     """
     spark = df.sparkSession
-    stamped = cdc.stamp_initial(df)
-    writer = stamped.write.mode("overwrite")
-    if partition_keys:
-        # STATIC overwrite for the full reload: the session default is
-        # dynamic, but a full load must replace the WHOLE table — under
-        # dynamic mode a partition deleted at the source would keep its
-        # stale directory in the lake forever
-        writer = writer.option("partitionOverwriteMode", "static").partitionBy(
-            *partition_keys
-        )
-    with _sidecars_preserved(spark, out_path):
-        writer.parquet(out_path)
-    files = manifest_mod.list_data_files(spark, out_path, recursive=True)
-    stats = manifest_mod.stats_for_commit(
-        spark, out_path, files, list(stats_cols), schema=stamped.schema
-    )
-    manifest_mod.commit_manifest(
-        spark, out_path, files, stats=stats,
-        schema_json=stamped.drop("op").schema.json(),
-        partition_keys=list(partition_keys),
+    snap = _snapshot(spark, out_path)
+    _commit_write(
+        spark, df, out_path, partition_keys, snap, superseded=set(snap.live),
+        stats_cols=stats_cols,
     )
 
 
@@ -1352,9 +1275,7 @@ def read_change_feed(
         return empty.withColumn(op_col, F.lit(None).cast("string")).withColumn(
             "batch", F.lit(None).cast("int")
         )
-    df = (
-        spark.read.option("basePath", base).parquet(base)
-    )
+    df = spark.read.option("basePath", base).parquet(base)
     return df.where(F.col("batch") > since_batch)
 
 

@@ -11,7 +11,8 @@ so far — read through its manifest, straight from the directory, and
 through the catalog table the pass registered — and every keyed merge
 must have rewritten its table into one file per table (or per touched
 partition): the tables are far below one ``openCostInBytes``. A pass
-whose manifest commits crash, rerun, must converge to the same state.
+whose manifest commits crash, rerun, must converge to the same state,
+and so must a full reload that crashes at any of its steps.
 """
 
 import glob
@@ -20,9 +21,10 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from aws_big_data_blog_dmscdc_walkthrough_spark.pipeline import controller
-from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog, manifest
 from aws_big_data_blog_dmscdc_walkthrough_spark.state.store import JsonStateStore
 
 SCHEMA = "m"
@@ -86,9 +88,9 @@ def _land(landing, files):
             _write(CDC[i], ["Op", "id", "name", "grp"], os.path.join(d, _cdc_name(i)))
 
 
-def _keyed_model(n_files):
-    state = {r[0]: r for r in LOAD}
-    for rows in CDC[:n_files]:
+def _keyed_model(files, base=LOAD):
+    state = {r[0]: r for r in base}
+    for rows in files:
         for op, rid, name, grp in rows:
             if op == "D":
                 state.pop(rid, None)
@@ -97,9 +99,9 @@ def _keyed_model(n_files):
     return sorted(state.values())
 
 
-def _keyless_model(n_files):
-    out = list(LOAD)
-    for rows in CDC[:n_files]:
+def _keyless_model(files, base=LOAD):
+    out = list(base)
+    for rows in files:
         out += [(rid, name, grp) for op, rid, name, grp in rows if op == "I"]
     return sorted(out)
 
@@ -116,9 +118,11 @@ def _data_files(path):
     ]
 
 
-def _check(spark, lake, n_files, n_load_files):
+def _check(spark, lake, files, n_load_files, base=LOAD):
+    """Every mode equals the model of ``base`` plus the CDC ``files``."""
     for mode in MODES:
-        want = _keyless_model(n_files) if mode == "keyless" else _keyed_model(n_files)
+        model = _keyless_model if mode == "keyless" else _keyed_model
+        want = model(files, base)
         path = f"{lake}/{SCHEMA}/{mode}"
         assert manifest.read_manifest(spark, path) is not None, mode
         assert _rows(manifest.read_table(spark, path)) == want, mode
@@ -129,11 +133,11 @@ def _check(spark, lake, n_files, n_load_files):
     man = manifest.read_manifest(spark, f"{lake}/{SCHEMA}/manifest")
     assert len(man["files"]) == 1, man["files"]
     part = f"{lake}/{SCHEMA}/part"
-    live = {f"grp={g}" for _, _, g in _keyed_model(n_files)}
+    live = {f"grp={g}" for _, _, g in _keyed_model(files, base)}
     assert sorted(os.path.dirname(f) for f in _data_files(part)) == sorted(live)
     assert {n for n in os.listdir(part) if n.startswith("grp=")} == live
     # keyless appends are not merges: one file per consumed landing file
-    assert len(_data_files(f"{lake}/{SCHEMA}/keyless")) == n_load_files + n_files
+    assert len(_data_files(f"{lake}/{SCHEMA}/keyless")) == n_load_files + len(files)
 
 
 def _loaded_lake(spark, tmp_path):
@@ -158,17 +162,17 @@ def _loaded_lake(spark, tmp_path):
 def test_controller_modes_match_latest_wins_model(spark, tmp_path):
     landing, lake, store = _loaded_lake(spark, tmp_path)
     n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
-    _check(spark, lake, 0, n_load)
+    _check(spark, lake, [], n_load)
 
     _land(landing, [0, 1])
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
-    _check(spark, lake, 2, n_load)
+    _check(spark, lake, CDC[:2], n_load)
 
     _land(landing, [2])
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.incremental_files == 1 and not t.error for t in report.tables), report
-    _check(spark, lake, 3, n_load)
+    _check(spark, lake, CDC, n_load)
 
     # the manifest table's file stats cover every live file and agree
     # with the rows the file holds
@@ -201,8 +205,62 @@ def test_crash_before_commit_then_rerun_converges(spark, tmp_path, monkeypatch):
     assert all("crash before commit" in t.error for t in report.tables), report
     report = controller.run_once(spark, landing, lake, store)
     assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
-    _check(spark, lake, 2, n_load)
+    _check(spark, lake, CDC[:2], n_load)
     assert len(crashed) == len(MODES)
+
+
+def _reload_rows(step):
+    """A full load unlike LOAD: renamed rows and a partition ``d`` that
+    only the reload writes."""
+    return [(1, f"one-r{step}", "a"), (3, f"three-r{step}", "c"),
+            (20, f"twenty-r{step}", "b"), (21, f"twenty-one-r{step}", "c"),
+            (30 + step, f"thirty-r{step}", "d")]
+
+
+# a reload's steps in pass order: (name, owner, attribute, crash after
+# the call instead of before it). Each call's second argument names its
+# table: the lake path, or the state record for the store.
+RELOAD_STEPS = [
+    ("append", DataFrameWriter, "parquet", True),
+    ("commit", manifest, "commit_manifest", False),
+    ("delete", manifest, "delete_data_files", False),
+    ("state", JsonStateStore, "put", False),
+    ("catalog", catalog, "register_table", False),
+]
+
+
+def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeypatch):
+    """A newer full load lands with one CDC file after the mark, and each
+    reload step in turn raises once per table. The rerun, from the state
+    on disk, must leave every mode equal to the reload plus that CDC
+    file through the manifest, the directory and the catalog."""
+    landing, lake, store = _loaded_lake(spark, tmp_path)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    for i, (step, owner, attr, after) in enumerate(RELOAD_STEPS):
+        rows = _reload_rows(i)
+        for mode in MODES:
+            d = os.path.join(landing, SCHEMA, mode)
+            _write(rows, ["id", "name", "grp"], os.path.join(d, "LOAD00000001.parquet"))
+            _write(CDC[2], ["Op", "id", "name", "grp"], os.path.join(d, _cdc_name(3 + i)))
+        real, crashed = getattr(owner, attr), set()
+
+        def crash_once(*a, **kw):
+            table = getattr(a[1], "path", a[1])
+            if table in crashed:
+                return real(*a, **kw)
+            crashed.add(table)
+            if after:
+                real(*a, **kw)
+            raise RuntimeError(f"crash at {step}")
+
+        with monkeypatch.context() as m:
+            m.setattr(owner, attr, crash_once)
+            report = controller.run_once(spark, landing, lake, store)
+        assert all(f"crash at {step}" in t.error for t in report.tables), report
+        store = JsonStateStore(str(tmp_path / "state.json"))
+        report = controller.run_once(spark, landing, lake, store)
+        assert not any(t.error for t in report.tables), report
+        _check(spark, lake, [CDC[2]], n_load, base=rows)
 
 
 @pytest.fixture()

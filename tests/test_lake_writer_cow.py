@@ -393,10 +393,9 @@ def test_change_feed_on_append_only_table(spark, tmp_path):
 
 
 def test_write_initial_preserves_change_feed_sidecar(spark, tmp_path):
-    """A full reload (write_initial's whole-directory overwrite) must
-    carry the _change_feed sidecar across: losing it restarts batch
-    numbering at 1 and subscribers holding a high-water mark silently
-    skip every later batch."""
+    """A full reload must leave the _change_feed sidecar in place:
+    losing it restarts batch numbering at 1 and subscribers holding a
+    high-water mark silently skip every later batch."""
     import pytest
 
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
@@ -411,7 +410,7 @@ def test_write_initial_preserves_change_feed_sidecar(spark, tmp_path):
     )
     lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
 
-    # full reload overwrites the table directory
+    # full reload supersedes every live data file
     reload_df = spark.createDataFrame([(1, "r1"), (3, "r3")], "id long, name string")
     lake_writer.write_initial(reload_df, out)
     assert {r.name for r in spark.read.parquet(out).select("name").collect()} == {
@@ -433,7 +432,7 @@ def test_write_initial_preserves_change_feed_sidecar(spark, tmp_path):
 
 
 def test_write_initial_partitioned_preserves_sidecar(spark, tmp_path):
-    """Same carry-across on the partitioned (static overwrite) path."""
+    """Same on a partitioned reload."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
 
     out = str(tmp_path / "t")
@@ -505,40 +504,91 @@ def test_prepare_dms_batch_accepts_non_file_frames(spark):
     assert "op" in out.columns and "_seq" in out.columns
 
 
-def test_sidecar_holder_survives_failed_restore(spark, tmp_path):
-    """A write that crashes after deleting the table directory must not
-    lose the snapshotted sidecars: they are restored into a recreated
-    directory (or left recoverable in the holder), never recursively
-    deleted."""
-    import os
-
+def test_failed_reload_keeps_previous_version(spark, tmp_path):
+    """A reload whose write raises mid-job leaves the previous version
+    readable through the manifest, the raw directory and the change
+    feed; rerunning the reload then succeeds."""
     import pytest
 
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
 
     out = str(tmp_path / "t")
     b1 = spark.createDataFrame(
-        [("I", 1, 1, "a")], "op string, _seq long, id long, name string"
+        [("I", 1, i, f"n{i}") for i in range(100)],
+        "op string, _seq long, id long, name string",
     )
     lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
-    assert os.path.isdir(f"{out}/_change_feed")
+    before = [(i, f"n{i}") for i in range(100)]
 
-    import shutil
+    @F.udf("string")
+    def fail_on_r50(name):
+        if name == "r50":
+            raise ValueError("source read failed")
+        return name
 
-    with pytest.raises(RuntimeError):
-        with lake_writer._sidecars_preserved(spark, out):
-            shutil.rmtree(out)  # Spark's overwrite deleted the dir...
-            raise RuntimeError("...then the write crashed")
-    # the feed came back into a recreated table directory — readable,
-    # with its batch intact (table data files are gone, so read the
-    # feed directory directly rather than via the table-schema fallback)
-    assert os.path.isdir(f"{out}/_change_feed")
-    feed = spark.read.option("basePath", f"{out}/_change_feed").parquet(
-        f"{out}/_change_feed"
+    reload_df = spark.createDataFrame(
+        [(i, f"r{i}") for i in range(100)], "id long, name string"
     )
-    assert {r.batch for r in feed.select("batch").collect()} == {1}
-    # and no orphaned holder remains
-    assert not [d for d in os.listdir(str(tmp_path)) if "__sidecars_" in d]
+    with pytest.raises(Exception, match="source read failed"):
+        lake_writer.write_initial(
+            reload_df.withColumn("name", fail_on_r50("name")), out
+        )
+
+    def rows(df):
+        return sorted((r.id, r.name) for r in df.select("id", "name").collect())
+
+    assert rows(manifest.read_table(spark, out)) == before
+    assert rows(spark.read.parquet(out)) == before
+    feed = lake_writer.read_change_feed(spark, out)
+    assert {(r.batch, r.id) for r in feed.collect()} == {(1, i) for i in range(100)}
+
+    lake_writer.write_initial(reload_df, out)
+    after = [(i, f"r{i}") for i in range(100)]
+    assert rows(manifest.read_table(spark, out)) == after
+    assert rows(spark.read.parquet(out)) == after
+    assert manifest.read_manifest(spark, out)["version"] == 2  # history goes on
+
+
+def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
+    """An update that rewrites one of four loaded files leaves exactly
+    the loaded columns, with no op column, in the manifest read, the raw
+    directory, the catalog table and the recorded schema."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
+        catalog,
+        manifest,
+    )
+
+    out = str(tmp_path / "t")
+    loaded = spark.createDataFrame(
+        [(i, f"n{i}", f"d{i % 2}") for i in range(40)],
+        "id long, name string, dept string",
+    ).repartition(4)
+    lake_writer.write_initial(loaded, out)
+    files = set(_data_files(out))
+    assert len(files) == 4
+    lake_writer.merge_incremental(
+        spark, _changes(spark, [("U", 1, 0, "n0-x", "d0")]), out, ["id"]
+    )
+    assert len(files - set(_data_files(out))) == 1
+
+    def cols(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    want = cols(loaded.schema)
+    recorded = manifest.read_manifest(spark, out)["schema"]
+    assert cols(StructType.fromJson(json.loads(recorded))) == want
+    spark.sql("DROP DATABASE IF EXISTS rewrite_db CASCADE")
+    qualified = catalog.register_table(spark, out, "rewrite_db", "t")
+    for df in (
+        manifest.read_table(spark, out),
+        spark.read.option("mergeSchema", "true").parquet(out),
+        spark.table(qualified),
+    ):
+        assert cols(df.schema) == want
 
 
 def test_precheck_sees_evolved_columns_across_footers(spark, tmp_path):

@@ -13,7 +13,9 @@ from aws_big_data_blog_dmscdc_walkthrough_spark.state.store import JsonStateStor
 
 
 @pytest.fixture()
-def env(tmp_path):
+def env(spark, tmp_path):
+    # the catalog outlives tmp_path: drop tables registered by a prior test
+    spark.sql("DROP DATABASE IF EXISTS sampledb CASCADE")
     return {
         "landing": str(tmp_path / "landing"),
         "lake": str(tmp_path / "lake"),
@@ -87,7 +89,7 @@ def test_full_flow_initial_then_incremental(spark, env):
     r1 = controller.run_once(spark, env["landing"], env["lake"], store)
     assert r1.tables[0].did_initial
     lake = spark.read.parquet(f"{env['lake']}/sampledb/product")
-    assert lake.count() == 3 and "op" in lake.columns
+    assert lake.count() == 3 and lake.columns == ["id", "name", "dept"]
 
     _write_incremental(spark, env)
     r2 = controller.run_once(spark, env["landing"], env["lake"], store)
@@ -361,7 +363,7 @@ def test_csv_landing_full_flow(spark, env):
     r1 = controller.run_once(spark, env["landing"], env["lake"], store)
     assert r1.tables[0].did_initial
     lake = spark.read.parquet(f"{env['lake']}/sampledb/product")
-    assert lake.count() == 3 and "op" in lake.columns
+    assert lake.count() == 3 and lake.columns == ["id", "name", "dept"]
 
     _write_csv_incremental(env)
     r2 = controller.run_once(spark, env["landing"], env["lake"], store)
@@ -423,7 +425,7 @@ def test_json_landing_full_flow(spark, env):
     r1 = controller.run_once(spark, env["landing"], env["lake"], store)
     assert r1.tables[0].did_initial
     lake = spark.read.parquet(f"{env['lake']}/sampledb/product")
-    assert lake.count() == 3 and "op" in lake.columns
+    assert lake.count() == 3 and lake.columns == ["id", "name", "dept"]
 
     _write_json_incremental(env)
     r2 = controller.run_once(spark, env["landing"], env["lake"], store)
@@ -506,6 +508,23 @@ def test_catalog_registration_enables_sql_by_name(spark, env):
     assert "product" not in [t.name for t in spark.catalog.listTables("sampledb")]
 
 
+def test_register_table_follows_new_location_and_layout(spark, tmp_path):
+    """Re-registering a name at another path, or over another partition
+    layout with the same columns, serves that folder's rows."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog
+
+    spark.sql("DROP DATABASE IF EXISTS regdb CASCADE")
+    a, b, c = (str(tmp_path / n) for n in ("a", "b", "c"))
+    spark.createDataFrame([(1, "x")], "id long, dept string").write.parquet(a)
+    spark.createDataFrame([(2, "y")], "id long, dept string").write.parquet(b)
+    spark.createDataFrame([(3, "z")], "id long, dept string").write.partitionBy(
+        "dept"
+    ).parquet(c)
+    for path, keys, want in ((a, [], 1), (b, [], 2), (c, ["dept"], 3), (a, [], 1)):
+        catalog.register_table(spark, path, "regdb", "t", keys)
+        assert [r.id for r in spark.table("regdb.t").collect()] == [want], path
+
+
 def test_cli_maintenance_subcommands(spark, tmp_path, capsys):
     """compact / delete / vacuum round-trip through the CLI on a
     manifest table (each subcommand builds its own session — reuse of
@@ -579,26 +598,30 @@ def test_same_file_op_order_is_deterministic(spark, tmp_path):
         assert rows == {1: "final", 2: "b"}
 
 
-def test_full_reload_drops_vanished_partitions(spark, tmp_path):
-    """A new full load must REPLACE the whole partitioned table: a
-    partition absent from the reload (deleted at the source) may not
-    keep its stale directory under the session's dynamic-overwrite
-    default."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
+@pytest.mark.parametrize(
+    "layouts", [[["dt"], ["dt"]], [[], ["dt"], []]], ids=["partitioned", "layout_change"]
+)
+def test_full_reload_drops_vanished_partitions(spark, tmp_path, layouts):
+    """A new full load must REPLACE the whole table: a partition absent
+    from the reload (deleted at the source) may not keep its stale
+    directory, and a reload may change the partition layout."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
+        lake_writer,
+        manifest,
+    )
 
     out = str(tmp_path / "t")
-    lake_writer.write_initial(
-        spark.createDataFrame([(1, "a", "p1"), (2, "b", "p2")], "id long, v string, dt string"),
-        out, partition_keys=["dt"],
-    )
-    assert {r.dt for r in spark.read.parquet(out).collect()} == {"p1", "p2"}
-    lake_writer.write_initial(  # source dropped partition p2
-        spark.createDataFrame([(1, "a2", "p1")], "id long, v string, dt string"),
-        out, partition_keys=["dt"],
-    )
-    got = spark.read.parquet(out).collect()
-    assert {r.dt for r in got} == {"p1"}
-    assert got[0].v == "a2"
+    loads = [[(1, "a", "p1"), (2, "b", "p2")], [(1, "a2", "p1")], [(3, "c", "p3")]]
+    for keys, rows in zip(layouts, loads):  # each reload drops a partition
+        lake_writer.write_initial(
+            spark.createDataFrame(rows, "id long, v string, dt string"),
+            out, partition_keys=keys,
+        )
+        for df in (manifest.read_table(spark, out), spark.read.parquet(out)):
+            assert sorted((r.id, r.v, r.dt) for r in df.collect()) == rows
+        assert manifest.read_manifest(spark, out).get("partition_keys", []) == keys
+        dirs = {d for d in os.listdir(out) if d.startswith("dt=")}
+        assert dirs == ({f"dt={r[2]}" for r in rows} if keys else set())
 
 
 def _write_table(spark, env, schema, table, rows, ddl, name):
