@@ -6,7 +6,8 @@ Flow per table (/root/reference/DMSCDC_ProcessTable.py):
   2. initial load if a LOAD file is newer than the stored mark;
   3. incremental merge of files lexically after the stored high-water
      mark, then advance the mark;
-  4. register every loaded table in the catalog, on every pass.
+  4. register the table in the catalog after a pass that wrote it, or
+     when the last such registration did not finish.
 
 The reference fans out one Glue job per table
 (DMSCDC_Controller.py:91-94); here tables run on a thread pool sharing
@@ -122,9 +123,11 @@ def process_table(
                 return report
             df = landing.read_initial(spark, folder, state.schema_ddl)
             lake_writer.write_initial(
-                df, out_path, state.partition_keys, stats_cols=state.stats_cols
+                df, out_path, state.partition_keys, stats_cols=state.stats_cols,
+                retain_history=state.retain_history,
             )
             state.last_full_load_ts = load_ts
+            state.catalog_pending = True
             # last_incremental_file is kept: files at-or-before the mark
             # stay consumed; files after it re-merge idempotently on top
             # of the fresh snapshot (same as the reference's ordering).
@@ -169,18 +172,22 @@ def process_table(
                 change_feed=state.change_feed,
             )
         state.last_incremental_file = new_files[-1]
+        state.catalog_pending = True
         store.put(state)
         report.incremental_files = len(new_files)
 
-    if register_catalog and (state.last_full_load_ts or state.last_incremental_file):
-        # the reference's crawler step: (re-)register every loaded table
-        # on every pass, as a scheduled crawler does, so SQL users query
-        # `schema.table` by name. A pass that crashed after advancing the
-        # state but before registering is healed by the next pass, and
-        # the recreate also picks up schema and layout changes.
+    if register_catalog and state.catalog_pending:
+        # the reference's crawler step: after data lands, (re-)register
+        # the folder so SQL users query `schema.table` by name — the
+        # recreate also picks up schema and layout changes. The flag
+        # rides the state advance, so a pass that crashed before this
+        # point registers on the next pass, and an idle table pays
+        # nothing.
         catalog.register_table(
             spark, out_path, folder.schema, folder.table, state.partition_keys
         )
+        state.catalog_pending = False
+        store.put(state)
     return report
 
 

@@ -86,25 +86,25 @@ def write_initial(
     out_path: str,
     partition_keys: Sequence[str] = (),
     stats_cols: Sequence[str] = (),
+    retain_history: bool = False,
 ) -> None:
     """Full load (DMSCDC_LoadInitial.py:31-37) as one more commit
-    (``_commit_write``): the load appends beside the old files, one
-    manifest version supersedes them all, then they are deleted. Readers
-    and a reload that crashes at any step see a complete version. The
-    history continues, the reload's ``partition_keys`` are recorded (a
-    reload may change the layout), and sidecar directories such as
-    ``_change_feed`` are untouched, so the feed's batch numbering goes on.
+    (``_commit_write``) that supersedes every live file. Manifest readers
+    see a complete version even if the reload crashes; the raw directory
+    (the catalog table) converges at the next commit. The history goes
+    on, the reload's ``partition_keys`` are recorded (the layout may
+    change), sidecars such as ``_change_feed`` are untouched, and
+    ``retain_history`` keeps the superseded files, as a merge does.
 
     No data file carries the reference's ``Op`` column: the table schema
     is the load's columns through every later merge. ``stats_cols``
-    records per-file min/max of those columns for ``manifest.read_table``
-    file skipping.
+    records per-file min/max for ``manifest.read_table`` file skipping.
     """
     spark = df.sparkSession
     snap = _snapshot(spark, out_path)
     _commit_write(
         spark, df, out_path, partition_keys, snap, superseded=set(snap.live),
-        stats_cols=stats_cols,
+        stats_cols=stats_cols, retain_history=retain_history,
     )
 
 

@@ -33,6 +33,7 @@ class TableState:
     last_incremental_file: str = ""
     active: bool = False           # reference: ActiveFlag gate
     schema_ddl: str = ""           # column DDL for headerless CSV landings
+    catalog_pending: bool = False  # lake written since the last registration
     extra: dict = field(default_factory=dict)
 
     @property

@@ -233,7 +233,8 @@ def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeyp
     """A newer full load lands with one CDC file after the mark, and each
     reload step in turn raises once per table. The rerun, from the state
     on disk, must leave every mode equal to the reload plus that CDC
-    file through the manifest, the directory and the catalog."""
+    file through the manifest, the directory and the catalog. A pass
+    with nothing to load then registers no table."""
     landing, lake, store = _loaded_lake(spark, tmp_path)
     n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
     for i, (step, owner, attr, after) in enumerate(RELOAD_STEPS):
@@ -261,6 +262,12 @@ def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeyp
         report = controller.run_once(spark, landing, lake, store)
         assert not any(t.error for t in report.tables), report
         _check(spark, lake, [CDC[2]], n_load, base=rows)
+
+    registered = []
+    monkeypatch.setattr(catalog, "register_table", lambda *a: registered.append(a))
+    report = controller.run_once(spark, landing, lake, store)
+    assert not any(t.error or t.did_initial or t.incremental_files for t in report.tables)
+    assert registered == []
 
 
 @pytest.fixture()

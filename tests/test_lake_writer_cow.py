@@ -549,6 +549,37 @@ def test_failed_reload_keeps_previous_version(spark, tmp_path):
     assert manifest.read_manifest(spark, out)["version"] == 2  # history goes on
 
 
+def test_reload_keeps_retained_versions_readable(spark, tmp_path):
+    """Under ``retain_history`` a reload keeps the files it supersedes,
+    as a merge does: every version listed before the reload still reads
+    back until ``manifest.vacuum`` reclaims it."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out = str(tmp_path / "t")
+    loaded = [(i, f"n{i}", f"d{i % 2}") for i in range(6)]
+    schema = "id long, name string, dept string"
+    lake_writer.write_initial(
+        spark.createDataFrame(loaded, schema), out, retain_history=True
+    )
+    lake_writer.merge_incremental(
+        spark, _changes(spark, [("U", 1, 0, "zero", "d0")]), out, ["id"],
+        retain_history=True,
+    )
+    reloaded = [(i, f"r{i}", "d9") for i in range(3)]
+    lake_writer.write_initial(
+        spark.createDataFrame(reloaded, schema), out, retain_history=True
+    )
+    want = {1: loaded, 2: [(0, "zero", "d0")] + loaded[1:], 3: reloaded}
+    assert manifest.list_versions(spark, out) == [1, 2, 3]
+    for version, rows in want.items():
+        assert _rows(manifest.read_table(spark, out, version=version)) == sorted(rows)
+
+    manifest.vacuum(spark, out, retain_versions=1, grace_seconds=0)
+    assert manifest.list_versions(spark, out) == [3]
+    assert sorted(_data_files(out)) == manifest.read_manifest(spark, out)["files"]
+    assert _rows(spark.read.parquet(out)) == sorted(reloaded)
+
+
 def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
     """An update that rewrites one of four loaded files leaves exactly
     the loaded columns, with no op column, in the manifest read, the raw
