@@ -27,6 +27,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 OP_COL = "op"
 OP_INSERT = "I"
@@ -171,6 +172,33 @@ def _widened(a: str, b: str) -> str | None:
     return None
 
 
+def _type_change(name: str, old, new, allow_widening: bool) -> ValueError:
+    return ValueError(
+        f"column {name!r} changed type {old} → {new}; CDC schema evolution "
+        "is additive-only"
+        + ("" if allow_widening else " (lossless numeric widening: allow_widening=True)")
+    )
+
+
+def evolved_schema(
+    table: StructType, frame: StructType, extra_cols: Sequence[str] = ()
+) -> StructType:
+    """The schema ``align_schemas`` widens both sides to, from the
+    schemas alone: ``table``'s columns, then ``frame``'s new ones as
+    nullable columns (``extra_cols`` skipped). A type change raises, as
+    there; nullability is not part of a type here."""
+    have = {f.name: f.dataType for f in table}
+    added = []
+    for f in frame:
+        if f.name in extra_cols:
+            continue
+        if f.name not in have:
+            added.append(StructField(f.name, f.dataType, True, f.metadata))
+        elif have[f.name].simpleString() != f.dataType.simpleString():
+            raise _type_change(f.name, have[f.name], f.dataType, False)
+    return StructType([*table, *added])
+
+
 def align_schemas(
     target: DataFrame,
     changes: DataFrame,
@@ -211,12 +239,7 @@ def align_schemas(
                 else None
             )
             if wide is None:
-                raise ValueError(
-                    f"column {name!r} changed type {t_fields[name]} → "
-                    f"{c_fields[name]}; CDC schema evolution is additive-only"
-                    + ("" if allow_widening else
-                       " (lossless numeric widening: allow_widening=True)")
-                )
+                raise _type_change(name, t_fields[name], c_fields[name], allow_widening)
             if t_fields[name].simpleString() != wide:
                 target = target.withColumn(name, F.col(name).cast(wide))
             if c_fields[name].simpleString() != wide:

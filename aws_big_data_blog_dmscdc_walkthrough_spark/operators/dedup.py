@@ -1444,9 +1444,7 @@ def append_signature_store(
     ingest — later batches never re-shingle the corpus. The banding
     layout is recorded in ``_store_meta.json`` on first append and
     validated on every later append/match (a mismatched
-    ``rows_per_band`` would silently match nothing). On a cluster,
-    write ``bands`` bucketed by ``_bk`` (sources/bucketed.py) so the
-    per-ingest candidate join is shuffle-free on the store side."""
+    ``rows_per_band`` would silently match nothing)."""
     _check_store_banding(docs.sparkSession, path, rows_per_band, create=True)
     sh = (
         shingle_frame(spread(docs), id_col, text_col)

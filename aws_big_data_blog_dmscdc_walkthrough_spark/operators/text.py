@@ -741,14 +741,9 @@ def fold_count_min(
     """
     import uuid
 
-    from ..sources import lake_writer
     from ..sources import manifest as manifest_mod
 
-    man = (
-        manifest_mod.read_manifest(spark, out_path)
-        if lake_writer.target_exists(spark, out_path)
-        else None
-    )
+    man = manifest_mod.read_manifest(spark, out_path)
     if man is not None and batch_id is not None:
         done = (man.get("properties") or {}).get("cms_folded_through")
         if isinstance(done, int) and batch_id <= done:
@@ -1732,14 +1727,9 @@ def fold_heavy_hitters(
     """
     import uuid
 
-    from ..sources import lake_writer
     from ..sources import manifest as manifest_mod
 
-    man = (
-        manifest_mod.read_manifest(spark, out_path)
-        if lake_writer.target_exists(spark, out_path)
-        else None
-    )
+    man = manifest_mod.read_manifest(spark, out_path)
     props_prev = dict((man or {}).get("properties") or {})
     if man is not None and batch_id is not None:
         done = props_prev.get("mg_folded_through")

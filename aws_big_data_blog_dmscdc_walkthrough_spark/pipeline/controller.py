@@ -183,9 +183,7 @@ def process_table(
         # rides the state advance, so a pass that crashed before this
         # point registers on the next pass, and an idle table pays
         # nothing.
-        catalog.register_table(
-            spark, out_path, folder.schema, folder.table, state.partition_keys
-        )
+        catalog.register_table(spark, out_path, folder.schema, folder.table)
         state.catalog_pending = False
         store.put(state)
     return report

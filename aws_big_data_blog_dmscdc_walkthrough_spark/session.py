@@ -71,7 +71,7 @@ def get_spark(
         # the driver's events table carries parquet TIMESTAMP(NANOS), which
         # vanilla Spark rejects; read as long and convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # catalog tables (bucketed writes) land here, not in cwd
+        # managed catalog tables land here, not in cwd
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/dmscdc_warehouse"),

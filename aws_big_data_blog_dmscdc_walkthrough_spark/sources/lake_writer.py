@@ -20,6 +20,13 @@ every commit, so a crashed attempt's orphans go with the next commit. A
 table with no manifest yet (a plain ``df.write`` directory) is adopted
 on its first write from its directory listing.
 
+Every read of the table uses the schema its manifest records
+(``manifest.table_schema``). A commit that keeps any live file records
+that schema widened by the written frame's new columns; a type change
+raises before anything is appended (``cdc.evolved_schema``, the
+``cdc.align_schemas`` rule). A commit that supersedes every live file (a
+reload, a compaction) records the frame's schema.
+
 Scale-correct replacements:
   * partitioned tables: impacted-PARTITION copy-on-write. Impacted
     partitions are discovered with a PK semi-join against the target
@@ -55,30 +62,11 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..operators import cdc
 from . import manifest as manifest_mod
-
-
-def target_exists(spark: SparkSession, path: str) -> bool:
-    """True iff the table has DATA — at least one non-hidden entry.
-
-    A bare directory test would misfire after a crash that wrote only
-    hidden sidecars (``_change_feed`` write-ahead, ``_mmanifest`` stage,
-    ``_SUCCESS``): the retry would take the merge branch against a
-    data-less table and fail schema inference.
-    """
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return False
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return True
-    return False
 
 
 def write_initial(
@@ -146,15 +134,20 @@ def merge_incremental(
     # on content. The reverse order would silently LOSE a feed batch on
     # crash, with contiguous batch ids hiding the gap from every
     # consumer — strictly worse.
-    # The cheap driver-side schema checks run FIRST: a batch the merge
-    # will permanently reject (type change, missing op/seq) must never
-    # be published — each retry would append another duplicate feed
-    # batch for a merge that can never commit.
+    # The cheap driver-side schema checks run FIRST, against the
+    # snapshot's table schema (no read, no job): a batch the commit will
+    # permanently reject (type change, missing op/seq) must never be
+    # published — each retry would append another duplicate feed batch
+    # for a merge that can never commit.
+    snap = _snapshot(spark, out_path)
     if change_feed:
-        _precheck_merge_eligible(spark, changes, out_path, primary_keys, seq_col, op_col)
+        for col in (op_col, *((seq_col,) if primary_keys else ())):
+            if col not in changes.columns:
+                raise ValueError(f"change batch missing required column {col!r}")
+        if snap.live:  # a type change raises, as the commit's check does
+            cdc.evolved_schema(snap.schema, changes.schema, extra_cols=(op_col, seq_col))
         append_change_feed(spark, changes, out_path, primary_keys, seq_col, op_col)
 
-    snap = _snapshot(spark, out_path)
     if primary_keys and snap.live:
         if partition_keys:
             _merge_partitioned(
@@ -222,18 +215,20 @@ def merge_on_read_incremental(
     collapsed = cdc.latest_changes(changes, pks, seq_col)
     survivors = collapsed.where(F.col(op_col) != cdc.OP_DELETE).drop(op_col, seq_col)
 
-    if not target_exists(spark, out_path):
+    snap = _snapshot(spark, out_path)
+    if not snap.live:
         _commit_write(
-            spark, survivors, out_path, partition_keys,
-            _snapshot(spark, out_path), stats_cols=stats_cols,
+            spark, survivors, out_path, partition_keys, snap, stats_cols=stats_cols
         )
         return
-    man = manifest_mod.read_manifest(spark, out_path)
+    man = snap.manifest
     if man is None:
         raise ValueError(
             f"{out_path} has no manifest; merge-on-read requires a "
             "manifest-committed table (any lake_writer write commits one)"
         )
+    # every live file stays: the commit keeps the table schema, widened
+    schema = cdc.evolved_schema(snap.schema, survivors.schema)
 
     keys = cdc._maybe_broadcast(
         collapsed.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
@@ -247,27 +242,25 @@ def merge_on_read_incremental(
     added_dv, targets = manifest_mod.stage_deletion_vectors(spark, out_path, hits)
 
     pkeys = man.get("partition_keys") or []
-    recursive = bool(pkeys)
-    before = set(manifest_mod.list_data_files(spark, out_path, recursive))
     writer = survivors.write.mode("append")
     if pkeys:
         writer = writer.partitionBy(*pkeys)
     writer.parquet(out_path)
     added = [
-        f for f in manifest_mod.list_data_files(spark, out_path, recursive)
-        if f not in before
+        f for f in manifest_mod.list_data_files(spark, out_path, recursive=True)
+        if f not in snap.listed
     ]
     if not added and not added_dv:
         return  # empty batch: nothing to commit
     live = man["files"] + added
     stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), man, schema=survivors.schema
+        spark, out_path, live, list(stats_cols), man, schema=schema
     )
     carried = man.get("delete_files") or []
     manifest_mod.commit_manifest(
         spark, out_path, live, stats=stats,
         delete_files=carried + added_dv, dv_targets=targets,
-        schema_json=survivors.schema.json(),
+        schema_json=schema.json(),
     )
 
 
@@ -418,7 +411,8 @@ def scd2_merge_on_read(
         raise ValueError("SCD2 history needs primary keys")
     part_keys = [PK_BUCKET_COL] if bucket_partitions else []
 
-    if not target_exists(spark, out_path):
+    snap = _snapshot(spark, out_path)
+    if not snap.live:
         empty_target = changes.drop(op_col, seq_col).limit(0)
         folded = cdc.scd2_history(empty_target, changes, pks, seq_col, op_col)
         props: dict = {}
@@ -435,12 +429,12 @@ def scd2_merge_on_read(
                 props["scd2_seq_hwm"] = hi
                 props[HWM_INVARIANT_FLAG] = 1
         _commit_write(
-            spark, folded, out_path, part_keys, _snapshot(spark, out_path),
+            spark, folded, out_path, part_keys, snap,
             stats_cols=stats_cols, properties=props or None,
         )
         return
 
-    man = manifest_mod.read_manifest(spark, out_path)
+    man = snap.manifest
     if man is None:
         raise ValueError(
             f"{out_path} has no manifest; the incremental SCD2 history "
@@ -484,7 +478,7 @@ def scd2_merge_on_read(
     # TABLE) — widen both sides with typed NULLs so old versions read
     # back NULL and new versions carry the value; a type CHANGE raises
     # (cdc.align_schemas). The widened schema reaches the manifest via
-    # the commit below; mergeSchema reads reconcile the narrow files.
+    # the commit below; narrower files read the new columns as NULL.
     meta_cols = {
         "valid_from_seq", "valid_to_seq", "is_current",
         manifest_mod.DV_FILE_COL, manifest_mod.DV_POS_COL, PK_BUCKET_COL,
@@ -666,9 +660,7 @@ def scd2_merge_on_read(
             appended = appended.withColumn(
                 PK_BUCKET_COL, _pk_bucket_expr(pks, bucket_partitions)
             )
-        before = set(
-            manifest_mod.list_data_files(spark, out_path, recursive=bucketed)
-        )
+        schema = cdc.evolved_schema(snap.schema, appended.schema)
         writer = appended.write.mode("append")
         if bucketed:
             writer = writer.partitionBy(PK_BUCKET_COL)
@@ -698,15 +690,12 @@ def scd2_merge_on_read(
             added_dv, targets = dv_fut.result()
         added = [
             f
-            for f in manifest_mod.list_data_files(
-                spark, out_path, recursive=bucketed
-            )
-            if f not in before
+            for f in manifest_mod.list_data_files(spark, out_path, recursive=True)
+            if f not in snap.listed
         ]
         live_files = man["files"] + added
         stats = manifest_mod.stats_for_commit(
-            spark, out_path, live_files, list(stats_cols), man,
-            schema=appended.schema,
+            spark, out_path, live_files, list(stats_cols), man, schema=schema
         )
         carried = man.get("delete_files") or []
         # merge into the carried properties: bucket count validated
@@ -730,7 +719,7 @@ def scd2_merge_on_read(
         manifest_mod.commit_manifest(
             spark, out_path, live_files, stats=stats,
             delete_files=carried + added_dv, dv_targets=targets,
-            schema_json=appended.schema.json(),
+            schema_json=schema.json(),
             properties=props,
         )
     finally:
@@ -740,48 +729,24 @@ def scd2_merge_on_read(
             open_rows.unpersist()
 
 
-def _precheck_merge_eligible(
-    spark: SparkSession,
-    changes: DataFrame,
-    out_path: str,
-    primary_keys: Sequence[str],
-    seq_col: str,
-    op_col: str,
-) -> None:
-    """Driver-side mirror of the merge's own schema validation, run
-    BEFORE the write-ahead feed publish. Footer-only target schema read
-    + the same ``align_schemas`` additive-only check the merge applies —
-    no job runs. Raises the merge's eventual error early so only
-    merge-eligible batches reach the feed.
-    """
-    for col in (op_col, *((seq_col,) if primary_keys else ())):
-        if col not in changes.columns:
-            raise ValueError(f"change batch missing required column {col!r}")
-    if not primary_keys or not target_exists(spark, out_path):
-        return
-    # mergeSchema, same as the merge's own read: a footer sampled from a
-    # pre-evolution file would hide additively-added columns and let a
-    # type change on one slip past as "additive"
-    target = spark.read.option("mergeSchema", "true").parquet(out_path)
-    data_cols = [c for c in target.columns if c not in (op_col, seq_col)]
-    # raises on a type CHANGE (additive-only evolution, cdc.align_schemas)
-    cdc.align_schemas(target.select(*data_cols), changes, extra_cols=(op_col, seq_col))
-
-
 class _Snapshot(NamedTuple):
     """A table before a write: its committed manifest (None before the
-    first commit), every listed data file, and the live files — the
-    manifest's list, or the whole listing for a table not yet adopted."""
+    first commit), every listed data file, the live files — the
+    manifest's list, or the whole listing for a table not yet adopted —
+    and the table schema (None before the table has data or a commit)."""
 
     manifest: dict | None
     listed: set[str]
     live: list[str]
+    schema: StructType | None
 
 
 def _snapshot(spark: SparkSession, out_path: str) -> _Snapshot:
     man = manifest_mod.read_manifest(spark, out_path)
     listed = set(manifest_mod.list_data_files(spark, out_path, recursive=True))
-    return _Snapshot(man, listed, man["files"] if man else sorted(listed))
+    live = man["files"] if man else sorted(listed)
+    schema = manifest_mod.table_schema(spark, out_path, man) if man or live else None
+    return _Snapshot(man, listed, live, schema)
 
 
 def _commit_write(
@@ -807,34 +772,28 @@ def _commit_write(
     That delete relies on one writer per table (the controller's
     per-table thread, as in ``append_change_feed``): another writer's
     staged, not yet committed files would look unreferenced.
+
+    A version that keeps a live file keeps the table schema, widened by
+    ``df``'s new columns; a type change raises before the append. A
+    version that supersedes every live file records ``df``'s schema.
     """
+    live = [f for f in snap.live if f not in superseded]
+    schema = cdc.evolved_schema(snap.schema, df.schema) if live else df.schema
     writer = df.write.mode("append")
     if partition_keys:
         writer = writer.partitionBy(*partition_keys)
     writer.parquet(out_path)
     after = manifest_mod.list_data_files(spark, out_path, recursive=True)
-    live = [f for f in snap.live if f not in superseded]
     live += [f for f in after if f not in snap.listed]
     stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), snap.manifest, schema=df.schema
+        spark, out_path, live, list(stats_cols), snap.manifest, schema=schema
     )
     manifest_mod.commit_manifest(
-        spark, out_path, live, stats=stats, schema_json=df.schema.json(),
+        spark, out_path, live, stats=stats, schema_json=schema.json(),
         partition_keys=list(partition_keys), properties=properties,
     )
     if not retain_history:
         manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
-
-
-def _read_live(spark: SparkSession, out_path: str, snap: _Snapshot) -> DataFrame:
-    """The snapshot's live files (non-empty), read with merged footers:
-    files written before an additive evolution lack the new columns."""
-    base = out_path.rstrip("/")
-    return (
-        spark.read.option("mergeSchema", "true")
-        .option("basePath", base)
-        .parquet(*[posixpath.join(base, f) for f in snap.live])
-    )
 
 
 def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
@@ -882,7 +841,7 @@ def _merge_partitioned(
     """
     pks = list(primary_keys)
     part_cols = list(partition_keys)
-    target = _read_live(spark, out_path, snap)
+    target = manifest_mod.read_files(spark, out_path, snap.live, snap.schema)
     data_cols = [c for c in target.columns if c not in (op_col, seq_col)]
     target = target.select(*data_cols)
     # additive schema evolution: a batch may carry columns the lake table
@@ -981,7 +940,7 @@ def _merge_unpartitioned_cow(
     # here is conservative: a file whose only key matches are DV-deleted
     # rows still counts as impacted and simply gets rewritten (its
     # deletes materialize). The DVs ARE applied to the merge input below.
-    target_df = _read_live(spark, out_path, snap)
+    target_df = manifest_mod.read_files(spark, out_path, snap.live, snap.schema)
     tagged = target_df.withColumn("_file", F.input_file_name())
     change_keys = cdc._maybe_broadcast(
         changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
@@ -997,12 +956,7 @@ def _merge_unpartitioned_cow(
     )
 
     if impacted:
-        # target_df's schema is already merged over every live file, so
-        # the impacted subset reads with it — no second inference job
-        base = out_path.rstrip("/")
-        old = spark.read.schema(target_df.schema).parquet(
-            *[posixpath.join(base, f) for f in impacted]
-        )
+        old = manifest_mod.read_files(spark, out_path, impacted, snap.schema)
         # the impacted-file re-read bypasses read_table, so apply the
         # committed deletion vectors here too — otherwise DV-deleted
         # rows in impacted files would be merged back into the
@@ -1013,7 +967,7 @@ def _merge_unpartitioned_cow(
     else:
         # pure-insert batch: merge against an empty frame with the
         # target's schema so collapsed inserts just append
-        old = spark.createDataFrame([], target_df.schema)
+        old = spark.createDataFrame([], snap.schema)
     data_cols = [c for c in old.columns if c not in (op_col, seq_col)]
     old = old.select(*data_cols)
     old, changes = cdc.align_schemas(old, changes, extra_cols=(op_col, seq_col))
@@ -1155,12 +1109,7 @@ def compact_table(
     Returns the number of output files requested.
     """
     snap = _snapshot(spark, path)
-    if snap.manifest is not None:
-        part_keys = snap.manifest.get("partition_keys") or []
-    elif snap.live:
-        part_keys = list(manifest_mod._partition_values(snap.live[0]))
-    else:
-        part_keys = []
+    part_keys = manifest_mod.partition_keys(spark, path, snap.manifest)
     Path, fs = manifest_mod._fs(spark, path)
     base = path.rstrip("/")
     live_bytes = sum(
@@ -1256,24 +1205,25 @@ def read_change_feed(
 
     A subscriber polling BEFORE the first ``change_feed=True`` merge
     gets an empty frame in the feed's shape (table columns + ``op_col``
-    + ``batch``), derived from the table schema — not an error. A poll
-    before the table itself has ANY data (brand-new path, or only
-    hidden sidecars after a crash) raises a clear error instead of a
-    raw PATH_NOT_FOUND from the schema-derivation read.
+    + ``batch``), in the table schema — not an error. A poll before the
+    table has a schema (brand-new path, or only hidden sidecars after a
+    crash) raises a clear error instead.
     """
     jvm = spark._jvm
     base = out_path.rstrip("/") + "/" + CHANGE_FEED_DIR
     p = jvm.org.apache.hadoop.fs.Path(base)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
-        if not target_exists(spark, out_path):
+        schema = _snapshot(spark, out_path).schema
+        if schema is None:
             raise FileNotFoundError(
                 f"no table at {out_path}: the change-feed schema cannot be "
                 "derived before the first load lands data"
             )
-        empty = spark.read.option("mergeSchema", "true").parquet(out_path).limit(0)
-        return empty.withColumn(op_col, F.lit(None).cast("string")).withColumn(
-            "batch", F.lit(None).cast("int")
+        return (
+            spark.createDataFrame([], schema)
+            .withColumn(op_col, F.lit(None).cast("string"))
+            .withColumn("batch", F.lit(None).cast("int"))
         )
     df = spark.read.option("basePath", base).parquet(base)
     return df.where(F.col("batch") > since_batch)

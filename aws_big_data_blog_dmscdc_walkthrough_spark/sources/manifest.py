@@ -23,6 +23,11 @@ merges, merge-on-read, compaction) commits here. A table with no
 manifest yet reads as a plain directory and is adopted by its first
 write.
 
+Every commit also records the table schema (``schema_json``). Every
+reader reads the listed files in it (``table_schema``, ``read_files``),
+so no read infers a schema, and a file written before an additive
+column reads that column as NULL.
+
 Partitioned tables commit through the same single manifest: ``files``
 entries are paths RELATIVE to the table root (``dept=a/part-x.parquet``),
 the manifest records the partition keys, and a partitioned merge appends
@@ -202,9 +207,7 @@ def compute_file_stats(
     basename maps to exactly one listed path). ``cols`` must be DATA
     columns — partition columns live in the path, not the files, and
     are pruned by partition value instead."""
-    base = path.rstrip("/")
-    paths = [posixpath.join(base, f) for f in files]
-    if not paths or not cols:
+    if not files or not cols:
         return {}
     by_basename = {posixpath.basename(f): f for f in files}
     aggs = []
@@ -212,8 +215,7 @@ def compute_file_stats(
         aggs.append(F.min(c).alias(f"_min_{c}"))
         aggs.append(F.max(c).alias(f"_max_{c}"))
     rows = (
-        spark.read.schema(StructType([schema[c] for c in cols]))
-        .parquet(*paths)
+        read_files(spark, path, files, StructType([schema[c] for c in cols]))
         .groupBy(F.input_file_name().alias("_f"))
         .agg(*aggs)
         .collect()
@@ -298,10 +300,10 @@ def commit_manifest(
     marks a partitioned table: ``files`` are then partition-relative
     paths and ``read_table`` prunes them by partition value.
 
-    ``schema_json`` (``df.schema.json()``) rides along so a
-    committed-EMPTY version (all rows deleted) stays readable: with no
-    data files on disk a raw-directory schema inference would fail.
-    ``None`` carries the previous manifest's recorded schema forward.
+    ``schema_json`` (``df.schema.json()``) is the table schema every
+    reader of this version uses (:func:`table_schema`); it also keeps a
+    committed-EMPTY version (all rows deleted) readable. ``None``
+    carries the previous manifest's recorded schema forward.
 
     Write-to-temp + rename in the SAME directory — atomic on HDFS and
     POSIX; on S3-style stores swap this for a conditional PUT.
@@ -562,9 +564,8 @@ def read_table(
     else:
         man = read_manifest(spark, path)
     if man is None:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+        df = spark.read.schema(table_schema(spark, path, None)).parquet(path)
         return _apply_predicate(df, predicate)
-    base = path.rstrip("/")
     names = list(man["files"])
     part_keys = man.get("partition_keys") or []
     if predicate is not None:
@@ -576,32 +577,49 @@ def read_table(
             names = [
                 n for n in names if _file_may_match(stats.get(n), col, op, value)
             ]
-    files = [posixpath.join(base, f) for f in names]
-    if not files:
-        return _apply_predicate(_empty_frame(spark, path, man), predicate)
-    reader = spark.read.option("mergeSchema", "true")
-    if part_keys:
-        # basePath keeps the partition columns in the projection when
-        # reading an explicit file list
-        reader = reader.option("basePath", base)
-    df = reader.parquet(*files)
+    if not names:  # a committed-empty version: the recorded schema, no rows
+        empty = spark.createDataFrame([], table_schema(spark, path, man))
+        return _apply_predicate(empty, predicate)
+    df = read_files(spark, path, names, table_schema(spark, path, man))
     dv = read_deletion_vectors(spark, path, man)
     if dv is not None:
         df = apply_deletion_vectors(df, dv, len(part_keys))
     return _apply_predicate(df, predicate)
 
 
-def _empty_frame(spark: SparkSession, path: str, man: dict) -> DataFrame:
-    """Zero-row frame in the table's schema. Prefers the schema recorded
-    in the manifest (survives ALL data files being deleted+vacuumed);
-    falls back to raw-directory inference for manifests that predate
-    schema recording."""
-    sch = man.get("schema")
-    if sch:
-        from pyspark.sql.types import StructType
+def table_schema(spark: SparkSession, path: str, man: dict | None) -> StructType:
+    """The table schema: the one the manifest ``man`` records. Only a
+    plain directory that no commit has adopted yet (``man`` None), or a
+    manifest committed without a schema, has it inferred, from the
+    merged footers of its files."""
+    if man and man.get("schema"):
+        return StructType.fromJson(json.loads(man["schema"]))
+    return spark.read.option("mergeSchema", "true").parquet(path).schema
 
-        return spark.createDataFrame([], StructType.fromJson(json.loads(sch)))
-    return spark.read.option("mergeSchema", "true").parquet(path).limit(0)
+
+def read_files(
+    spark: SparkSession, path: str, files: list[str], schema: StructType
+) -> DataFrame:
+    """The table-relative ``files`` read in the table ``schema``: no
+    schema-inference job runs, and a file written before an additive
+    column reads it as NULL. ``basePath`` keeps partition columns, typed
+    by ``schema``, in the projection of an explicit file list."""
+    base = path.rstrip("/")
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*[posixpath.join(base, f) for f in files])
+    )
+
+
+def partition_keys(spark: SparkSession, path: str, man: dict | None) -> list[str]:
+    """The table's partition keys: the ones the manifest records, or for
+    a plain directory with no manifest, the ``k=v`` directory levels its
+    first data file sits under."""
+    if man is not None:
+        return list(man.get("partition_keys") or [])
+    files = list_data_files(spark, path, recursive=True)
+    return list(_partition_values(files[0])) if files else []
 
 
 def read_deletion_vectors(
@@ -629,21 +647,16 @@ def read_table_with_positions(spark: SparkSession, path: str) -> DataFrame:
     if man is None:
         raise ValueError(f"{path} has no manifest; positions need committed files")
     part_keys = man.get("partition_keys") or []
-    base = path.rstrip("/")
-    files = [posixpath.join(base, f) for f in man["files"]]
-    if not files:
+    if not man["files"]:
         # mirror read_table's empty fallback (plus the address columns)
         # instead of returning None against the -> DataFrame contract;
         # _tag_positions needs _metadata, absent on a local empty frame,
         # so the address columns are typed NULL literals here
-        empty = _empty_frame(spark, path, man)
+        empty = spark.createDataFrame([], table_schema(spark, path, man))
         return empty.withColumn(
             DV_FILE_COL, F.lit(None).cast("string")
         ).withColumn(DV_POS_COL, F.lit(None).cast("long"))
-    reader = spark.read.option("mergeSchema", "true")
-    if part_keys:
-        reader = reader.option("basePath", base)
-    df = reader.parquet(*files)
+    df = read_files(spark, path, man["files"], table_schema(spark, path, man))
     tagged = _tag_positions(df, len(part_keys))
     dv = read_deletion_vectors(spark, path, man)
     if dv is not None:
@@ -862,8 +875,6 @@ def schema_drift_report(
     silently diffing the wrong pair. Output is a bounded
     |changed columns|-row frame.
     """
-    from pyspark.sql.types import StructType
-
     from ..operators.cdc import _widened
 
     versions = list_versions(spark, path)

@@ -623,9 +623,9 @@ def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
 
 
 def test_precheck_sees_evolved_columns_across_footers(spark, tmp_path):
-    """The feed precheck must read with mergeSchema like the merge does:
-    a type change on an additively-evolved column (present only in newer
-    footers) must be rejected BEFORE the feed publish."""
+    """The feed precheck checks against the recorded table schema, as the
+    commit does: a type change on an additively-evolved column (present
+    only in newer footers) must be rejected BEFORE the feed publish."""
     import pytest
 
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
@@ -730,3 +730,126 @@ def test_compaction_sizes_output_from_live_files_only(spark, tmp_path):
             lake_writer.compact_table(spark, out, target_file_bytes=16 * 1024)
         )
     assert requested[0] == requested[1], requested
+
+
+# ---------------------------------------------- the recorded table schema
+
+
+@pytest.mark.parametrize(
+    "values", [("007", "010"), ("2024-01-01", "2024-01-02")], ids=["digits", "date"]
+)
+def test_string_partition_key_keeps_its_type(spark, tmp_path, values):
+    """A string partition key whose values look like numbers or dates
+    reads back as the string the manifest records, through read_table
+    and the catalog, and the table then takes a keyed merge that moves
+    a row across partitions."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog, manifest
+
+    a, b = values
+    out = str(tmp_path / "t")
+    lake_writer.write_initial(
+        spark.createDataFrame(
+            [(1, "x", a), (2, "y", b)], "id long, name string, k string"
+        ),
+        out, partition_keys=["k"],
+    )
+    spark.sql("DROP DATABASE IF EXISTS strkey_db CASCADE")
+    qualified = catalog.register_table(spark, out, "strkey_db", "t")
+    for df in (manifest.read_table(spark, out), spark.table(qualified)):
+        assert df.schema["k"].dataType.simpleString() == "string"
+        assert sorted((r.id, r.k) for r in df.collect()) == [(1, a), (2, b)]
+
+    lake_writer.merge_incremental(
+        spark,
+        spark.createDataFrame(
+            [("U", 1, 1, "x2", b)], "op string, _seq long, id long, name string, k string"
+        ),
+        out, ["id"], partition_keys=["k"],
+    )
+    got = manifest.read_table(spark, out)
+    assert sorted((r.id, r.name, r.k) for r in got.collect()) == [(1, "x2", b), (2, "y", b)]
+
+
+def _amounts(spark, rows, schema="op string, _seq long, id long, amount int, note string"):
+    return spark.createDataFrame(rows, schema)
+
+
+def test_keyless_type_change_raises_and_leaves_table_unchanged(spark, tmp_path):
+    """A keyless batch that changes a column's type raises before it
+    appends anything: the version, the data files and the rows stay."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out = str(tmp_path / "t")
+    lake_writer.write_initial(
+        spark.createDataFrame([(1, 5, "n")], "id long, amount int, note string"), out
+    )
+    version, files = manifest.read_manifest(spark, out)["version"], _data_files(out)
+    bad = _amounts(
+        spark, [("I", 1, 2, "x", "m")],
+        "op string, _seq long, id long, amount string, note string",
+    )
+    with pytest.raises(ValueError, match="additive-only"):
+        lake_writer.merge_incremental(spark, bad, out, [])
+    assert manifest.read_manifest(spark, out)["version"] == version
+    assert sorted(_data_files(out)) == sorted(files)
+    assert [tuple(r) for r in manifest.read_table(spark, out).collect()] == [(1, 5, "n")]
+
+
+def test_narrow_keyless_batch_keeps_recorded_column(spark, tmp_path):
+    """A keyless batch without a column appends rows that read it as
+    NULL; the recorded schema keeps the column, so the drift report
+    shows no change."""
+    import json
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out = str(tmp_path / "t")
+    loaded = spark.createDataFrame([(1, 5, "n")], "id long, amount int, note string")
+    lake_writer.write_initial(loaded, out)
+    lake_writer.merge_incremental(
+        spark, _amounts(spark, [("I", 1, 2, 6)], "op string, _seq long, id long, amount int"),
+        out, [],
+    )
+    assert manifest.schema_drift_report(spark, out).count() == 0
+    recorded = json.loads(manifest.read_manifest(spark, out)["schema"])
+    assert [f["name"] for f in recorded["fields"]] == loaded.columns
+    rows = sorted(tuple(r) for r in manifest.read_table(spark, out).collect())
+    assert rows == [(1, 5, "n"), (2, 6, None)]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"count-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_keys,merge_jobs", [([], 6), (["dept"], 8)])
+def test_merge_and_reregistration_job_counts(spark, tmp_path, partition_keys, merge_jobs):
+    """The table schema comes from the manifest: a 50-row keyed merge
+    runs no schema-inference job (one fewer than when the live files'
+    footers were merged on every merge: 7 unpartitioned, 9 partitioned
+    on a 4-core host), and re-registering an unchanged table runs
+    none at all."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog
+
+    out = str(tmp_path / "t")
+    lake_writer.write_initial(
+        spark.createDataFrame(
+            [(i, f"n{i}", f"d{i % 3}") for i in range(200)],
+            "id long, name string, dept string",
+        ),
+        out, partition_keys=partition_keys,
+    )
+    batch = _changes(spark, [("U", i, i, f"m{i}", f"d{i % 3}") for i in range(0, 100, 2)])
+    assert _jobs(spark, lambda: lake_writer.merge_incremental(
+        spark, batch, out, ["id"], partition_keys=partition_keys
+    )) <= merge_jobs
+    spark.sql("DROP DATABASE IF EXISTS jobs_db CASCADE")
+    catalog.register_table(spark, out, "jobs_db", "t")
+    assert _jobs(spark, lambda: catalog.register_table(spark, out, "jobs_db", "t")) == 0

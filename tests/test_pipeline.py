@@ -520,8 +520,8 @@ def test_register_table_follows_new_location_and_layout(spark, tmp_path):
     spark.createDataFrame([(3, "z")], "id long, dept string").write.partitionBy(
         "dept"
     ).parquet(c)
-    for path, keys, want in ((a, [], 1), (b, [], 2), (c, ["dept"], 3), (a, [], 1)):
-        catalog.register_table(spark, path, "regdb", "t", keys)
+    for path, want in ((a, 1), (b, 2), (c, 3), (a, 1)):
+        catalog.register_table(spark, path, "regdb", "t")
         assert [r.id for r in spark.table("regdb.t").collect()] == [want], path
 
 
@@ -574,6 +574,35 @@ def test_cli_sql_registers_and_queries(spark, tmp_path, capsys):
     out = _json.loads(capsys.readouterr().out)
     assert out["tables_registered"] == 1
     assert out["rows"] == [{"total": 30.0}]
+
+
+def test_cli_sql_reregistration_keeps_partitioned_table(spark, tmp_path, monkeypatch, capsys):
+    """The `sql` subcommand registers each folder by path alone; a second
+    run over an unchanged partitioned lake table issues no DROP TABLE,
+    so the name never disappears under concurrent readers."""
+    import json as _json
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.__main__ import main
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
+
+    lake = tmp_path / "lake"
+    lake_writer.write_initial(
+        spark.createDataFrame(
+            [(1, "a", "d0"), (2, "b", "d1")], "id long, name string, dept string"
+        ),
+        str(lake / "cli_db" / "t"), partition_keys=["dept"],
+    )
+    spark.sql("DROP DATABASE IF EXISTS cli_db CASCADE")
+    argv = ["sql", "--lake", str(lake), "--query", "SELECT count(*) AS n FROM cli_db.t"]
+    assert main(argv) == 0
+    capsys.readouterr()
+    issued = []
+    sql = spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: (issued.append(q), sql(q, *a, **k))[1])
+    assert main(argv) == 0
+    assert _json.loads(capsys.readouterr().out)["rows"] == [{"n": 2}]
+    assert any(q.startswith("CREATE DATABASE") for q in issued)  # the spy saw the run
+    assert not [q for q in issued if q.lstrip().upper().startswith("DROP")]
 
 
 def test_same_file_op_order_is_deterministic(spark, tmp_path):

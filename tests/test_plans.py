@@ -74,32 +74,6 @@ def test_rollup_is_single_aggregation_exchange(spark):
     assert plan.count("Exchange") <= 2
 
 
-def test_cobucketed_join_has_no_exchange(spark, tmp_path):
-    import shutil
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import bucketed
-
-    # the warehouse dir outlives the in-memory catalog: clear leftovers
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("t_orders_b", "t_items_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-
-    orders = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("amount")
-    )
-    items = spark.range(0, 3000).select(
-        (F.col("id") % 1000).alias("k"), F.col("id").alias("item")
-    )
-    bucketed.write_bucketed(orders, "t_orders_b", ["k"], n_buckets=8, sort_keys=["k"])
-    bucketed.write_bucketed(items, "t_items_b", ["k"], n_buckets=8, sort_keys=["k"])
-    joined = bucketed.cobucketed_join(spark, "t_orders_b", "t_items_b", ["k"])
-    plan = plan_of(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # co-located: bucket metadata removes both shuffles
-    assert joined.count() == 3000
-
-
 def test_retention_capped_offset_matches_filtered_unbounded(spark):
     """max_day_offset bounds the cohort matrix: the capped result is
     exactly the unbounded matrix filtered to the cap (the filter runs

@@ -30,10 +30,6 @@ ROOT_SCRIPTS = [
 # its reason. The list is exact: a module that becomes reachable, or is
 # deleted, must leave it too.
 UNWIRED = {
-    f"{PKG}.operators.bpe": "BPE vocabulary trainer; the bpe_tokens query "
-    "in plans/corpus_ml.py is a regex count and does not use it",
-    f"{PKG}.sources.bucketed": "bucketed catalog writes for co-located "
-    "joins; append_signature_store's docstring points cluster users at it",
     f"{PKG}.sources.delta_log": "read-only Delta transaction-log reader for "
     "pointing the read surface at an existing Delta table",
     f"{PKG}.sources.dms_json": "DMS Kinesis/Kafka JSON envelopes normalised "
