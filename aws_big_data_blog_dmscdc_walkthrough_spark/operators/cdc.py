@@ -359,7 +359,7 @@ def apply_changes(
     ``prune_keys`` lets a caller that already built (and size-guarded)
     the change-key frame pass it in, skipping the second driver-side
     stats probe — the lake merge path computes the same frame for
-    impacted-partition discovery.
+    impacted-file discovery.
     """
     pks = list(primary_keys)
     data_cols = list(target.columns)

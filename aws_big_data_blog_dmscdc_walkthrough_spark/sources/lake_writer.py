@@ -27,38 +27,30 @@ raises before anything is appended (``cdc.evolved_schema``, the
 ``cdc.align_schemas`` rule). A commit that supersedes every live file (a
 reload, a compaction) records the frame's schema.
 
-Scale-correct replacements:
-  * partitioned tables: impacted-PARTITION copy-on-write. Impacted
-    partitions are discovered with a PK semi-join against the target
-    (NOT from the batch's partition values alone), so an update that
-    MOVES a row across partitions rewrites the old partition too, and a
-    partition whose rows are all deleted loses its files and its
-    directory. The target scan is pruned with a broadcast semi-join on
-    the impacted partition values; the only driver materialization is
-    that partition list (the analogue of the reference's boto3 delete
-    loop at DMSCDC_LoadIncremental.py:83-87).
-  * unpartitioned tables: FILE-level copy-on-write matching the
-    reference (DMSCDC_LoadIncremental.py:64-87): tag target rows with
-    ``input_file_name()``, broadcast-semi-join on the batch's keys to
-    find impacted files, merge only those files' rows, append the
-    rewritten survivors as new files, commit, then delete the superseded
-    files. Untouched files are never read in full, never rewritten. The
-    only driver materialization is the impacted-file list (bounded by
-    files actually containing changed keys — the same list the
-    reference's boto3 loop holds).
-  * both copy-on-write rewrites coalesce to one task per
-    ``spark.sql.files.openCostInBytes`` of Catalyst's size estimate
-    (``_coalesce_to_open_cost``) instead of the reference's coalesce(1):
-    a small rewrite writes one file per table or touched partition, a
-    large one keeps its parallelism, and no shuffle is added.
+Scale-correct replacement:
+  * every keyed merge, partitioned or not: FILE-level copy-on-write
+    matching the reference (DMSCDC_LoadIncremental.py:64-87): tag
+    target rows with ``input_file_name()``, broadcast-semi-join on the
+    batch's keys to find impacted files, merge only those files' rows,
+    append the rewritten survivors as new files, commit, then delete
+    the superseded files. Untouched files are never read in full, never
+    rewritten. Discovery by PK, not by the batch's partition values, is
+    what catches an update that MOVES a row across partitions and a
+    partition whose rows are all deleted (it loses its files and its
+    directory). The only driver materialization is the impacted-file
+    list (bounded by files actually containing changed keys — the same
+    list the reference's boto3 loop holds). The rewrite coalesces to
+    one task per ``spark.sql.files.openCostInBytes`` of Catalyst's
+    size estimate (``_coalesce_to_open_cost``) instead of the
+    reference's coalesce(1): a small rewrite writes one file per table
+    or touched partition, a large one keeps its parallelism, and no
+    shuffle is added.
 """
 
 from __future__ import annotations
 
-import posixpath
 from collections.abc import Sequence
 from typing import NamedTuple
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,8 +105,8 @@ def merge_incremental(
 
     No primary keys, or no live target → insert-only append
     (DMSCDC_LoadIncremental.py:56-58). Otherwise latest-wins merge with
-    copy-on-write at partition granularity (partitioned tables; one
-    version spans every touched partition) or file granularity.
+    file-level copy-on-write (``_merge_cow``; one version spans every
+    touched partition).
     ``retain_history`` KEEPS the superseded files on disk so earlier
     commits stay readable via ``manifest.read_table(path, version=N)``
     until ``manifest.vacuum`` reclaims them (Delta/Iceberg-style time
@@ -149,16 +141,10 @@ def merge_incremental(
         append_change_feed(spark, changes, out_path, primary_keys, seq_col, op_col)
 
     if primary_keys and snap.live:
-        if partition_keys:
-            _merge_partitioned(
-                spark, changes, out_path, primary_keys, partition_keys, seq_col,
-                op_col, snap, retain_history, stats_cols,
-            )
-        else:
-            _merge_unpartitioned_cow(
-                spark, changes, out_path, primary_keys, seq_col, op_col, snap,
-                retain_history, stats_cols,
-            )
+        _merge_cow(
+            spark, changes, out_path, primary_keys, partition_keys, seq_col,
+            op_col, snap, retain_history, stats_cols,
+        )
         return
     if primary_keys:
         # deliberate improvement over the reference's first-load shortcut
@@ -812,7 +798,7 @@ def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
     return df.coalesce(max(1, -(-est // conf.filesOpenCostInBytes())))
 
 
-def _merge_partitioned(
+def _merge_cow(
     spark: SparkSession,
     changes: DataFrame,
     out_path: str,
@@ -824,109 +810,23 @@ def _merge_partitioned(
     retain_history: bool,
     stats_cols: Sequence[str],
 ) -> None:
-    """Impacted-partition copy-on-write.
-
-    Impacted partitions = partitions the batch writes into ∪ partitions
-    where the batch's keys CURRENTLY live (PK semi-join; column-pruned
-    scan of pk + partition columns only). The second term is what the
-    batch's own partition values cannot tell you: a row whose partition
-    value changed leaves a stale copy behind, and a fully-deleted
-    partition must lose its files — both cases the reference's PK-join
-    impacted-file discovery (DMSCDC_LoadIncremental.py:68-70) handles
-    and a values-only prune misses.
-
-    The rewritten partitions append beside the live files, and ONE
-    manifest version supersedes every live file under an impacted
-    partition, so readers never see a half-applied merge.
-    """
-    pks = list(primary_keys)
-    part_cols = list(partition_keys)
-    target = manifest_mod.read_files(spark, out_path, snap.live, snap.schema)
-    data_cols = [c for c in target.columns if c not in (op_col, seq_col)]
-    target = target.select(*data_cols)
-    # additive schema evolution: a batch may carry columns the lake table
-    # doesn't have yet (source ALTER TABLE); widen both sides with typed
-    # NULLs. Type changes raise (see cdc.align_schemas).
-    target, changes = cdc.align_schemas(target, changes, extra_cols=(op_col, seq_col))
-
-    # size-guarded broadcast: a backfill batch with 10^8+ PKs degrades
-    # to a shuffled semi-join instead of OOMing the driver. No distinct:
-    # the semi/anti joins ignore duplicate keys (cdc.BROADCAST_KEYS_MAX_BYTES)
-    change_keys = cdc._maybe_broadcast(
-        changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
-    )
-    new_parts = changes.select(*part_cols).distinct()
-    old_parts = (
-        target.join(change_keys, pks, "left_semi")
-        .select(*part_cols)
-        .distinct()
-    )
-    # One collect of the impacted partitions, bounded by touched-partition
-    # count (the driver-side list the reference's boto3 loop holds). The
-    # typed values prune the target scan; their string casts — the cast
-    # Spark's writer applies to name partition directories — name the
-    # directories whose live files this merge supersedes.
-    n = len(part_cols)
-    impacted_rows = (
-        new_parts.unionByName(old_parts)
-        .distinct()
-        .select(
-            *part_cols, *[F.col(c).cast("string").alias(f"_dir_{c}") for c in part_cols]
-        )
-        .collect()
-    )
-    impacted_parts = spark.createDataFrame(
-        [r[:n] for r in impacted_rows], new_parts.schema
-    )
-    prefixes = tuple(
-        _rel_partition_dir(part_cols, r[n:]) + "/" for r in impacted_rows
-    )
-
-    # Prune the target scan to impacted partitions with a broadcast
-    # semi-join — no driver collect; dynamic partition pruning skips the
-    # untouched directories. An equi-join never matches NULL partition
-    # values, so when the table actually has a null-partition directory
-    # fall back to a null-safe condition (loses pruning, keeps rows).
-    null_dir = "=" + manifest_mod.HIVE_NULL_PART
-    if any(seg.endswith(null_dir) for f in snap.live for seg in f.split("/")[:-1]):
-        cond = None
-        for col in part_cols:
-            c = target[col].eqNullSafe(impacted_parts[col])
-            cond = c if cond is None else cond & c
-        impacted_target = target.join(F.broadcast(impacted_parts), cond, "left_semi")
-    else:
-        impacted_target = target.join(
-            F.broadcast(impacted_parts), part_cols, "left_semi"
-        )
-
-    merged = _coalesce_to_open_cost(cdc.apply_changes(
-        impacted_target, changes, pks, seq_col, op_col, prune_keys=change_keys
-    ))
-    _commit_write(
-        spark, merged, out_path, part_cols, snap,
-        superseded={f for f in snap.live if f.startswith(prefixes)},
-        stats_cols=stats_cols, retain_history=retain_history,
-    )
-
-
-def _merge_unpartitioned_cow(
-    spark: SparkSession,
-    changes: DataFrame,
-    out_path: str,
-    primary_keys: Sequence[str],
-    seq_col: str,
-    op_col: str,
-    snap: _Snapshot,
-    retain_history: bool,
-    stats_cols: Sequence[str],
-) -> None:
-    """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87).
+    """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87), the
+    one keyed merge for a table with live files, partitioned or not.
 
     1. discover impacted files: ``input_file_name()`` tag + broadcast
-       semi-join on the batch's keys, column-pruned to pk only;
-    2. merge ONLY those files' rows with the batch;
+       semi-join on the batch's keys, column-pruned to pk only; each
+       name decodes to the table-relative path the manifest lists (the
+       file and its ``len(partition_keys)`` partition directories);
+    2. merge ONLY those files' rows, committed deletion vectors applied,
+       with the batch;
     3. append the survivors as new files and commit a version without
        the impacted files (``_commit_write``), which then deletes them.
+
+    Every name comes from Spark itself, so a row that moves to another
+    partition, a partition whose rows are all deleted (its directory
+    goes with its last file), null partitions and escaped values need no
+    case of their own. An untouched file stays where it is, beside the
+    new files of its partition; ``compact_table`` merges them.
 
     The reference's coalesce(1) append and boto3 deletes leave a window
     in which readers see both copies of the merged rows; here the
@@ -934,6 +834,7 @@ def _merge_unpartitioned_cow(
     completes on the next commit if a crash interrupts it.
     """
     pks = list(primary_keys)
+    levels = len(partition_keys)
     # Impacted-file discovery needs input_file_name(), which requires a
     # SINGLE-source plan — read_table's DV anti-join is two sources, so
     # tag a raw read of the live files instead. Skipping the DV filter
@@ -942,13 +843,14 @@ def _merge_unpartitioned_cow(
     # deletes materialize). The DVs ARE applied to the merge input below.
     target_df = manifest_mod.read_files(spark, out_path, snap.live, snap.schema)
     tagged = target_df.withColumn("_file", F.input_file_name())
+    # size-guarded broadcast: a backfill batch with 10^8+ PKs degrades
+    # to a shuffled semi-join instead of OOMing the driver. No distinct:
+    # the semi/anti joins ignore duplicate keys (cdc.BROADCAST_KEYS_MAX_BYTES)
     change_keys = cdc._maybe_broadcast(
         changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
     )
-    # input_file_name() is a URI (a space in the table path reads back
-    # as %20): decode it to the table-relative name the manifest lists
     impacted = sorted(
-        unquote(posixpath.basename(r["_file"]))
+        manifest_mod.relative_name(r["_file"], levels)
         for r in tagged.join(change_keys, pks, "left_semi")
         .select("_file")
         .distinct()
@@ -963,44 +865,25 @@ def _merge_unpartitioned_cow(
         # rewritten output (resurrected)
         dv = manifest_mod.read_deletion_vectors(spark, out_path, snap.manifest or {})
         if dv is not None:
-            old = manifest_mod.apply_deletion_vectors(old, dv)
+            old = manifest_mod.apply_deletion_vectors(old, dv, levels)
     else:
         # pure-insert batch: merge against an empty frame with the
         # target's schema so collapsed inserts just append
         old = spark.createDataFrame([], snap.schema)
     data_cols = [c for c in old.columns if c not in (op_col, seq_col)]
     old = old.select(*data_cols)
+    # additive schema evolution: a batch may carry columns the lake table
+    # doesn't have yet (source ALTER TABLE); widen both sides with typed
+    # NULLs. Type changes raise (see cdc.align_schemas).
     old, changes = cdc.align_schemas(old, changes, extra_cols=(op_col, seq_col))
 
     merged = _coalesce_to_open_cost(cdc.apply_changes(
         old, changes, pks, seq_col, op_col, prune_keys=change_keys
     ))
     _commit_write(
-        spark, merged, out_path, (), snap, superseded=set(impacted),
+        spark, merged, out_path, partition_keys, snap, superseded=set(impacted),
         stats_cols=stats_cols, retain_history=retain_history,
     )
-
-
-# Hive's escapePathName character set: exactly the bytes Spark %-encodes
-# when it writes partition directory names (ExternalCatalogUtils
-# .charToEscape). Note '}' is NOT escaped by Spark — including it here
-# would compute a nonexistent directory for values containing '}' and
-# miss the live files of that partition.
-_PART_ESCAPE = set('\\"#%\'*/:=?\x7f{[]^') | {chr(c) for c in range(32)}
-
-
-def _rel_partition_dir(partition_keys: Sequence[str], values) -> str:
-    """Table-relative partition directory for string-cast partition
-    values, named the way Spark's writer names it (NULL and the empty
-    string both go to the Hive default partition)."""
-    segs = []
-    for key, v in zip(partition_keys, values):
-        if v in (None, ""):
-            v = manifest_mod.HIVE_NULL_PART
-        else:
-            v = "".join(f"%{ord(ch):02X}" if ch in _PART_ESCAPE else ch for ch in v)
-        segs.append(f"{key}={v}")
-    return "/".join(segs)
 
 
 ZORDER_BITS = 16  # per-column resolution of the interleaved key
@@ -1074,12 +957,14 @@ def compact_table(
 ) -> int:
     """Bin-pack a table's small files toward ``target_file_bytes``.
 
-    A keyed merge already sizes its rewrite to the scan's open cost
-    (``_coalesce_to_open_cost``), so its tables do not fragment. What
-    still accretes is keyless appends (one file per landing file per
-    batch), and no merge restores clustering: a rewrite mixes updated
-    keys into whatever file they land in. Compaction is the explicit
-    maintenance pass for both, like Delta/Iceberg OPTIMIZE:
+    A keyed merge sizes its rewrite to the scan's open cost
+    (``_coalesce_to_open_cost``), but it rewrites only the files that
+    hold a changed key: the new files sit beside the untouched ones, in
+    a table or in a partition. Keyless appends add one file per landing
+    file per batch, and no merge restores clustering: a rewrite mixes
+    updated keys into whatever file they land in. Compaction is the
+    explicit maintenance pass for all of these, like Delta/Iceberg
+    OPTIMIZE:
 
       * total bytes are the live files' lengths (no data job; sidecars,
         orphans and retained superseded files do not count);

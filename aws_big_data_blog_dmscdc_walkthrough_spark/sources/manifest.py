@@ -18,8 +18,8 @@ idea:
     crash leaves only unlisted files, which the table's next commit
     deletes (``vacuum`` also removes them).
 
-Every ``lake_writer`` write (initial load, append, both copy-on-write
-merges, merge-on-read, compaction) commits here. A table with no
+Every ``lake_writer`` write (initial load, append, copy-on-write merge,
+merge-on-read, compaction) commits here. A table with no
 manifest yet reads as a plain directory and is adopted by its first
 write.
 
@@ -31,7 +31,7 @@ column reads that column as NULL.
 Partitioned tables commit through the same single manifest: ``files``
 entries are paths RELATIVE to the table root (``dept=a/part-x.parquet``),
 the manifest records the partition keys, and a partitioned merge appends
-its rewritten partitions beside the live files then swaps ONE manifest
+its rewritten files beside the live files then swaps ONE manifest
 pointer — atomic across every touched partition. ``read_table`` prunes
 by partition value (parsed from the path, typed against the probe) AND
 by per-file min/max stats. Merge-on-read deletion vectors remain
@@ -45,6 +45,7 @@ import datetime as _dt
 import functools
 import json
 import posixpath
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,6 +108,18 @@ def _history_path(path: str, version: int) -> str:
 
 
 HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def relative_name(uri: str, levels: int) -> str:
+    """The table-relative name the manifest lists for a data file that
+    Spark reports as a URI (``input_file_name()``,
+    ``_metadata.file_path``): its last ``levels + 1`` path segments
+    (``levels`` partition directories, then the file), URI-decoded. The
+    URI encodes the on-disk name once more — a space as ``%20``, the
+    ``%`` of Spark's own partition escape as ``%25`` — so
+    ``dept=50%2525/part-x.parquet`` names ``dept=50%25/part-x.parquet``,
+    the directory Spark wrote for the value ``50%``."""
+    return unquote("/".join(uri.split("/")[-(levels + 1):]))
 
 
 def list_data_files(
@@ -324,11 +337,11 @@ def commit_manifest(
       * a list sets the delete set exactly (the merge-on-read writer,
         :func:`delete_where`, passes carried + newly staged names).
 
-    ``dv_targets`` maps a delete-file basename to the data-file
-    basenames its rows reference — recorded at DV-commit time, it is
-    what makes carry-forward pruning possible. Unknown targets keep the
-    DV forever (conservative; harmless because the anti-join matches
-    nothing once the data files are gone).
+    ``dv_targets`` maps a delete-file basename to the data files its
+    rows reference, named as ``files`` names them — recorded at
+    DV-commit time, it is what makes carry-forward pruning possible.
+    Unknown targets keep the DV forever (conservative; harmless because
+    the anti-join matches nothing once the data files are gone).
     """
     prev = read_manifest(spark, path)
     if expected_base_version is not None:
@@ -485,8 +498,6 @@ def _partition_values(relpath: str) -> dict[str, str | None]:
     """Hive partition values parsed from a partition-relative file path
     (``dept=a%20b/part-x.parquet`` → ``{"dept": "a b"}``); the
     ``__HIVE_DEFAULT_PARTITION__`` sentinel decodes to None."""
-    from urllib.parse import unquote
-
     out: dict[str, str | None] = {}
     for seg in relpath.split("/")[:-1]:
         if "=" in seg:
@@ -725,8 +736,8 @@ def stage_deletion_vectors(
 ) -> tuple[list[str], dict[str, list[str]]]:
     """Write ``addressed`` rows' (data-file basename, row position) as
     new position-delete files under ``_deletes/`` and return (new DV
-    basenames, DV→referenced-data-file targets map). Staging only — the
-    caller commits.
+    basenames, DV→referenced-data-file targets map, in manifest names).
+    Staging only — the caller commits.
 
     One evaluation of ``addressed`` total: the frame is persisted, the
     referenced data files collect from the cache (bounded by live file
@@ -740,8 +751,12 @@ def stage_deletion_vectors(
         n = addressed.count()
         if n == 0:
             return [], {}
+        # the addresses are URI tails (``_tag_positions``); the targets
+        # name the files as the manifest lists them, so that the
+        # carry-forward in ``commit_manifest`` finds them live
         target_files = sorted(
-            r[0] for r in addressed.select(DV_FILE_COL).distinct().collect()
+            relative_name(r[0], r[0].count("/"))
+            for r in addressed.select(DV_FILE_COL).distinct().collect()
         )
         before = set(list_delete_files(spark, path))
         # ~10M addresses (~100 MB) per DV part; micro-batches get 1 file

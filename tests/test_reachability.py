@@ -32,8 +32,6 @@ ROOT_SCRIPTS = [
 UNWIRED = {
     f"{PKG}.sources.delta_log": "read-only Delta transaction-log reader for "
     "pointing the read surface at an existing Delta table",
-    f"{PKG}.sources.dms_json": "DMS Kinesis/Kafka JSON envelopes normalised "
-    "to the file-landing change shape, for stream targets",
 }
 
 
