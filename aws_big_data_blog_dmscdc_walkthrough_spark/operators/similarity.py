@@ -1105,7 +1105,7 @@ def write_ivf_partitioned(
             "_ivf", ivf_assign(centroids)(F.col(vec_col))
         )
     # Stage + swap, for two reasons at once: (a) an index REBUILD must
-    # replace the WHOLE layout — the session's dynamic overwrite would
+    # replace the WHOLE layout — a dynamic partition overwrite would
     # keep any cell populated only by the previous assignment serving
     # stale vectors forever (the hazard a lake reload avoids by
     # superseding every live file); (b) the spill marker must commit

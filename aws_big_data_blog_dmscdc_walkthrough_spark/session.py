@@ -2,9 +2,8 @@
 
 Single place to tune the session so tests, bench, and the driver contract
 all run with the same configuration: AQE (runtime coalescing + skew-join
-splitting), Arrow for any pandas exchange, dynamic partition overwrite for
-the CDC copy-on-write path, and UTC so timestamp semantics match the DuckDB
-oracle exactly.
+splitting), Arrow for any pandas exchange, and UTC so timestamp semantics
+match the DuckDB oracle exactly.
 """
 
 from __future__ import annotations
@@ -39,7 +38,6 @@ def get_spark(
         # wide query (emb_covariance) before disabling. Purely a
         # debugging aid; plans and results are identical without it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

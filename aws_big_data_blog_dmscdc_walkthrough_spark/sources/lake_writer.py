@@ -11,14 +11,22 @@ Reference behavior being re-expressed:
     with coalesce(1) (DMSCDC_LoadIncremental.py:68-87).
 
 Every write commits through one protocol (``_commit_write``): append
-the new files beside the live ones, commit the new live-file list as the
-next ``_mmanifest.json`` version (sources/manifest.py), then delete
-every listed data file that version does not reference. Manifest readers
-see exactly one version at every point; the raw directory, which
-``catalog.register_table`` exposes, holds exactly the live files after
-every commit, so a crashed attempt's orphans go with the next commit. A
-table with no manifest yet (a plain ``df.write`` directory) is adopted
-on its first write from its directory listing.
+the new files beside the live ones (and stage any position deletes),
+commit the new live-file list as the next ``_mmanifest.json`` version
+(sources/manifest.py), then delete every listed data file that version
+does not reference. Manifest readers see exactly one version at every
+point; the raw directory, which ``catalog.register_table`` exposes,
+holds exactly the live files after every commit, so a crashed attempt's
+orphans go with the next commit. A table with no manifest yet (a plain
+``df.write`` directory) is adopted on its first write from its directory
+listing.
+
+The partition layout is the table's, not the caller's: every write
+appends in the keys the manifest records (or, for a directory not yet
+adopted, the ``k=v`` levels its files sit under). Only a write that
+creates the table, or one that supersedes every live file (a reload, a
+compaction), sets them; a merge or an append called with other keys
+keeps the recorded layout.
 
 Every read of the table uses the schema its manifest records
 (``manifest.table_schema``). A commit that keeps any live file records
@@ -50,6 +58,7 @@ Scale-correct replacement:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,7 +92,7 @@ def write_initial(
     spark = df.sparkSession
     snap = _snapshot(spark, out_path)
     _commit_write(
-        spark, df, out_path, partition_keys, snap, superseded=set(snap.live),
+        spark, df, out_path, snap, partition_keys, superseded=set(snap.live),
         stats_cols=stats_cols, retain_history=retain_history,
     )
 
@@ -106,7 +115,8 @@ def merge_incremental(
     No primary keys, or no live target → insert-only append
     (DMSCDC_LoadIncremental.py:56-58). Otherwise latest-wins merge with
     file-level copy-on-write (``_merge_cow``; one version spans every
-    touched partition).
+    touched partition). ``partition_keys`` lays out only a table with no
+    live files; afterwards the recorded layout wins.
     ``retain_history`` KEEPS the superseded files on disk so earlier
     commits stay readable via ``manifest.read_table(path, version=N)``
     until ``manifest.vacuum`` reclaims them (Delta/Iceberg-style time
@@ -142,8 +152,8 @@ def merge_incremental(
 
     if primary_keys and snap.live:
         _merge_cow(
-            spark, changes, out_path, primary_keys, partition_keys, seq_col,
-            op_col, snap, retain_history, stats_cols,
+            spark, changes, out_path, primary_keys, seq_col, op_col, snap,
+            retain_history, stats_cols,
         )
         return
     if primary_keys:
@@ -156,7 +166,8 @@ def merge_incremental(
     else:
         out = cdc.insert_only(changes, op_col)
     _commit_write(
-        spark, out.drop(op_col, seq_col), out_path, partition_keys, snap,
+        spark, out.drop(op_col, seq_col), out_path, snap,
+        None if snap.live else partition_keys,
         stats_cols=stats_cols, retain_history=retain_history,
     )
 
@@ -187,10 +198,10 @@ def merge_on_read_incremental(
     its first attempt appended and appends an identical one.
 
     Partitioned tables work the same way: DVs address files by their
-    manifest-relative path, survivors append with ``partitionBy``, and
-    the single manifest commit spans every touched partition.
-    ``partition_keys`` matters only when CREATING the table (afterwards
-    the manifest's recorded keys win).
+    manifest-relative path, survivors append in the recorded layout, and
+    the single manifest commit (``_commit_write``) spans every touched
+    partition. A crashed attempt's appended files go with that commit.
+    ``partition_keys`` lays out only a table this call creates.
     """
     pks = list(primary_keys)
     if not pks:
@@ -204,49 +215,23 @@ def merge_on_read_incremental(
     snap = _snapshot(spark, out_path)
     if not snap.live:
         _commit_write(
-            spark, survivors, out_path, partition_keys, snap, stats_cols=stats_cols
+            spark, survivors, out_path, snap, partition_keys, stats_cols=stats_cols
         )
         return
-    man = snap.manifest
-    if man is None:
+    if snap.manifest is None:
         raise ValueError(
             f"{out_path} has no manifest; merge-on-read requires a "
             "manifest-committed table (any lake_writer write commits one)"
         )
-    # every live file stays: the commit keeps the table schema, widened
-    schema = cdc.evolved_schema(snap.schema, survivors.schema)
-
     keys = cdc._maybe_broadcast(
         collapsed.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
     )
     positions = manifest_mod.read_table_with_positions(spark, out_path).select(
         *pks, manifest_mod.DV_FILE_COL, manifest_mod.DV_POS_COL
     )
-    hits = positions.join(keys, pks, "left_semi").select(
-        manifest_mod.DV_FILE_COL, manifest_mod.DV_POS_COL
-    )
-    added_dv, targets = manifest_mod.stage_deletion_vectors(spark, out_path, hits)
-
-    pkeys = man.get("partition_keys") or []
-    writer = survivors.write.mode("append")
-    if pkeys:
-        writer = writer.partitionBy(*pkeys)
-    writer.parquet(out_path)
-    added = [
-        f for f in manifest_mod.list_data_files(spark, out_path, recursive=True)
-        if f not in snap.listed
-    ]
-    if not added and not added_dv:
-        return  # empty batch: nothing to commit
-    live = man["files"] + added
-    stats = manifest_mod.stats_for_commit(
-        spark, out_path, live, list(stats_cols), man, schema=schema
-    )
-    carried = man.get("delete_files") or []
-    manifest_mod.commit_manifest(
-        spark, out_path, live, stats=stats,
-        delete_files=carried + added_dv, dv_targets=targets,
-        schema_json=schema.json(),
+    hits = positions.join(keys, pks, "left_semi")
+    _commit_write(
+        spark, survivors, out_path, snap, stats_cols=stats_cols, deletes=hits
     )
 
 
@@ -353,8 +338,8 @@ def scd2_merge_on_read(
     Replay-safe (``scd2_fresh_changes`` drops already-recorded seqs),
     and crash-safe the MOR way: nothing is visible before the manifest
     commit, so a retry either re-runs the whole fold (crash before
-    commit — first attempt's files are unlisted orphans for
-    ``manifest.vacuum``) or no-ops (crash after).
+    commit — the first attempt's unlisted files go with the retry's
+    commit) or no-ops (crash after).
 
     Plan-shape note: the fold scans the live table TWICE — a
     column-pruned pass (pk + the two seqs) for the replay guard and a
@@ -415,7 +400,7 @@ def scd2_merge_on_read(
                 props["scd2_seq_hwm"] = hi
                 props[HWM_INVARIANT_FLAG] = 1
         _commit_write(
-            spark, folded, out_path, part_keys, snap,
+            spark, folded, out_path, snap, part_keys,
             stats_cols=stats_cols, properties=props or None,
         )
         return
@@ -427,8 +412,7 @@ def scd2_merge_on_read(
             "requires manifest-committed tables (write the first batch "
             "through this function)"
         )
-    pkeys = man.get("partition_keys") or []
-    bucketed = PK_BUCKET_COL in pkeys
+    bucketed = PK_BUCKET_COL in snap.partition_keys
     if bucketed and not bucket_partitions:
         raise ValueError(
             f"{out_path} is bucket-partitioned; pass the same "
@@ -618,9 +602,6 @@ def scd2_merge_on_read(
             .join(fresh_keys, pks, "left_semi")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        hits = open_rows.select(
-            manifest_mod.DV_FILE_COL, manifest_mod.DV_POS_COL
-        )
         first_seq = fresh.groupBy(*pks).agg(
             F.min(F.col(seq_col)).alias("_close_seq")
         )
@@ -646,44 +627,6 @@ def scd2_merge_on_read(
             appended = appended.withColumn(
                 PK_BUCKET_COL, _pk_bucket_expr(pks, bucket_partitions)
             )
-        schema = cdc.evolved_schema(snap.schema, appended.schema)
-        writer = appended.write.mode("append")
-        if bucketed:
-            writer = writer.partitionBy(PK_BUCKET_COL)
-        # FUSED WRITES (round-10 verdict: streaming SCD2 sat at 0.78x
-        # COW, commit-dominated at micro-batch sizes): the DV staging
-        # (a count, a bounded collect, one tiny parquet write under
-        # _deletes/) and the closed+new append job both read the
-        # persisted open-rows slice and write to DISJOINT directories,
-        # so they overlap on the scheduler instead of running as two
-        # serial actions per fold. The two consumers may race the
-        # unpopulated open-rows cache and each evaluate the semi-join —
-        # measured CHEAPER in parallel than a serial pinning count()
-        # (18.2 s vs 17.4 s per 8-batch stream at sf0.1), because the
-        # slice is column-pruned and key-bounded, unlike the Arrow
-        # signature chains _materialize exists for. list_data_files
-        # skips _deletes/, so the before/after attribution of the
-        # append is unaffected. Crash windows
-        # are unchanged: either write failing leaves only uncommitted
-        # orphans (manifest not advanced; vacuum reclaims).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            dv_fut = ex.submit(
-                manifest_mod.stage_deletion_vectors, spark, out_path, hits
-            )
-            writer.parquet(out_path)
-            added_dv, targets = dv_fut.result()
-        added = [
-            f
-            for f in manifest_mod.list_data_files(spark, out_path, recursive=True)
-            if f not in snap.listed
-        ]
-        live_files = man["files"] + added
-        stats = manifest_mod.stats_for_commit(
-            spark, out_path, live_files, list(stats_cols), man, schema=schema
-        )
-        carried = man.get("delete_files") or []
         # merge into the carried properties: bucket count validated
         # against the recorded value above (also backfills legacy
         # pre-guard manifests), the seq high-water mark advanced by
@@ -702,11 +645,9 @@ def scd2_merge_on_read(
             props = dict(props or {})
             props.pop("scd2_seq_hwm", None)
             props.pop(HWM_INVARIANT_FLAG, None)
-        manifest_mod.commit_manifest(
-            spark, out_path, live_files, stats=stats,
-            delete_files=carried + added_dv, dv_targets=targets,
-            schema_json=schema.json(),
-            properties=props,
+        _commit_write(
+            spark, appended, out_path, snap, stats_cols=stats_cols,
+            properties=props, deletes=open_rows,
         )
     finally:
         fresh.unpersist()
@@ -719,37 +660,60 @@ class _Snapshot(NamedTuple):
     """A table before a write: its committed manifest (None before the
     first commit), every listed data file, the live files — the
     manifest's list, or the whole listing for a table not yet adopted —
-    and the table schema (None before the table has data or a commit)."""
+    the table schema (None before the table has data or a commit) and
+    its partition keys (``manifest.partition_keys``)."""
 
     manifest: dict | None
     listed: set[str]
     live: list[str]
     schema: StructType | None
+    partition_keys: list[str]
 
 
 def _snapshot(spark: SparkSession, out_path: str) -> _Snapshot:
     man = manifest_mod.read_manifest(spark, out_path)
     listed = set(manifest_mod.list_data_files(spark, out_path, recursive=True))
     live = man["files"] if man else sorted(listed)
-    schema = manifest_mod.table_schema(spark, out_path, man) if man or live else None
-    return _Snapshot(man, listed, live, schema)
+    if not (man or live):
+        return _Snapshot(man, listed, live, None, [])
+    return _Snapshot(
+        man, listed, live, manifest_mod.table_schema(spark, out_path, man),
+        manifest_mod.partition_keys(spark, out_path, man),
+    )
 
 
 def _commit_write(
     spark: SparkSession,
     df: DataFrame,
     out_path: str,
-    partition_keys: Sequence[str],
     snap: _Snapshot,
+    partition_keys: Sequence[str] | None = None,
     superseded: set[str] = frozenset(),
     stats_cols: Sequence[str] = (),
     retain_history: bool = False,
     properties: dict | None = None,
+    deletes: DataFrame | None = None,
 ) -> None:
     """The one commit protocol: append ``df`` beside the live files,
     commit (live − ``superseded``) + the appended files as the next
     manifest version, then — unless ``retain_history`` — delete every
     listed data file the new version does not reference.
+
+    ``df`` is written in the table's layout, ``snap.partition_keys``.
+    ``partition_keys`` sets the layout instead; only a write that
+    creates the table or supersedes every live file passes them.
+
+    ``deletes`` (rows addressed by ``_dv_file``/``_dv_pos``) are staged
+    as a deletion vector while ``df`` appends, and the version carries
+    the previous delete files plus the new one. Both writes go to
+    disjoint directories, so they overlap on the scheduler instead of
+    running as two serial actions; two consumers of one unpopulated
+    cache may each evaluate it, which measured cheaper than a serial
+    pinning count (18.2 s vs 17.4 s per 8-batch SCD2 stream at sf0.1).
+    ``list_data_files`` skips ``_deletes/``, so a staged deletion vector
+    is never taken for an appended data file. A version that would add
+    neither a data file nor a delete file (an
+    empty merge-on-read batch) is not committed.
 
     A crash before the commit leaves the old version live and the
     appended files unlisted; a crash after it leaves the superseded
@@ -763,20 +727,35 @@ def _commit_write(
     ``df``'s new columns; a type change raises before the append. A
     version that supersedes every live file records ``df``'s schema.
     """
+    keys = snap.partition_keys if partition_keys is None else list(partition_keys)
     live = [f for f in snap.live if f not in superseded]
     schema = cdc.evolved_schema(snap.schema, df.schema) if live else df.schema
     writer = df.write.mode("append")
-    if partition_keys:
-        writer = writer.partitionBy(*partition_keys)
-    writer.parquet(out_path)
+    if keys:
+        writer = writer.partitionBy(*keys)
+    delete_files = dv_targets = None
+    if deletes is None:
+        writer.parquet(out_path)
+    else:
+        with ThreadPoolExecutor(max_workers=1) as ex:
+            staged = ex.submit(
+                manifest_mod.stage_deletion_vectors, spark, out_path, deletes
+            )
+            writer.parquet(out_path)
+            added_dv, dv_targets = staged.result()
+        delete_files = snap.manifest.get("delete_files", []) + added_dv
     after = manifest_mod.list_data_files(spark, out_path, recursive=True)
-    live += [f for f in after if f not in snap.listed]
+    added = [f for f in after if f not in snap.listed]
+    if deletes is not None and not added and not dv_targets:
+        return
+    live += added
     stats = manifest_mod.stats_for_commit(
         spark, out_path, live, list(stats_cols), snap.manifest, schema=schema
     )
     manifest_mod.commit_manifest(
-        spark, out_path, live, stats=stats, schema_json=schema.json(),
-        partition_keys=list(partition_keys), properties=properties,
+        spark, out_path, live, stats=stats, delete_files=delete_files,
+        dv_targets=dv_targets, schema_json=schema.json(), partition_keys=keys,
+        properties=properties,
     )
     if not retain_history:
         manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
@@ -803,7 +782,6 @@ def _merge_cow(
     changes: DataFrame,
     out_path: str,
     primary_keys: Sequence[str],
-    partition_keys: Sequence[str],
     seq_col: str,
     op_col: str,
     snap: _Snapshot,
@@ -816,7 +794,7 @@ def _merge_cow(
     1. discover impacted files: ``input_file_name()`` tag + broadcast
        semi-join on the batch's keys, column-pruned to pk only; each
        name decodes to the table-relative path the manifest lists (the
-       file and its ``len(partition_keys)`` partition directories);
+       file and its ``len(snap.partition_keys)`` partition directories);
     2. merge ONLY those files' rows, committed deletion vectors applied,
        with the batch;
     3. append the survivors as new files and commit a version without
@@ -834,7 +812,7 @@ def _merge_cow(
     completes on the next commit if a crash interrupts it.
     """
     pks = list(primary_keys)
-    levels = len(partition_keys)
+    levels = len(snap.partition_keys)
     # Impacted-file discovery needs input_file_name(), which requires a
     # SINGLE-source plan — read_table's DV anti-join is two sources, so
     # tag a raw read of the live files instead. Skipping the DV filter
@@ -881,7 +859,7 @@ def _merge_cow(
         old, changes, pks, seq_col, op_col, prune_keys=change_keys
     ))
     _commit_write(
-        spark, merged, out_path, partition_keys, snap, superseded=set(impacted),
+        spark, merged, out_path, snap, superseded=set(impacted),
         stats_cols=stats_cols, retain_history=retain_history,
     )
 
@@ -994,7 +972,6 @@ def compact_table(
     Returns the number of output files requested.
     """
     snap = _snapshot(spark, path)
-    part_keys = manifest_mod.partition_keys(spark, path, snap.manifest)
     Path, fs = manifest_mod._fs(spark, path)
     base = path.rstrip("/")
     live_bytes = sum(
@@ -1003,7 +980,7 @@ def compact_table(
     n_files = max(1, -(-live_bytes // target_file_bytes))
 
     df = manifest_mod.read_table(spark, path)
-    lead = [F.col(c) for c in part_keys]
+    lead = [F.col(c) for c in snap.partition_keys]
     if zorder:
         # partition keys lead the range clustering: each task then
         # covers a contiguous run of partitions, so the partitioned
@@ -1022,7 +999,7 @@ def compact_table(
         # cluster rows of one partition into few tasks
         out = df.repartition(n_files, *lead)
     _commit_write(
-        spark, out, path, part_keys, snap, superseded=set(snap.live),
+        spark, out, path, snap, superseded=set(snap.live),
         stats_cols=stats_cols, retain_history=retain_history,
     )
     return n_files

@@ -28,7 +28,10 @@ class TableState:
     schema: str = ""
     table: str = ""
     primary_key: str = ""          # comma-separated; "" = no change detection
-    partition_key: str = ""        # comma-separated; "" = unpartitioned
+    # comma-separated; "" = unpartitioned. Lays out the table's first
+    # load and every full reload; merges keep the layout the manifest
+    # records, so an edit takes effect at the next full load.
+    partition_key: str = ""
     last_full_load_ts: int = 0     # epoch millis of processed LOAD file
     last_incremental_file: str = ""
     active: bool = False           # reference: ActiveFlag gate

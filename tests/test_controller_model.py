@@ -14,7 +14,8 @@ tables are far below one ``openCostInBytes``. A partition may keep an
 untouched file beside the new one, since a merge rewrites only the files
 that hold a changed key. A pass whose manifest commits crash, rerun,
 must converge to the same state, and so must a full reload that crashes
-at any of its steps.
+at any of its steps. A ``partition_key`` edited after the first load
+leaves every table in the layout its manifest records.
 """
 
 import glob
@@ -216,6 +217,24 @@ def test_crash_before_commit_then_rerun_converges(spark, tmp_path, monkeypatch):
     assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
     _check(spark, lake, CDC[:2], n_load)
     assert len(crashed) == len(MODES)
+
+
+def test_edited_partition_key_keeps_the_recorded_layout(spark, tmp_path):
+    """An operator who edits ``partition_key`` after the first load does
+    not change a table's layout: the next pass merges (or appends) in
+    the layout its manifest records, and every view equals the model."""
+    landing, lake, store = _loaded_lake(spark, tmp_path)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    for st in store.all():
+        st.partition_key = "name"
+        store.put(st)
+    _land(landing, [0, 1])
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(t.incremental_files == 2 and not t.error for t in report.tables), report
+    _check(spark, lake, CDC[:2], n_load)
+    for mode in MODES:
+        man = manifest.read_manifest(spark, f"{lake}/{SCHEMA}/{mode}")
+        assert man.get("partition_keys", []) == (["grp"] if mode == "part" else []), mode
 
 
 def _reload_rows(step):

@@ -809,6 +809,56 @@ def test_plain_directory_adopted_on_first_merge_and_compaction(
         assert _rows(spark.read.parquet(out)) == want
 
 
+@pytest.mark.parametrize("partition_keys", [[], ["name"]], ids=["no_keys", "other_keys"])
+@pytest.mark.parametrize("primary_keys", [[], ["id"]], ids=["keyless", "keyed"])
+def test_merge_keeps_the_recorded_layout(spark, tmp_path, primary_keys, partition_keys):
+    """A keyless append or a keyed merge on a table partitioned by
+    ``dept`` writes in that layout, whatever keys its caller passes:
+    every row reads back, the manifest still records ``["dept"]`` and
+    the directory holds only ``dept=`` partitions."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out = str(tmp_path / "t")
+    lake_writer.write_initial(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "b", "y")], "id long, name string, dept string"
+        ),
+        out, partition_keys=["dept"],
+    )
+    lake_writer.merge_incremental(
+        spark, _changes(spark, [("U", 1, 1, "a2", "x"), ("I", 1, 3, "c", "y")]),
+        out, primary_keys, partition_keys=partition_keys,
+    )
+    want = [(1, "a2" if primary_keys else "a", "x"), (2, "b", "y"), (3, "c", "y")]
+    assert _rows(manifest.read_table(spark, out)) == want
+    assert _rows(spark.read.parquet(out)) == want
+    assert manifest.read_manifest(spark, out)["partition_keys"] == ["dept"]
+    listed = manifest.list_data_files(spark, out, recursive=True)
+    assert listed and all(f.startswith("dept=") for f in listed), listed
+    assert sorted(n for n in os.listdir(out) if not n.startswith(("_", "."))) == [
+        "dept=x", "dept=y"
+    ]
+
+
+def test_commit_protocol_is_one_seam():
+    """In ``lake_writer`` only ``_commit_write`` commits a manifest, and
+    only it and ``_snapshot`` list the table's data files."""
+    import ast
+    import inspect
+
+    uses = {"commit_manifest": set(), "list_data_files": set()}
+    for top in ast.parse(inspect.getsource(lake_writer)).body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name in uses:
+                uses[name].add(owner)
+    assert uses == {
+        "commit_manifest": {"_commit_write"},
+        "list_data_files": {"_commit_write", "_snapshot"},
+    }
+
+
 def test_unpartitioned_merge_on_path_with_space(spark, tmp_path):
     """``input_file_name()`` URI-encodes the table path (a space reads
     back as %20): the impacted files must still be re-read, superseded

@@ -329,6 +329,31 @@ def test_partitioned_merge_on_read_incremental(spark, tmp_path):
     } == got
 
 
+def test_mor_crash_before_commit_then_rerun_leaves_no_orphan(
+    spark, tmp_path, monkeypatch
+):
+    """A merge-on-read batch whose commit crashes once after its append
+    reruns to a table whose directory holds exactly the manifest's
+    files: the rerun's commit deletes the first attempt's copy."""
+    out = str(tmp_path / "t")
+    _init(spark, out)
+    batch = _changes(spark, [("U", 1, 1, "a2")])
+    real_commit = manifest.commit_manifest
+
+    def crash_once(*a, **kw):
+        monkeypatch.setattr(manifest, "commit_manifest", real_commit)
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(manifest, "commit_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        lake_writer.merge_on_read_incremental(spark, batch, out, ["id"])
+    lake_writer.merge_on_read_incremental(spark, batch, out, ["id"])
+    man = manifest.read_manifest(spark, out)
+    assert manifest.list_data_files(spark, out, recursive=True) == man["files"]
+    got = sorted((r.id, r.name) for r in manifest.read_table(spark, out).collect())
+    assert got == [(0, "n0"), (1, "a2"), (2, "n2")]
+
+
 def test_partitioned_mor_compaction_materializes_dvs(spark, tmp_path):
     out = str(tmp_path / "t")
     _pinit(spark, out)
