@@ -623,13 +623,17 @@ def read_files(
     )
 
 
-def partition_keys(spark: SparkSession, path: str, man: dict | None) -> list[str]:
+def partition_keys(
+    spark: SparkSession, path: str, man: dict | None, files: list[str] | None = None
+) -> list[str]:
     """The table's partition keys: the ones the manifest records, or for
     a plain directory with no manifest, the ``k=v`` directory levels its
-    first data file sits under."""
+    first data file sits under (from ``files``, the table's listing,
+    when the caller already holds it)."""
     if man is not None:
         return list(man.get("partition_keys") or [])
-    files = list_data_files(spark, path, recursive=True)
+    if files is None:
+        files = list_data_files(spark, path, recursive=True)
     return list(_partition_values(files[0])) if files else []
 
 

@@ -354,6 +354,54 @@ def test_mor_crash_before_commit_then_rerun_leaves_no_orphan(
     assert got == [(0, "n0"), (1, "a2"), (2, "n2")]
 
 
+def test_retain_history_holds_until_the_next_write_without_it(spark, tmp_path):
+    """``retain_history`` keeps the files one commit supersedes; the next
+    commit that does not pass it (a merge-on-read batch never does)
+    deletes every file its version does not list, so the versions
+    before the retaining commit can no longer be read."""
+    from pyspark.errors import AnalysisException
+
+    out = str(tmp_path / "t")
+    _init(spark, out)
+    v_before = manifest.read_manifest(spark, out)["version"]
+    lake_writer.compact_table(spark, out, retain_history=True)
+    assert manifest.read_table(spark, out, version=v_before).count() == 3
+    lake_writer.merge_on_read_incremental(
+        spark, _changes(spark, [("U", 1, 1, "a2")]), out, ["id"]
+    )
+    man = manifest.read_manifest(spark, out)
+    assert manifest.list_data_files(spark, out, recursive=True) == man["files"]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        manifest.read_table(spark, out, version=v_before).count()
+    got = sorted((r.id, r.name) for r in manifest.read_table(spark, out).collect())
+    assert got == [(0, "n0"), (1, "a2"), (2, "n2")]
+
+
+def test_scd2_fold_that_writes_nothing_still_commits_its_properties(
+    spark, tmp_path
+):
+    """A fold whose fresh rows close no open version and append no file
+    (a delete of an unknown key on a bucketed history) still commits:
+    its version records the advanced ``scd2_seq_hwm``."""
+    out = str(tmp_path / "h")
+
+    def fold(rows):
+        lake_writer.scd2_merge_on_read(
+            spark, spark.createDataFrame(rows, "pk int, v int, op string, seq int"),
+            out, ["pk"], seq_col="seq", bucket_partitions=4, seq_monotonic=True,
+        )
+
+    fold([(1, 10, "I", 1)])
+    first = manifest.read_manifest(spark, out)
+    fold([(99, None, "D", 5)])
+    man = manifest.read_manifest(spark, out)
+    assert man["version"] == first["version"] + 1
+    assert man["files"] == first["files"]
+    assert man["properties"]["scd2_seq_hwm"] == 5
+    assert man["properties"]["bucket_partitions"] == 4
+    assert manifest.read_table(spark, out).count() == 1
+
+
 def test_partitioned_mor_compaction_materializes_dvs(spark, tmp_path):
     out = str(tmp_path / "t")
     _pinit(spark, out)
