@@ -160,146 +160,3 @@ def bloom_semi_join(
         big_key,
         "leftsemi",
     )
-
-
-# ---------------------------------------- per-file bloom index (#98)
-#
-# Point lookups on a non-partition column are the worst case for a
-# 100 TB lake: min/max file stats prune nothing when the key is
-# uniformly distributed, so `WHERE id = x` scans every file. A per-FILE
-# bloom filter (the same idea as Parquet column bloom filters / Delta
-# bloom index, built with this module's primitives) answers "which
-# files MIGHT contain this key" from an index that is KB-per-file, so
-# the scan touches ~1 file instead of all of them. Files written after
-# the index build are always scanned — staleness can't cause a miss.
-#
-# Scope: PLAIN-DIRECTORY tables (the build and the lookup read the
-# directory listing, so every visible file is table data). A
-# manifest-committed table must NOT route point lookups here — a
-# crashed writer's orphan files are invisible to manifest.read_table
-# but WOULD be scanned by this path; manifest tables already get
-# metadata-level point-lookup skipping from read_table's per-file
-# min/max stats (record the key in stats_cols).
-
-INDEX_PREFIX = "_bloom_index_"
-
-
-def build_file_bloom_index(
-    spark,
-    table_path: str,
-    key_col: str,
-    expected_items_per_file: int = 1_000_000,
-    k: int = BLOOM_K,
-) -> str:
-    """One pass over the table: per-(file, word) ``bit_or`` bitmap rows.
-
-    Written to ``<table>/_bloom_index_<col>`` — underscore-prefixed, so
-    table reads never see it and compaction (which replaces data files
-    only) leaves it in place. Each row records the modulus ``m`` so lookups don't
-    depend on the caller remembering the build sizing. Re-run after
-    compaction (old file names vanish; their index rows go stale but
-    only cost false scans of nothing — vanished files list no data).
-    """
-    m = _num_words(expected_items_per_file) * 64
-    df = spark.read.parquet(table_path).select(
-        F.col(key_col), F.col("_metadata.file_path").alias("file")
-    )
-    probes = F.array(*_probe_cols(F.col(key_col), m, k))
-    idx = (
-        df.select("file", F.explode(probes).alias("_p"))
-        .select(
-            "file",
-            F.shiftright(F.col("_p"), 6).cast("int").alias("word"),
-            F.expr("shiftleft(1L, cast(_p % 64 as int))").alias("_m"),
-        )
-        .groupBy("file", "word")
-        .agg(F.bit_or("_m").alias("bits"))
-        .withColumn("m", F.lit(m))
-    )
-    out = table_path.rstrip("/") + "/" + INDEX_PREFIX + key_col
-    idx.write.mode("overwrite").parquet(out)
-    return out
-
-
-def _list_data_files(spark, table_path: str) -> list[str]:
-    """All data files under the table, RECURSIVELY: a partitioned table
-    nests files in key=value dirs, and a new file the lister misses
-    would silently escape the always-scan-unindexed guarantee."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    out: list[str] = []
-    stack = [root]
-    while stack:
-        p = stack.pop()
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue  # sidecars (incl. the index itself), hidden files
-            if status.isDirectory():
-                stack.append(status.getPath())
-            elif name.endswith(".parquet"):
-                out.append(status.getPath().toString())
-    return out
-
-
-def bloom_point_lookup(spark, table_path: str, key_col: str, value, k: int = BLOOM_K):
-    """``SELECT * WHERE key = value`` scanning only candidate files.
-
-    The index read + probe-word filter touch KB of index data; probe
-    positions for the literal come from one single-row JVM job (the
-    same xxhash64 expressions the build used, so the two sides cannot
-    disagree). Files missing from the index (written after the build)
-    are always scanned — no false negatives, ever. Returns the filtered
-    DataFrame; an empty candidate set returns an empty frame with the
-    table schema.
-    """
-    table = spark.read.parquet(table_path)
-    idx_path = table_path.rstrip("/") + "/" + INDEX_PREFIX + key_col
-    idx = spark.read.parquet(idx_path)
-    m = idx.select("m").first()["m"]
-    # xxhash64 is TYPE-sensitive: a bare int literal hashes differently
-    # from the table's long/string column — cast to the column's type so
-    # probe positions match the build exactly
-    lit = F.lit(value).cast(table.schema[key_col].dataType)
-    probe_row = (
-        spark.range(1)
-        .select(
-            *[
-                p.alias(f"p{i}")
-                for i, p in enumerate(_probe_cols(lit, int(m), k))
-            ]
-        )
-        .first()
-    )
-    want = {}  # word -> required bit mask
-    for i in range(k):
-        pos = probe_row[f"p{i}"]
-        want.setdefault(pos >> 6, 0)
-        want[pos >> 6] |= 1 << (pos % 64)
-    # candidate = indexed files whose k probe words all carry their bits
-    rows = idx.where(F.col("word").isin(*[int(w) for w in want])).collect()
-    by_file: dict[str, dict[int, int]] = {}
-    indexed = set()
-    for r in rows:
-        by_file.setdefault(r["file"], {})[r["word"]] = r["bits"]
-    for r in idx.select("file").distinct().collect():
-        indexed.add(r["file"])
-    candidates = [
-        f
-        for f, words in by_file.items()
-        if all(words.get(w, 0) & mask == mask for w, mask in want.items())
-    ]
-    # files the index has never seen must always be scanned
-    unindexed = [f for f in _list_data_files(spark, table_path) if f not in indexed]
-    targets = candidates + unindexed
-    if not targets:
-        return table.where(F.lit(False))
-    return (
-        # basePath: candidate paths are FILES; without it a partitioned
-        # table's key=value dir columns would read back as NULLs
-        spark.read.option("basePath", table_path)
-        .schema(table.schema)
-        .parquet(*targets)
-        .where(F.col(key_col) == F.lit(value))
-    )

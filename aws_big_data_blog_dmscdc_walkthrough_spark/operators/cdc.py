@@ -704,14 +704,14 @@ def scd2_apply(
     return untouched.unionByName(open_impacted).unionByName(new_versions)
 
 
-def scd2_fold_batch(
+def scd2_fresh_changes(
     history: DataFrame,
     changes: DataFrame,
     pks: Sequence[str],
     seq_col: str,
-    op_col: str = OP_COL,
 ) -> DataFrame:
-    """Replay-safe :func:`scd2_apply`: drop already-recorded changes first.
+    """The not-yet-recorded subset of ``changes``: what makes
+    :func:`scd2_apply` replay-safe.
 
     A restarted foreachBatch loop re-delivers its last micro-batch; raw
     ``scd2_apply`` would then close the open version at a seq BEFORE its
@@ -720,23 +720,9 @@ def scd2_fold_batch(
     as the ``valid_to_seq`` it closed (D) — so filtering the batch to
     seqs STRICTLY ABOVE the key's high-water mark makes a full replay a
     no-op and a fresh batch pass through untouched. One history-keyed
-    aggregate + one linear join, both on the PK.
-    """
-    fresh = scd2_fresh_changes(history, changes, pks, seq_col)
-    return scd2_apply(history, fresh, pks, seq_col, op_col)
-
-
-def scd2_fresh_changes(
-    history: DataFrame,
-    changes: DataFrame,
-    pks: Sequence[str],
-    seq_col: str,
-) -> DataFrame:
-    """The not-yet-recorded subset of ``changes`` (see scd2_fold_batch).
-
-    Exposed separately so callers that pay a table rewrite per fold
-    (the streaming history mode) can skip the write entirely when a
-    replayed batch leaves nothing fresh.
+    aggregate + one linear join, both on the PK. Callers that pay a
+    table rewrite per fold (the streaming history mode) skip the write
+    entirely when a replayed batch leaves nothing fresh.
     """
     pks = list(pks)
     hmax = history.groupBy(*pks).agg(

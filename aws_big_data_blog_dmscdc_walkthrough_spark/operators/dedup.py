@@ -1249,10 +1249,9 @@ def incremental_minhash_pairs(
 
     Candidate generation is the band equi-join with the NEW side as
     the small probe: band keys of the batch join the corpus's band
-    keys, so at 100 TB the corpus contribution is a pre-computed
-    signature STORE (``append_signature_store`` /
-    ``match_against_store``) read once per ingest — O(batch + matches)
-    fresh compute, O(corpus signatures) scan that bucketing or a
+    keys, so at 100 TB the corpus contribution would be a pre-computed
+    signature store read once per ingest — O(batch + matches) fresh
+    compute, O(corpus signatures) scan that bucketing or a
     band-partitioned layout prunes.
     """
     sh_new = _prepared_shingles(new_docs, id_col, text_col, materialize=False)
@@ -1382,101 +1381,6 @@ def split_minhash_pairs(
         sh_all.where(pred),
         _banded_keys(sh_all.where(~pred), rows_per_band),
         sh_all.where(~pred),
-        threshold,
-        rows_per_band,
-        bucket_cap,
-    )
-
-
-def _store_meta_path(path: str) -> str:
-    return f"{path}/_store_meta.json"
-
-
-def _check_store_banding(spark, path: str, rows_per_band: int, create: bool) -> None:
-    """Persist/validate the store's banding layout: band keys encode
-    ``rows_per_band``, so a probe built with a different value would
-    join NOTHING and silently report every near-dup as absent. First
-    append records the layout; every later append/match must match it."""
-    import json as _json
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_store_meta_path(path))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        stream = fs.open(p)
-        try:
-            data = bytearray()
-            # tiny file (~25 bytes): simple int-returning read() suffices
-            b = stream.read()
-            while b != -1:
-                data.append(b)
-                b = stream.read()
-        finally:
-            stream.close()
-        stored = _json.loads(bytes(data).decode("utf-8"))
-        if stored["rows_per_band"] != rows_per_band:
-            raise ValueError(
-                f"signature store at {path} was built with rows_per_band="
-                f"{stored['rows_per_band']}; caller passed {rows_per_band} "
-                "— band keys would never match"
-            )
-    elif create:
-        out = fs.create(p, True)
-        try:
-            out.write(_json.dumps({"rows_per_band": rows_per_band}).encode("utf-8"))
-        finally:
-            out.close()
-    else:
-        raise ValueError(f"no signature store at {path} (missing _store_meta.json)")
-
-
-def append_signature_store(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    rows_per_band: int = 2,
-) -> None:
-    """Append a batch's dedup state to the persistent signature store:
-    ``<path>/bands`` (exploded ``(_id, _bk)`` band keys) and
-    ``<path>/shingles`` (``(_id, _sh)`` shingle sets, for exact-Jaccard
-    verification of candidates). Signatures are computed once, at
-    ingest — later batches never re-shingle the corpus. The banding
-    layout is recorded in ``_store_meta.json`` on first append and
-    validated on every later append/match (a mismatched
-    ``rows_per_band`` would silently match nothing)."""
-    _check_store_banding(docs.sparkSession, path, rows_per_band, create=True)
-    sh = (
-        shingle_frame(spread(docs), id_col, text_col)
-        .withColumnRenamed(id_col, "_id")
-        .where(F.size("_sh") > 0)
-        .persist()
-    )
-    _banded_keys(sh, rows_per_band).write.mode("append").parquet(f"{path}/bands")
-    sh.write.mode("append").parquet(f"{path}/shingles")
-    sh.unpersist()
-
-
-def match_against_store(
-    spark,
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    threshold: float = 0.5,
-    rows_per_band: int = 2,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Match an ingest batch against the persistent signature store —
-    the batch's signatures are fresh compute; the corpus side is the
-    stored state. Raises if ``rows_per_band`` disagrees with the
-    store's recorded layout. Returns ``(new_id, corpus_id, jaccard)``."""
-    _check_store_banding(spark, path, rows_per_band, create=False)
-    sh_new = _prepared_shingles(new_docs, id_col, text_col)
-    return _match_banded(
-        sh_new,
-        spark.read.parquet(f"{path}/bands"),
-        spark.read.parquet(f"{path}/shingles"),
         threshold,
         rows_per_band,
         bucket_cap,

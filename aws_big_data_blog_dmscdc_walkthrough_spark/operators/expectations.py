@@ -4,8 +4,7 @@ The CDC lake's trust problem: upstream schema drift, botched backfills,
 and replication glitches land silently in the target unless something
 checks. This is the Delta-Live-Tables / Great-Expectations shape (both
 public) rebuilt on plain DataFrame plans: declare rules once, get a
-violations REPORT (rule → count) and a row-level clean/quarantine split
-the merge pipeline can act on.
+violations REPORT (rule → count).
 
 Rule kinds and their plan shapes:
 
@@ -111,43 +110,6 @@ def expectations_report(
         F.expr(f"stack({len(rules)}, {stack}) AS (rule, n_violations)"),
         F.col("n_rows"),
     ).select("rule", "n_violations", "n_rows")
-
-
-def quarantine_split(
-    df: DataFrame,
-    not_null: Sequence[str] = (),
-    ranges: Mapping[str, tuple] = None,
-    isin: Mapping[str, Sequence] = None,
-    unique: Sequence[Sequence[str]] = (),
-    references: Mapping[str, tuple[DataFrame, str]] = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): quarantined rows carry ``violated_rules``.
-
-    Row-level: a row lands in quarantine when ANY rule flags it. The
-    two frames partition the input exactly.
-    """
-    flagged, rules = _flags(
-        df, not_null, ranges or {}, isin or {}, unique, references or {}
-    )
-    any_bad = None
-    for r in rules:
-        any_bad = F.col(r) if any_bad is None else (any_bad | F.col(r))
-    if any_bad is None:
-        return df, df.where(F.lit(False)).withColumn(
-            "violated_rules", F.array().cast("array<string>")
-        )
-    violated = F.filter(
-        F.array(*[F.when(F.col(r), F.lit(r)) for r in rules]),
-        lambda x: x.isNotNull(),
-    )
-    # key joins (unique/references) reorder columns — restore the input's
-    clean = flagged.where(~any_bad).select(*df.columns)
-    bad = (
-        flagged.where(any_bad)
-        .withColumn("violated_rules", violated)
-        .select(*df.columns, "violated_rules")
-    )
-    return clean, bad
 
 
 # Exact-distinct columns per aggregate pass: each adds an expand branch

@@ -1,30 +1,18 @@
-"""Embedding dimensionality reduction: PCA + random projection (#107).
+"""Embedding dimensionality reduction: random projection (#107).
 
 An embedding pipeline at 100 TB wants cheaper vectors before ANN /
-clustering / dedup — 64-d float32 → 8-16 components keeps most of the
-variance at a fraction of the shuffle and index cost (the classic
-IVF-on-PCA / OPQ preprocessing step, all public).
+clustering / dedup — 64-d float32 → a few components at a fraction of
+the shuffle and index cost.
 
-Distribution shape: the only corpus-wide pass computes the d×d Gram
-matrix and the mean vector with Arrow-batched partial sums
-(``mapInPandas`` — each batch contributes one (d², d, 1) partial; the
-driver reduces a handful of 4096-double rows, never the corpus). The
-eigendecomposition is a d×d numpy problem on the driver — d is the
-EMBEDDING width (64 here), independent of corpus size. Projection is
-map-side only: the component matrix rides into the plan as a literal,
-each vector folds through ``F.aggregate`` — no UDF, no shuffle.
-
-Random projection (Johnson-Lindenstrauss, public) skips the fit pass
-entirely: a deterministic integer weight formula both this engine and
-the DuckDB oracle can expand inline — the gate-checkable form.
+Random projection (Johnson-Lindenstrauss, public) needs no fit pass: a
+deterministic integer weight formula both this engine and the DuckDB
+oracle can expand inline — the gate-checkable form. Projection is
+map-side only: each vector folds through ``F.aggregate`` — no UDF, no
+shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,89 +52,3 @@ def random_projection(
         )
     return df.select("*", *cols).drop(vec_col)
 
-
-def _gram_partials(dim: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            if m.size == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "gram": [(m.T @ m).reshape(-1).tolist()],
-                    "colsum": [m.sum(axis=0).tolist()],
-                    "n": [m.shape[0]],
-                }
-            )
-
-    return fn
-
-
-def pca_fit(df: DataFrame, vec_col: str, dim: int, k: int):
-    """Fit PCA over a vector column; returns (mean, components) numpy
-    arrays with components shaped (k, dim), eigenvalue-descending.
-
-    One Arrow pass produces per-batch Gram/sum partials; the element-
-    wise reduce runs as a posexplode + grouped sum (bounded by d² rows
-    per partial — partial count, not corpus size); eigh runs on the
-    driver's d×d covariance. Sign convention: each component's
-    largest-|coordinate| entry is made positive, so fits are
-    reproducible run-to-run.
-    """
-    src = df.select(as_double(F.col(vec_col)).alias("_v"))
-    partials = src.mapInPandas(
-        _gram_partials(dim),
-        schema="gram array<double>, colsum array<double>, n long",
-    )
-    reduced = (
-        partials.select(
-            F.posexplode(
-                F.concat(F.col("gram"), F.col("colsum"))
-            ).alias("pos", "x"),
-            F.col("n"),
-        )
-        .groupBy("pos")
-        .agg(F.sum("x").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    if not reduced:
-        raise ValueError("pca_fit: empty input")
-    flat = np.zeros(dim * dim + dim)
-    for r in reduced:
-        flat[r["pos"]] = r["s"]
-    n = int(reduced[0]["n"])  # every pos row carries the same total count
-    gram = flat[: dim * dim].reshape(dim, dim)
-    mean = flat[dim * dim:] / n
-    cov = gram / n - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(-vals)[:k]
-    comps = vecs[:, order].T
-    for i in range(comps.shape[0]):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    return mean, comps
-
-
-def pca_project(
-    df: DataFrame, vec_col: str, mean: np.ndarray, components: np.ndarray
-) -> DataFrame:
-    """Map-side projection onto fitted components: out column
-    ``pca`` = components @ (v - mean), as an array<double>. The mean
-    and matrix ride as literals — no shuffle, no UDF."""
-    v = as_double(F.col(vec_col))
-    outs = []
-    for c in range(components.shape[0]):
-        w = F.array(*[F.lit(float(x)) for x in components[c]])
-        mu = F.array(*[F.lit(float(x)) for x in mean])
-        centered = F.zip_with(v, mu, lambda x, m: x - m)
-        outs.append(
-            F.aggregate(
-                F.zip_with(centered, w, lambda x, wt: x * wt),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-        )
-    return df.withColumn("pca", F.array(*outs))

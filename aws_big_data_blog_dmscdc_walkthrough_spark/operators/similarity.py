@@ -32,7 +32,6 @@ from ..functions.vectors import (  # noqa: F401  (re-exported; plans import from
 )
 
 
-
 def _safe_cosine(num, den):
     """dot/denominator with a zero-norm guard: 0/0 would be NaN, and
     Spark orders NaN ABOVE every double — a zero vector would pass any
@@ -125,8 +124,7 @@ def semantic_dedup(
          cosine matrix is computed in numpy inside one task. Per-task
          work/memory is bounded by the cluster size, which the CALLER
          bounds by fitting k ≈ N / target_cluster_size centroids
-         (similarity.ivf_fit_centroids on a sample) — the paper's own
-         trick. Nothing here is ever corpus × corpus.
+         (k-means on a sample) — the paper's own trick. Nothing here is ever corpus × corpus.
 
     All arithmetic uses a left-to-right per-dimension fold (see
     :func:`_seq_fold_cosines`) so the DuckDB oracle's explicit term
@@ -198,151 +196,6 @@ def cosine_topk(
     )
 
 
-def ivf_fit_centroids(
-    df: DataFrame,
-    vec_col: str,
-    n_centroids: int = 16,
-    sample_rows: int = 2048,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """Fit IVF coarse-quantizer centroids: k-means on a driver sample.
-
-    Model FITTING is the one legitimately driver-sided step (MLlib does
-    the same reduce): a bounded sample (``sample_rows`` vectors, a few
-    MB) comes to the driver, numpy Lloyd iterations run there, and the
-    resulting (n_centroids × dim) matrix broadcasts back out. Assignment
-    and search — the O(corpus) parts — stay distributed.
-
-    Deterministic: seeded numpy init, fixed iteration count.
-    """
-    sample = np.asarray(
-        df.select(as_double(F.col(vec_col)).alias("v"))
-        .limit(sample_rows)
-        .toPandas()["v"]
-        .tolist()
-    )
-    if len(sample) == 0:
-        raise ValueError("ivf_fit_centroids: corpus is empty — nothing to fit")
-    # a corpus smaller than the requested cell count just gets one cell
-    # per vector (rng.choice without replacement would crash otherwise)
-    n_centroids = min(n_centroids, len(sample))
-    rng = np.random.default_rng(seed)
-    centroids = sample[rng.choice(len(sample), size=n_centroids, replace=False)]
-    for _ in range(iters):
-        # cosine k-means: assign by max normalized dot, update by mean
-        norms = np.linalg.norm(sample, axis=1, keepdims=True) * np.linalg.norm(
-            centroids, axis=1
-        )
-        assign = np.argmax((sample @ centroids.T) / np.where(norms == 0, 1, norms), axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids
-
-
-def ivf_assign(centroids):
-    """pandas_udf: vector → nearest-centroid id (numpy argmax of cosine)."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1)
-
-    @F.pandas_udf(IntegerType())
-    def udf(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            a = np.asarray(v, dtype=np.float64)
-            denom = np.linalg.norm(a) * cnorm
-            out.append(int(np.argmax((cents @ a) / np.where(denom == 0, 1, denom))))
-        return pd.Series(out)
-
-    return udf
-
-
-def ivf_assign_multi(centroids, m: int):
-    """pandas_udf: vector → its ``m`` nearest centroid ids (spill
-    assignment). Vectors near a cell boundary — exactly the ones a
-    single-cell probe misses — live in every cell they border, the
-    multi-assignment used by FAISS / ScaNN-style IVF indexes: recall
-    rises steeply for an index-size factor of ``m`` (ids replicate;
-    at scale only the posting list duplicates, not the stored vector)."""
-    from pyspark.sql.types import ArrayType
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def udf(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            a = np.asarray(v, dtype=np.float64)
-            denom = np.linalg.norm(a) * cnorm
-            sims = (cents @ a) / np.where(denom == 0, 1, denom)
-            out.append([int(c) for c in np.argsort(-sims)[:m]])
-        return pd.Series(out)
-
-    return udf
-
-
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    centroids=None,
-    assign_m: int = 1,
-) -> DataFrame:
-    """IVF ANN: probe the ``nprobe`` nearest centroid buckets, exact
-    cosine inside them.
-
-    At scale the assignment runs ONCE at ingest (store ``_ivf`` as a
-    table column, partition by it) and each query scans nprobe/n_centroids
-    of the corpus — here assignment is computed inline for self-contained
-    plans. Recall improves with nprobe (= brute force at n_centroids).
-
-    ``assign_m`` > 1 spill-assigns each vector to its m nearest cells
-    (``ivf_assign_multi``): boundary vectors stop falling through the
-    probe, the dominant recall loss of single-assignment IVF. Measured
-    on the sf0.1 embeddings (64-d, weakly clustered — a hard case):
-    recall@10 0.62 at (m=1, nprobe=4) → 0.92 at (m=2, nprobe=6).
-    """
-    from .dedup import spread
-
-    if centroids is None:
-        centroids = ivf_fit_centroids(df, vec_col, n_centroids)
-    qvec = np.asarray(
-        query_df.select(as_double(F.col(vec_col)).alias("q")).limit(1).toPandas()["q"][0]
-    )
-    denom = np.linalg.norm(centroids, axis=1) * np.linalg.norm(qvec)
-    probes = np.argsort(-(centroids @ qvec) / np.where(denom == 0, 1, denom))[:nprobe]
-    probe_ids = [int(p) for p in probes]
-    if assign_m > 1:
-        assign = ivf_assign_multi(centroids, assign_m)
-        cell_filter = F.arrays_overlap(
-            F.col("_ivf"), F.array(*[F.lit(p) for p in probe_ids])
-        )
-    else:
-        assign = ivf_assign(centroids)
-        cell_filter = F.col("_ivf").isin(probe_ids)
-    corpus = spread(df).select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_v"), assign(F.col(vec_col)).alias("_ivf")
-    ).withColumn("_n", norm(F.col("_v")))
-    query = query_df.select(as_double(F.col(vec_col)).alias("_q")).withColumn(
-        "_qn", norm(F.col("_q"))
-    )
-    cos = _safe_cosine(dot(F.col("_v"), F.col("_q")), F.col("_n") * F.col("_qn"))
-    return (
-        corpus.where(cell_filter)
-        .crossJoin(F.broadcast(query))
-        .select(F.col(id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def _py_dot(a: Sequence[float], b: Sequence[float]) -> float:
     """Strict left-to-right multiply-add: Python floats are IEEE doubles,
     so this is bit-identical to the Spark ``dot`` fold and the oracle's
@@ -364,9 +217,9 @@ def ivf_topk_fixed(
 ) -> DataFrame:
     """IVF ANN with caller-provided (deterministic) centroids.
 
-    Same plan shape as ``ivf_topk`` (assign → probe-prune → exact cosine
-    top-k) but every arithmetic step is the fixed left-to-right fold the
-    DuckDB oracle replays, so the result is gate-checkable bit-for-bit —
+    The IVF plan shape (assign → probe-prune → exact cosine top-k) with
+    every arithmetic step the fixed left-to-right fold the DuckDB oracle
+    replays, so the result is gate-checkable bit-for-bit —
     no k-means sampling, no numpy summation-order ambiguity.
 
     Plan: the centroid set enters as literals, so assignment is a pure
@@ -904,8 +757,8 @@ def lsh_topk(
     IVF spill-assign (0.92 at ~50%). Small budgets (≤ bits) degenerate
     to the single-bit flips, identical to hamming-1 by construction.
     Needs the query's margin values, so the (single-row) query collects
-    driver-side — the same bounded round-trip ivf_topk already does for
-    centroid ranking. Mutually exclusive with ``probe_hamming``.
+    driver-side — the same bounded round-trip ivf_topk_fixed makes for
+    its query vector. Mutually exclusive with ``probe_hamming``.
     """
     from itertools import combinations
 
@@ -947,100 +800,6 @@ def lsh_topk(
     )
 
 
-def lsh_pq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    codebooks: np.ndarray,
-    k: int,
-    bits: int = LSH_BITS,
-    probe_t: int = 160,
-    rerank: int = 100,
-    codes_df: DataFrame | None = None,
-) -> DataFrame:
-    """ANN mid-tier: query-directed LSH probing × PQ-ADC × exact rerank.
-
-    The composition the two halves were built for: because ADC reads
-    8-byte codes instead of full vectors (32× smaller at d=64/float32),
-    the probe budget that was the mid-tier's ceiling stops being scan-
-    bound — probing 160 of 256 buckets over CODES costs ~2% of the
-    corpus in vector-bytes, plus ``rerank`` exact rows. Stages:
-
-      1. the query's ranked perturbation masks (Lv et al., the same
-         heap walk ``lsh_topk(probe_t=...)`` uses) pick the probe
-         buckets — a literal IN-list, partition-prunable on an
-         ingest-bucketed corpus (#73);
-      2. candidates in probed buckets score by ADC over their PQ codes
-         (map-only Arrow pass, the pq_topk closure);
-      3. the top-``rerank`` shortlist re-scores with EXACT cosine
-         against the stored vectors (isin pushdown) → top-k.
-
-    Measured on the sf0.1 hard corpus (recall@10 vs exact cosine truth,
-    pinned in tests/test_ann_recall.py): 0.87 at probe_t=160/rerank=100
-    (~2% of the corpus in vector-bytes) where exact-scored probing
-    plateaued at 0.57 for a 25% full-width scan — more buckets for
-    fewer bytes is the whole trade. Pass
-    ``codes_df`` (id_col, pq_codes) when the corpus stores codes (the
-    100 TB shape); the default encodes on the fly for convenience.
-    """
-    masks = [0]
-    qrow = query_df.select(as_double(F.col(vec_col)).alias("_q")).first()
-    margins = [float(v) for v in qrow["_q"][:bits]]
-    masks += _probe_masks_query_directed(margins, probe_t)
-    qbkt = 0
-    for i, mvl in enumerate(margins):
-        if mvl >= 0:
-            qbkt |= 1 << i
-    probe = list({qbkt ^ m for m in masks})
-    if codes_df is None:
-        codes_df = pq_encode(df, id_col, vec_col, codebooks)
-    bucketed = df.select(
-        F.col(id_col), sign_bucket(F.col(vec_col), bits).alias("_bkt")
-    ).where(F.col("_bkt").isin(probe))
-    cand_codes = codes_df.join(bucketed.select(id_col), id_col, "left_semi")
-
-    M, K, sub = codebooks.shape
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    q = np.asarray(qrow["_q"], dtype=np.float64)
-    lut = np.stack(
-        [
-            _seq_fold_sqdist(q[j * sub : (j + 1) * sub][None, :], cb[j])[0]
-            for j in range(M)
-        ]
-    )
-
-    @F.pandas_udf(DoubleType())
-    def adist(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=np.float64)
-        cm = np.array([np.asarray(c, dtype=np.int64) for c in codes])
-        acc = np.zeros(len(cm), dtype=np.float64)
-        for j in range(M):
-            acc += lut[j][cm[:, j]]
-        return pd.Series(acc)
-
-    shortlist = (
-        cand_codes.select(F.col(id_col), adist(F.col("pq_codes")).alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col))
-        .limit(max(k, rerank))
-    )
-    ids = [r[id_col] for r in shortlist.select(id_col).collect()]
-    qn = float(np.sqrt((q * q).sum()))
-    exact = df.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_v")
-    )
-    cosine = _safe_cosine(
-        dot(F.col("_v"), F.lit(q.tolist()).cast("array<double>")),
-        norm(F.col("_v")) * F.lit(qn),
-    )
-    return (
-        exact.select(F.col(id_col), cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def vector_mean_by(
     df: DataFrame,
     group_col: str,
@@ -1048,7 +807,7 @@ def vector_mean_by(
     dim: int,
 ) -> DataFrame:
     """Element-wise mean vector per group — the distributed k-means
-    UPDATE step (assignment being ``ivf_assign``), and the general
+    UPDATE step (assignment being a nearest-centroid argmax), and the general
     "centroid per label" aggregation an embedding pipeline needs.
 
     posexplode → (group, position) grouped aggregation: one shuffle
@@ -1072,129 +831,6 @@ def vector_mean_by(
                 / F.count(F.lit(1))
             ).alias("mean")
         )
-    )
-
-
-def write_ivf_partitioned(
-    df: DataFrame, id_col: str, vec_col: str, path: str, centroids,
-    assign_m: int = 1,
-) -> None:
-    """Ingest-time IVF layout: store vectors PARTITIONED by coarse cell.
-
-    The docstring promise of ivf_topk made real: assignment runs once at
-    write time (one map-side Arrow pass), and each vector lands in its
-    cell's partition directory. ANN probes then prune at PLANNING time —
-    the scan never opens the other n_centroids - nprobe directories. At
-    100 TB this turns every query from a full-corpus scan into
-    nprobe/n_centroids of one.
-
-    ``assign_m`` > 1 spill-assigns: each vector is stored in its m
-    nearest cells (explode — m× storage), the ingest-time form of
-    ``ivf_topk``'s recall lever: boundary vectors stop falling through
-    the probe. Readers must dedupe on ``id_col`` (a vector shows up via
-    every probed cell it lives in) — ``ivf_topk_partitioned`` does.
-    """
-    if assign_m > 1:
-        assign = ivf_assign_multi(centroids, assign_m)
-        staged = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .withColumn("_ivf", F.explode(assign(F.col(vec_col))))
-        )
-    else:
-        staged = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-            "_ivf", ivf_assign(centroids)(F.col(vec_col))
-        )
-    # Stage + swap, for two reasons at once: (a) an index REBUILD must
-    # replace the WHOLE layout — a dynamic partition overwrite would
-    # keep any cell populated only by the previous assignment serving
-    # stale vectors forever (the hazard a lake reload avoids by
-    # superseding every live file); (b) the spill marker must commit
-    # ATOMICALLY with the data — a marker-less duplicated table would
-    # silently halve recall (readers skip the dedupe), a markered
-    # single-assign table only costs a spurious shuffle. Both land in
-    # one directory rename.
-    import uuid as _uuid
-
-    spark = df.sparkSession
-    jvm = spark._jvm
-    staging = path.rstrip("/") + f"__staging_{_uuid.uuid4().hex[:8]}"
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("_ivf")
-        .parquet(staging)
-    )
-    p_stage = jvm.org.apache.hadoop.fs.Path(staging)
-    fs = p_stage.getFileSystem(spark._jsc.hadoopConfiguration())
-    if assign_m > 1:
-        out = fs.create(
-            jvm.org.apache.hadoop.fs.Path(staging + "/" + _IVF_SPILL_MARKER), True
-        )
-        try:
-            out.write(str(assign_m).encode())
-        finally:
-            out.close()
-    p_out = jvm.org.apache.hadoop.fs.Path(path)
-    trash = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    if fs.exists(trash):
-        fs.delete(trash, True)
-    if fs.exists(p_out):
-        fs.rename(p_out, trash)
-    fs.rename(p_stage, p_out)
-    fs.delete(trash, True)
-
-
-_IVF_SPILL_MARKER = "_ivf_assign_m"
-
-
-def _ivf_is_spill_assigned(spark, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _IVF_SPILL_MARKER)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    centroids,
-    query_vec,
-    k: int,
-    nprobe: int = 4,
-) -> DataFrame:
-    """ANN over an IVF-partitioned table: directory-pruned probe scan.
-
-    Probe selection (tiny centroid matrix x query) happens driver-side;
-    the `_ivf IN (probes)` filter is a partition predicate, so Catalyst
-    prunes the non-probed directories before any file is opened
-    (PartitionFilters in the scan node — asserted in tests). Inside the
-    probed cells: exact cosine, deterministic top-k. Spill-assigned
-    tables (``write_ivf_partitioned(assign_m>1)``, detected via the
-    write-time marker) store a vector in several cells, so the probed
-    union dedupes on ``id_col`` before the top-k — otherwise one near
-    neighbor could occupy two result slots; single-assignment tables
-    skip that shuffle entirely.
-    """
-    qvec = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    cents = np.asarray(centroids, dtype=np.float64)
-    denom = np.linalg.norm(cents, axis=1) * np.linalg.norm(qvec)
-    probes = np.argsort(-(cents @ qvec) / np.where(denom == 0, 1, denom))[:nprobe]
-    corpus = (
-        spark.read.parquet(path)
-        .where(F.col("_ivf").isin([int(p) for p in probes]))
-        .select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
-    )
-    if _ivf_is_spill_assigned(spark, path):
-        corpus = corpus.dropDuplicates([id_col])
-    corpus = corpus.withColumn("_n", norm(F.col("_v")))
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    qn = float(np.sqrt(qvec @ qvec))
-    cos = _safe_cosine(dot(F.col("_v"), qlit), F.col("_n") * F.lit(qn))
-    return (
-        corpus.select(F.col(id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -1402,52 +1038,6 @@ def pq_topk(
     )
 
 
-def pq_fit_codebooks(
-    df: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    k: int = 256,
-    sample_rows: int = 4096,
-    iters: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """Train PQ codebooks: per-subspace k-means on a driver sample.
-
-    Same fitting shape as :func:`ivf_fit_centroids` — a bounded sample
-    comes to the driver, seeded Lloyd iterations run per subspace in
-    numpy, and the (m × k × dim/m) codebook array broadcasts back out
-    inside the encode/search closures. The model is small by
-    construction; encoding — the O(corpus) part — stays distributed.
-    """
-    sample = np.asarray(
-        df.select(as_double(F.col(vec_col)).alias("v"))
-        .limit(sample_rows)
-        .toPandas()["v"]
-        .tolist()
-    )
-    if len(sample) == 0:
-        raise ValueError("pq_fit_codebooks: corpus is empty — nothing to fit")
-    dim = sample.shape[1]
-    if dim % m:
-        raise ValueError(f"pq_fit_codebooks: dim {dim} not divisible by m {m}")
-    sub = dim // m
-    k = min(k, len(sample))
-    rng = np.random.default_rng(seed)
-    books = []
-    for j in range(m):
-        S = sample[:, j * sub : (j + 1) * sub]
-        cents = S[rng.choice(len(S), size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(k):
-                members = S[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books.append(cents)
-    return np.stack(books)
-
-
 # ------------------------------------------ hard-negative mining (#99)
 
 def hard_negatives(
@@ -1535,7 +1125,7 @@ def mmr_topk(
     sim(d,s)`` — the de-duplicated retrieval a RAG or hard-negative
     pipeline wants when the plain top-k is k near-copies of one hit.
 
-    Split exactly like :func:`ivf_fit_centroids`: the O(corpus) part —
+    Split like a k-means fit on a driver sample: the O(corpus) part —
     scoring every vector against the query — is the distributed
     brute-force :func:`cosine_topk`, thinned to a BOUNDED ``pool``
     (top-``pool`` by relevance; an item outside the relevance pool
@@ -1627,304 +1217,5 @@ def mmr_topk(
 # ------------------- IVF × PQ-ADC × exact rerank (#179)
 
 
-def ivf_pq_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    codebooks: np.ndarray,
-    k: int,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    rerank: int = 100,
-    centroids=None,
-    codes_df: DataFrame | None = None,
-    assign_m: int = 1,
-) -> DataFrame:
-    """ANN upper-mid tier: IVF cell pruning × PQ-ADC × exact rerank —
-    the IVFPQ composition (Jégou et al. 2011; the FAISS default index
-    family), completing the ladder LSH (#25) → LSH×PQ (#114) →
-    IVF (#42): coarse cells prune the corpus to ``nprobe``/``n_centroids``
-    of its rows, ADC reads 8-byte codes instead of full vectors inside
-    the probed cells, and only the top-``rerank`` shortlist touches
-    stored vectors. Differences from textbook IVFPQ are deliberate and
-    documented: codes quantize the RAW vector, not the cell residual
-    (residual codebooks would need per-cell training data plumbing; the
-    recall floor is pinned in tests either way), and cell assignment is
-    the shared cosine ``ivf_assign`` (``assign_m > 1`` spills boundary
-    vectors into every bordering cell exactly like #42's spill
-    assignment — ids replicate, vectors don't).
-
-    At the 100 TB shape the corpus stores (cell, pq_codes) at ingest
-    (#73's partitioned layout + ``pq_encode``): pass ``codes_df`` and
-    the probe is a partition-prunable IN-list over cells followed by a
-    map-only ADC over codes — full vectors are read for ``rerank``
-    rows only. The convenience default fits/encodes on the fly.
-    """
-    if centroids is None:
-        centroids = ivf_fit_centroids(df, vec_col, n_centroids=n_centroids)
-    cents = np.asarray(centroids, dtype=np.float64)
-    qrow = query_df.select(as_double(F.col(vec_col)).alias("_q")).first()
-    q = np.asarray(qrow["_q"], dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1) * (np.linalg.norm(q) or 1.0)
-    sims = (cents @ q) / np.where(cnorm == 0, 1, cnorm)
-    probe = [int(c) for c in np.argsort(-sims)[:nprobe]]
-
-    if assign_m > 1:
-        cells = df.select(
-            F.col(id_col),
-            ivf_assign_multi(cents, assign_m)(F.col(vec_col)).alias("_cells"),
-        ).where(F.arrays_overlap(F.col("_cells"), F.lit(probe)))
-    else:
-        cells = df.select(
-            F.col(id_col), ivf_assign(cents)(F.col(vec_col)).alias("_cell")
-        ).where(F.col("_cell").isin(probe))
-    if codes_df is None:
-        codes_df = pq_encode(df, id_col, vec_col, codebooks)
-    cand_codes = codes_df.join(cells.select(id_col), id_col, "left_semi")
-
-    M, K, sub = codebooks.shape
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    lut = np.stack(
-        [
-            _seq_fold_sqdist(q[j * sub : (j + 1) * sub][None, :], cb[j])[0]
-            for j in range(M)
-        ]
-    )
-
-    @F.pandas_udf(DoubleType())
-    def adist(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=np.float64)
-        cm = np.array([np.asarray(c, dtype=np.int64) for c in codes])
-        acc = np.zeros(len(cm), dtype=np.float64)
-        for j in range(M):
-            acc += lut[j][cm[:, j]]
-        return pd.Series(acc)
-
-    shortlist = (
-        cand_codes.select(F.col(id_col), adist(F.col("pq_codes")).alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col))
-        .limit(max(k, rerank))
-    )
-    ids = [r[id_col] for r in shortlist.select(id_col).collect()]
-    qn = float(np.sqrt((q * q).sum()))
-    exact = df.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_v")
-    )
-    cosine = _safe_cosine(
-        dot(F.col("_v"), F.lit(q.tolist()).cast("array<double>")),
-        norm(F.col("_v")) * F.lit(qn),
-    )
-    return (
-        exact.select(F.col(id_col), cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ------------- residual-encoded IVFPQ (#182): the textbook variant
 
-
-def pq_fit_codebooks_residual(
-    df: DataFrame,
-    vec_col: str,
-    centroids,
-    m: int = 8,
-    k: int = 256,
-    sample_rows: int = 4096,
-    iters: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """Train PQ codebooks on IVF-cell RESIDUALS ``v − c(v)`` — the
-    textbook IVFADC recipe (Jégou et al. 2011 §III: quantize the
-    residual, not the raw vector). Residuals concentrate around the
-    origin with far less variance than raw vectors, so the same (m, k)
-    byte budget spends its codewords on the part of the vector the
-    coarse quantizer did NOT explain — the recall lever #179 documents
-    as its deliberate gap. Fitting mirrors :func:`pq_fit_codebooks`:
-    bounded driver sample, per-subspace seeded Lloyd, model broadcasts
-    back inside the encode/search closures.
-    """
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1)
-    sample = np.asarray(
-        df.select(as_double(F.col(vec_col)).alias("v"))
-        .limit(sample_rows)
-        .toPandas()["v"]
-        .tolist()
-    )
-    if len(sample) == 0:
-        raise ValueError("pq_fit_codebooks_residual: corpus is empty")
-    denom = np.linalg.norm(sample, axis=1, keepdims=True) * cnorm[None, :]
-    assign = np.argmax(
-        (sample @ cents.T) / np.where(denom == 0, 1, denom), axis=1
-    )
-    resid = sample - cents[assign]
-    dim = resid.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    k = min(k, len(resid))
-    rng = np.random.default_rng(seed)
-    books = []
-    for j in range(m):
-        S = resid[:, j * sub : (j + 1) * sub]
-        cb = S[rng.choice(len(S), size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((S[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            for c in range(k):
-                members = S[a == c]
-                if len(members):
-                    cb[c] = members.mean(axis=0)
-        books.append(cb)
-    return np.stack(books)
-
-
-def pq_encode_residual(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids,
-    codebooks: np.ndarray,
-    assign_m: int = 1,
-) -> DataFrame:
-    """Encode each vector's RESIDUAL against every cell it spills into.
-
-    Returns (id, cell, pq_codes) — one row per (vector, assigned cell),
-    because a residual code is only meaningful relative to its own
-    cell's centroid. With ``assign_m > 1`` the posting list replicates
-    ×m exactly like #42's spill assignment (codes are m small ints, so
-    the replicated bytes stay far below the raw vectors). Map-only
-    Arrow pass; cell order matches :func:`ivf_assign_multi`
-    (``argsort(-cosine)[:m]``) bit-for-bit.
-    """
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1)
-    M, K, sub = codebooks.shape
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-
-    @F.pandas_udf(ArrayType(ArrayType(IntegerType())))
-    def encode(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        denom = np.linalg.norm(V, axis=1, keepdims=True) * cnorm[None, :]
-        sims = (V @ cents.T) / np.where(denom == 0, 1, denom)
-        cells = np.argsort(-sims, axis=1)[:, :assign_m]
-        out = []
-        for i in range(len(V)):
-            per_cell = []
-            for c in cells[i]:
-                r = (V[i] - cents[c])[None, :]
-                codes = [
-                    int(
-                        np.argmin(
-                            _seq_fold_sqdist(
-                                r[:, j * sub : (j + 1) * sub], cb[j]
-                            )[0]
-                        )
-                    )
-                    for j in range(M)
-                ]
-                per_cell.append(codes)
-            out.append(per_cell)
-        return pd.Series(out)
-
-    enc = df.select(
-        F.col(id_col),
-        ivf_assign_multi(cents, assign_m)(F.col(vec_col)).alias("_cells"),
-        encode(F.col(vec_col)).alias("_cc"),
-    )
-    return enc.select(
-        F.col(id_col), F.explode(F.arrays_zip("_cells", "_cc")).alias("_z")
-    ).select(
-        F.col(id_col),
-        F.col("_z._cells").alias("cell"),
-        F.col("_z._cc").alias("pq_codes"),
-    )
-
-
-def ivf_pq_topk_residual(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    centroids,
-    codebooks: np.ndarray,
-    k: int,
-    nprobe: int = 4,
-    rerank: int = 100,
-    codes_df: DataFrame | None = None,
-    assign_m: int = 1,
-) -> DataFrame:
-    """IVFADC with residual codes (#182): per-cell lookup tables.
-
-    Same probe/shortlist/rerank skeleton as :func:`ivf_pq_topk`, but
-    the ADC distance of a row in cell ``c`` is computed against the
-    query's OWN residual ``q − centroid_c`` — one (M × K) LUT per
-    probed cell, built on the driver (nprobe·M·K doubles, model scale).
-    A spilled id appearing in several probed cells keeps its MINIMUM
-    estimated distance before the shortlist cut. Only the
-    top-``rerank`` shortlist ever touches stored vectors.
-    """
-    cents = np.asarray(centroids, dtype=np.float64)
-    qrow = query_df.select(as_double(F.col(vec_col)).alias("_q")).first()
-    q = np.asarray(qrow["_q"], dtype=np.float64)
-    cnorm = np.linalg.norm(cents, axis=1) * (np.linalg.norm(q) or 1.0)
-    sims = (cents @ q) / np.where(cnorm == 0, 1, cnorm)
-    probe = [int(c) for c in np.argsort(-sims)[:nprobe]]
-
-    if codes_df is None:
-        codes_df = pq_encode_residual(
-            df, id_col, vec_col, cents, codebooks, assign_m=assign_m
-        )
-    M, K, sub = codebooks.shape
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    # per-cell LUT over the query residual — indexed by ABSOLUTE cell id
-    # (a tiny dense array: n_cells × M × K doubles, model scale)
-    n_cells = len(cents)
-    lut = np.zeros((n_cells, M, K), dtype=np.float64)
-    for c in probe:
-        qr = q - cents[c]
-        for j in range(M):
-            lut[c, j] = _seq_fold_sqdist(
-                qr[j * sub : (j + 1) * sub][None, :], cb[j]
-            )[0]
-
-    @F.pandas_udf(DoubleType())
-    def adist(cells: pd.Series, codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=np.float64)
-        cl = cells.to_numpy(dtype=np.int64)
-        cm = np.array([np.asarray(c, dtype=np.int64) for c in codes])
-        acc = np.zeros(len(cm), dtype=np.float64)
-        for j in range(M):
-            acc += lut[cl, j, cm[:, j]]
-        return pd.Series(acc)
-
-    cand = codes_df.where(F.col("cell").isin(probe))
-    shortlist = (
-        cand.select(
-            F.col(id_col), adist(F.col("cell"), F.col("pq_codes")).alias("_d")
-        )
-        .groupBy(id_col)
-        .agg(F.min("_d").alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col))
-        .limit(max(k, rerank))
-    )
-    ids = [r[id_col] for r in shortlist.select(id_col).collect()]
-    qn = float(np.sqrt((q * q).sum()))
-    exact = df.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_v")
-    )
-    cosine = _safe_cosine(
-        dot(F.col("_v"), F.lit(q.tolist()).cast("array<double>")),
-        norm(F.col("_v")) * F.lit(qn),
-    )
-    return (
-        exact.select(F.col(id_col), cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )

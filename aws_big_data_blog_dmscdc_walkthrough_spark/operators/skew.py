@@ -1,18 +1,12 @@
-"""Skew mitigation: salted joins for hot keys.
+"""Skew diagnosis: the hot keys of a join or aggregation.
 
 AQE's skew-join split (on in ``session.py``) handles most skew at
 runtime by splitting oversized shuffle partitions. Salting is the
 explicit fallback for *pathological* single-key skew — e.g. a CDC batch
 where 90 % of changes hit one hot row's key, or a dedup corpus where one
 band bucket dominates — where even a split partition still serializes
-one key's rows through few tasks.
-
-Mechanics (standard, e.g. Spark summit folklore / AQE docs):
-  * big side: append a uniform random salt in [0, buckets);
-  * small side: explode each row into ALL salt values;
-  * equi-join on (keys…, salt) — the hot key's rows now spread over
-    ``buckets`` shuffle partitions; the small side grows ×buckets, which
-    is the price (keep it the dimension/lookup side).
+one key's rows through few tasks. ``skew_report`` measures which case a
+table is in.
 """
 
 from __future__ import annotations
@@ -22,63 +16,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "_salt"
-
-
-def with_salt(df: DataFrame, buckets: int, salt_col: str = SALT_COL) -> DataFrame:
-    """Append a uniform random salt column in [0, buckets)."""
-    return df.withColumn(
-        salt_col, (F.rand() * buckets).cast("int")
-    )
-
-
-def with_exploded_salt(
-    df: DataFrame, buckets: int, salt_col: str = SALT_COL
-) -> DataFrame:
-    """Replicate every row once per salt value (the small-side half)."""
-    return df.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join robust to hot keys on the big side.
-
-    ``big ⋈ small on keys`` rewritten as
-    ``salt(big) ⋈ explode_salt(small) on keys+salt``; result drops the
-    salt. Row multiplicity is preserved ONLY for join types where the
-    small side's key set is what matters (inner / left / left_semi) —
-    right/full outer would emit every unmatched small-side row once per
-    salt bucket, so those are rejected rather than silently wrong.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi"):
-        raise ValueError(
-            f"salted_join supports inner/left/left_semi, got {how!r}: "
-            "outer-on-small-side semantics break under salting"
-        )
-    if how == "left_semi":
-        # semi-join needs no salt at all on the output; keep it cheap:
-        # the small side is distinct keys, broadcast handles it — salting
-        # a semi-join only helps when the BIG side's shuffle skews, which
-        # a broadcast semi-join never does.
-        return big.join(F.broadcast(small.select(*on).distinct()), list(on), how)
-    b = with_salt(big, buckets)
-    s = with_exploded_salt(small, buckets)
-    return b.join(s, [*on, SALT_COL], how).drop(SALT_COL)
-
 
 def skew_report(df: DataFrame, keys: Sequence[str], top_k: int = 10) -> DataFrame:
     """Hot-key diagnostic (#102): the top-k heaviest join/agg keys with
     their share of the table and a skew factor vs the uniform ideal.
 
     The number a 100 TB operator reads before choosing between a plain
-    shuffle, AQE skew splitting, and :func:`salted_join`: ``skew_x`` is
+    shuffle, AQE skew splitting, and a salted join: ``skew_x`` is
     how many times the mean key weight the hot key carries — also the
     integer salt bucket count that would level it (``salt_rec``,
     ceil(count·n_keys/total), exact integer arithmetic). One word-count

@@ -598,35 +598,6 @@ FROM c
 
 # --------------------------------------------------------- PII scrubbing
 
-PII_PATTERNS = {
-    # common subset of Java regex and RE2 — identical semantics in both
-    "url": r"https?://[^\s]+",
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "phone": r"\+?[0-9(][0-9().\s\-]{5,}[0-9]",
-}
-PII_ORDER = ("url", "email", "phone")  # urls first: they may contain '@'
-
-
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Redact URLs, emails, and phone-like numbers from a text column.
-
-    Adds per-kind match counts and a ``text_scrubbed`` column with each
-    match replaced by a <KIND> token. Pure regexp column expressions —
-    map-only, codegen, ordered so URL bodies are consumed before the
-    email pattern can bite into them.
-    """
-    out = df
-    scrubbed = F.col(text_col)
-    for kind in PII_ORDER:
-        pat = PII_PATTERNS[kind]
-        out = out.withColumn(
-            f"n_{kind}",
-            F.size(F.regexp_extract_all(scrubbed, F.lit(pat), F.lit(0))),
-        )
-        scrubbed = F.regexp_replace(scrubbed, pat, f"<{kind.upper()}>")
-    return out.withColumn("text_scrubbed", scrubbed)
-
-
 # ------------------------------------------------- count-min sketch
 
 CMS_WIDTH = 256
@@ -1145,45 +1116,6 @@ def token_surprisal(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_tok"),
             F.sum(bucket).alias("sum_surprisal"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("n_tok"),
-            F.col("sum_surprisal"),
-            (
-                F.col("sum_surprisal").cast("double") / F.col("n_tok").cast("double")
-            ).alias("mean_surprisal"),
-        )
-    )
-
-
-def token_surprisal_from_tf(
-    tf_df: DataFrame,
-    id_col: str = "doc_id",
-    term_col: str = "_t",
-    count_col: str = "_c",
-) -> DataFrame:
-    """#91 from a pre-aggregated (id, term, tf) substrate — the fused
-    corpus-card path (plans/corpus_ml.corpus_card_frames), where ONE
-    tokenize scan feeds four panels. Identical output to
-    :func:`token_surprisal` on the raw text: the corpus unigram table
-    is Σ tf per term, the per-doc sums weight each term's bucket by
-    its tf, and the empty-string rows (a whitespace-split artifact the
-    raw path filters at explode time) are filtered here the same way.
-    """
-    t = tf_df.where(F.col(term_col) != "").select(
-        F.col(id_col), F.col(term_col).alias("_t"), F.col(count_col).alias("_k")
-    )
-    cnt = t.groupBy("_t").agg(F.sum("_k").alias("_c"))
-    tot = cnt.agg(F.sum("_c").alias("_n"))
-    bucket = F.length(F.col("_n").cast("string")) - F.length(F.col("_c").cast("string"))
-    return (
-        t.join(cnt, "_t")
-        .join(F.broadcast(tot))
-        .groupBy(id_col)
-        .agg(
-            F.sum("_k").alias("n_tok"),
-            F.sum(F.col("_k") * bucket).alias("sum_surprisal"),
         )
         .select(
             F.col(id_col),

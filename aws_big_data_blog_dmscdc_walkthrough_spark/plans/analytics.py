@@ -1022,7 +1022,7 @@ FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
 
 def q_events_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key diagnostic (#102) over events.user_id: the report read
-    before choosing plain shuffle vs AQE skew split vs salted_join."""
+    before choosing plain shuffle vs AQE skew split vs a salted join."""
     from ..operators import skew
 
     return skew.skew_report(load_table(spark, sf_dir, "events"), ["user_id"], top_k=10)
@@ -2992,8 +2992,7 @@ def _copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles on the order key — alias-different branches get no
     ReusedExchange — and the pair aggregation) where this one costs two
     (the group-by here, the pair aggregation in the consumer). Persist
-    before multi-consumer reuse (the graph card persists it once for
-    the whole family)."""
+    before multi-consumer reuse."""
     # Repartition the two projected columns by the group key BEFORE the
     # aggregation (round 14): the single-row-group bench file arrives as
     # ONE scan partition, so the groupBy's partial collect_set otherwise
@@ -3090,11 +3089,10 @@ def _copurchase_edges(
     one canonical pair aggregation + support filter. Exactly the
     round-13 self-join's pair multiset (sorted distinct parts per
     order), at half its exchanges. Callers mirror to both directions
-    when they need a symmetric/directed view. ``baskets`` lets the
-    graph card (:func:`graph_card_frames`) hand in an already-persisted
-    substrate so the order-keyed aggregation also runs once per
-    combined run; standalone callers need no persist at all (the
-    substrate feeds exactly one consumer).
+    when they need a symmetric/directed view. ``baskets`` lets a
+    caller hand in an already-persisted substrate so the order-keyed
+    aggregation runs once for several consumers; standalone callers
+    need no persist at all (the substrate feeds exactly one consumer).
     """
     li = baskets
     if li is None:
@@ -3115,41 +3113,7 @@ def _copurchase_edges(
     )
 
 
-def graph_card_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The fused co-purchase graph card (round-13 verdict item #3, the
-    corpus-card precedent): ONE persisted distinct-membership scan and
-    ONE persisted canonical min-support edge frame feed all four graph
-    readouts — PageRank (#155), triangle census (#157), item-item
-    neighbors (#160), degree assortativity (#170), and the k-core
-    census (#190) — which would otherwise each rebuild the
-    per-basket-quadratic pair join from scratch in a combined run. Lossless by construction: every panel is
-    the standalone query fed the identical substrate (bit-identity +
-    single-leaf probes pinned in tests/test_graph_card.py). Consumers
-    must be evaluated before the next ``release_persisted()`` fires."""
-    from ..operators.dedup import _track
-
-    baskets = _track(_copurchase_baskets(spark, sf_dir).persist())
-    canon = _track(
-        _copurchase_edges(
-            spark, sf_dir, TRIANGLE_MIN_BASKETS, baskets=baskets
-        ).persist()
-    )
-    return {
-        "pagerank": q_part_pagerank(spark, sf_dir, canon=canon),
-        "triangles": q_part_triangles(spark, sf_dir, canon=canon),
-        "neighbors": q_part_neighbors(
-            spark, sf_dir, canon=canon, baskets=baskets
-        ),
-        "assortativity": q_copurchase_assortativity(
-            spark, sf_dir, canon=canon
-        ),
-        "kcore": q_part_kcore(spark, sf_dir, canon=canon),
-    }
-
-
-def q_part_pagerank(
-    spark: SparkSession, sf_dir: str, canon: DataFrame | None = None
-) -> DataFrame:
+def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top parts by PageRank over the co-purchase graph (#155).
 
     The graph-centrality upgrade of #120's pairwise lift: a part is
@@ -3171,12 +3135,10 @@ def q_part_pagerank(
     # frame is persisted BEFORE mirroring — the union's two branches get
     # no ReusedExchange (same pitfall the _copurchase_edges docstring
     # records for the self-join), so without the pin the pair join runs
-    # twice (measured 16 s -> 35 s at sf0.1). A graph-card run hands in
-    # the already-persisted shared frame instead.
-    if canon is None:
-        canon = _track(
-            _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
-        )
+    # twice (measured 16 s -> 35 s at sf0.1).
+    canon = _track(
+        _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
+    )
     edges = canon.unionByName(
         canon.select(
             F.col("_pb").alias("_pa"), F.col("_pa").alias("_pb"), "_w"
@@ -3322,9 +3284,7 @@ def _triangle_schema():
     )
 
 
-def q_part_triangles(
-    spark: SparkSession, sf_dir: str, canon: DataFrame | None = None
-) -> DataFrame:
+def q_part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase triangle census via degree-ordered orientation (#157).
 
     Triangle density separates genuine product communities from hub
@@ -3343,14 +3303,8 @@ def q_part_triangles(
     from ..operators.dedup import _track
     from ..operators.graph import KCORE_LOCAL_SOLVE_EDGES
 
-    if canon is None:
-        canon = _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS)
-        edges = _track(canon.select("_pa", "_pb").persist())
-    else:
-        # graph-card run: canon is already persisted by the caller and
-        # the narrow projection reuses its cached partitions — a second
-        # persist would only duplicate storage
-        edges = canon.select("_pa", "_pb")
+    canon = _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS)
+    edges = _track(canon.select("_pa", "_pb").persist())
     # Local-solve probe (the graph-operator pattern, round 14): the
     # census is five INTEGER aggregates of the canonical edge set, so a
     # driver-sized graph computes them exactly (bit-identical to the
@@ -3629,12 +3583,7 @@ def _local_neighbors_pdf(loc: dict, min_support: int, top_k: int):
     )
 
 
-def q_part_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    canon: DataFrame | None = None,
-    baskets: DataFrame | None = None,
-) -> DataFrame:
+def q_part_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k co-purchase cosine neighbors per part (#160).
 
     Item-item collaborative filtering over the same basket pairs as
@@ -3652,39 +3601,36 @@ def q_part_neighbors(
     """
     from ..operators.dedup import _materialize, _track
 
-    if baskets is None and canon is None:
-        # whole-substrate local solve first (round 14): under the scan
-        # gate the entire query — pairs, marginals, cosine, per-anchor
-        # top-k — computes in numpy from one toPandas job, replacing
-        # the basket/edge persists, two marginal joins and the window
-        loc = _copurchase_local(spark, sf_dir)
-        if loc is not None:
-            return spark.createDataFrame(
-                _local_neighbors_pdf(loc, TRIANGLE_MIN_BASKETS, NEIGHBOR_TOP_K),
-                schema=(
-                    "p_partkey bigint, neighbor_partkey bigint, "
-                    "n_baskets bigint, cosine double, rank int"
-                ),
-            )
-    if baskets is None:
-        # persisted ONCE, reused by the edge builder's pair fan-out AND
-        # the per-part marginals below — standalone used to run the
-        # basket scan twice (once inside _copurchase_edges, once here).
-        # _materialize: the edge build and the marginals launch as
-        # INDEPENDENT stages that race an unfilled cache and each re-run
-        # the basket aggregation (observed as twin ~0.6 s job shapes in
-        # the round-14 profile); one deterministic fill pins a single
-        # evaluation.
-        baskets = _materialize(_track(_copurchase_baskets(spark, sf_dir).persist()))
-    if canon is None:
-        # same race: canon feeds its own union flip (two consumers)
-        canon = _materialize(
-            _track(
-                _copurchase_edges(
-                    spark, sf_dir, TRIANGLE_MIN_BASKETS, baskets=baskets
-                ).persist()
-            )
+    # whole-substrate local solve first (round 14): under the scan
+    # gate the entire query — pairs, marginals, cosine, per-anchor
+    # top-k — computes in numpy from one toPandas job, replacing
+    # the basket/edge persists, two marginal joins and the window
+    loc = _copurchase_local(spark, sf_dir)
+    if loc is not None:
+        return spark.createDataFrame(
+            _local_neighbors_pdf(loc, TRIANGLE_MIN_BASKETS, NEIGHBOR_TOP_K),
+            schema=(
+                "p_partkey bigint, neighbor_partkey bigint, "
+                "n_baskets bigint, cosine double, rank int"
+            ),
         )
+    # persisted ONCE, reused by the edge builder's pair fan-out AND
+    # the per-part marginals below — standalone used to run the
+    # basket scan twice (once inside _copurchase_edges, once here).
+    # _materialize: the edge build and the marginals launch as
+    # INDEPENDENT stages that race an unfilled cache and each re-run
+    # the basket aggregation (observed as twin ~0.6 s job shapes in
+    # the round-14 profile); one deterministic fill pins a single
+    # evaluation.
+    baskets = _materialize(_track(_copurchase_baskets(spark, sf_dir).persist()))
+    # same race: canon feeds its own union flip (two consumers)
+    canon = _materialize(
+        _track(
+            _copurchase_edges(
+                spark, sf_dir, TRIANGLE_MIN_BASKETS, baskets=baskets
+            ).persist()
+        )
+    )
     # per-part basket count from the same array substrate (sets hold
     # distinct parts per order, so the exploded count == the old
     # distinct-(order, part) count)
@@ -3887,9 +3833,7 @@ def _assortativity_schema():
     )
 
 
-def q_copurchase_assortativity(
-    spark: SparkSession, sf_dir: str, canon: DataFrame | None = None
-) -> DataFrame:
+def q_copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph (#170).
 
     The one-number structure readout for the graph #155/#157/#160 rank
@@ -3917,11 +3861,10 @@ def q_copurchase_assortativity(
     # union's branches and the deg reuse get no ReusedExchange (the
     # #155/#120 pitfall), so without the pins the per-basket pair join
     # runs twice and the degree agg four times (measured 4.4 -> 2.x s
-    # at sf0.1). A graph-card run hands in the shared persisted frame.
-    if canon is None:
-        canon = _track(
-            _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
-        )
+    # at sf0.1).
+    canon = _track(
+        _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
+    )
     # Local-solve probe (round 14, the graph-family pattern): the whole
     # readout is integer sums + one final double expression, so a
     # driver-sized edge list computes the bit-identical row in numpy,
@@ -4404,9 +4347,7 @@ KCORE_K = 3
 KCORE_TOP = 20
 
 
-def q_part_kcore(
-    spark: SparkSession, sf_dir: str, canon: DataFrame | None = None
-) -> DataFrame:
+def q_part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top members of the co-purchase graph's {KCORE_K}-core (#190).
 
     The cohesion readout the rest of the graph family can't give:
@@ -4423,10 +4364,9 @@ def q_part_kcore(
     from ..operators import graph
     from ..operators.dedup import _track
 
-    if canon is None:
-        canon = _track(
-            _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
-        )
+    canon = _track(
+        _copurchase_edges(spark, sf_dir, TRIANGLE_MIN_BASKETS).persist()
+    )
     core = graph.kcore(
         canon.select("_pa", "_pb"), "_pa", "_pb", KCORE_K
     )

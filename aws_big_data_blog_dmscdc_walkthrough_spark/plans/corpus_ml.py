@@ -68,9 +68,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss-style reduction of the embeddings to 4
     deterministic integer directions — map-only, fixed fold order, so
     the oracle's explicit arithmetic chain reproduces every double
-    bit-for-bit. PCA (operators/projection.pca_fit) is the fitted
-    variant; its driver-side eigh keeps it pytest-verified vs numpy
-    rather than SQL-oracled."""
+    bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return random_projection(emb, "embedding", EMB_DIM, RP_COMPONENTS)
 
@@ -638,28 +636,21 @@ LIMIT {PMI_TOP_K}
 TOP_TERMS_K = 5
 
 
-def corpus_source_top_terms(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_source_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-card vocabulary panel: each source's most frequent
     terms (count-ranked, ties to the lexically smaller word). One
     explode + one (source, word) aggregation; the per-source top-k
     window re-shuffles only the COUNTS frame — vocabulary-sized, not
     corpus-sized (plan: 2 exchanges, the second over |sources × words|
     rows)."""
-    if tf is not None:
-        counts = tf.groupBy("source", F.col("_t").alias("word")).agg(
-            F.sum("_c").cast("long").alias("n")
-        )
-    else:
-        docs = load_table(spark, sf_dir, "documents")
-        words = docs.select(
-            "source",
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
-        )
-        counts = words.groupBy("source", "word").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
+    docs = load_table(spark, sf_dir, "documents")
+    words = docs.select(
+        "source",
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
+    )
+    counts = words.groupBy("source", "word").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    )
     top = Window.partitionBy("source").orderBy(F.col("n").desc(), F.col("word"))
     return (
         counts.withColumn("_rk", F.row_number().over(top))
@@ -1414,62 +1405,13 @@ FROM agg, nd WHERE np > 0 AND n - np > 0
 """
 
 
-# -------------- shared corpus-card tokenize substrate (#163/#167/#110/#91)
-
-
-def corpus_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE tokenize scan for the whole corpus card: (source, doc_id,
-    term, tf) at per-document granularity — the finest key any of the
-    card's panels needs, so every panel is a pure re-aggregation of
-    this frame. All four consumers (#110 top terms, #163 burstiness,
-    #167 lexical diversity, #91 surprisal) use the identical
-    whitespace tokenizer, which is what makes the fusion lossless:
-    each standalone query's oracle hash is unchanged when fed from
-    here (pinned in tests). Persist the result (see
-    :func:`corpus_card_frames`) to amortize the tokenize — the
-    dominant row-scale work — across panels."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "source",
-            "doc_id",
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
-        )
-        .groupBy("source", "doc_id", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-
-
-def corpus_card_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The fused per-source corpus card: one persisted tokenize
-    substrate feeds seven panels that would otherwise each re-scan and
-    re-tokenize ``documents`` from scratch (round-12 verdict item —
-    6 full tokenize scans saved on a combined run). Consumers must be
-    evaluated before the next ``release_persisted()`` fires."""
-    from ..operators import text as text_ops
-    from ..operators.dedup import _track
-
-    tf = _track(corpus_term_frequencies(spark, sf_dir).persist())
-    return {
-        "top_terms": corpus_source_top_terms(spark, sf_dir, tf=tf),
-        "burstiness": corpus_burstiness(spark, sf_dir, tf=tf),
-        "lexical_diversity": corpus_lexical_diversity(spark, sf_dir, tf=tf),
-        "surprisal": text_ops.token_surprisal_from_tf(tf),
-        "repetition_indices": corpus_repetition_indices(spark, sf_dir, tf=tf),
-        "zipf_spine": corpus_zipf_spine(spark, sf_dir, tf=tf),
-        "source_tvd": corpus_source_tvd(spark, sf_dir, tf=tf),
-    }
-
-
 # ------------------------------ per-term burstiness (VMR) (#163)
 
 BURSTINESS_MIN_DF = 50
 BURSTINESS_TOP_K = 25
 
 
-def corpus_burstiness(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most bursty corpus terms by variance-to-mean ratio (#163).
 
     Church/Gale burstiness: a term whose occurrences CLUMP into few
@@ -1501,17 +1443,14 @@ def corpus_burstiness(
     """
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n"))
-    if tf is None:
-        tf = (
-            docs.select(
-                F.col("doc_id"),
-                F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
-            )
-            .groupBy("doc_id", "_t")
-            .agg(F.count(F.lit(1)).alias("_c"))
+    tf = (
+        docs.select(
+            F.col("doc_id"),
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
         )
-    # (the shared substrate keys on (source, doc_id, _t); doc_id is
-    # unique across sources, so the granularity is identical)
+        .groupBy("doc_id", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
     per_term = tf.groupBy("_t").agg(
         F.count(F.lit(1)).alias("_df"),
         F.sum("_c").alias("_tot"),
@@ -1574,9 +1513,7 @@ WHERE rk <= {BURSTINESS_TOP_K}
 # ----------------- per-source lexical diversity panel (#167)
 
 
-def corpus_lexical_diversity(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-token ratio + hapax share per source (#167).
 
     The corpus-linguistics diversity panel (TTR and hapax legomena
@@ -1593,18 +1530,14 @@ def corpus_lexical_diversity(
     combined), one per-source reduce over the vocabulary-sized frame.
     Nothing ever pairs or sorts at row scale.
     """
-    if tf is None:
-        docs = load_table(spark, sf_dir, "documents")
-        tf = (
-            docs.select(
-                "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-            )
-            .groupBy("source", "_t")
-            .agg(F.count(F.lit(1)).alias("_c"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select(
+            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
         )
-    else:
-        # substrate is per-doc; fold to per-source term counts
-        tf = tf.groupBy("source", "_t").agg(F.sum("_c").alias("_c"))
+        .groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
     agg = tf.groupBy("source").agg(
         F.sum("_c").alias("_tokens"),
         F.count(F.lit(1)).alias("_types"),
@@ -1643,9 +1576,7 @@ FROM tf GROUP BY source
 # ---------------- per-source repetition indices (Yule's K / Simpson) (#168)
 
 
-def corpus_repetition_indices(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_repetition_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yule's K and Simpson's D per source (#168).
 
     The repeated-draw companions to #167's TTR panel (public formulas —
@@ -1664,20 +1595,16 @@ def corpus_repetition_indices(
     oracle), one exactly-rounded op per value. Sources with fewer than
     two tokens drop (D undefined).
 
-    Shape: one (source, term) aggregation, one per-source reduce —
-    accepts the shared corpus-card substrate (#163/#167/#110/#91).
+    Shape: one (source, term) aggregation, one per-source reduce.
     """
-    if tf is None:
-        docs = load_table(spark, sf_dir, "documents")
-        tf = (
-            docs.select(
-                "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-            )
-            .groupBy("source", "_t")
-            .agg(F.count(F.lit(1)).alias("_c"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select(
+            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
         )
-    else:
-        tf = tf.groupBy("source", "_t").agg(F.sum("_c").alias("_c"))
+        .groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
     dec = "decimal(19,0)"
     agg = tf.groupBy("source").agg(
         F.sum("_c").alias("_n"),
@@ -1724,9 +1651,7 @@ FROM agg WHERE n >= 2
 # ------------------- per-source Zipf rank-frequency spine (#169)
 
 
-def corpus_zipf_spine(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_zipf_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-frequency spine per source (#169): the exact data a Zipf
     fit consumes, without ever ranking the vocabulary row-by-row.
 
@@ -1743,20 +1668,16 @@ def corpus_zipf_spine(
 
     A Zipf slope then falls out client-side (weighted OLS of ln f on
     ln avg_rank over ≤ thousands of spine rows — numpy-pinned in
-    tests); the engine's job is the exact spine. Accepts the shared
-    corpus-card substrate.
+    tests); the engine's job is the exact spine.
     """
-    if tf is None:
-        docs = load_table(spark, sf_dir, "documents")
-        tf = (
-            docs.select(
-                "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-            )
-            .groupBy("source", "_t")
-            .agg(F.count(F.lit(1)).alias("_c"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select(
+            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
         )
-    else:
-        tf = tf.groupBy("source", "_t").agg(F.sum("_c").alias("_c"))
+        .groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
     spine = tf.groupBy("source", F.col("_c").alias("freq")).agg(
         F.count(F.lit(1)).alias("n_types")
     )
@@ -2111,9 +2032,7 @@ FROM per_batch LEFT JOIN new_b ON per_batch.batch = new_b.batch
 # -------------- pairwise cross-source lexical TVD (#177)
 
 
-def corpus_source_tvd(
-    spark: SparkSession, sf_dir: str, tf: DataFrame | None = None
-) -> DataFrame:
+def corpus_source_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total-variation distance between every source pair's unigram
     distributions (#177).
 
@@ -2134,7 +2053,7 @@ def corpus_source_tvd(
     DECIMAL(38,0) (order-independent exact), HUGEINT in the oracle;
     the single final division is exactly rounded.
 
-    Shape: one (source, term) aggregation (substrate-compatible), a
+    Shape: one (source, term) aggregation, a
     |sources|-row totals broadcast to both join sides, one term-keyed
     self-join whose fan-out is ≤ |sources|² rows per term, one
     |pairs|-row reduce. Nothing is ever vocabulary-sorted or paired
@@ -2142,17 +2061,14 @@ def corpus_source_tvd(
     from the output (its TVD is trivially 1.0) — both engines agree
     because both ride the same inner join.
     """
-    if tf is None:
-        docs = load_table(spark, sf_dir, "documents")
-        tf = (
-            docs.select(
-                "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-            )
-            .groupBy("source", "_t")
-            .agg(F.count(F.lit(1)).alias("_c"))
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select(
+            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
         )
-    else:
-        tf = tf.groupBy("source", "_t").agg(F.sum("_c").alias("_c"))
+        .groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
     totals = tf.groupBy("source").agg(F.sum("_c").alias("_n"))
     a = (
         tf.join(F.broadcast(totals), "source")

@@ -256,11 +256,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     BENCHMARK CAVEAT: this gate query is stateless by necessity (the
     oracle replays it from the raw table), so it re-signs the corpus
     side on every run — O(corpus) work the production path does NOT do.
-    The real ingest loop persists signatures once
-    (``dedup.append_signature_store``) and matches each batch against
-    the stored bands (``dedup.match_against_store`` — O(batch) total).
-    Benchmark THAT shape for ingest-cost questions; this query's wall
-    time measures the stateless replay, not the steady state."""
+    A real ingest loop would persist the corpus signatures once and
+    match each batch against the stored bands (O(batch) total), so this
+    query's wall time measures the stateless replay, not that steady
+    state."""
     docs = load_table(spark, sf_dir, "documents")
     # one-table split form: signatures computed ONCE over the union
     # (row-identical to signing the two filtered frames separately —
@@ -410,7 +409,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     them at O(N^1.5) total — the scale probe reads 1.0/1.7/4.4/19 s at
     1×/10×/30×/100×. floor(sqrt(double)) is used on BOTH sides (not
     isqrt) so the engines can't disagree at rounding boundaries. Real
-    use fits the same k via similarity.ivf_fit_centroids.
+    use fits the same k by k-means on a sample.
     """
     import math
 
@@ -607,9 +606,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with deterministic centroids (the first
     ``IVF_N_CENTROIDS`` table rows), fully gate-checkable: assignment,
     probe choice, and scoring all use the fixed-fold arithmetic the
-    DuckDB oracle replays. The sampled-k-means variant
-    (similarity.ivf_topk) stays for real use; its recall is pinned in
-    tests/test_similarity.py."""
+    DuckDB oracle replays. Real use would fit the centroids by k-means
+    on a sample."""
     embs = load_table(spark, sf_dir, "embeddings")
     from ..functions.vectors import as_double
 
@@ -680,7 +678,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k (#87): codebooks derived from the
     first ``PQ_K`` table rows (each row's j-th sub-vector is entry i of
     codebook j — deterministic, so DuckDB replays encode + ADC exactly);
-    real use trains per-subspace k-means codebooks the ivf_fit way."""
+    real use trains per-subspace k-means codebooks on a sample."""
     import numpy as np
 
     embs = load_table(spark, sf_dir, "embeddings")

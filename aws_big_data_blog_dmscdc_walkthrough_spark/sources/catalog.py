@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 from . import manifest as manifest_mod
@@ -84,15 +84,3 @@ def register_table(spark: SparkSession, path: str, schema: str, table: str) -> s
         spark.catalog.refreshTable(qualified)
     return qualified
 
-
-def register_manifest_view(
-    spark: SparkSession, path: str, name: str
-) -> DataFrame:
-    """Session-scoped view over a manifest table's CURRENT committed
-    version (atomic snapshot + deletion vectors applied — what a raw
-    directory-backed external table cannot give). Temp views are not
-    db-qualified; callers pick a disambiguated name (e.g.
-    ``schema__table``)."""
-    df = manifest_mod.read_table(spark, path)
-    df.createOrReplaceTempView(name)
-    return df

@@ -700,7 +700,10 @@ def _commit_write(
     listed data file the new version does not reference, including
     files an earlier ``retain_history`` commit kept: history is kept
     only until the next commit without it (merge-on-read batches and
-    SCD2 folds never pass it).
+    SCD2 folds never pass it). When the previous version listed a
+    deletion vector or this commit stages one, it also deletes every
+    ``_deletes/`` file the new version does not list: a crashed
+    attempt's staged vector and the vectors a rewrite retired.
 
     ``df`` is written in the table's layout, ``snap.partition_keys``.
     ``partition_keys`` sets the layout instead; only a write that
@@ -741,6 +744,7 @@ def _commit_write(
     if keys:
         writer = writer.partitionBy(*keys)
     delete_files = dv_targets = None
+    added_dv = []
     if deletes is None:
         writer.parquet(out_path)
     else:
@@ -768,6 +772,16 @@ def _commit_write(
     )
     if not retain_history:
         manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
+        if added_dv or (snap.manifest or {}).get("delete_files"):
+            if delete_files is None:  # carried forward, pruned by the commit
+                delete_files = manifest_mod.read_manifest(spark, out_path).get(
+                    "delete_files", []
+                )
+            dv_dir = f"{out_path.rstrip('/')}/{manifest_mod.DELETES_DIR}"
+            manifest_mod.delete_data_files(
+                spark, dv_dir,
+                set(manifest_mod.list_data_files(spark, dv_dir)).difference(delete_files),
+            )
 
 
 def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
@@ -1019,21 +1033,29 @@ def compact_table(
 CHANGE_FEED_DIR = "_change_feed"
 
 
-def _next_feed_batch(spark: SparkSession, out_path: str) -> int:
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(out_path.rstrip("/") + "/" + CHANGE_FEED_DIR)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(base):
-        return 1
-    top = 0
-    for status in fs.listStatus(base):
-        name = status.getPath().getName()
+def _feed_batches(spark: SparkSession, out_path: str):
+    """The feed's FileSystem and its ``batch=N`` directories as
+    (N, Hadoop path), ascending by N; none before the first feed write."""
+    base = f"{out_path.rstrip('/')}/{CHANGE_FEED_DIR}"
+    Path, fs = manifest_mod._fs(spark, base)
+    root = Path(base)
+    batches: list[tuple[int, object]] = []
+    if not fs.exists(root):
+        return fs, batches
+    for status in fs.listStatus(root):
+        path = status.getPath()
+        name = path.getName()
         if name.startswith("batch="):
             try:
-                top = max(top, int(name.split("=", 1)[1]))
+                batches.append((int(name.split("=", 1)[1]), path))
             except ValueError:
                 continue
-    return top + 1
+    return fs, sorted(batches, key=lambda t: t[0])
+
+
+def _next_feed_batch(spark: SparkSession, out_path: str) -> int:
+    _, batches = _feed_batches(spark, out_path)
+    return batches[-1][0] + 1 if batches else 1
 
 
 def append_change_feed(
@@ -1080,11 +1102,9 @@ def read_change_feed(
     table has a schema (brand-new path, or only hidden sidecars after a
     crash) raises a clear error instead.
     """
-    jvm = spark._jvm
-    base = out_path.rstrip("/") + "/" + CHANGE_FEED_DIR
-    p = jvm.org.apache.hadoop.fs.Path(base)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    base = f"{out_path.rstrip('/')}/{CHANGE_FEED_DIR}"
+    Path, fs = manifest_mod._fs(spark, base)
+    if not fs.exists(Path(base)):
         schema = _snapshot(spark, out_path).schema
         if schema is None:
             raise FileNotFoundError(
@@ -1120,20 +1140,7 @@ def vacuum_change_feed(
     """
     if keep_batches < 1:
         raise ValueError("keep_batches must be >= 1")
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(out_path.rstrip("/") + "/" + CHANGE_FEED_DIR)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(base):
-        return []
-    batches: list[tuple[int, object]] = []
-    for status in fs.listStatus(base):
-        name = status.getPath().getName()
-        if name.startswith("batch="):
-            try:
-                batches.append((int(name.split("=", 1)[1]), status.getPath()))
-            except ValueError:
-                continue
-    batches.sort(key=lambda t: t[0])
+    fs, batches = _feed_batches(spark, out_path)
     doomed = batches[: max(0, len(batches) - keep_batches)]
     for _, path in doomed:
         fs.delete(path, True)

@@ -269,20 +269,6 @@ def stats_for_commit(
     return {**have, **new}
 
 
-def list_delete_files(spark: SparkSession, path: str) -> list[str]:
-    """Basenames of parquet files under the table's ``_deletes/`` dir."""
-    Path, fs = _fs(spark, path)
-    p = Path(path.rstrip("/") + "/" + DELETES_DIR)
-    if not fs.exists(p):
-        return []
-    out = []
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if status.isFile() and name.endswith(".parquet") and not name.startswith((".", "_")):
-            out.append(name)
-    return sorted(out)
-
-
 def commit_manifest(
     spark: SparkSession,
     path: str,
@@ -762,12 +748,12 @@ def stage_deletion_vectors(
             relative_name(r[0], r[0].count("/"))
             for r in addressed.select(DV_FILE_COL).distinct().collect()
         )
-        before = set(list_delete_files(spark, path))
+        before = set(list_data_files(spark, dv_dir))
         # ~10M addresses (~100 MB) per DV part; micro-batches get 1 file
         addressed.coalesce(max(1, min(64, n // 10_000_000 + 1))).write.mode(
             "append"
         ).parquet(dv_dir)
-        added = [f for f in list_delete_files(spark, path) if f not in before]
+        added = [f for f in list_data_files(spark, dv_dir) if f not in before]
         return added, {f: target_files for f in added}
     finally:
         addressed.unpersist()
@@ -859,7 +845,7 @@ def vacuum(
     ]
     delete_data_files(spark, path, removed)
     dv_base = path.rstrip("/") + "/" + DELETES_DIR
-    for name in list_delete_files(spark, path):
+    for name in list_data_files(spark, dv_base):
         if name not in live_dv:
             target = Path(dv_base + "/" + name)
             if _old_enough(target):
@@ -870,73 +856,3 @@ def vacuum(
             fs.delete(Path(_history_path(path, v)), False)
     return removed
 
-
-def schema_drift_report(
-    spark: SparkSession,
-    path: str,
-    from_version: int | None = None,
-    to_version: int | None = None,
-) -> "DataFrame":
-    """Schema drift between two committed lake versions (#180).
-
-    The audit a CDC pipeline runs when a merge starts failing schema
-    alignment: every committed version's manifest carries the table
-    schema (``schema_json`` rides the commit), so the drift between any
-    two retained versions is a pure metadata diff — no data files are
-    read. Per changed column: added / dropped / type_changed, the two
-    type strings, and whether the change sits on the engine's lossless
-    widening ladder (operators/cdc._WIDENING_LADDERS — the changes the
-    merge path can absorb with ``allow_widening=True``; anything else
-    needs a backfill).
-
-    Defaults compare the PREVIOUS retained version against the latest —
-    "what just changed" — and raise on unknown versions rather than
-    silently diffing the wrong pair. Output is a bounded
-    |changed columns|-row frame.
-    """
-    from ..operators.cdc import _widened
-
-    versions = list_versions(spark, path)
-    if not versions:
-        raise ValueError(f"no retained manifest versions under {path}")
-    to_v = versions[-1] if to_version is None else to_version
-    if from_version is None:
-        before = [v for v in versions if v < to_v]
-        if not before:
-            raise ValueError(
-                f"version {to_v} has no retained predecessor to diff against"
-            )
-        from_v = before[-1]
-    else:
-        from_v = from_version
-    for v in (from_v, to_v):
-        if v not in versions:
-            raise ValueError(f"version {v} not retained under {path}: {versions}")
-
-    def fields(version: int) -> dict:
-        doc = _read_json_file(spark, _history_path(path, version))
-        sj = doc.get("schema")
-        if not sj:
-            raise ValueError(f"version {version} committed without schema_json")
-        return {
-            f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(json.loads(sj)).fields
-        }
-
-    old, new = fields(from_v), fields(to_v)
-    rows = []
-    for col in sorted(set(old) | set(new)):
-        a, b = old.get(col), new.get(col)
-        if a == b:
-            continue
-        if a is None:
-            rows.append((col, "added", None, b, False))
-        elif b is None:
-            rows.append((col, "dropped", a, None, False))
-        else:
-            rows.append((col, "type_changed", a, b, _widened(a, b) == b))
-    return spark.createDataFrame(
-        rows,
-        "column string, change string, from_type string, to_type string,"
-        " lossless_widening boolean",
-    )

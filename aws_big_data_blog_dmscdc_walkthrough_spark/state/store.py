@@ -19,9 +19,6 @@ import threading
 from dataclasses import asdict, dataclass, field
 
 
-EPOCH = "1900-01-01 00:00:00"  # reference default LastFullLoadDate
-
-
 @dataclass
 class TableState:
     path: str                      # <root>/<schema>/<table>

@@ -2,10 +2,10 @@
 exact brute-force truth on the sf0.1 embeddings (64-d, weakly clustered
 — a deliberately hard case; real embedding corpora cluster better).
 
-The gates pin ivf_topk_fixed/lsh_topk outputs exactly; these tests pin
-the QUALITY of the sampled-k-means IVF and the sign-LSH paths, plus the
-two recall levers (IVF spill assignment, multi-probe LSH), as measured
-floors so a regression in fitting/assignment/probing fails loudly.
+The gates pin ivf_topk_fixed/lsh_topk/pq_topk outputs exactly; these
+tests pin the QUALITY of the sign-LSH and PQ-ADC paths, plus their
+recall levers (multi-probe LSH, exact rerank), as measured floors so a
+regression in probing or scoring fails loudly.
 """
 
 import numpy as np
@@ -41,42 +41,6 @@ def _recall(spark, emb, Xn, ids, run):
         got = {r.vec_id for r in run(qdf).collect()}
         recs.append(len(got & _truth(Xn, ids, qpos)) / K)
     return float(np.mean(recs))
-
-
-@pytest.mark.slow
-def test_ivf_recall_floors_and_spill_assignment(spark, corpus):
-    emb, Xn, ids = corpus
-    cents = sim.ivf_fit_centroids(emb, "embedding", 16)
-
-    single = _recall(
-        spark, emb, Xn, ids,
-        lambda q: sim.ivf_topk(emb, "vec_id", "embedding", q, K, 16, 4, centroids=cents),
-    )
-    spill = _recall(
-        spark, emb, Xn, ids,
-        lambda q: sim.ivf_topk(
-            emb, "vec_id", "embedding", q, K, 16, 6, centroids=cents, assign_m=2
-        ),
-    )
-    # measured round 7: single ≈ 0.62, spill ≈ 0.92 (floors leave noise room)
-    assert single >= 0.50, f"IVF single-assign nprobe=4 recall {single}"
-    assert spill >= 0.85, f"IVF spill-assign m=2 nprobe=6 recall {spill}"
-    assert spill > single
-
-
-def test_ivf_full_probe_is_exact(spark, corpus):
-    emb, Xn, ids = corpus
-    cents = sim.ivf_fit_centroids(emb, "embedding", 16)
-    qid = QUERY_IDS[0]
-    qpos = int(np.where(ids == qid)[0][0])
-    qdf = emb.where(emb.vec_id == qid)
-    got = {
-        r.vec_id
-        for r in sim.ivf_topk(
-            emb, "vec_id", "embedding", qdf, K, 16, 16, centroids=cents
-        ).collect()
-    }
-    assert got == _truth(Xn, ids, qpos)  # nprobe = n_centroids ≡ brute force
 
 
 def test_lsh_multiprobe_improves_recall(spark, corpus):
@@ -121,6 +85,25 @@ def test_lsh_query_directed_probing_beats_blanket_and_reaches_midtier(
     assert midtier >= 0.5, f"query-directed probe_t=64 recall {midtier}"
 
 
+def _fit_codebooks(sample, m, k, iters=8, seed=42):
+    """PQ codebooks by seeded per-subspace k-means (Lloyd) in numpy."""
+    sub = sample.shape[1] // m
+    rng = np.random.default_rng(seed)
+    books = []
+    for j in range(m):
+        S = sample[:, j * sub : (j + 1) * sub]
+        cents = S[rng.choice(len(S), size=k, replace=False)].copy()
+        for _ in range(iters):
+            d2 = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            assign = np.argmin(d2, axis=1)
+            for c in range(k):
+                members = S[assign == c]
+                if len(members):
+                    cents[c] = members.mean(axis=0)
+        books.append(cents)
+    return np.stack(books)
+
+
 @pytest.mark.slow
 def test_pq_adc_recall_and_rerank_floor(spark, corpus):
     """PQ (#87) quality on the same hard corpus, against exact
@@ -132,7 +115,7 @@ def test_pq_adc_recall_and_rerank_floor(spark, corpus):
     pdf = emb.toPandas()
     X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
     xids = pdf["vec_id"].to_numpy()
-    cb = sim.pq_fit_codebooks(emb, "embedding", m=8, k=256)
+    cb = _fit_codebooks(X[:4096], m=8, k=256)
 
     def l2_truth(q):
         d2 = ((X - q) ** 2).sum(axis=1)
@@ -152,134 +135,3 @@ def test_pq_adc_recall_and_rerank_floor(spark, corpus):
     assert float(np.mean(adc)) >= 0.4, adc
     assert float(np.mean(rr)) >= 0.9, rr
 
-
-def test_lsh_pq_composition_clears_midtier_ceiling(spark, corpus):
-    """The round-9 composition: query-directed probe set over PQ CODES
-    (8 bytes/row) + exact-cosine rerank of the shortlist. Because the
-    probed buckets are read as codes, probe_t=160 costs ~2% of the
-    corpus in vector-bytes — and clears the 0.57 ceiling that bound
-    exact-scored probing at a 25% full-width scan. Measured: 0.567 at
-    the old probe_t=64 budget (the candidate ceiling, sanity), 0.867 at
-    probe_t=160/rerank=100 (floors leave noise room)."""
-    emb, Xn, ids = corpus
-    cb = sim.pq_fit_codebooks(emb, "embedding", m=8, k=256)
-    codes = sim.pq_encode(emb, "vec_id", "embedding", cb)
-    composed = _recall(
-        spark, emb, Xn, ids,
-        lambda q: sim.lsh_pq_topk(
-            emb, "vec_id", "embedding", q, cb, K,
-            probe_t=160, rerank=100, codes_df=codes,
-        ),
-    )
-    assert composed >= 0.7, f"lsh+pq+rerank recall {composed}"
-
-
-def test_ivf_pq_composition_recall(spark, corpus):
-    """The #179 IVFPQ composition: coarse-cell pruning over PQ codes +
-    exact rerank. Spill assignment (m=2) + nprobe=6 of 16 cells reads
-    ~3/8 of the corpus as 8-byte CODES and `rerank` full vectors —
-    the floor tracks the IVF spill floor (0.85) because rerank repairs
-    ADC's quantization error on everything the cells admit."""
-    emb, Xn, ids = corpus
-    cents = sim.ivf_fit_centroids(emb, "embedding", 16)
-    cb = sim.pq_fit_codebooks(emb, "embedding", m=8, k=256)
-    codes = sim.pq_encode(emb, "vec_id", "embedding", cb)
-    composed = _recall(
-        spark, emb, Xn, ids,
-        lambda q: sim.ivf_pq_topk(
-            emb, "vec_id", "embedding", q, cb, K,
-            nprobe=6, rerank=100, centroids=cents, codes_df=codes,
-            assign_m=2,
-        ),
-    )
-    assert composed >= 0.8, f"ivf+pq+rerank recall {composed}"
-
-
-def _clustered_corpus(spark, n=2000, n_clusters=16, dim=64, noise=0.08, seed=7):
-    """Strongly clustered synthetic corpus: the regime residual codes
-    exist for (cell centroids explain most of the variance, so the PQ
-    budget quantizes the small residual instead of the whole vector)."""
-    rng = np.random.default_rng(seed)
-    centers = rng.normal(size=(n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    assign = rng.integers(0, n_clusters, size=n)
-    X = centers[assign] + noise * rng.normal(size=(n, dim))
-    emb = spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    ).cache()
-    emb.count()
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    return emb, Xn, np.arange(n)
-
-
-@pytest.mark.slow
-def test_residual_ivfpq_beats_raw_at_tight_code_budget(spark):
-    """#182: the textbook IVFADC claim (Jégou 2011 — quantize the
-    residual, not the raw vector) measured where it bites: on a
-    clustered corpus at a TIGHT code budget (m=4, k=32 — 4 codes/vector)
-    the raw-vector codes of #179 spend their codewords re-describing
-    cluster geometry the coarse quantizer already knows, while residual
-    codes resolve within-cluster order. Measured: raw 0.183, residual
-    0.500 at nprobe=6/rerank=20 — floors leave noise room."""
-    emb, Xn, ids = _clustered_corpus(spark)
-    cents = sim.ivf_fit_centroids(emb, "embedding", 16)
-    cb_raw = sim.pq_fit_codebooks(emb, "embedding", m=4, k=32)
-    codes_raw = sim.pq_encode(emb, "vec_id", "embedding", cb_raw)
-    cb_res = sim.pq_fit_codebooks_residual(emb, "embedding", cents, m=4, k=32)
-    codes_res = sim.pq_encode_residual(
-        emb, "vec_id", "embedding", cents, cb_res, assign_m=1
-    )
-    qids = [3, 77, 501, 999, 1500, 1807]
-
-    def recall(run):
-        rs = []
-        for qid in qids:
-            got = {r.vec_id for r in run(emb.where(emb.vec_id == qid)).collect()}
-            truth = set(ids[np.argsort(-(Xn @ Xn[qid]))[:K]])
-            rs.append(len(got & truth) / K)
-        return float(np.mean(rs))
-
-    raw = recall(
-        lambda q: sim.ivf_pq_topk(
-            emb, "vec_id", "embedding", q, cb_raw, K,
-            nprobe=6, rerank=20, centroids=cents, codes_df=codes_raw,
-        )
-    )
-    res = recall(
-        lambda q: sim.ivf_pq_topk_residual(
-            emb, "vec_id", "embedding", q, cents, cb_res, K,
-            nprobe=6, rerank=20, codes_df=codes_res,
-        )
-    )
-    # the helper's cache must not leak into the shared session (the
-    # drains-all-caches test asserts zero persistent RDDs)
-    emb.unpersist()
-    assert res >= 0.4, f"residual recall {res}"
-    assert res >= raw + 0.15, f"residual {res} must clearly beat raw {raw}"
-
-
-@pytest.mark.slow
-def test_residual_ivfpq_equal_budget_floor(spark, corpus):
-    """#182 at the committed #179 configuration (m=8/k=256, spill
-    assign_m=2, nprobe=6, rerank=100) on the hard weakly-clustered
-    sf0.1 corpus: both encodings saturate the IVF cell-admission
-    ceiling (~0.85) because rerank=100 repairs either code's
-    quantization error — the residual lever is a measured WASH here,
-    not a win (the clustered-corpus test above is where it pays).
-    Pinned at the same 0.8 floor as #179 so a regression in the
-    residual plumbing (per-cell LUTs, spill-copy min) fails loudly."""
-    emb, Xn, ids = corpus
-    cents = sim.ivf_fit_centroids(emb, "embedding", 16)
-    cb_res = sim.pq_fit_codebooks_residual(emb, "embedding", cents, m=8, k=256)
-    codes_res = sim.pq_encode_residual(
-        emb, "vec_id", "embedding", cents, cb_res, assign_m=2
-    )
-    composed = _recall(
-        spark, emb, Xn, ids,
-        lambda q: sim.ivf_pq_topk_residual(
-            emb, "vec_id", "embedding", q, cents, cb_res, K,
-            nprobe=6, rerank=100, codes_df=codes_res, assign_m=2,
-        ),
-    )
-    assert composed >= 0.8, f"residual ivfpq recall {composed}"

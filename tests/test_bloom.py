@@ -61,44 +61,6 @@ def test_bloom_filter_plan_is_broadcast_joins_only(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_file_bloom_index_point_lookup(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.range(0, 10_000).selectExpr(
-        "id AS k", "id * 2 AS v"
-    ).repartition(8).write.parquet(path)
-    bloom.build_file_bloom_index(spark, path, "k", expected_items_per_file=2000)
-    out = bloom.bloom_point_lookup(spark, path, "k", 4321)
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0].v == 8642
-    # the lookup must touch fewer files than a full scan would
-    scanned = {
-        f.split("/")[-1]
-        for f in out.inputFiles()
-    }
-    all_files = {f.split("/")[-1] for f in spark.read.parquet(path).inputFiles()}
-    assert len(scanned) < len(all_files), (len(scanned), len(all_files))
-
-
-def test_file_bloom_index_absent_key(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.range(0, 1000).selectExpr("id AS k").repartition(4).write.parquet(path)
-    bloom.build_file_bloom_index(spark, path, "k", expected_items_per_file=500)
-    assert bloom.bloom_point_lookup(spark, path, "k", 999_999).count() == 0
-
-
-def test_file_bloom_index_new_files_always_scanned(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.range(0, 1000).selectExpr("id AS k").repartition(2).write.parquet(path)
-    bloom.build_file_bloom_index(spark, path, "k", expected_items_per_file=500)
-    # a file written AFTER the build: its keys must still be findable
-    spark.range(50_000, 50_010).selectExpr("id AS k").coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    spark.catalog.refreshByPath(path)
-    out = bloom.bloom_point_lookup(spark, path, "k", 50_005)
-    assert out.count() == 1
-
-
 def test_bloom_semi_join_mismatched_key_types(spark):
     """xxhash64 hashes int 5 and long 5 differently: without the build-
     side cast the filter would drop every genuine match."""
@@ -109,21 +71,3 @@ def test_bloom_semi_join_mismatched_key_types(spark):
     out = bloom.bloom_semi_join(big, small, "k", "k2")
     assert out.count() == len(range(0, 1000, 13))
 
-
-def test_file_bloom_index_partitioned_table(spark, tmp_path):
-    """Nested partition dirs: index prunes, and files appended under a
-    partition AFTER the build are still always scanned."""
-    path = str(tmp_path / "tbl")
-    spark.range(0, 2000).selectExpr(
-        "id AS k", "id % 4 AS part"
-    ).write.partitionBy("part").parquet(path)
-    bloom.build_file_bloom_index(spark, path, "k", expected_items_per_file=500)
-    assert bloom.bloom_point_lookup(spark, path, "k", 1234).count() == 1
-    spark.createDataFrame([(77_777, 0)], "k long, part long").write.mode(
-        "append"
-    ).partitionBy("part").parquet(path)
-    spark.catalog.refreshByPath(path)
-    out = bloom.bloom_point_lookup(spark, path, "k", 77_777)
-    rows = out.collect()
-    assert len(rows) == 1
-    assert rows[0].part == 0  # partition value parsed, not NULL

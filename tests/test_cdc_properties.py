@@ -171,7 +171,9 @@ def test_scd2_fold_equals_one_shot_at_any_split(spark, batch, target_keys, split
 
     one_shot = cdc.scd2_history(target, frame(rows), ["pk"], "seq")
     h = cdc.scd2_history(target, frame(b1), ["pk"], "seq")
-    folded = cdc.scd2_fold_batch(h, frame(b2), ["pk"], "seq")
+    folded = cdc.scd2_apply(
+        h, cdc.scd2_fresh_changes(h, frame(b2), ["pk"], "seq"), ["pk"], "seq"
+    )
     a = sorted(map(tuple, one_shot.collect()))
     b = sorted(map(tuple, folded.select(*one_shot.columns).collect()))
     assert a == b

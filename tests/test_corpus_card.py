@@ -1,9 +1,6 @@
-"""Fused corpus card (round-12 verdict item 6): one persisted tokenize
-substrate feeds #110 top terms, #163 burstiness, #167 lexical diversity,
-and #91 surprisal. The fusion must be LOSSLESS — each panel's rows are
-bit-identical to its standalone query — and must actually eliminate the
-redundant tokenize scans (three of the four panels read the substrate
-only; burstiness keeps one narrow documents scan for the doc count).
+"""Corpus-card queries whose small-input fused solver and distributed
+plan must agree bit for bit (#173 ingest novelty, #140 embedding
+covariance), including on constant dimensions.
 """
 
 import sys
@@ -11,62 +8,12 @@ import os
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
 from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
     release_persisted,
 )
 from aws_big_data_blog_dmscdc_walkthrough_spark.plans import corpus_ml
 
 SF = "/root/testdata/sf0.001"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_corpus_card_panels_match_standalone(spark):
-    release_persisted()
-    fused = corpus_ml.corpus_card_frames(spark, SF)
-    standalone = {
-        "top_terms": corpus_ml.corpus_source_top_terms(spark, SF),
-        "burstiness": corpus_ml.corpus_burstiness(spark, SF),
-        "lexical_diversity": corpus_ml.corpus_lexical_diversity(spark, SF),
-        "surprisal": text_ops.text_surprisal(spark, SF),
-        "repetition_indices": corpus_ml.corpus_repetition_indices(spark, SF),
-        "zipf_spine": corpus_ml.corpus_zipf_spine(spark, SF),
-        "source_tvd": corpus_ml.corpus_source_tvd(spark, SF),
-    }
-    for name, f in fused.items():
-        assert f.columns == standalone[name].columns, name
-        assert _rows(f) == _rows(standalone[name]), name
-    release_persisted()
-
-
-def test_corpus_card_tokenizes_once(spark):
-    """Three of four panels must have NO direct parquet leaf over
-    documents (they read only the persisted substrate — inputFiles()
-    walks the logical leaves and does not descend into
-    InMemoryRelation); burstiness keeps exactly the narrow n_docs
-    count scan. The substrate is persisted, so the combined run
-    tokenizes once instead of four times."""
-    release_persisted()
-    fused = corpus_ml.corpus_card_frames(spark, SF)
-
-    def doc_leaves(df):
-        return [f for f in df.inputFiles() if "documents.parquet" in f]
-
-    assert doc_leaves(fused["top_terms"]) == []
-    assert doc_leaves(fused["lexical_diversity"]) == []
-    assert doc_leaves(fused["surprisal"]) == []
-    assert doc_leaves(fused["repetition_indices"]) == []
-    assert doc_leaves(fused["zipf_spine"]) == []
-    assert doc_leaves(fused["source_tvd"]) == []
-    assert len(doc_leaves(fused["burstiness"])) == 1  # n_docs scalar only
-    # and every panel actually rides the shared cached substrate
-    for name, df in fused.items():
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" in plan, name
-    release_persisted()
 
 
 def test_ingest_novelty_fused_and_distributed_paths_agree(spark):

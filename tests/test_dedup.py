@@ -218,55 +218,6 @@ def test_estimated_scan_partitions_tracks_spark_packing(spark, tmp_path):
     assert _estimated_scan_partitions(spark.range(10).toDF("x")) is None
 
 
-@pytest.mark.slow
-def test_signature_store_incremental_matching(spark, tmp_path):
-    """The persistent signature store must give ingest-time dedup the
-    same answers as the functional two-frame operator, and later
-    batches must match against EVERYTHING appended before them —
-    without ever re-shingling stored docs."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.where("doc_id % 3 = 0")
-    batch1 = docs.where("doc_id % 3 = 1")
-    batch2 = docs.where("doc_id % 3 = 2")
-    store = str(tmp_path / "sigstore")
-
-    dd.append_signature_store(corpus, "doc_id", "text", store)
-    got1 = {
-        (r.new_id, r.corpus_id)
-        for r in dd.match_against_store(
-            spark, batch1, "doc_id", "text", store, threshold=0.3
-        ).collect()
-    }
-    want1 = {
-        (r.new_id, r.corpus_id)
-        for r in dd.incremental_minhash_pairs(
-            batch1, corpus, "doc_id", "text", threshold=0.3
-        ).collect()
-    }
-    dd.release_persisted()
-    assert got1 == want1
-
-    # grow the store with batch1; batch2 must now match corpus ∪ batch1
-    dd.append_signature_store(batch1, "doc_id", "text", store)
-    got2 = {
-        (r.new_id, r.corpus_id)
-        for r in dd.match_against_store(
-            spark, batch2, "doc_id", "text", store, threshold=0.3
-        ).collect()
-    }
-    want2 = {
-        (r.new_id, r.corpus_id)
-        for r in dd.incremental_minhash_pairs(
-            batch2, corpus.unionByName(batch1), "doc_id", "text", threshold=0.3
-        ).collect()
-    }
-    dd.release_persisted()
-    assert got2 == want2
-    assert want2  # fixture actually produces cross-batch near-dups
-
-
 def test_split_minhash_pairs_matches_two_frame_form(spark):
     """The one-table split form must be row-identical to calling the
     two-frame operator with the predicate-filtered frames — the round-14
@@ -498,26 +449,6 @@ def test_simhash_fused_and_distributed_paths_agree(spark):
     assert (9001, 9002) in fused  # the empty-doc pair really is there
     assert len(fused) > 20
     assert fused == dist
-    dd.release_persisted()
-
-
-def test_signature_store_banding_mismatch_raises(spark, tmp_path):
-    """A probe built with a different rows_per_band than the store
-    would silently join nothing — the recorded layout must make the
-    mismatch loud on both match and append."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
-    store = str(tmp_path / "s")
-    dd.append_signature_store(docs, "doc_id", "text", store, rows_per_band=2)
-    with pytest.raises(ValueError):
-        dd.match_against_store(spark, docs, "doc_id", "text", store, rows_per_band=4)
-    with pytest.raises(ValueError):
-        dd.append_signature_store(docs, "doc_id", "text", store, rows_per_band=4)
-    with pytest.raises(ValueError):  # no store at all
-        dd.match_against_store(spark, docs, "doc_id", "text", str(tmp_path / "none"))
     dd.release_persisted()
 
 

@@ -1,4 +1,4 @@
-"""Data-quality expectations (#100): report counts + quarantine split."""
+"""Data-quality expectations (#100): report counts and column profiles."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,27 +52,6 @@ def test_expectations_report_counts(spark):
         "unique:id": (2, 7),       # BOTH rows of the duplicated key
         "references:fk": (1, 7),
     }
-
-
-def test_quarantine_split_partitions_exactly(spark):
-    df = _df(spark)
-    clean, bad = expectations.quarantine_split(df, **_rules(spark))
-    assert clean.columns == df.columns
-    assert clean.count() + bad.count() == df.count()
-    ids_bad = {tuple(r)[:1][0] for r in bad.drop("violated_rules").collect()}
-    assert ids_bad == {2, 3, 4, None}
-    # the null-price/null-fk row is clean (nulls only fail not_null rules)
-    assert 5 in {r.id for r in clean.collect()}
-    # violated_rules names every failed rule for a row
-    by_id = {r.id: sorted(r.violated_rules) for r in bad.collect()}
-    assert by_id[2] == ["range:price"]
-    assert by_id[4] == ["references:fk", "unique:id"] or by_id[4] == ["unique:id"]
-
-
-def test_expectations_no_rules(spark):
-    df = _df(spark)
-    clean, bad = expectations.quarantine_split(df)
-    assert clean.count() == df.count() and bad.count() == 0
 
 
 def test_profile_columns_counts(spark):

@@ -1,13 +1,9 @@
-"""Fused co-purchase graph card (round-13 verdict item #3): one
-persisted distinct-membership scan + one persisted canonical min-support
-edge frame feed #155 PageRank, #157 triangles, #160 neighbors, and #170
-assortativity. The fusion must be LOSSLESS — each panel's rows are
-bit-identical to its standalone query — and must actually eliminate the
-redundant pair joins (every panel reads the substrate only: zero direct
-lineitem parquet leaves in a fused run).
+"""Co-purchase graph queries (#155 PageRank, #157 triangles, #160
+neighbors, #170 assortativity): the standalone plans scan their
+substrate once, and each small-input local solve is identical to its
+distributed plan.
 """
 
-import pytest
 import os
 import sys
 
@@ -23,50 +19,6 @@ SF = "/root/testdata/sf0.001"
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.slow
-def test_graph_card_panels_match_standalone(spark):
-    release_persisted()
-    fused = analytics.graph_card_frames(spark, SF)
-    standalone = {
-        "pagerank": analytics.q_part_pagerank(spark, SF),
-        "triangles": analytics.q_part_triangles(spark, SF),
-        "neighbors": analytics.q_part_neighbors(spark, SF),
-        "assortativity": analytics.q_copurchase_assortativity(spark, SF),
-        "kcore": analytics.q_part_kcore(spark, SF),
-    }
-    for name, f in fused.items():
-        assert f.columns == standalone[name].columns, name
-        assert _rows(f) == _rows(standalone[name]), name
-    release_persisted()
-
-
-def test_graph_card_builds_pair_join_once(spark):
-    """Every panel must have NO direct parquet leaf over lineitem —
-    they read only the persisted substrate frames (inputFiles() walks
-    the logical leaves and does not descend into InMemoryRelation), so
-    a combined run scans baskets once and runs the per-basket-quadratic
-    pair join once instead of four times."""
-    release_persisted()
-    fused = analytics.graph_card_frames(spark, SF)
-
-    def lineitem_leaves(df):
-        return [f for f in df.inputFiles() if "lineitem.parquet" in f]
-
-    for name, df in fused.items():
-        assert lineitem_leaves(df) == [], name
-        if name in ("pagerank", "kcore", "triangles", "assortativity"):
-            # pagerank/kcore localCheckpoint (or driver-solve) their
-            # results, and the triangle census / assortativity reduce
-            # driver-solve at bench scale, so these panels' own plans
-            # are LogicalRDDs / LocalRelations — the substrate reuse
-            # already happened upstream at build time, which the
-            # zero-leaf assertion above still proves
-            continue
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" in plan, name
-    release_persisted()
 
 
 def test_neighbors_standalone_scans_baskets_once(spark):

@@ -354,6 +354,50 @@ def test_mor_crash_before_commit_then_rerun_leaves_no_orphan(
     assert got == [(0, "n0"), (1, "a2"), (2, "n2")]
 
 
+def test_commit_deletes_deletion_vectors_its_version_does_not_list(
+    spark, tmp_path, monkeypatch
+):
+    """``_deletes/`` holds exactly the manifest's delete files after (a) a
+    merge-on-read batch whose commit crashed once is rerun and (b) a
+    compaction retires the vectors; (c) ``retain_history`` keeps them."""
+
+    def dv_files(out):
+        return manifest.list_data_files(spark, f"{out}/{manifest.DELETES_DIR}")
+
+    # (a) the crashed attempt's staged vector goes with the rerun's commit
+    out = str(tmp_path / "a")
+    _init(spark, out)
+    batch = _changes(spark, [("U", 1, 1, "a2")])
+    real_commit = manifest.commit_manifest
+
+    def crash_once(*a, **kw):
+        monkeypatch.setattr(manifest, "commit_manifest", real_commit)
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(manifest, "commit_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        lake_writer.merge_on_read_incremental(spark, batch, out, ["id"])
+    assert len(dv_files(out)) == 1
+    lake_writer.merge_on_read_incremental(spark, batch, out, ["id"])
+    listed = manifest.read_manifest(spark, out)["delete_files"]
+    assert len(listed) == 1 and dv_files(out) == listed
+
+    # (b) a compaction materializes the deletes and retires every vector
+    lake_writer.compact_table(spark, out)
+    assert not manifest.read_manifest(spark, out).get("delete_files")
+    assert dv_files(out) == []
+    got = sorted((r.id, r.name) for r in manifest.read_table(spark, out).collect())
+    assert got == [(0, "n0"), (1, "a2"), (2, "n2")]
+
+    # (c) retain_history keeps the retired vectors with the old files
+    out = str(tmp_path / "c")
+    _init(spark, out)
+    lake_writer.merge_on_read_incremental(spark, batch, out, ["id"])
+    kept = manifest.read_manifest(spark, out)["delete_files"]
+    lake_writer.compact_table(spark, out, retain_history=True)
+    assert dv_files(out) == kept
+
+
 def test_retain_history_holds_until_the_next_write_without_it(spark, tmp_path):
     """``retain_history`` keeps the files one commit supersedes; the next
     commit that does not pass it (a merge-on-read batch never does)
@@ -676,17 +720,6 @@ def test_delete_where_twice_accumulates(spark, tmp_path):
     assert len(manifest.read_manifest(spark, out)["delete_files"]) >= 2
 
 
-def test_register_manifest_view_serves_committed_snapshot(spark, tmp_path):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog
-
-    out = str(tmp_path / "t")
-    _init(spark, out, n=5)
-    manifest.delete_where(spark, out, ("id", "=", 4))
-    catalog.register_manifest_view(spark, out, "sampledb__t")
-    got = {r.id for r in spark.sql("SELECT id FROM sampledb__t").collect()}
-    assert got == {0, 1, 2, 3}  # DV applied, orphans invisible
-
-
 def test_zorder_compaction_skips_on_both_columns(spark, tmp_path):
     """Z-order compaction must make manifest min/max skipping effective
     for predicates on EITHER clustered column; lexicographic range
@@ -821,22 +854,6 @@ def test_vacuum_grace_period_spares_fresh_orphans(spark, tmp_path):
     assert manifest.vacuum(spark, out, grace_seconds=0)  # explicit opt-out reclaims
 
 
-def test_register_manifest_view_partitioned(spark, tmp_path):
-    """The committed-snapshot view works for partitioned manifests too
-    (partition columns present, only live files served)."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog
-
-    out = str(tmp_path / "t")
-    _pinit(spark, out)
-    lake_writer.merge_incremental(
-        spark, _pchanges(spark, [("U", 1, 1, "a", 99)]), out, ["id"],
-        partition_keys=["dept"], retain_history=True,
-    )
-    catalog.register_manifest_view(spark, out, "pt_view")
-    got = {(r.id, r.dept, r.v) for r in spark.sql("SELECT * FROM pt_view").collect()}
-    assert got == {(1, "a", 99), (2, "a", 20), (3, "b", 30), (4, "b", 40)}
-
-
 def test_partitioned_manifest_additive_evolution(spark, tmp_path):
     """A batch carrying a NEW column merges into a partitioned manifest
     table: older committed files lack the column (typed NULLs on read),
@@ -856,41 +873,6 @@ def test_partitioned_manifest_additive_evolution(spark, tmp_path):
         (1, 11, "x@y.z"), (2, 20, None), (3, 30, None), (4, 40, None)
     }
     assert "email" not in manifest.read_table(spark, out, version=1).columns
-
-
-def test_schema_drift_report(spark, tmp_path):
-    """v1 (a int, b string) -> v2 (a bigint, c double): a widened
-    losslessly, b dropped, c added; defaults diff latest vs its
-    predecessor; unknown versions raise."""
-    out = str(tmp_path / "drift")
-    df1 = spark.createDataFrame([(1, "x")], "a int, b string")
-    df1.write.mode("overwrite").parquet(f"{out}/s1")
-    manifest.commit_manifest(
-        spark, out,
-        [f"s1/{n}" for n in manifest.list_data_files(spark, f"{out}/s1")],
-        schema_json=df1.schema.json(),
-    )
-    df2 = spark.createDataFrame([(1, 1.5)], "a bigint, c double")
-    df2.write.mode("overwrite").parquet(f"{out}/s2")
-    manifest.commit_manifest(
-        spark, out,
-        [f"s2/{n}" for n in manifest.list_data_files(spark, f"{out}/s2")],
-        delete_files=[f"s1/{n}" for n in manifest.list_data_files(spark, f"{out}/s1")],
-        schema_json=df2.schema.json(),
-    )
-    got = {
-        r.column: (r.change, r.from_type, r.to_type, r.lossless_widening)
-        for r in manifest.schema_drift_report(spark, out).collect()
-    }
-    assert got == {
-        "a": ("type_changed", "int", "bigint", True),
-        "b": ("dropped", "string", None, False),
-        "c": ("added", None, "double", False),
-    }
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not retained"):
-        manifest.schema_drift_report(spark, out, from_version=7)
 
 
 def test_cas_commit_stale_base_raises(spark, tmp_path):

@@ -1,54 +1,7 @@
-"""PCA fit/project (#107's fitted variant) vs an independent numpy
-reference, plus paragraph-dedup (#106) semantics the oracle can't see
+"""Paragraph-dedup (#106) semantics the oracle can't see
 (operator-level invariants)."""
 
-import numpy as np
-from pyspark.sql import functions as F
-
-from aws_big_data_blog_dmscdc_walkthrough_spark.operators import (
-    paragraphs,
-    projection,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_pca_fit_matches_numpy(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    X = np.array(
-        emb.toPandas()["embedding"].tolist(), dtype=np.float64
-    )
-    mean, comps = projection.pca_fit(emb, "embedding", X.shape[1], k=8)
-    assert comps.shape == (8, X.shape[1])
-    # reference: numpy eigh on the exact covariance
-    mu = X.mean(axis=0)
-    cov = (X - mu).T @ (X - mu) / X.shape[0]
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(-vals)[:8]
-    ref = vecs[:, order].T
-    assert np.allclose(mean, mu, atol=1e-9)
-    # eigenvectors match up to sign; compare |dot| per component
-    for i in range(8):
-        assert abs(float(ref[i] @ comps[i])) > 1 - 1e-8, i
-    # explained variance ordering: projections' variance must be
-    # eigenvalue-descending
-    proj = (X - mu) @ comps.T
-    var = proj.var(axis=0)
-    assert np.all(np.diff(var) <= 1e-9)
-
-
-def test_pca_project_matches_numpy(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    X = np.array(emb.toPandas()["embedding"].tolist(), dtype=np.float64)
-    ids = emb.toPandas()["vec_id"].to_numpy()
-    mean, comps = projection.pca_fit(emb, "embedding", X.shape[1], k=4)
-    got = {
-        r.vec_id: np.array(r.pca)
-        for r in projection.pca_project(emb, "embedding", mean, comps).collect()
-    }
-    want = (X - mean) @ comps.T
-    for i, vid in enumerate(ids):
-        assert np.allclose(got[vid], want[i], atol=1e-6), vid
+from aws_big_data_blog_dmscdc_walkthrough_spark.operators import paragraphs
 
 
 def test_paragraph_dedup_first_occurrence_and_reassembly(spark):

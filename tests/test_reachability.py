@@ -1,13 +1,20 @@
-"""Every package module is reachable from an entry surface.
+"""Every package module, and every top-level definition in it, is
+reachable from an entry surface.
 
-Walks the package's import graph (``ast`` only, no Spark, nothing is
-imported) from the entry surfaces: the driver contract
-(``__spark_entry__.py``), the CLI (``__main__``), the CDC controller,
-every ``streaming/`` module, the root benches and audits, and
-``perfbench/``. Imports inside functions count, including relative
-``from . import x``. A module that no entry surface reaches is a
-capability nothing uses: delete it, wire it to an entry surface, or
-list it in ``UNWIRED`` with the reason it stays.
+Both walks use ``ast`` only (no Spark, nothing is imported). The entry
+surfaces are the query registry (``__spark_entry__.py``), the CLI
+(``__main__``), the CDC controller, the root benches and audits, and
+``perfbench/``.
+
+The module walk follows the import graph; imports inside functions
+count, including relative ``from . import x``, and every ``streaming/``
+module is an entry. The definition walk works by name: a top-level
+function, class or assignment is reached when its name appears in an
+entry surface, in a module-level statement of any package module, or in
+the body of a reached definition. Code that no entry surface reaches is
+a capability nothing uses: delete it, wire it to an entry surface, or
+list it (``UNWIRED`` for a module, ``ENTRY_POINTS`` for a definition)
+with the reason it stays.
 """
 from __future__ import annotations
 
@@ -29,10 +36,50 @@ ROOT_SCRIPTS = [
 # Library modules kept although no entry surface imports them, each with
 # its reason. The list is exact: a module that becomes reachable, or is
 # deleted, must leave it too.
-UNWIRED = {
-    f"{PKG}.sources.delta_log": "read-only Delta transaction-log reader for "
-    "pointing the read surface at an existing Delta table",
+UNWIRED: dict[str, str] = {}
+
+# Top-level definitions kept although no entry surface names them, as
+# "<module under the package>.<name>" -> reason. Exact, like UNWIRED.
+ENTRY_POINTS = {
+    "streaming.sketch_stream.start_sketch_stream": "Structured Streaming "
+    "entry point: landing files into the persisted count-min sketch",
+    "streaming.sketch_stream.start_heavy_hitter_stream": "Structured "
+    "Streaming entry point: landing files into the Misra-Gries state",
+    "streaming.sessions.sessionize_stream": "Structured Streaming entry "
+    "point: closed gap sessions from an event stream",
+    "streaming.joins.stream_interval_join": "Structured Streaming entry "
+    "point: watermarked stream-stream interval join",
+    "streaming.rate_stream.burst_screen": "Structured Streaming entry "
+    "point: per-user burst-rate screen",
+    "streaming.windows.sliding_counts": "Structured Streaming entry "
+    "point: watermarked hopping-window counts",
+    "streaming.windows.run_to_sink": "Structured Streaming entry point: "
+    "drains a windowed stream into a sink table",
+    "operators.text.cms_estimate": "readout of the state "
+    "start_sketch_stream writes",
+    "operators.text.heavy_hitter_state_candidates": "readout of the state "
+    "start_heavy_hitter_stream writes",
+    "sources.lake_writer.read_change_feed": "subscriber side of the "
+    "controller's change_feed flag",
+    "operators.text.poly_fingerprint": "reference implementation "
+    "tests/test_text.py compares the live fingerprint against",
+    "operators.dedup.incremental_minhash_pairs": "reference implementation "
+    "tests/test_dedup.py pins split_minhash_pairs against",
+    "operators.similarity.dequantize_embeddings": "reference implementation "
+    "the quantization error-bound test reads codes back with",
 }
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh:
+        return ast.parse(fh.read(), filename=path)
+
+
+def _entry_files() -> list[str]:
+    perfbench = os.path.join(ROOT, "perfbench")
+    return [os.path.join(ROOT, s) for s in ROOT_SCRIPTS] + sorted(
+        os.path.join(perfbench, f) for f in os.listdir(perfbench) if f.endswith(".py")
+    )
 
 
 def _package_modules() -> dict[str, str]:
@@ -52,8 +99,7 @@ def _imported(path: str, module: str | None, mods: dict[str, str]) -> set[str]:
     """Package modules one file imports. ``module`` is the file's dotted
     name (None for scripts outside the package); relative imports resolve
     against it."""
-    with open(path, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read(), filename=path)
+    tree = _parse(path)
     is_pkg = path.endswith("__init__.py")
     found = set()
     for node in ast.walk(tree):
@@ -82,15 +128,10 @@ def _imported(path: str, module: str | None, mods: dict[str, str]) -> set[str]:
 
 def _unreached() -> list[str]:
     mods = _package_modules()
-    entries = [os.path.join(ROOT, s) for s in ROOT_SCRIPTS]
-    perfbench = os.path.join(ROOT, "perfbench")
-    entries += sorted(
-        os.path.join(perfbench, f) for f in os.listdir(perfbench) if f.endswith(".py")
-    )
     seen = {f"{PKG}.__main__", f"{PKG}.pipeline.controller"}
     seen |= {m for m in mods if m.startswith(f"{PKG}.streaming.")}
     todo = list(seen)
-    for path in entries:
+    for path in _entry_files():
         for m in _imported(path, None, mods) - seen:
             seen.add(m)
             todo.append(m)
@@ -114,6 +155,147 @@ def test_every_package_module_is_reached_from_an_entry_surface():
     assert not stale, (
         "UNWIRED lists modules that are reached or gone: " + ", ".join(stale)
     )
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Identifiers a node refers to: ``Name``s, ``Attribute`` names,
+    import aliases and identifier-shaped string constants (registries
+    that name a function by string)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.isidentifier()
+        ):
+            out.add(n.value)
+    return out
+
+
+def _definitions(
+    pkg_dir: str, root_modules: set[str]
+) -> tuple[dict[str, ast.AST], set[str]]:
+    """Every top-level definition under ``pkg_dir`` as ``"<module>.<name>"``
+    -> node, and the names the roots refer to: each module's statements
+    that define nothing, and the whole of each module in
+    ``root_modules``."""
+    defs, roots = {}, set()
+    for dirpath, _, files in os.walk(pkg_dir):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, pkg_dir)[: -len(".py")].split(os.sep)
+            module = ".".join(rel[:-1] if rel[-1] == "__init__" else rel)
+            prefix = f"{module}." if module else ""
+            tree = _parse(path)
+            if module in root_modules:
+                roots |= _names(tree)
+            for stmt in tree.body:
+                if isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    defs[prefix + stmt.name] = stmt
+                elif isinstance(stmt, ast.Assign) and all(
+                    isinstance(t, ast.Name) for t in stmt.targets
+                ):
+                    for t in stmt.targets:
+                        defs[prefix + t.id] = stmt.value
+                elif isinstance(stmt, ast.AnnAssign) and isinstance(
+                    stmt.target, ast.Name
+                ):
+                    defs[prefix + stmt.target.id] = stmt
+                else:
+                    roots |= _names(stmt)
+    return defs, roots
+
+
+def _reached(defs: dict[str, ast.AST], names: set[str], seeds=()) -> set[str]:
+    """Definitions whose name is in ``names`` or in the body of a reached
+    definition; ``seeds`` are reached from the start."""
+    names = set(names)
+    reached = set(seeds)
+    for key in reached:
+        names |= _names(defs[key])
+    grew = True
+    while grew:
+        grew = False
+        for key, node in defs.items():
+            if key not in reached and key.rsplit(".", 1)[-1] in names:
+                reached.add(key)
+                names |= _names(node)
+                grew = True
+    return reached
+
+
+def _check_definitions(
+    pkg_dir: str, root_files: list[str], root_modules: set[str], entry_points
+) -> tuple[list[str], list[str]]:
+    """(unreached definitions not in ``entry_points``, stale entries). An
+    entry is stale when it no longer exists or is reached without the
+    entries; the rest are then walked from as roots."""
+    defs, roots = _definitions(pkg_dir, root_modules)
+    for path in root_files:
+        roots |= _names(_parse(path))
+    reached = _reached(defs, roots)
+    stale = sorted(e for e in entry_points if e not in defs or e in reached)
+    reached = _reached(defs, roots, [e for e in entry_points if e in defs])
+    unlisted = sorted(set(defs) - reached - set(entry_points))
+    return unlisted, stale
+
+
+def test_every_top_level_definition_is_reached_from_an_entry_surface():
+    unlisted, stale = _check_definitions(
+        os.path.join(ROOT, PKG),
+        _entry_files(),
+        {"__main__", "pipeline.controller"},
+        ENTRY_POINTS,
+    )
+    assert not unlisted, (
+        "top-level definitions no entry surface reaches (delete them, "
+        "wire them to an entry surface, or list them in ENTRY_POINTS with "
+        "a reason): " + ", ".join(unlisted)
+    )
+    assert not stale, (
+        "ENTRY_POINTS lists definitions that are reached or gone: "
+        + ", ".join(stale)
+    )
+
+
+def test_definition_walk_roots_and_exactness(tmp_path):
+    """A definition only a test names is unreached; one named in a reached
+    body, or by a string in a module-level registry, is reached; an entry
+    that is reached anyway, or gone, is stale."""
+    pkg = tmp_path / "p"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "a.py").write_text(
+        "QUERIES = ('by_string',)\n"
+        "def by_string():\n    return helper()\n"
+        "def helper():\n    return 1\n"
+        "def only_tests():\n    pass\n"
+        "def entry():\n    return from_entry()\n"
+        "def from_entry():\n    pass\n"
+        "def listed_and_reached():\n    pass\n"
+    )
+    (pkg / "b.py").write_text("REGISTRY = {'k': 'by_registry'}\n")
+    (pkg / "c.py").write_text(
+        "def by_registry():\n    pass\n"
+        "if __name__ == '__main__':\n    listed_and_reached()\n"
+    )
+    script = tmp_path / "run.py"
+    script.write_text("from p.a import QUERIES\nfrom p.b import REGISTRY\n")
+    (tmp_path / "test_a.py").write_text("from p.a import only_tests\n")
+    entries = {"a.entry": "", "a.listed_and_reached": "", "a.gone": ""}
+    unlisted, stale = _check_definitions(str(pkg), [str(script)], set(), entries)
+    assert unlisted == ["a.only_tests"]
+    assert stale == ["a.gone", "a.listed_and_reached"]
 
 
 def test_walk_follows_function_local_relative_imports(tmp_path):

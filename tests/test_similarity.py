@@ -47,47 +47,6 @@ def test_lsh_topk_same_bucket(spark):
     assert 4 not in ids  # sign bit differs → other bucket
 
 
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.session import load_table
-    from tests.conftest import SF_SMOKE
-
-    embs = load_table(spark, SF_SMOKE, "embeddings")
-    q = embs.where(F.col("vec_id") == 0).select("embedding")
-    exact = [
-        r.vec_id
-        for r in similarity.cosine_topk(embs, "vec_id", "embedding", q, 10).collect()
-    ]
-    approx = [
-        r.vec_id
-        for r in similarity.ivf_topk(
-            embs, "vec_id", "embedding", q, 10, n_centroids=8, nprobe=4
-        ).collect()
-    ]
-    # probing half the centroids must recover most of the true top-10,
-    # and always the query itself (its own bucket is the nearest probe)
-    assert approx[0] == 0
-    assert len(set(exact) & set(approx)) >= 6
-
-
-def test_ivf_nprobe_full_equals_bruteforce(spark):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.session import load_table
-    from tests.conftest import SF_SMOKE
-
-    embs = load_table(spark, SF_SMOKE, "embeddings")
-    q = embs.where(F.col("vec_id") == 0).select("embedding")
-    exact = [
-        r.vec_id
-        for r in similarity.cosine_topk(embs, "vec_id", "embedding", q, 5).collect()
-    ]
-    full = [
-        r.vec_id
-        for r in similarity.ivf_topk(
-            embs, "vec_id", "embedding", q, 5, n_centroids=8, nprobe=8
-        ).collect()
-    ]
-    assert full == exact  # nprobe = n_centroids degenerates to brute force
-
-
 def test_batch_lsh_topk_shape_and_self_match(spark):
     from pyspark.sql import functions as F
 
@@ -160,109 +119,6 @@ def test_ivf_fixed_matches_brute_force_at_full_probe(spark):
     assert [(r.vec_id, r.cosine) for r in ivf] == [
         (r.vec_id, r.cosine) for r in brute
     ]
-
-
-def test_ivf_partitioned_prunes_and_matches_inline(spark, tmp_path):
-    """Ingest-time IVF partitioning: the probe scan must carry a
-    partition filter on _ivf (directory pruning at planning time) and
-    return the same top-k as the inline-assignment form."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import similarity
-    from aws_big_data_blog_dmscdc_walkthrough_spark.session import load_table
-    from tests.conftest import SF_SMOKE
-
-    embs = load_table(spark, SF_SMOKE, "embeddings")
-    cents = similarity.ivf_fit_centroids(embs, "embedding", n_centroids=8)
-    path = str(tmp_path / "ivf_table")
-    similarity.write_ivf_partitioned(embs, "vec_id", "embedding", path, cents)
-    # one directory per assigned cell
-    cells = [d for d in os.listdir(path) if d.startswith("_ivf=")]
-    assert 1 < len(cells) <= 8
-
-    qvec = [
-        float(x)
-        for x in embs.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    ]
-    got = similarity.ivf_topk_partitioned(
-        spark, path, "vec_id", "embedding", cents, qvec, k=10, nprobe=3
-    )
-    plan = got._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan and "_ivf" in plan.split("PartitionFilters", 1)[1][:200]
-
-    want = similarity.ivf_topk(
-        embs, "vec_id", "embedding",
-        embs.where(F.col("vec_id") == 0).select("embedding"),
-        k=10, n_centroids=8, nprobe=3, centroids=cents,
-    )
-    got_rows = [(r.vec_id, round(r.cosine, 9)) for r in got.collect()]
-    want_rows = [(r.vec_id, round(r.cosine, 9)) for r in want.collect()]
-    assert got_rows == want_rows
-
-
-def test_ivf_partitioned_spill_assignment_dedupes_and_improves_recall(
-    spark, tmp_path
-):
-    """assign_m=2 at write time: a vector lives in its two nearest cell
-    directories; the probed read dedupes on id (no neighbor occupies two
-    top-k slots), pruning still plans on _ivf, and recall vs brute force
-    is at least the single-assignment table's."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import similarity
-    from aws_big_data_blog_dmscdc_walkthrough_spark.session import load_table
-    from tests.conftest import SF_SMOKE
-
-    embs = load_table(spark, SF_SMOKE, "embeddings")
-    cents = similarity.ivf_fit_centroids(embs, "embedding", n_centroids=8)
-    p1 = str(tmp_path / "ivf_m1")
-    p2 = str(tmp_path / "ivf_m2")
-    similarity.write_ivf_partitioned(embs, "vec_id", "embedding", p1, cents)
-    similarity.write_ivf_partitioned(
-        embs, "vec_id", "embedding", p2, cents, assign_m=2
-    )
-    n = embs.count()
-    assert spark.read.parquet(p1).count() == n
-    assert spark.read.parquet(p2).count() == 2 * n  # m x storage
-    assert os.path.exists(f"{p2}/_ivf_assign_m")
-
-    rec = {}
-    for qid in (0, 7, 19):
-        qvec = [
-            float(x)
-            for x in embs.where(F.col("vec_id") == qid)
-            .select("embedding").collect()[0][0]
-        ]
-        truth = {
-            r.vec_id
-            for r in similarity.cosine_topk(
-                embs, "vec_id", "embedding",
-                embs.where(F.col("vec_id") == qid).select("embedding"), 10
-            ).collect()
-        }
-        for name, path in (("m1", p1), ("m2", p2)):
-            rows = similarity.ivf_topk_partitioned(
-                spark, path, "vec_id", "embedding", cents, qvec, k=10, nprobe=3
-            ).collect()
-            ids = [r.vec_id for r in rows]
-            assert len(ids) == len(set(ids))  # dedupe held
-            rec.setdefault(name, []).append(len(set(ids) & truth))
-        # pruning still planned on the partition column
-        plan = similarity.ivf_topk_partitioned(
-            spark, p2, "vec_id", "embedding", cents, qvec, k=10, nprobe=3
-        )._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "PartitionFilters" in plan
-    assert sum(rec["m2"]) >= sum(rec["m1"])
 
 
 def test_quantize_dequantize_roundtrip_error_bound(spark):

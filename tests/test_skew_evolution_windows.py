@@ -1,4 +1,4 @@
-"""Salted joins, CDC schema evolution, watermarked streaming windows."""
+"""Skew report, CDC schema evolution, watermarked streaming windows."""
 
 import datetime as dt
 
@@ -16,29 +16,6 @@ from pyspark.sql.types import (
 from aws_big_data_blog_dmscdc_walkthrough_spark.operators import cdc, skew
 from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
 from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import windows as sw
-
-
-# ------------------------------------------------------------------ skew
-
-
-def test_salted_join_matches_plain_join(spark):
-    # one pathologically hot key (90% of rows) + a long tail
-    big = spark.range(0, 1000).select(
-        F.when(F.col("id") < 900, F.lit(7)).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame([(7, "hot"), (950, "cold")], ["k", "label"])
-    plain = big.join(small, ["k"]).groupBy("k", "label").count()
-    salted = skew.salted_join(big, small, ["k"], buckets=8).groupBy("k", "label").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    big = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    small = spark.createDataFrame([(1, "x")], ["k", "w"])
-    out = skew.salted_join(big, small, ["k"], buckets=4, how="left")
-    rows = {r.k: r.w for r in out.collect()}
-    assert rows == {1: "x", 2: None}
 
 
 # ------------------------------------------------- schema evolution

@@ -64,29 +64,6 @@ def test_token_counts(spark):
     assert out[2].n_ws == 2 and out[2].n_bpe == 4  # a, -, b, c
 
 
-def test_scrub_pii_redacts_and_counts(spark):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-
-    df = spark.createDataFrame(
-        [(0, "email me at bob.smith+x@example.co.uk now"),
-         (1, "see https://a.example.com/path?q=1 and http://b.io"),
-         (2, "call +1 (555) 123-4567 today"),
-         (3, "mail inside url https://ex.com/a@b.com stays one URL"),
-         (4, "plain text no pii")],
-        "id long, text string",
-    )
-    rows = {r.id: r for r in text_ops.scrub_pii(df).collect()}
-    assert rows[0].n_email == 1 and "<EMAIL>" in rows[0].text_scrubbed
-    assert "bob" not in rows[0].text_scrubbed
-    assert rows[1].n_url == 2 and rows[1].text_scrubbed.count("<URL>") == 2
-    assert rows[2].n_phone == 1 and "<PHONE>" in rows[2].text_scrubbed
-    assert "555" not in rows[2].text_scrubbed
-    # URL consumed before the email pattern can bite into it
-    assert rows[3].n_url == 1 and rows[3].n_email == 0
-    assert rows[4].text_scrubbed == "plain text no pii"
-    assert rows[4].n_url == rows[4].n_email == rows[4].n_phone == 0
-
-
 def test_sample_stratified_uniform_per_stratum(spark):
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
     from tests.conftest import SF_CORRECT
