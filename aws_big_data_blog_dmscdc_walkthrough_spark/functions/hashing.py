@@ -93,20 +93,6 @@ def poly_hash_text_pandas(mul: int = POLY_MUL1, mod: int = POLY_MOD1):
     return udf
 
 
-def minhash_signature(shingle_hashes_col):
-    """K minhashes over shingle hashes: (a·h + b) mod P, min per row."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingle_hashes_col, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-                )
-            )
-            for a, b in zip(MINHASH_A, MINHASH_B)
-        ]
-    )
-
-
 # ------------------------------------------------- Arrow-batched hot paths
 #
 # The HOF expressions above are correct but run on Catalyst's INTERPRETED

@@ -13,12 +13,13 @@ Spark-first re-expression of the reference incremental merge
   ``rank() over (partition by pk order by sortpath desc, rownum desc) = 1
   and Op != 'D'`` rule (DMSCDC_LoadIncremental.py:71-73);
 - instead of the reference's driver-side ``collect()`` of impacted file
-  names and ``coalesce(1)`` single-file rewrite, the merge prunes the
-  target with a *broadcast semi-join* on the batch's keys: only
-  impacted target rows enter the window shuffle; untouched rows are
-  unioned back untouched (and, in the lake-write path, never rewritten).
-  At 100 TB this is the difference between shuffling the change batch
-  (MBs..GBs) and shuffling the whole table.
+  names and ``coalesce(1)`` single-file rewrite, the merge splits the
+  target with a *broadcast anti-join* on the batch's keys: only the
+  batch's rows enter the window shuffle (a change row outranks the
+  target row it replaces); untouched rows are unioned back untouched
+  (and, in the lake-write path, never rewritten). At 100 TB this is the
+  difference between shuffling the change batch (MBs..GBs) and
+  shuffling the whole table.
 """
 
 from __future__ import annotations
@@ -266,16 +267,29 @@ def merge_parts(
     """The merge's internal frames, for consumers that don't need the
     full merged table: ``(survivors, untouched, impacted)``.
 
-    ``survivors`` is the latest-wins winner per IMPACTED key (target
-    data columns + ``_op`` — delete tombstones still present, callers
-    filter); ``untouched`` is the target rows whose keys the batch never
-    mentions (``None`` when pruning is off — the window then saw the
-    whole target and ``survivors`` is already the full merge);
+    ``survivors`` is the latest-wins winner per key the batch mentions
+    (target data columns + ``_op`` — delete tombstones still present,
+    callers filter); ``untouched`` is the target rows whose keys the
+    batch never mentions (``None`` when pruning is off — the window then
+    saw the whole target and ``survivors`` is already the full merge);
     ``impacted`` is the pre-merge target rows for the batch's keys.
     ``apply_changes`` = survivors (minus/flagging deletes) ∪ untouched;
     a snapshot diff or an incremental-agg delta needs only
     (impacted, survivors) — exposing the parts lets those consumers
     skip the untouched anti-join + union entirely.
+
+    Pruned (``prune_with_broadcast``), the window ranks the batch's rows
+    only: every impacted key has a change row, and a change row always
+    outranks the target row, so no target row can win and the target
+    side of the window would be dead weight (a second scan of the
+    target plus its share of the window shuffle). ``impacted`` stays a
+    lazy frame that only the callers reading it execute.
+
+    ``prune_keys``, when given, must be exactly the batch's keys
+    (``changes.select(*primary_keys)``, duplicates allowed, size-guarded
+    as :func:`_maybe_broadcast` does): a superset would drop untouched
+    rows whose key has no change row, a subset would keep a target row
+    beside its replacement.
     """
     pks = list(primary_keys)
     data_cols = list(target.columns)
@@ -300,25 +314,25 @@ def merge_parts(
     else:
         impacted, untouched = target, None
 
-    change_side = changes.select(
+    ranked = changes.select(
         *data_cols,
         F.col(op_col).alias("_op"),
         F.lit(1).alias("_src"),
         F.col(seq_col).alias("_seq"),
     )
-    target_side = impacted.select(
-        *data_cols,
-        F.lit("T").alias("_op"),
-        F.lit(0).alias("_src"),
-        F.lit(None).cast(change_side.schema["_seq"].dataType).alias("_seq"),
-    )
+    if not prune_with_broadcast:
+        ranked = ranked.unionByName(impacted.select(
+            *data_cols,
+            F.lit("T").alias("_op"),
+            F.lit(0).alias("_src"),
+            F.lit(None).cast(ranked.schema["_seq"].dataType).alias("_seq"),
+        ))
 
     window = Window.partitionBy(*pks).orderBy(
         F.col("_src").desc(), F.col("_seq").desc_nulls_last()
     )
     survivors = (
-        change_side.unionByName(target_side)
-        .withColumn("_rnk", F.row_number().over(window))
+        ranked.withColumn("_rnk", F.row_number().over(window))
         .where(F.col("_rnk") == 1)
     )
     return survivors, untouched, impacted
@@ -349,8 +363,9 @@ def apply_changes(
     schema (+ ``deleted_col`` when ``soft_delete``).
 
     Scale: with ``prune_with_broadcast`` the window shuffle sees only
-    ``changes ∪ impacted(target)``; untouched target rows bypass both the
-    join shuffle (broadcast) and the window shuffle entirely. The key
+    the batch's rows (:func:`merge_parts`: a change row outranks every
+    target row of its key); target rows bypass the window shuffle and,
+    through the broadcast anti-join, the join shuffle too. The key
     set is broadcast only while Catalyst estimates it under
     ``broadcast_max_bytes`` — a huge backfill batch degrades to a
     shuffled semi/anti join instead of OOMing the driver (AQE may still
@@ -359,7 +374,8 @@ def apply_changes(
     ``prune_keys`` lets a caller that already built (and size-guarded)
     the change-key frame pass it in, skipping the second driver-side
     stats probe — the lake merge path computes the same frame for
-    impacted-file discovery.
+    impacted-file discovery. It must be exactly the batch's keys
+    (:func:`merge_parts`).
     """
     pks = list(primary_keys)
     data_cols = list(target.columns)

@@ -39,7 +39,6 @@ from ..functions.hashing import (  # noqa: F401  (re-exported; plans import from
     SIMHASH_BAND_CHUNKS,
     SIMHASH_BAND_SUBSET,
     SIMHASH_HALF_BITS,
-    minhash_signature,
 )
 
 

@@ -1513,6 +1513,18 @@ WHERE rk <= {BURSTINESS_TOP_K}
 # ----------------- per-source lexical diversity panel (#167)
 
 
+def _source_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(source, _t, _c)``: each whitespace token's count per source,
+    the frame the per-source lexical panels (#167, #168, #169, #177)
+    reduce — one (source, term) aggregation, map-side combined."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"))
+        .groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+
+
 def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-token ratio + hapax share per source (#167).
 
@@ -1530,14 +1542,7 @@ def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined), one per-source reduce over the vocabulary-sized frame.
     Nothing ever pairs or sorts at row scale.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-        )
-        .groupBy("source", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
+    tf = _source_term_counts(spark, sf_dir)
     agg = tf.groupBy("source").agg(
         F.sum("_c").alias("_tokens"),
         F.count(F.lit(1)).alias("_types"),
@@ -1597,14 +1602,7 @@ def corpus_repetition_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one (source, term) aggregation, one per-source reduce.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-        )
-        .groupBy("source", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
+    tf = _source_term_counts(spark, sf_dir)
     dec = "decimal(19,0)"
     agg = tf.groupBy("source").agg(
         F.sum("_c").alias("_n"),
@@ -1670,14 +1668,7 @@ def corpus_zipf_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln avg_rank over ≤ thousands of spine rows — numpy-pinned in
     tests); the engine's job is the exact spine.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-        )
-        .groupBy("source", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
+    tf = _source_term_counts(spark, sf_dir)
     spine = tf.groupBy("source", F.col("_c").alias("freq")).agg(
         F.count(F.lit(1)).alias("n_types")
     )
@@ -2061,14 +2052,7 @@ def corpus_source_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the output (its TVD is trivially 1.0) — both engines agree
     because both ride the same inner join.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "source", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t")
-        )
-        .groupBy("source", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
+    tf = _source_term_counts(spark, sf_dir)
     totals = tf.groupBy("source").agg(F.sum("_c").alias("_n"))
     a = (
         tf.join(F.broadcast(totals), "source")

@@ -61,7 +61,7 @@ from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
@@ -815,11 +815,16 @@ def _merge_cow(
     one keyed merge for a table with live files, partitioned or not.
 
     1. discover impacted files: ``input_file_name()`` tag + broadcast
-       semi-join on the batch's keys, column-pruned to pk only; each
-       name decodes to the table-relative path the manifest lists (the
-       file and its ``len(snap.partition_keys)`` partition directories);
+       semi-join on the batch's keys, column-pruned to pk only, with the
+       distinct names collected as an observed ``collect_set`` of a
+       ``noop`` write (per-task sets merged on the driver: no shuffle,
+       two jobs with the key broadcast); each name decodes to the
+       table-relative path the manifest lists (the file and its
+       ``len(snap.partition_keys)`` partition directories);
     2. merge ONLY those files' rows, committed deletion vectors applied,
-       with the batch;
+       with the batch: the window ranks the batch's rows alone and the
+       impacted files are read once, for the anti-join that keeps their
+       untouched rows (``cdc.merge_parts``);
     3. append the survivors as new files and commit a version without
        the impacted files (``_commit_write``), which then deletes them.
 
@@ -850,12 +855,16 @@ def _merge_cow(
     change_keys = cdc._maybe_broadcast(
         changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
     )
+    # The distinct file names arrive as an observed metric of a noop
+    # write: each task folds its rows into a set of at most the live
+    # file count and the driver merges the sets, so no shuffle and no
+    # result stage run (a .distinct().collect() costs both).
+    seen = Observation()
+    tagged.join(change_keys, pks, "left_semi").observe(
+        seen, F.collect_set("_file").alias("files")
+    ).write.format("noop").mode("overwrite").save()
     impacted = sorted(
-        manifest_mod.relative_name(r["_file"], levels)
-        for r in tagged.join(change_keys, pks, "left_semi")
-        .select("_file")
-        .distinct()
-        .collect()
+        manifest_mod.relative_name(f, levels) for f in seen.get["files"]
     )
 
     if impacted:

@@ -18,13 +18,20 @@ an ``Op`` column (I/U/D). ``read_initial`` / ``read_incremental`` accept
 both: format is detected per folder from file extensions, and CSV tables
 supply their column DDL from the state store (DMS knows the source
 schema; a file has none).
+
+A parquet batch's schema comes from its files' footers, read on the
+driver (``_read_parquet``): no schema-inference job runs, and a batch
+whose files straddle a source ``ADD COLUMN`` reads every file's
+columns, not only the first file's.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from .manifest import _jclass
 
 
 @dataclass
@@ -53,10 +60,8 @@ class TableFolder:
 
 
 def _fs_and_path(spark: SparkSession, uri: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
+    path = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(uri)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
 def _list_dirs(spark: SparkSession, uri: str) -> list[str]:
@@ -146,14 +151,42 @@ def _require_ddl(folder: TableFolder, schema_ddl: str) -> str:
     return schema_ddl
 
 
+def _read_parquet(spark: SparkSession, files: list[str]) -> DataFrame:
+    """Read parquet ``files`` with the schema their footers give.
+
+    Every footer is read in one JVM call, in parallel, on the driver
+    (Spark's ``readParquetFootersInParallel``); ``readSchema`` converts
+    each with the session's parquet settings, as the inference job's
+    task does, and merges them: columns in first-seen order, a column
+    some files lack is nullable, a type change raises (the additive rule
+    of ``cdc.evolved_schema``, which the commit then applies against the
+    table). ``spark.read.parquet(*files)`` runs a job that reads one
+    footer, so a column a source ``ADD COLUMN`` added mid-batch was lost.
+
+    The paths cross py4j as one string split on the JVM (py4j sends a
+    Python list one element per round trip), so the read costs the same
+    round trips for one file as for a thousand."""
+    jvm = spark._jvm
+    fmt = _jclass(jvm, "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$.MODULE$")
+    as_seq = _jclass(jvm, "scala.collection.immutable.ArraySeq.unsafeWrapArray")
+    names = _jclass(jvm, "org.apache.hadoop.util.StringUtils.getStrings")("\n".join(files), "\n")
+    paths = _jclass(jvm, "org.apache.hadoop.util.StringUtils.stringToPath")(names)
+    conf = spark._jsc.hadoopConfiguration()
+    statuses = paths[0].getFileSystem(conf).listStatus(paths)
+    footers = fmt.readParquetFootersInParallel(conf, as_seq(statuses), False)
+    schema = fmt.readSchema(footers, spark._jsparkSession).get()
+    return DataFrame(spark.read._jreader.schema(schema).parquet(as_seq(names)), spark)
+
+
 def read_initial(spark: SparkSession, folder: TableFolder, schema_ddl: str = ""):
     """Read a table's full-load files. Parquet: self-describing
-    (DMSCDC_LoadInitial.py:28). CSV: headerless, columns from the stored
+    (DMSCDC_LoadInitial.py:28), schema from the files' footers
+    (``_read_parquet``). CSV: headerless, columns from the stored
     DDL. JSON lines: field names in-band, but the stored DDL still fixes
     the TYPES (schema inference over text is neither stable nor cheap at
     scale). Full-load files carry NO Op column in any format."""
     if folder.format == "parquet":
-        return spark.read.parquet(*folder.initial_files)
+        return _read_parquet(spark, folder.initial_files)
     if folder.format == "orc":
         return spark.read.orc(*folder.initial_files)
     if folder.format == "json":
@@ -169,11 +202,13 @@ def read_incremental(
     spark: SparkSession, folder: TableFolder, files: list[str], schema_ddl: str = ""
 ):
     """Read CDC files (already filtered to the new ones). Parquet files
-    carry an ``Op`` column (DMSCDC_LoadIncremental.py:47); DMS CSV CDC
+    carry an ``Op`` column (DMSCDC_LoadIncremental.py:47) and are read
+    with the schema of all their footers (``_read_parquet``), so a batch
+    that spans a source ``ADD COLUMN`` keeps the new column; DMS CSV CDC
     files prepend Op as the FIRST field before the table columns; JSON
     CDC records carry an ``Op`` field alongside the data fields."""
     if folder.format == "parquet":
-        return spark.read.parquet(*files)
+        return _read_parquet(spark, files)
     if folder.format == "orc":
         return spark.read.orc(*files)
     if folder.format == "json":

@@ -59,9 +59,9 @@ DV_POS_COL = "_dv_pos"
 
 @functools.lru_cache(maxsize=None)
 def _jclass(jvm, name: str):
-    """The JVM class ``name``, resolved once per gateway: ``jvm.a.b.C``
-    costs one py4j round trip per dotted step, and every commit builds
-    a dozen Hadoop paths."""
+    """The JVM class (or static member) ``name``, resolved once per
+    gateway: ``jvm.a.b.C`` costs one py4j round trip per dotted step,
+    and every commit builds a dozen Hadoop paths."""
     return functools.reduce(getattr, name.split("."), jvm)
 
 

@@ -86,6 +86,23 @@ def test_merge_no_pruning_same_result(spark):
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, full.collect()))
 
 
+def test_pruned_merge_reads_the_target_once(spark, tmp_path):
+    """Pruned, the window ranks the batch's rows only (a change row
+    outranks the target row of its key), so the target is scanned once,
+    for the anti-join that keeps its untouched rows."""
+    path = str(tmp_path / "target.parquet")
+    _target(spark).write.parquet(path)
+    changes = _changes(
+        spark,
+        [(2, "bob2", 21.0, "U", 1), (3, None, 0.0, "D", 2), (4, "dave", 40.0, "I", 1)],
+    )
+    merged = cdc.apply_changes(spark.read.parquet(path), changes, ["id"], "seq")
+    assert merged._jdf.queryExecution().executedPlan().toString().count("FileScan parquet") == 1
+    assert sorted(map(tuple, merged.collect())) == [
+        (1, "alice", 10.0), (2, "bob2", 21.0), (4, "dave", 40.0)
+    ]
+
+
 def _plan_str(df):
     spark = df.sparkSession
     return spark._jvm.PythonSQLUtils.explainString(

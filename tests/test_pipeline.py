@@ -5,6 +5,7 @@ update/delete/insert, re-run idempotency)."""
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from aws_big_data_blog_dmscdc_walkthrough_spark.pipeline import controller
@@ -741,3 +742,149 @@ def test_consistent_cut_defers_pending_initial_load(spark, env):
     r2 = controller.run_once(spark, env["landing"], env["lake"], store)
     assert r2.tables[0].did_initial
     assert spark.read.parquet(f"{env['lake']}/sales/nation").count() == 1
+
+
+def test_batch_spanning_add_column_keeps_the_new_column(spark, env):
+    """Two CDC files in one pass, the second written after a source
+    ``ADD COLUMN``: the batch is read with every file's columns, so the
+    new column and its value reach the lake (a read that takes one
+    file's schema dropped them for good)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    folder = f"{env['landing']}/sampledb/product"
+    os.makedirs(folder)
+    pq.write_table(pa.table({"id": [1, 2], "name": ["a", "b"]}), f"{folder}/LOAD00000001.parquet")
+    store = JsonStateStore(env["state"])
+    controller.run_once(spark, env["landing"], env["lake"], store)  # registers
+    st = store.all()[0]
+    st.active = True
+    st.primary_key = "id"
+    store.put(st)
+    assert controller.run_once(spark, env["landing"], env["lake"], store).tables[0].did_initial
+
+    pq.write_table(
+        pa.table({"Op": ["U"], "id": [1], "name": ["a2"]}),
+        f"{folder}/20240101-000000001.parquet",
+    )
+    pq.write_table(
+        pa.table({"Op": ["U"], "id": [2], "name": ["b2"], "dept": ["x"]}),
+        f"{folder}/20240101-000000002.parquet",
+    )
+    (t,) = controller.run_once(spark, env["landing"], env["lake"], store).tables
+    assert (t.error, t.incremental_files) == ("", 2)
+    lake = manifest.read_table(spark, f"{env['lake']}/sampledb/product")
+    assert lake.columns == ["id", "name", "dept"]
+    assert sorted(tuple(r) for r in lake.collect()) == [(1, "a2", None), (2, "b2", "x")]
+
+
+def test_footer_schema_matches_spark_inference(spark, tmp_path):
+    """The landing read's footer schema is the one Spark's inference job
+    gives, for files written by Spark and by pyarrow (the DMS shape)."""
+    import datetime as dt
+    import glob
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamp = dt.datetime(2024, 2, 29, 12, 30, 1, 5)
+    spark.createDataFrame(
+        [(1, stamp.date(), stamp, stamp, Decimal("12345.67"), "s", (7, ["a", "b"], {"k": 1.5}))],
+        "id int, d date, ts timestamp, ts_ntz timestamp_ntz, amount decimal(12,2), "
+        "s string, nested struct<n:int, tags:array<string>, m:map<string,double>>",
+    ).coalesce(1).write.parquet(str(tmp_path / "spark"))
+    spark_file = glob.glob(str(tmp_path / "spark" / "part-*.parquet"))[0]
+    arrow_file = str(tmp_path / "arrow.parquet")
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1], pa.int32()),
+            "big": pa.array([1], pa.int64()),
+            "d": pa.array([stamp.date()], pa.date32()),
+            "ts_utc": pa.array([stamp], pa.timestamp("us", tz="UTC")),
+            "ts_ntz": pa.array([stamp], pa.timestamp("us")),
+            "ts_ms": pa.array([stamp], pa.timestamp("ms", tz="UTC")),
+            "amount": pa.array([Decimal("12345.67")], pa.decimal128(12, 2)),
+            "wide": pa.array([Decimal("1.5")], pa.decimal128(30, 4)),
+            "s": pa.array(["s"], pa.string()),
+            "nested": pa.array(
+                [{"n": 7, "tags": ["a", "b"], "m": [("k", 1.5)]}],
+                pa.struct([
+                    ("n", pa.int32()),
+                    ("tags", pa.list_(pa.string())),
+                    ("m", pa.map_(pa.string(), pa.float64())),
+                ]),
+            ),
+        }),
+        arrow_file,
+    )
+    for f in (spark_file, arrow_file):
+        ours = landing._read_parquet(spark, [f])
+        assert ours.schema == spark.read.parquet(f).schema, f
+        assert ours.collect() == spark.read.parquet(f).collect(), f
+
+    # across files a type change raises, as a lake commit's does
+    narrow = str(tmp_path / "narrow.parquet")
+    pq.write_table(pa.table({"id": pa.array([2], pa.int16())}), narrow)
+    with pytest.raises(Py4JJavaError, match="incompatible schemas"):
+        landing._read_parquet(spark, [arrow_file, narrow])
+
+
+def _cdc_files(tmp_path, n):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = []
+    for i in range(n):
+        f = str(tmp_path / f"20240101-{i:09d}.parquet")
+        pq.write_table(pa.table({"Op": ["U"], "id": [i], "name": [f"n{i}"]}), f)
+        files.append(f)
+    return files
+
+
+def test_landing_read_round_trips_do_not_grow_with_file_count(spark, tmp_path, monkeypatch):
+    """A parquet landing read costs the same py4j round trips for one
+    file as for twenty: the paths cross as one string, and every footer
+    is read in one JVM call."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    files = _cdc_files(tmp_path, 20)
+    folder = landing.TableFolder("s", "t", str(tmp_path), [], files)
+    landing.read_incremental(spark, folder, files)  # resolve JVM classes once
+    # count calls, not the releases py4j sends when Python drops a JVM
+    # reference (the garbage collector times those)
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send = GatewayClient.send_command
+    calls = []
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(not command.startswith(release))
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    counts = []
+    for batch in (files[:1], files):
+        calls.clear()
+        landing.read_incremental(spark, folder, batch)
+        counts.append(sum(calls))
+    assert counts[0] == counts[1], counts
+
+
+def test_controller_landing_read_launches_no_job(spark, tmp_path):
+    """Building a pass's change batch from parquet landing files runs
+    no Spark job: the schema comes from the footers, read on the
+    driver, not from an inference job."""
+    files = _cdc_files(tmp_path, 3)
+    folder = landing.TableFolder("s", "t", str(tmp_path), files[:1], files[1:])
+    sc = spark.sparkContext
+    sc.setJobGroup("landing-read", "landing-read")
+    try:
+        landing.read_initial(spark, folder)
+        batch = controller.prepare_dms_batch(landing.read_incremental(spark, folder, files[1:]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("landing-read") == []
+    assert batch.columns == ["op", "id", "name", "_seq"]

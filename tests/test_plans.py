@@ -52,10 +52,11 @@ def test_merge_prunes_with_broadcast_no_target_shuffle(spark):
         [(1, 99, "U", 1), (2, None, "D", 2)], ["pk", "v", "op", "_seq"]
     )
     plan = plan_of(cdc.apply_changes(target, changes, ["pk"], "_seq"))
-    # impacted/untouched split must be broadcast semi/anti joins — the
-    # target side must never hash-exchange for the join
+    # the untouched split must be a broadcast anti-join — the target side
+    # must never hash-exchange for the join — and the window ranks the
+    # batch alone, so no semi-join feeds it target rows
     assert plan.count("BroadcastHashJoin") >= 2
-    assert "LeftSemi" in plan and "LeftAnti" in plan
+    assert "LeftAnti" in plan and "LeftSemi" not in plan
     assert "SortMergeJoin" not in plan
 
 
