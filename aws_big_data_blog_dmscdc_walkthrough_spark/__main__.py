@@ -24,7 +24,9 @@ beside the hourly merge):
                 [--stats-cols c] [--zorder]
                 (commits through the table's manifest; the partition
                 layout comes from the table itself)
-    ... vacuum  --path <table> [--retain-versions N] [--keep-feed-batches N]
+    ... vacuum  --path <table> [--retain-versions N] [--grace-seconds S]
+                (data files, deletion vectors and change-feed files
+                that no retained version lists)
     ... delete  --path <table> --col c --op '=' --value v   (merge-on-read
                 position delete, no data files rewritten)
 """
@@ -90,28 +92,14 @@ def _sql(args) -> int:
     """The reference README's "Query the data lake" step (Athena there)
     as one command: register every <schema>/<table> folder under the
     lake root in the session catalog, run the query, print JSON rows."""
-    from .sources import catalog
+    from .sources import catalog, landing
 
     spark = get_spark("dmscdc-sql")
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(args.lake)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     n_tables = 0
-    for schema_dir in fs.listStatus(root):
-        if not schema_dir.isDirectory():
-            continue
-        schema = schema_dir.getPath().getName()
-        if schema.startswith(("_", ".")):
-            continue
-        for table_dir in fs.listStatus(schema_dir.getPath()):
-            if not table_dir.isDirectory():
-                continue
-            table = table_dir.getPath().getName()
-            if table.startswith(("_", ".")):
-                continue
-            catalog.register_table(
-                spark, str(table_dir.getPath()), schema, table
-            )
+    for path, is_dir in landing.glob_status(spark, args.lake, "*/*"):
+        schema, table = path.rsplit("/", 2)[-2:]
+        if is_dir and not any(n.startswith(("_", ".")) for n in (schema, table)):
+            catalog.register_table(spark, path, schema, table)
             n_tables += 1
     rows = spark.sql(args.query).limit(args.limit).collect()
     json.dump(
@@ -128,19 +116,14 @@ def _sql(args) -> int:
 
 
 def _vacuum(args) -> int:
-    from .sources import lake_writer, manifest
+    from .sources import manifest
 
     spark = get_spark("dmscdc-vacuum")
     removed = manifest.vacuum(
         spark, args.path, retain_versions=args.retain_versions,
         grace_seconds=args.grace_seconds,
     )
-    out = {"path": args.path, "removed": removed}
-    if args.keep_feed_batches is not None:
-        out["feed_batches_removed"] = lake_writer.vacuum_change_feed(
-            spark, args.path, args.keep_feed_batches
-        )
-    json.dump(out, sys.stdout, indent=1)
+    json.dump({"path": args.path, "removed": removed}, sys.stdout, indent=1)
     print()
     return 0
 
@@ -207,12 +190,6 @@ def main(argv: list[str] | None = None) -> int:
         default=600,
         help="never delete unlisted files younger than this (in-flight "
         "commit protection); 0 disables",
-    )
-    v_p.add_argument(
-        "--keep-feed-batches",
-        type=int,
-        default=None,
-        help="also prune the _change_feed sidecar to the newest N batches",
     )
     v_p.set_defaults(fn=_vacuum)
 

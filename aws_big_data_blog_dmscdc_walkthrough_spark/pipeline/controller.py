@@ -139,38 +139,18 @@ def process_table(
         folder, state.last_incremental_file, upto_file
     )
     if new_files:
-        if not state.primary_keys:
-            # insert-only path: route through merge_incremental's own
-            # no-primary-keys branch (reference line 56-58) so no-PK
-            # tables share the append/manifest/feed plumbing instead of
-            # a silently-diverging private copy
-            raw = (
-                landing.read_incremental(spark, folder, new_files, state.schema_ddl)
-                .withColumnRenamed("Op", "op")
-                .withColumn("_seq", F.lit(0))
-            )
-            lake_writer.merge_incremental(
-                spark, raw, out_path, primary_keys=[],
-                partition_keys=state.partition_keys, seq_col="_seq", op_col="op",
-                retain_history=state.retain_history,
-                stats_cols=state.stats_cols, change_feed=state.change_feed,
-            )
+        batch = landing.read_incremental(spark, folder, new_files, state.schema_ddl)
+        # keyless tables append their inserts (reference line 56-58):
+        # only a keyed merge orders a key's changes
+        if state.primary_keys:
+            batch = prepare_dms_batch(batch)
         else:
-            changes = prepare_dms_batch(
-                landing.read_incremental(spark, folder, new_files, state.schema_ddl)
-            )
-            lake_writer.merge_incremental(
-                spark,
-                changes,
-                out_path,
-                state.primary_keys,
-                state.partition_keys,
-                seq_col="_seq",
-                op_col="op",
-                retain_history=state.retain_history,
-                stats_cols=state.stats_cols,
-                change_feed=state.change_feed,
-            )
+            batch = batch.withColumnRenamed("Op", "op")
+        lake_writer.merge_incremental(
+            spark, batch, out_path, state.primary_keys, state.partition_keys,
+            seq_col="_seq", op_col="op", retain_history=state.retain_history,
+            stats_cols=state.stats_cols, change_feed=state.change_feed,
+        )
         state.last_incremental_file = new_files[-1]
         state.catalog_pending = True
         store.put(state)

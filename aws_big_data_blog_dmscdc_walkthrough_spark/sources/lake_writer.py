@@ -63,7 +63,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..operators import cdc
@@ -121,39 +121,27 @@ def merge_incremental(
     commits stay readable via ``manifest.read_table(path, version=N)``
     until ``manifest.vacuum`` reclaims them or a later write without it
     deletes them (Delta/Iceberg-style time travel, minimal form).
+
+    ``change_feed`` publishes the collapsed batch (latest row image per
+    key, ``op`` kept so deletes are visible tombstones; a keyless batch's
+    inserts) in the same commit, as the version's feed files
+    (``_commit_write``'s ``feed``; read with ``read_change_feed``).
     """
-    # WRITE-AHEAD feed, hoisted before every merge branch: publish the
-    # batch BEFORE the table commit. A crash in the window leaves a feed
-    # batch the table lacks; the controller's retry re-merges AND
-    # re-publishes, so consumers see at-least-once delivery. With
-    # primary keys, replay through apply_changes is idempotent
-    # (identical full row images, latest-wins) and the duplicate batch
-    # is harmless. For NO-PK (append-only) tables there is nothing to
-    # collapse on: a crash after the table commit but before the state
-    # advance re-consumes the landing file and duplicates the batch in
-    # feed AND table alike — at-least-once is the delivery contract
-    # either way; keyless subscribers needing exactly-once must dedupe
-    # on content. The reverse order would silently LOSE a feed batch on
-    # crash, with contiguous batch ids hiding the gap from every
-    # consumer — strictly worse.
-    # The cheap driver-side schema checks run FIRST, against the
-    # snapshot's table schema (no read, no job): a batch the commit will
-    # permanently reject (type change, missing op/seq) must never be
-    # published — each retry would append another duplicate feed batch
-    # for a merge that can never commit.
-    snap = _snapshot(spark, out_path)
+    feed = None
     if change_feed:
         for col in (op_col, *((seq_col,) if primary_keys else ())):
             if col not in changes.columns:
                 raise ValueError(f"change batch missing required column {col!r}")
-        if snap.live:  # a type change raises, as the commit's check does
-            cdc.evolved_schema(snap.schema, changes.schema, extra_cols=(op_col, seq_col))
-        append_change_feed(spark, changes, out_path, primary_keys, seq_col, op_col)
-
+        feed = (
+            cdc.latest_changes(changes, primary_keys, seq_col)
+            if primary_keys
+            else cdc.insert_only(changes, op_col)
+        ).drop(seq_col)
+    snap = _snapshot(spark, out_path)
     if primary_keys and snap.live:
         _merge_cow(
             spark, changes, out_path, primary_keys, seq_col, op_col, snap,
-            retain_history, stats_cols,
+            retain_history, stats_cols, feed,
         )
         return
     if primary_keys:
@@ -168,7 +156,7 @@ def merge_incremental(
     _commit_write(
         spark, out.drop(op_col, seq_col), out_path, snap,
         None if snap.live else partition_keys,
-        stats_cols=stats_cols, retain_history=retain_history,
+        stats_cols=stats_cols, retain_history=retain_history, feed=feed,
     )
 
 
@@ -693,6 +681,7 @@ def _commit_write(
     retain_history: bool = False,
     properties: dict | None = None,
     deletes: DataFrame | None = None,
+    feed: DataFrame | None = None,
 ) -> None:
     """The one commit protocol: append ``df`` beside the live files,
     commit (live − ``superseded``) + the appended files as the next
@@ -725,13 +714,21 @@ def _commit_write(
     file and sets no ``properties`` (an empty merge-on-read batch) would
     equal the previous one, and is not committed.
 
+    ``feed`` (a merge's collapsed change rows) is written after the
+    append, with mode ``overwrite``, to ``_change_feed/version=N/``,
+    where N is the version this commit creates, and that version lists
+    the files as its ``feed_files``: a feed batch is a table version. A
+    crashed attempt's feed files sit at the N its retry overwrites, and
+    no committed version lists them.
+
     A crash before the commit leaves the old version live and the
     appended files unlisted; a crash after it leaves the superseded
     files unlisted. Either way the next commit's delete removes them,
     so the raw directory converges to the live set without ``vacuum``.
-    That delete relies on one writer per table (the controller's
-    per-table thread, as in ``append_change_feed``): another writer's
-    staged, not yet committed files would look unreferenced.
+    That delete, and numbering the feed from the snapshot's version,
+    rely on one writer per table (the controller's per-table thread):
+    another writer's staged, not yet committed files would look
+    unreferenced.
 
     A version that keeps a live file keeps the table schema, widened by
     ``df``'s new columns; a type change raises before the append. A
@@ -761,6 +758,12 @@ def _commit_write(
     added = [f for f in after if f not in snap.listed]
     if deletes is not None and properties is None and not (added or dv_targets):
         return
+    feed_files = None
+    if feed is not None:
+        name = f"version={(snap.manifest or {}).get('version', 0) + 1}"
+        feed_dir = f"{out_path.rstrip('/')}/{manifest_mod.CHANGE_FEED_DIR}/{name}"
+        feed.write.mode("overwrite").parquet(feed_dir)
+        feed_files = [f"{name}/{f}" for f in manifest_mod.list_data_files(spark, feed_dir)]
     live += added
     stats = manifest_mod.stats_for_commit(
         spark, out_path, live, list(stats_cols), snap.manifest, schema=schema
@@ -768,7 +771,7 @@ def _commit_write(
     manifest_mod.commit_manifest(
         spark, out_path, live, stats=stats, delete_files=delete_files,
         dv_targets=dv_targets, schema_json=schema.json(), partition_keys=keys,
-        properties=properties,
+        properties=properties, feed_files=feed_files,
     )
     if not retain_history:
         manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
@@ -810,6 +813,7 @@ def _merge_cow(
     snap: _Snapshot,
     retain_history: bool,
     stats_cols: Sequence[str],
+    feed: DataFrame | None,
 ) -> None:
     """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87), the
     one keyed merge for a table with live files, partitioned or not.
@@ -892,7 +896,7 @@ def _merge_cow(
     ))
     _commit_write(
         spark, merged, out_path, snap, superseded=set(impacted),
-        stats_cols=stats_cols, retain_history=retain_history,
+        stats_cols=stats_cols, retain_history=retain_history, feed=feed,
     )
 
 
@@ -1039,118 +1043,50 @@ def compact_table(
 
 # ---------------------------------------------------------- change feed
 
-CHANGE_FEED_DIR = "_change_feed"
-
-
-def _feed_batches(spark: SparkSession, out_path: str):
-    """The feed's FileSystem and its ``batch=N`` directories as
-    (N, Hadoop path), ascending by N; none before the first feed write."""
-    base = f"{out_path.rstrip('/')}/{CHANGE_FEED_DIR}"
-    Path, fs = manifest_mod._fs(spark, base)
-    root = Path(base)
-    batches: list[tuple[int, object]] = []
-    if not fs.exists(root):
-        return fs, batches
-    for status in fs.listStatus(root):
-        path = status.getPath()
-        name = path.getName()
-        if name.startswith("batch="):
-            try:
-                batches.append((int(name.split("=", 1)[1]), path))
-            except ValueError:
-                continue
-    return fs, sorted(batches, key=lambda t: t[0])
-
-
-def _next_feed_batch(spark: SparkSession, out_path: str) -> int:
-    _, batches = _feed_batches(spark, out_path)
-    return batches[-1][0] + 1 if batches else 1
-
-
-def append_change_feed(
-    spark: SparkSession,
-    changes: DataFrame,
-    out_path: str,
-    primary_keys: Sequence[str],
-    seq_col: str = "_seq",
-    op_col: str = cdc.OP_COL,
-) -> int:
-    """Publish one merge batch's collapsed changes to the table's feed.
-
-    Delta-CDF shape, minimal form: `<table>/_change_feed/batch=N/` holds
-    the latest-wins row image per key for that merge (op column kept, so
-    `D` rows are visible tombstones). Downstream consumers replay
-    batches > their high-water mark through the SAME apply_changes
-    merge — the lake becomes a CDC *source*, not just a sink. One
-    writer per table (the controller's per-table thread), so the
-    monotone batch id needs no lock. Cost: one pass over the batch —
-    O(batch), never O(table).
-    """
-    collapsed = (
-        cdc.latest_changes(changes, list(primary_keys), seq_col)
-        if primary_keys
-        else cdc.insert_only(changes, op_col)
-    )
-    batch = _next_feed_batch(spark, out_path)
-    dest = f"{out_path.rstrip('/')}/{CHANGE_FEED_DIR}/batch={batch}"
-    collapsed.drop(seq_col).write.mode("overwrite").parquet(dest)
-    return batch
-
 
 def read_change_feed(
-    spark: SparkSession, out_path: str, since_batch: int = 0, op_col: str = cdc.OP_COL
+    spark: SparkSession, out_path: str, since_version: int = 0, op_col: str = cdc.OP_COL
 ) -> DataFrame:
-    """Change rows with batch > ``since_batch`` (incremental subscribe).
+    """The change rows of every committed version after ``since_version``
+    (incremental subscribe), each tagged with the ``version`` whose
+    commit applied it: a subscriber's high-water mark is a table version,
+    which ``manifest.read_table(version=…)`` opens too.
 
-    The `batch=` directory layout makes the since-filter a partition
-    predicate: unconsumed batches are the only directories opened.
+    Exactly the files those versions list as ``feed_files`` are read, in
+    the table schema plus ``op_col`` and ``version``; a crashed attempt's
+    feed files, which no version lists, never are. Feed retention is
+    version retention: ``manifest.vacuum`` deletes an expired version's
+    feed files with its history entry, and a subscriber further behind
+    re-bootstraps from the table (the Delta CDF / Kafka contract).
 
-    A subscriber polling BEFORE the first ``change_feed=True`` merge
-    gets an empty frame in the feed's shape (table columns + ``op_col``
-    + ``batch``), in the table schema — not an error. A poll before the
-    table has a schema (brand-new path, or only hidden sidecars after a
-    crash) raises a clear error instead.
+    A poll before the first ``change_feed=True`` merge gets an empty
+    frame in the feed's shape, not an error. A poll before the table
+    has a schema (a brand-new path) raises.
     """
-    base = f"{out_path.rstrip('/')}/{CHANGE_FEED_DIR}"
-    Path, fs = manifest_mod._fs(spark, base)
-    if not fs.exists(Path(base)):
-        schema = _snapshot(spark, out_path).schema
-        if schema is None:
-            raise FileNotFoundError(
-                f"no table at {out_path}: the change-feed schema cannot be "
-                "derived before the first load lands data"
-            )
-        return (
-            spark.createDataFrame([], schema)
-            .withColumn(op_col, F.lit(None).cast("string"))
-            .withColumn("batch", F.lit(None).cast("int"))
+    man = manifest_mod.read_manifest(spark, out_path)
+    # only a table no commit has adopted yet needs its files listed
+    table = (
+        manifest_mod.table_schema(spark, out_path, man)
+        if man
+        else _snapshot(spark, out_path).schema
+    )
+    if table is None:
+        raise FileNotFoundError(
+            f"no table at {out_path}: the change-feed schema cannot be "
+            "derived before the first load lands data"
         )
-    df = spark.read.option("basePath", base).parquet(base)
-    return df.where(F.col("batch") > since_batch)
-
-
-def vacuum_change_feed(
-    spark: SparkSession, out_path: str, keep_batches: int
-) -> list[int]:
-    """Retention for the change feed: keep only the newest
-    ``keep_batches`` batch directories, delete the rest.
-
-    Feed batches otherwise accumulate forever (every merge adds one).
-    Batch ids stay monotone — vacuum never renumbers — so a subscriber's
-    high-water mark keeps working for the retained range; a subscriber
-    further behind than the retention window must re-bootstrap from the
-    table (the same contract as Delta CDF / Kafka retention).
-
-    Returns the deleted batch ids (driver-side directory ops only).
-
-    ``keep_batches`` must be >= 1: the newest batch directory is what
-    carries the monotone numbering forward (``_next_feed_batch`` reads
-    it) — deleting everything would silently restart ids at 1.
-    """
-    if keep_batches < 1:
-        raise ValueError("keep_batches must be >= 1")
-    fs, batches = _feed_batches(spark, out_path)
-    doomed = batches[: max(0, len(batches) - keep_batches)]
-    for _, path in doomed:
-        fs.delete(path, True)
-    return [b for b, _ in doomed]
+    schema = StructType(
+        table.fields
+        + [StructField(op_col, StringType()), StructField("version", IntegerType())]
+    )
+    last = man["version"] if man else 0
+    files = [
+        f
+        for v in manifest_mod.list_versions(spark, out_path)
+        if since_version < v <= last
+        for f in manifest_mod.read_version(spark, out_path, v).get("feed_files", [])
+    ]
+    if not files:
+        return spark.createDataFrame([], schema)
+    feed_dir = f"{out_path.rstrip('/')}/{manifest_mod.CHANGE_FEED_DIR}"
+    return manifest_mod.read_files(spark, feed_dir, files, schema)

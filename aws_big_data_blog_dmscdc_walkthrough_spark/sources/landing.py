@@ -27,6 +27,7 @@ columns, not only the first file's.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,26 +65,26 @@ def _fs_and_path(spark: SparkSession, uri: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
-def _list_dirs(spark: SparkSession, uri: str) -> list[str]:
-    fs, path = _fs_and_path(spark, uri)
-    if not fs.exists(path):
-        return []
-    return sorted(
-        s.getPath().toString()
-        for s in fs.listStatus(path)
-        if s.isDirectory()
+def glob_status(spark: SparkSession, root: str, pattern: str) -> list[tuple[str, bool]]:
+    """(path, is a directory) of every entry under ``root`` that the
+    Hadoop glob ``pattern`` matches, sorted by path; ``pattern`` matches
+    entries at one depth. ``listStatus`` of a file path lists the file
+    itself, so one ``listStatus`` of every match tells the files from
+    the directories, and the paths cross py4j as one string each way:
+    the round trips do not grow with the entry count, as a per-entry
+    ``isDirectory``/``getPath`` walk's do. (``FileStatus.toString``
+    would carry the kind too, but on the local file system it loads
+    permissions, a process per entry.)"""
+    jvm = spark._jvm
+    path = _jclass(jvm, "org.apache.hadoop.fs.Path")(
+        re.sub(r"([\\*?\[\]{}])", r"\\\1", root.rstrip("/")) + "/" + pattern
     )
-
-
-def _list_files(spark: SparkSession, uri: str) -> list[str]:
-    fs, path = _fs_and_path(spark, uri)
-    if not fs.exists(path):
-        return []
-    return sorted(
-        s.getPath().toString()
-        for s in fs.listStatus(path)
-        if s.isFile()
-    )
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    as_seq = _jclass(jvm, "scala.collection.immutable.ArraySeq.unsafeWrapArray")
+    to_paths = _jclass(jvm, "org.apache.hadoop.fs.FileUtil.stat2Paths")
+    found = to_paths(fs.globStatus(path))
+    files = set(as_seq(to_paths(fs.listStatus(found))).mkString("\n").split("\n"))
+    return sorted((p, p not in files) for p in as_seq(found).mkString("\n").split("\n") if p)
 
 
 def file_mtime(spark: SparkSession, uri: str) -> int:
@@ -95,23 +96,31 @@ def file_mtime(spark: SparkSession, uri: str) -> int:
 
 
 def discover_tables(spark: SparkSession, root: str) -> list[TableFolder]:
-    """Walk <root>/<schema>/<table>/ and classify each table's files."""
+    """Walk <root>/<schema>/<table>/ and classify each table's files.
+
+    Two globs list the table folders and the entries inside them, at a
+    cost that does not grow with the file count; a subfolder of a table
+    folder (DMS ``DatePartitionEnabled``) is not a CDC file."""
+    files: dict[str, list[str]] = {
+        p: [] for p, is_dir in glob_status(spark, root, "*/*") if is_dir
+    }
+    for p, is_dir in glob_status(spark, root, "*/*/*"):
+        parent = p.rsplit("/", 1)[0]
+        if not is_dir and parent in files:  # a folder made between the globs waits
+            files[parent].append(p)
     tables = []
-    for schema_dir in _list_dirs(spark, root):
-        schema = schema_dir.rstrip("/").rsplit("/", 1)[-1]
-        for table_dir in _list_dirs(spark, schema_dir):
-            table = table_dir.rstrip("/").rsplit("/", 1)[-1]
-            files = _list_files(spark, table_dir)
-            names = [(f, f.rsplit("/", 1)[-1]) for f in files]
-            tables.append(
-                TableFolder(
-                    schema=schema,
-                    table=table,
-                    path=table_dir,
-                    initial_files=[f for f, n in names if n.startswith("LOAD")],
-                    incremental_files=[f for f, n in names if n.startswith("2")],
-                )
+    for table_dir in sorted(files, key=lambda p: p.rsplit("/", 2)[-2:]):
+        schema, table = table_dir.rsplit("/", 2)[-2:]
+        names = [(f, f.rsplit("/", 1)[-1]) for f in files[table_dir]]
+        tables.append(
+            TableFolder(
+                schema=schema,
+                table=table,
+                path=table_dir,
+                initial_files=[f for f, n in names if n.startswith("LOAD")],
+                incremental_files=[f for f, n in names if n.startswith("2")],
             )
+        )
     return tables
 
 

@@ -21,7 +21,9 @@ idea:
 Every ``lake_writer`` write (initial load, append, copy-on-write merge,
 merge-on-read, compaction) commits here. A table with no
 manifest yet reads as a plain directory and is adopted by its first
-write.
+write. A merge's change feed commits here too: its version lists the
+feed files it wrote under ``_change_feed/version=N/`` (``feed_files``),
+so a feed batch is a table version, and is retained as long as it.
 
 Every commit also records the table schema (``schema_json``). Every
 reader reads the listed files in it (``table_schema``, ``read_files``),
@@ -53,6 +55,7 @@ from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_mmanifest.json"
 DELETES_DIR = "_deletes"
+CHANGE_FEED_DIR = "_change_feed"
 DV_FILE_COL = "_dv_file"
 DV_POS_COL = "_dv_pos"
 
@@ -280,6 +283,7 @@ def commit_manifest(
     partition_keys: list[str] | None = None,
     properties: dict | None = None,
     expected_base_version: int | None = None,
+    feed_files: list[str] | None = None,
 ) -> int:
     """Atomically publish the live-file list; returns the new version.
 
@@ -328,6 +332,10 @@ def commit_manifest(
     DV-commit time, it is what makes carry-forward pruning possible.
     Unknown targets keep the DV forever (conservative; harmless because
     the anti-join matches nothing once the data files are gone).
+
+    ``feed_files`` (change-feed files under ``_change_feed/``, relative
+    to it) are this version's own change rows; unlike every other field
+    they are never carried forward.
     """
     prev = read_manifest(spark, path)
     if expected_base_version is not None:
@@ -377,6 +385,8 @@ def commit_manifest(
         doc["delete_files"] = sorted(delete_files)
     if targets_doc:
         doc["dv_targets"] = targets_doc
+    if feed_files:
+        doc["feed_files"] = sorted(feed_files)
     payload = json.dumps(doc, sort_keys=True).encode("utf-8")
     Path, fs = _fs(spark, path)
     tmp = Path(
@@ -441,7 +451,9 @@ def list_versions(spark: SparkSession, path: str) -> list[int]:
     return sorted(out)
 
 
-def _read_json_file(spark: SparkSession, uri: str) -> dict:
+def read_version(spark: SparkSession, path: str, version: int) -> dict:
+    """The manifest committed as ``version``, from its history entry."""
+    uri = _history_path(path, version)
     Path, fs = _fs(spark, uri)
     return _read_json(spark, fs, Path(uri))
 
@@ -557,7 +569,7 @@ def read_table(
     and data-column stats prune within the surviving partitions.
     """
     if version is not None:
-        man = _read_json_file(spark, _history_path(path, version))
+        man = read_version(spark, path, version)
     else:
         man = read_manifest(spark, path)
     if man is None:
@@ -807,6 +819,11 @@ def vacuum(
     writes are unlisted everywhere, so they always go). Returns the
     data-file basenames removed.
 
+    The change feed is retained with the versions: every
+    ``_change_feed/`` directory in which no retained version lists a
+    feed file goes whole (an expired version's, a crashed attempt's, a
+    legacy ``batch=N`` one).
+
     ``grace_seconds`` (Delta/Iceberg-style retention threshold): files
     YOUNGER than this are never deleted even when unlisted — they may
     be the staged output of an in-flight merge that has appended its
@@ -818,17 +835,15 @@ def vacuum(
     if man is None:
         return []
     versions = list_versions(spark, path)
-    keep = set(versions[-max(retain_versions, 1):]) | {man["version"]}
-    live: set[str] = set(man["files"])
-    live_dv: set[str] = set(man.get("delete_files") or [])
+    kept = versions[-max(retain_versions, 1):]
+    keep = set(kept) | {man["version"]}
+    # a retained version whose entry cannot be read fails the vacuum:
+    # skipping it would delete the files it lists
+    docs = [man, *(read_version(spark, path, v) for v in kept)]
+    live = {f for d in docs for f in d["files"]}
+    live_dv = {f for d in docs for f in d.get("delete_files") or []}
+    live_feed = {f for d in docs for f in d.get("feed_files") or []}
     Path, fs = _fs(spark, path)
-    for v in sorted(keep):
-        try:
-            doc = _read_json_file(spark, _history_path(path, v))
-            live |= set(doc["files"])
-            live_dv |= set(doc.get("delete_files") or [])
-        except Exception:
-            pass  # history entry may predate retention or be gone
     now_ms = int(_time.time() * 1000)
 
     def _old_enough(p) -> bool:
@@ -851,6 +866,13 @@ def vacuum(
             if _old_enough(target):
                 fs.delete(target, False)
                 removed.append(DELETES_DIR + "/" + name)
+    feed_root = Path(f"{base}/{CHANGE_FEED_DIR}")
+    feed_dirs = {f.split("/", 1)[0] for f in live_feed}
+    for status in fs.listStatus(feed_root) if fs.exists(feed_root) else []:
+        name = status.getPath().getName()
+        if name not in feed_dirs and _old_enough(status.getPath()):
+            fs.delete(status.getPath(), True)
+            removed.append(f"{CHANGE_FEED_DIR}/{name}")
     for v in versions:
         if v not in keep:
             fs.delete(Path(_history_path(path, v)), False)

@@ -78,7 +78,8 @@ class TableState:
 
     @property
     def change_feed(self) -> bool:
-        """Publish each merge's collapsed changes to _change_feed/."""
+        """Commit each merge's collapsed changes with it, as that table
+        version's change feed (``lake_writer.read_change_feed``)."""
         return self._flag(self.extra.get("change_feed", False))
 
     @property

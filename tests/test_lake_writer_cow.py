@@ -360,26 +360,27 @@ def test_merge_rewrite_scales_out_past_one_open_cost(
     assert got == sorted(rows.values())
 
 
-def test_change_feed_publishes_and_filters_batches(spark, tmp_path):
-    from pyspark.sql import functions as F
+def _feed_batch(spark, rows):
+    return spark.createDataFrame(rows, "op string, _seq long, id long, name string")
 
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
+
+def test_change_feed_publishes_and_filters_batches(spark, tmp_path):
+    """Each ``change_feed`` merge publishes its collapsed batch as its
+    table version's feed files, and a subscribe after version v reads
+    exactly the files the later versions list."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
 
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a"), ("I", 1, 2, "b")], "op string, _seq long, id long, name string"
+    b1 = _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")])
+    b2 = _feed_batch(
+        spark, [("U", 2, 1, "a2"), ("D", 2, 2, None), ("U", 3, 2, "zz"), ("I", 2, 3, "c")]
     )
-    b2 = spark.createDataFrame(
-        [("U", 2, 1, "a2"), ("D", 2, 2, None), ("U", 3, 2, "zz"), ("I", 2, 3, "c")],
-        "op string, _seq long, id long, name string",
-    )
-    n1 = lake_writer.append_change_feed(spark, b1, out, ["id"])
-    n2 = lake_writer.append_change_feed(spark, b2, out, ["id"])
-    assert (n1, n2) == (1, 2)
+    lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
+    lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
 
     feed = lake_writer.read_change_feed(spark, out)
-    rows = {(r.batch, r.id): (r.op, r.name) for r in feed.collect()}
-    # batch 2 collapsed: id=2's D(seq2) loses to U(seq3) -> latest wins
+    rows = {(r.version, r.id): (r.op, r.name) for r in feed.collect()}
+    # version 2 collapsed: id=2's D(seq2) loses to U(seq3) -> latest wins
     assert rows == {
         (1, 1): ("I", "a"),
         (1, 2): ("I", "b"),
@@ -387,176 +388,173 @@ def test_change_feed_publishes_and_filters_batches(spark, tmp_path):
         (2, 2): ("U", "zz"),
         (2, 3): ("I", "c"),
     }
-    # incremental subscribe: only unconsumed batches are read, and the
-    # since-filter is a partition predicate (directory-level pruning)
-    tail = lake_writer.read_change_feed(spark, out, since_batch=1)
-    assert {r.batch for r in tail.collect()} == {2}
-    plan = tail._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan
+    # incremental subscribe: only the files later versions list are read
+    tail = lake_writer.read_change_feed(spark, out, since_version=1)
+    assert {r.version for r in tail.collect()} == {2}
+    listed = manifest.read_version(spark, out, 2)["feed_files"]
+    assert listed
+    assert sorted(manifest.relative_name(f, 1) for f in tail.inputFiles()) == listed
 
 
 def test_merge_incremental_emits_change_feed(spark, tmp_path):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a"), ("I", 1, 2, "b")], "op string, _seq long, id long, name string"
-    )
+    b1 = _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")])
     lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
-    b2 = spark.createDataFrame(
-        [("U", 2, 1, "a2")], "op string, _seq long, id long, name string"
-    )
+    b2 = _feed_batch(spark, [("U", 2, 1, "a2")])
     lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
     # table state and feed agree
     assert {r.id: r.name for r in spark.read.parquet(out).select("id", "name").collect()} == {
         1: "a2", 2: "b"
     }
     feed = lake_writer.read_change_feed(spark, out)
-    assert {(r.batch, r.id, r.op) for r in feed.collect()} == {
+    assert {(r.version, r.id, r.op) for r in feed.collect()} == {
         (1, 1, "I"), (1, 2, "I"), (2, 1, "U")
     }
+
+
+def test_feed_merge_crashed_at_commit_publishes_each_change_once(spark, tmp_path, monkeypatch):
+    """A ``change_feed`` merge whose manifest commit raises and is rerun
+    publishes each change once, at the version whose commit applied it;
+    a crashed merge that is never rerun publishes nothing."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    commit = manifest.commit_manifest
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(manifest, "commit_manifest", commit)
+        raise RuntimeError("commit lost")
+
+    out = str(tmp_path / "t")
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")]), out, ["id"],
+        change_feed=True,
+    )
+    update = _feed_batch(spark, [("U", 2, 1, "a2")])
+    delete = _feed_batch(spark, [("D", 3, 2, None)])
+    for batch, rerun in ((update, True), (delete, False)):
+        monkeypatch.setattr(manifest, "commit_manifest", crash_once)
+        with pytest.raises(RuntimeError, match="commit lost"):
+            lake_writer.merge_incremental(spark, batch, out, ["id"], change_feed=True)
+        if rerun:
+            lake_writer.merge_incremental(spark, batch, out, ["id"], change_feed=True)
+
+    assert manifest.read_manifest(spark, out)["version"] == 2
+    applied = manifest.read_table(spark, out, version=2)
+    assert sorted((r.id, r.name) for r in applied.collect()) == [(1, "a2"), (2, "b")]
+    feed = lake_writer.read_change_feed(spark, out).collect()
+    assert sorted((r.id, r.op, r.name) for r in feed) == [
+        (1, "I", "a"), (1, "U", "a2"), (2, "I", "b")
+    ]
+    assert sorted((r.version, r.id) for r in feed) == [(1, 1), (1, 2), (2, 1)]
 
 
 def test_read_change_feed_before_first_batch_is_empty(spark, tmp_path):
     """A subscriber polling before the first change_feed=True merge gets
     an empty frame in the feed's shape, not PATH_NOT_FOUND."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a")], "op string, _seq long, id long, name string"
-    )
-    lake_writer.merge_incremental(spark, b1, out, ["id"])  # no feed
+    lake_writer.merge_incremental(spark, _feed_batch(spark, [("I", 1, 1, "a")]), out, ["id"])
     feed = lake_writer.read_change_feed(spark, out)
     assert feed.count() == 0
-    assert {"id", "name", "op", "batch"} <= set(feed.columns)
+    assert {"id", "name", "op", "version"} <= set(feed.columns)
 
 
 def test_compact_preserves_change_feed_sidecar(spark, tmp_path):
-    """compact_table must leave the _change_feed sidecar intact — and
-    batch numbering must continue, not restart, afterwards."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
+    """compact_table leaves the change feed intact: a compaction is a
+    version with no feed, and the feed goes on at the next merge's
+    version."""
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a"), ("I", 1, 2, "b")], "op string, _seq long, id long, name string"
-    )
+    b1 = _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")])
     lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
-    b2 = spark.createDataFrame(
-        [("U", 2, 1, "a2")], "op string, _seq long, id long, name string"
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("U", 2, 1, "a2")]), out, ["id"], change_feed=True
     )
-    lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
 
-    lake_writer.compact_table(spark, out)
+    lake_writer.compact_table(spark, out)  # version 3
 
     # feed survived the compaction; table data intact
     feed = lake_writer.read_change_feed(spark, out)
-    assert {r.batch for r in feed.collect()} == {1, 2}
+    assert {r.version for r in feed.collect()} == {1, 2}
     assert {r.id: r.name for r in spark.read.parquet(out).select("id", "name").collect()} == {
         1: "a2", 2: "b"
     }
-    # numbering continues after compaction (no high-water-mark skip)
-    b3 = spark.createDataFrame(
-        [("I", 3, 3, "c")], "op string, _seq long, id long, name string"
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("I", 3, 3, "c")]), out, ["id"], change_feed=True
     )
-    lake_writer.merge_incremental(spark, b3, out, ["id"], change_feed=True)
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2, 3}
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2, 4}
 
 
-@pytest.mark.slow
 def test_vacuum_change_feed_retention(spark, tmp_path):
-    import pytest
+    """Feed retention is version retention: ``manifest.vacuum`` deletes
+    the feed files of the versions it expires, and of a legacy
+    ``batch=N`` directory, once they are past the grace period; the
+    retained versions' feed stays readable."""
+    import os
 
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
 
     out = str(tmp_path / "t")
-    for seq, (op, rid, name) in enumerate(
-        [("I", 1, "a"), ("U", 1, "b"), ("U", 1, "c"), ("U", 1, "d")], start=1
-    ):
-        b = spark.createDataFrame(
-            [(op, seq, rid, name)], "op string, _seq long, id long, name string"
+    for seq, (op, name) in enumerate([("I", "a"), ("U", "b"), ("U", "c")], start=1):
+        lake_writer.merge_incremental(
+            spark, _feed_batch(spark, [(op, seq, 1, name)]), out, ["id"], change_feed=True
         )
-        lake_writer.merge_incremental(spark, b, out, ["id"], change_feed=True)
+    feed_dir = f"{out}/{manifest.CHANGE_FEED_DIR}"
+    spark.createDataFrame([(1,)], "id long").write.parquet(f"{feed_dir}/batch=1")
 
-    removed = lake_writer.vacuum_change_feed(spark, out, keep_batches=2)
-    assert removed == [1, 2]
-    # retained range still serves incremental subscribes
-    tail = lake_writer.read_change_feed(spark, out, since_batch=2)
-    assert {(r.batch, r.name) for r in tail.collect()} == {(3, "c"), (4, "d")}
-    # numbering continues from the retained high-water mark
-    b5 = spark.createDataFrame(
-        [("U", 5, 1, "e")], "op string, _seq long, id long, name string"
-    )
-    lake_writer.merge_incremental(spark, b5, out, ["id"], change_feed=True)
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out, since_batch=2).collect()} == {3, 4, 5}
-    with pytest.raises(ValueError):
-        lake_writer.vacuum_change_feed(spark, out, keep_batches=0)
+    manifest.vacuum(spark, out, retain_versions=2)  # all younger than the grace
+    assert sorted(os.listdir(feed_dir)) == ["batch=1", "version=1", "version=2", "version=3"]
+    manifest.vacuum(spark, out, retain_versions=2, grace_seconds=0)
+    assert manifest.list_versions(spark, out) == [2, 3]
+    assert sorted(os.listdir(feed_dir)) == ["version=2", "version=3"]
+    tail = lake_writer.read_change_feed(spark, out, since_version=1)
+    assert {(r.version, r.name) for r in tail.collect()} == {(2, "b"), (3, "c")}
+    assert lake_writer.read_change_feed(spark, out).count() == 2
 
 
 def test_change_feed_on_append_only_table(spark, tmp_path):
     """A no-primary-key (append-only) table with change_feed=True must
-    publish batches too — not silently skip the feed."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
+    publish its inserts too — not silently skip the feed."""
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a"), ("I", 1, 2, "b")], "op string, _seq long, id long, name string"
-    )
+    b1 = _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")])
     lake_writer.merge_incremental(spark, b1, out, primary_keys=[], change_feed=True)
-    b2 = spark.createDataFrame(
-        [("I", 2, 3, "c")], "op string, _seq long, id long, name string"
-    )
+    b2 = _feed_batch(spark, [("I", 2, 3, "c")])
     lake_writer.merge_incremental(spark, b2, out, primary_keys=[], change_feed=True)
     feed = lake_writer.read_change_feed(spark, out)
-    assert {(r.batch, r.id) for r in feed.collect()} == {(1, 1), (1, 2), (2, 3)}
+    assert {(r.version, r.id) for r in feed.collect()} == {(1, 1), (1, 2), (2, 3)}
     assert spark.read.parquet(out).count() == 3
 
 
 def test_write_initial_preserves_change_feed_sidecar(spark, tmp_path):
-    """A full reload must leave the _change_feed sidecar in place:
-    losing it restarts batch numbering at 1 and subscribers holding a
-    high-water mark silently skip every later batch."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
+    """A full reload is one more version with no feed: the feed versions
+    before it stay readable, and a subscriber's high-water mark keeps
+    working past it."""
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a"), ("I", 1, 2, "b")], "op string, _seq long, id long, name string"
-    )
+    b1 = _feed_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")])
     lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
-    b2 = spark.createDataFrame(
-        [("U", 2, 1, "a2")], "op string, _seq long, id long, name string"
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("U", 2, 1, "a2")]), out, ["id"], change_feed=True
     )
-    lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
 
-    # full reload supersedes every live data file
+    # full reload supersedes every live data file (version 3)
     reload_df = spark.createDataFrame([(1, "r1"), (3, "r3")], "id long, name string")
     lake_writer.write_initial(reload_df, out)
     assert {r.name for r in spark.read.parquet(out).select("name").collect()} == {
         "r1", "r3"
     }
 
-    # the feed survived and numbering continues past the reload
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2}
-    b3 = spark.createDataFrame(
-        [("U", 3, 3, "r3b")], "op string, _seq long, id long, name string"
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2}
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("U", 3, 3, "r3b")]), out, ["id"], change_feed=True
     )
-    lake_writer.merge_incremental(spark, b3, out, ["id"], change_feed=True)
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {
-        1, 2, 3
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {
+        1, 2, 4
     }
-    # a subscriber at high-water mark 2 sees exactly the post-reload batch
-    tail = lake_writer.read_change_feed(spark, out, since_batch=2)
-    assert {(r.batch, r.id, r.name) for r in tail.collect()} == {(3, 3, "r3b")}
+    # a subscriber at high-water mark 2 sees exactly the post-reload change
+    tail = lake_writer.read_change_feed(spark, out, since_version=2)
+    assert {(r.version, r.id, r.name) for r in tail.collect()} == {(4, 3, "r3b")}
 
 
 def test_write_initial_partitioned_preserves_sidecar(spark, tmp_path):
     """Same on a partitioned reload."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
     out = str(tmp_path / "t")
     b1 = spark.createDataFrame(
         [("I", 1, 1, "a", 10), ("I", 1, 2, "b", 20)],
@@ -567,23 +565,18 @@ def test_write_initial_partitioned_preserves_sidecar(spark, tmp_path):
     )
     reload_df = spark.createDataFrame([(1, "a", 11)], "id long, dept string, v int")
     lake_writer.write_initial(reload_df, out, partition_keys=["dept"])
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
 
 
 def test_ineligible_batch_never_reaches_feed(spark, tmp_path):
-    """A batch the merge permanently rejects (type change on an existing
-    column) must fail BEFORE the write-ahead feed publish — otherwise
-    every retry appends another duplicate feed batch for a merge that
-    can never commit."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
+    """A batch the merge permanently rejects (a type change on an
+    existing column) raises before anything is appended, so no feed
+    version holds it; a batch missing its op/seq columns is rejected as
+    input."""
     out = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [("I", 1, 1, "a")], "op string, _seq long, id long, name string"
+    lake_writer.merge_incremental(
+        spark, _feed_batch(spark, [("I", 1, 1, "a")]), out, ["id"], change_feed=True
     )
-    lake_writer.merge_incremental(spark, b1, out, ["id"], change_feed=True)
 
     bad = spark.createDataFrame(
         [("U", 2, 1, 99)], "op string, _seq long, id long, name long"
@@ -591,22 +584,17 @@ def test_ineligible_batch_never_reaches_feed(spark, tmp_path):
     with pytest.raises(ValueError, match="additive-only"):
         lake_writer.merge_incremental(spark, bad, out, ["id"], change_feed=True)
     # the feed holds ONLY the eligible batch
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
 
-    # a batch missing op/seq columns is likewise rejected pre-publish
     no_op = spark.createDataFrame([(1, "x")], "id long, name string")
     with pytest.raises(ValueError, match="missing required column"):
         lake_writer.merge_incremental(spark, no_op, out, ["id"], change_feed=True)
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1}
 
 
 def test_read_change_feed_no_table_raises_clearly(spark, tmp_path):
     """Polling a brand-new path (no table data at all) raises a clear
     error, not a raw PATH_NOT_FOUND from the schema-derivation read."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
     with pytest.raises(FileNotFoundError, match="no table at"):
         lake_writer.read_change_feed(spark, str(tmp_path / "never_written"))
 
@@ -662,7 +650,7 @@ def test_failed_reload_keeps_previous_version(spark, tmp_path):
     assert rows(manifest.read_table(spark, out)) == before
     assert rows(spark.read.parquet(out)) == before
     feed = lake_writer.read_change_feed(spark, out)
-    assert {(r.batch, r.id) for r in feed.collect()} == {(1, i) for i in range(100)}
+    assert {(r.version, r.id) for r in feed.collect()} == {(1, i) for i in range(100)}
 
     lake_writer.write_initial(reload_df, out)
     after = [(i, f"r{i}") for i in range(100)]
@@ -745,13 +733,10 @@ def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
 
 
 def test_precheck_sees_evolved_columns_across_footers(spark, tmp_path):
-    """The feed precheck checks against the recorded table schema, as the
-    commit does: a type change on an additively-evolved column (present
-    only in newer footers) must be rejected BEFORE the feed publish."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer
-
+    """The commit checks a batch against the recorded table schema: a
+    type change on an additively-evolved column (present only in newer
+    footers) is rejected before anything is appended, the feed
+    included."""
     out = str(tmp_path / "t")
     b1 = spark.createDataFrame(
         [("I", 1, 1, "a")], "op string, _seq long, id long, name string"
@@ -763,14 +748,14 @@ def test_precheck_sees_evolved_columns_across_footers(spark, tmp_path):
         "op string, _seq long, id long, name string, email string",
     )
     lake_writer.merge_incremental(spark, b2, out, ["id"], change_feed=True)
-    # type CHANGE on the evolved column: must fail pre-publish
+    # type CHANGE on the evolved column: must fail before the append
     bad = spark.createDataFrame(
         [("U", 3, 2, "b2", 42)],
         "op string, _seq long, id long, name string, email long",
     )
     with pytest.raises(ValueError, match="additive-only"):
         lake_writer.merge_incremental(spark, bad, out, ["id"], change_feed=True)
-    assert {r.batch for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2}
+    assert {r.version for r in lake_writer.read_change_feed(spark, out).collect()} == {1, 2}
 
 
 def _rows(df):
@@ -889,6 +874,8 @@ def test_compaction_sizes_output_from_live_files_only(spark, tmp_path):
     df = spark.range(0, 3000).selectExpr(
         "id", "cast(id * 7919 % 10007 as string) as name"
     )
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
     requested = []
     for name, feed in (("plain", False), ("with_feed", True)):
         out = str(tmp_path / name)
@@ -896,7 +883,7 @@ def test_compaction_sizes_output_from_live_files_only(spark, tmp_path):
             df.where(f"id % 3 = {i}").coalesce(1).write.mode("append").parquet(out)
         if feed:
             spark.range(0, 20000).selectExpr("uuid() as u").coalesce(1).write.parquet(
-                f"{out}/{lake_writer.CHANGE_FEED_DIR}/batch=1"
+                f"{out}/{manifest.CHANGE_FEED_DIR}/version=1"
             )
         requested.append(
             lake_writer.compact_table(spark, out, target_file_bytes=16 * 1024)
@@ -984,8 +971,8 @@ def test_narrow_keyless_batch_keeps_recorded_column(spark, tmp_path):
     )
     v1, v2 = manifest.list_versions(spark, out)[-2:]
     assert (
-        manifest._read_json_file(spark, manifest._history_path(out, v1))["schema"]
-        == manifest._read_json_file(spark, manifest._history_path(out, v2))["schema"]
+        manifest.read_version(spark, out, v1)["schema"]
+        == manifest.read_version(spark, out, v2)["schema"]
     )
     recorded = json.loads(manifest.read_manifest(spark, out)["schema"])
     assert [f["name"] for f in recorded["fields"]] == loaded.columns

@@ -502,6 +502,30 @@ def test_vacuum_retention_expires_old_versions(spark, tmp_path):
         manifest.read_table(spark, out, version=1).collect()
 
 
+def test_vacuum_fails_rather_than_skip_an_unreadable_version(spark, tmp_path, monkeypatch):
+    """A retained version whose history entry cannot be read fails the
+    vacuum before anything is deleted: skipping it would reclaim the
+    files that version still lists."""
+    out = str(tmp_path / "t")
+    _init(spark, out)  # v1
+    lake_writer.merge_incremental(
+        spark, _changes(spark, [("U", 1, 1, "n1b")]), out, ["id"], retain_history=True,
+    )  # v2
+    read_version = manifest.read_version
+
+    def flaky(spark, path, version):
+        if version == 1:
+            raise OSError("transient read error")
+        return read_version(spark, path, version)
+
+    monkeypatch.setattr(manifest, "read_version", flaky)
+    with pytest.raises(OSError, match="transient"):
+        manifest.vacuum(spark, out, retain_versions=2, grace_seconds=0)
+    monkeypatch.undo()
+    got = {(r.id, r.name) for r in manifest.read_table(spark, out, version=1).collect()}
+    assert got == {(0, "n0"), (1, "n1"), (2, "n2")}
+
+
 # ---------------------------------------------------------- file skipping
 
 def _init_ranged(spark, path):

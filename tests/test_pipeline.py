@@ -147,9 +147,10 @@ def test_full_flow_with_manifest_and_feed_via_state_flags(spark, env):
     v2 = {r.id for r in manifest.read_table(spark, out).collect()}
     assert v1 == {1001, 1002, 1003} and v2 == {1001, 1003, 1004}
     # the change feed carries the collapsed batch (D tombstone visible)
+    # at the version the merge committed
     feed = lake_writer.read_change_feed(spark, out)
-    assert {(r.id, r.op) for r in feed.collect()} == {
-        (1001, "U"), (1002, "D"), (1004, "I")
+    assert {(r.version, r.id, r.op) for r in feed.collect()} == {
+        (2, 1001, "U"), (2, 1002, "D"), (2, 1004, "I")
     }
 
 
@@ -869,6 +870,48 @@ def test_landing_read_round_trips_do_not_grow_with_file_count(spark, tmp_path, m
     for batch in (files[:1], files):
         calls.clear()
         landing.read_incremental(spark, folder, batch)
+        counts.append(sum(calls))
+    assert counts[0] == counts[1], counts
+
+
+def test_discovery_round_trips_do_not_grow_with_file_count(spark, tmp_path, monkeypatch):
+    """Landing discovery costs the same py4j round trips for one CDC
+    file per table folder as for two hundred: one glob lists every
+    table folder and its entries, and they cross as one string. A
+    subfolder of a table folder is not a CDC file, and a table folder
+    with no files is still a table."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    def landing_root(name, n_files):
+        root = tmp_path / name
+        for table in ("a", "b"):
+            folder = root / "s" / table
+            (folder / "2024" / "01").mkdir(parents=True)
+            (folder / "LOAD00000001.parquet").write_bytes(b"")
+            for i in range(n_files):
+                (folder / f"20240101-{i:06d}.parquet").write_bytes(b"")
+        (root / "s" / "empty").mkdir()
+        return str(root)
+
+    roots = [landing_root("one", 1), landing_root("many", 200)]
+    tables = landing.discover_tables(spark, roots[1])  # resolve JVM classes once
+    assert [(t.schema, t.table, len(t.initial_files), len(t.incremental_files))
+            for t in tables] == [("s", "a", 1, 200), ("s", "b", 1, 200), ("s", "empty", 0, 0)]
+    assert tables[0].path == f"file:{roots[1]}/s/a"
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send = GatewayClient.send_command
+    calls = []
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(not command.startswith(release))
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    counts = []
+    for root in roots:
+        calls.clear()
+        landing.discover_tables(spark, root)
         counts.append(sum(calls))
     assert counts[0] == counts[1], counts
 

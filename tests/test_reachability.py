@@ -60,7 +60,7 @@ ENTRY_POINTS = {
     "operators.text.heavy_hitter_state_candidates": "readout of the state "
     "start_heavy_hitter_stream writes",
     "sources.lake_writer.read_change_feed": "subscriber side of the "
-    "controller's change_feed flag",
+    "controller's change_feed flag: the feed files committed versions list",
     "operators.text.poly_fingerprint": "reference implementation "
     "tests/test_text.py compares the live fingerprint against",
     "operators.dedup.incremental_minhash_pairs": "reference implementation "
