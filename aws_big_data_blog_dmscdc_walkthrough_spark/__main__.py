@@ -92,11 +92,11 @@ def _sql(args) -> int:
     """The reference README's "Query the data lake" step (Athena there)
     as one command: register every <schema>/<table> folder under the
     lake root in the session catalog, run the query, print JSON rows."""
-    from .sources import catalog, landing
+    from .sources import catalog, manifest
 
     spark = get_spark("dmscdc-sql")
     n_tables = 0
-    for path, is_dir in landing.glob_status(spark, args.lake, "*/*"):
+    for path, is_dir in manifest.glob_status(spark, args.lake, "*/*"):
         schema, table = path.rsplit("/", 2)[-2:]
         if is_dir and not any(n.startswith(("_", ".")) for n in (schema, table)):
             catalog.register_table(spark, path, schema, table)

@@ -3,11 +3,19 @@ jobs folded into one idempotent ``run_once`` pass.
 
 Flow per table (/root/reference/DMSCDC_ProcessTable.py):
   1. register unknown tables inactive (human sets keys + activates);
-  2. initial load if a LOAD file is newer than the stored mark;
-  3. incremental merge of files lexically after the stored high-water
-     mark, then advance the mark;
+  2. initial load if a LOAD file is newer than the table's load mark;
+  3. incremental merge of files lexically after the table's file mark;
   4. register the table in the catalog after a pass that wrote it, or
-     when the last such registration did not finish.
+     when the last such pass did not finish.
+
+The marks live in the table's manifest, not in the state store: each
+write commits its own (``txn``, app id ``landing.load`` for the LOAD
+file's mtime and ``landing`` for the last CDC file), so a crash after a
+commit cannot apply its files twice. The store holds operator intent
+(keys, ``active``, per-table options) and the ``catalog_pending`` flag;
+its ``last_full_load_ts``/``last_incremental_file`` fields are read
+only for a table whose manifest records no mark (a lake written before
+the marks moved), and never written.
 
 The reference fans out one Glue job per table
 (DMSCDC_Controller.py:91-94); here tables run on a thread pool sharing
@@ -24,8 +32,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import catalog, lake_writer, landing
+from ..sources import catalog, lake_writer, landing, manifest
 from ..state.store import JsonStateStore, TableState
+
+# the app ids under which a table's manifest records what it consumed
+LOAD_TXN = "landing.load"  # the mtime of the last LOAD file loaded
+CDC_TXN = "landing"  # the last CDC file merged
 
 
 @dataclass
@@ -106,11 +118,19 @@ def process_table(
         return report
 
     out_path = f"{lake_root.rstrip('/')}/{folder.schema}/{folder.table}"
+    marks = (manifest.read_manifest(spark, out_path) or {}).get("txn") or {}
+
+    def before_write() -> None:
+        # the flag is stored before the commit, so a pass that stops
+        # after it is finished (delete, registration) by the next pass
+        if not state.catalog_pending:
+            state.catalog_pending = True
+            store.put(state)
 
     # --- initial load (DMSCDC_ProcessTable.py:104-132)
     if folder.initial_files:
         load_ts = max(landing.file_mtime(spark, f) for f in folder.initial_files)
-        if load_ts > state.last_full_load_ts:
+        if load_ts > marks.get(LOAD_TXN, state.last_full_load_ts):
             if upto_file is not None:
                 # A consistent cut cannot include a fresh full-load
                 # snapshot: LOAD files carry no commit-time name, so
@@ -122,21 +142,19 @@ def process_table(
                 report.skipped = True
                 return report
             df = landing.read_initial(spark, folder, state.schema_ddl)
+            before_write()
+            # the file mark is kept: files at-or-before it stay
+            # consumed; files after it re-merge idempotently on top of
+            # the fresh snapshot (same as the reference's ordering)
             lake_writer.write_initial(
                 df, out_path, state.partition_keys, stats_cols=state.stats_cols,
-                retain_history=state.retain_history,
+                retain_history=state.retain_history, txn=(LOAD_TXN, load_ts),
             )
-            state.last_full_load_ts = load_ts
-            state.catalog_pending = True
-            # last_incremental_file is kept: files at-or-before the mark
-            # stay consumed; files after it re-merge idempotently on top
-            # of the fresh snapshot (same as the reference's ordering).
-            store.put(state)
             report.did_initial = True
 
     # --- incremental load (DMSCDC_ProcessTable.py:137-168)
     new_files = landing.new_incremental_files(
-        folder, state.last_incremental_file, upto_file
+        folder, marks.get(CDC_TXN, state.last_incremental_file), upto_file
     )
     if new_files:
         batch = landing.read_incremental(spark, folder, new_files, state.schema_ddl)
@@ -146,23 +164,24 @@ def process_table(
             batch = prepare_dms_batch(batch)
         else:
             batch = batch.withColumnRenamed("Op", "op")
+        before_write()
         lake_writer.merge_incremental(
             spark, batch, out_path, state.primary_keys, state.partition_keys,
             seq_col="_seq", op_col="op", retain_history=state.retain_history,
             stats_cols=state.stats_cols, change_feed=state.change_feed,
+            txn=(CDC_TXN, new_files[-1]),
         )
-        state.last_incremental_file = new_files[-1]
-        state.catalog_pending = True
-        store.put(state)
         report.incremental_files = len(new_files)
 
     if register_catalog and state.catalog_pending:
+        if not (report.did_initial or new_files or state.retain_history):
+            # the pass that raised the flag may have stopped between its
+            # commit and that commit's delete, and no commit is coming
+            lake_writer.delete_unlisted(spark, out_path)
         # the reference's crawler step: after data lands, (re-)register
         # the folder so SQL users query `schema.table` by name — the
-        # recreate also picks up schema and layout changes. The flag
-        # rides the state advance, so a pass that crashed before this
-        # point registers on the next pass, and an idle table pays
-        # nothing.
+        # recreate also picks up schema and layout changes. An idle
+        # table pays nothing.
         catalog.register_table(spark, out_path, folder.schema, folder.table)
         state.catalog_pending = False
         store.put(state)

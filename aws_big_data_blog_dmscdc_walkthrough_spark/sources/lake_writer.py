@@ -21,6 +21,13 @@ orphans go with the next commit. A table with no manifest yet (a plain
 ``df.write`` directory) is adopted on its first write from its directory
 listing.
 
+A write called with ``txn=(app_id, version)`` records that mark in its
+commit (``manifest.commit_manifest``). A write whose snapshot already
+records that version, or a later one, for the app id returns without
+writing, and a commit that carries a mark is made even when it changes
+no file: a caller's progress commits with the data, so a replayed batch
+is a no-op.
+
 The partition layout is the table's, not the caller's: every write
 appends in the keys the manifest records (or, for a directory not yet
 adopted, the ``k=v`` levels its files sit under). Only a write that
@@ -76,6 +83,7 @@ def write_initial(
     partition_keys: Sequence[str] = (),
     stats_cols: Sequence[str] = (),
     retain_history: bool = False,
+    txn: tuple[str, object] | None = None,
 ) -> None:
     """Full load (DMSCDC_LoadInitial.py:31-37) as one more commit
     (``_commit_write``) that supersedes every live file. Manifest readers
@@ -91,9 +99,11 @@ def write_initial(
     """
     spark = df.sparkSession
     snap = _snapshot(spark, out_path)
+    if _applied(snap, txn):
+        return
     _commit_write(
         spark, df, out_path, snap, partition_keys, superseded=set(snap.live),
-        stats_cols=stats_cols, retain_history=retain_history,
+        stats_cols=stats_cols, retain_history=retain_history, txn=txn,
     )
 
 
@@ -108,6 +118,7 @@ def merge_incremental(
     retain_history: bool = False,
     stats_cols: Sequence[str] = (),
     change_feed: bool = False,
+    txn: tuple[str, object] | None = None,
 ) -> None:
     """Apply a change batch to the lake table at ``out_path`` as one
     manifest commit (``_commit_write``).
@@ -138,10 +149,12 @@ def merge_incremental(
             else cdc.insert_only(changes, op_col)
         ).drop(seq_col)
     snap = _snapshot(spark, out_path)
+    if _applied(snap, txn):
+        return
     if primary_keys and snap.live:
         _merge_cow(
             spark, changes, out_path, primary_keys, seq_col, op_col, snap,
-            retain_history, stats_cols, feed,
+            retain_history, stats_cols, feed, txn,
         )
         return
     if primary_keys:
@@ -156,7 +169,7 @@ def merge_incremental(
     _commit_write(
         spark, out.drop(op_col, seq_col), out_path, snap,
         None if snap.live else partition_keys,
-        stats_cols=stats_cols, retain_history=retain_history, feed=feed,
+        stats_cols=stats_cols, retain_history=retain_history, feed=feed, txn=txn,
     )
 
 
@@ -169,6 +182,7 @@ def merge_on_read_incremental(
     op_col: str = cdc.OP_COL,
     stats_cols: Sequence[str] = (),
     partition_keys: Sequence[str] = (),
+    txn: tuple[str, object] | None = None,
 ) -> None:
     """Merge-on-read apply: position-delete the superseded rows, append
     the new row images, commit one manifest version — NO data-file
@@ -201,9 +215,12 @@ def merge_on_read_incremental(
     survivors = collapsed.where(F.col(op_col) != cdc.OP_DELETE).drop(op_col, seq_col)
 
     snap = _snapshot(spark, out_path)
+    if _applied(snap, txn):
+        return
     if not snap.live:
         _commit_write(
-            spark, survivors, out_path, snap, partition_keys, stats_cols=stats_cols
+            spark, survivors, out_path, snap, partition_keys,
+            stats_cols=stats_cols, txn=txn,
         )
         return
     if snap.manifest is None:
@@ -219,7 +236,8 @@ def merge_on_read_incremental(
     )
     hits = positions.join(keys, pks, "left_semi")
     _commit_write(
-        spark, survivors, out_path, snap, stats_cols=stats_cols, deletes=hits
+        spark, survivors, out_path, snap, stats_cols=stats_cols, deletes=hits,
+        txn=txn,
     )
 
 
@@ -236,55 +254,6 @@ def _pk_bucket_expr(primary_keys: Sequence[str], n_buckets: int):
     ).cast("int")
 
 
-def _seq_mark(v):
-    """A seq value that can ride the manifest's JSON high-water mark:
-    str or int only (bool excluded). Python and Spark order these the
-    way the guard needs (ints numerically; ASCII strings byte-wise —
-    the streaming path#rownum seq is ASCII by construction)."""
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, (str, int)):
-        return v
-    return None
-
-
-# Manifest property stamped ALONGSIDE scd2_seq_hwm whenever the mark is
-# written under the round-10+ maintenance rule (every fold — monotonic
-# or not — advances or removes it). A mark WITHOUT this flag is a
-# legacy pre-upgrade mark whose invariant induction has no base: a
-# pre-round-10 non-monotonic fold carried it forward stale, so it may
-# under-bound committed seqs and the monotonic fast path must not trust
-# it. Such marks are healed by one unpruned-history aggregate on the
-# next fold, after which the flag rides the commit (round-10 review).
-HWM_INVARIANT_FLAG = "scd2_hwm_invariant"
-
-
-def _history_seq_max(live_all: DataFrame):
-    """Max committed seq across the UNPRUNED history (open + closed
-    sides): the backfill aggregate that (re)establishes the hwm
-    invariant for legacy manifests and untrusted marks."""
-    return _seq_mark(
-        live_all.agg(
-            F.max(
-                F.greatest(
-                    F.col("valid_from_seq"),
-                    F.coalesce(
-                        F.col("valid_to_seq"), F.col("valid_from_seq")
-                    ),
-                )
-            ).alias("g")
-        ).first()["g"]
-    )
-
-
-def _merged_props(prev: dict, **updates) -> dict | None:
-    """Carried properties + non-None updates; None when both are empty
-    (commit_manifest then carries the previous manifest's forward)."""
-    out = dict(prev)
-    out.update({k: v for k, v in updates.items() if v is not None})
-    return out or None
-
-
 def scd2_merge_on_read(
     spark: SparkSession,
     changes: DataFrame,
@@ -294,7 +263,7 @@ def scd2_merge_on_read(
     op_col: str = cdc.OP_COL,
     bucket_partitions: int | None = None,
     stats_cols: Sequence[str] = (),
-    seq_monotonic: bool = False,
+    txn: tuple[str, object] | None = None,
 ) -> None:
     """Incremental SCD2 history maintenance with O(batch) writes.
 
@@ -329,7 +298,17 @@ def scd2_merge_on_read(
     commit — the first attempt's unlisted files go with the retry's
     commit) or no-ops (crash after).
 
-    Plan-shape note: the fold scans the live table TWICE — a
+    ``txn=(app_id, version)`` commits the caller's mark with the fold,
+    and a fold whose version the table already records returns without
+    writing. A fold whose app id has an EARLIER version recorded skips
+    the per-key guard scan: its batch is all fresh, because the caller
+    replays by version (Structured Streaming re-runs a batch id over the
+    same files) and each table has one writer, so its only history read
+    is the impacted open-version pass. A fold with no recorded entry (a
+    direct caller, the first fold after an upgrade) runs the exact
+    guard.
+
+    Plan-shape note: a guarded fold scans the live table TWICE — a
     column-pruned pass (pk + the two seqs) for the replay guard and a
     full-width pass for the impacted open versions. Fusing them into
     one persisted semi-join slice was tried and MEASURED WORSE on the
@@ -337,33 +316,6 @@ def scd2_merge_on_read(
     slice costs more than the second scan saves, because the guard's
     pass reads three thin columns while the cache materializes every
     column. Columnar pruning beats scan fusion here — keep two passes.
-
-    ``seq_monotonic=True`` (opt-in) declares that fold batches normally
-    arrive in seq order — the streaming history mode's shape (landing
-    file names lexically monotonic; cdc_stream.py docstring). The
-    replay guard then keeps a GLOBAL high-water mark in the manifest's
-    properties (``scd2_seq_hwm``): a batch whose min seq sorts strictly
-    ABOVE the mark is all-fresh by construction and skips the per-key
-    guard scan of the history entirely — the fold's only history read
-    is the impacted open-version pass. Every other batch (replays,
-    straddles, streams that are only per-key monotonic via disjoint
-    keys) takes the exact per-key guard, so the mark is purely an
-    optimization — a batch can never be silently dropped by a wrong
-    declaration, and full replays still no-op (the guard leaves nothing
-    fresh). The min/max aggregate doubles as the change-cache pin, so
-    the fast path costs no extra job. Only string/int seqs ride the
-    mark (JSON-stored; Python and Spark compare ASCII strings
-    identically — the streaming seq is an ASCII path#rownum); other seq
-    types silently use the per-key guard.
-
-    The mark's invariant — it upper-bounds EVERY committed seq — is
-    maintained by every fold, not just monotonic ones: a
-    ``seq_monotonic=False`` fold on a marked table advances the mark
-    over its batch (one tiny aggregate), and any fold whose batch seqs
-    can't be mark-compared REMOVES the mark instead of carrying it
-    stale. Without that, an interleaved non-monotonic backfill could
-    commit seqs above the mark and a later replay of that batch would
-    slip past the fast path and double-apply.
     """
     pks = list(primary_keys)
     if not pks:
@@ -371,25 +323,20 @@ def scd2_merge_on_read(
     part_keys = [PK_BUCKET_COL] if bucket_partitions else []
 
     snap = _snapshot(spark, out_path)
+    if _applied(snap, txn):
+        return
     if not snap.live:
         empty_target = changes.drop(op_col, seq_col).limit(0)
         folded = cdc.scd2_history(empty_target, changes, pks, seq_col, op_col)
-        props: dict = {}
+        props = None
         if bucket_partitions:
             folded = folded.withColumn(
                 PK_BUCKET_COL, _pk_bucket_expr(pks, bucket_partitions)
             )
-            props["bucket_partitions"] = int(bucket_partitions)
-        if seq_monotonic:
-            hi = _seq_mark(
-                changes.agg(F.max(F.col(seq_col)).alias("hi")).first()["hi"]
-            )
-            if hi is not None:
-                props["scd2_seq_hwm"] = hi
-                props[HWM_INVARIANT_FLAG] = 1
+            props = {"bucket_partitions": int(bucket_partitions)}
         _commit_write(
             spark, folded, out_path, snap, part_keys,
-            stats_cols=stats_cols, properties=props or None,
+            stats_cols=stats_cols, properties=props, txn=txn,
         )
         return
 
@@ -413,6 +360,7 @@ def scd2_merge_on_read(
             "would silently not apply; drop the argument (or rebuild the "
             "history bucketed)"
         )
+    props = None
     if bucketed:
         # layout invariant: the bucket of an appended row must match the
         # creation-time hash layout, or old open versions become
@@ -420,7 +368,8 @@ def scd2_merge_on_read(
         # misses their seqs). The count is recorded in the manifest at
         # creation; a legacy manifest without it gets it backfilled on
         # this fold's commit.
-        recorded = (man.get("properties") or {}).get("bucket_partitions")
+        props = dict(man.get("properties") or {})
+        recorded = props.get("bucket_partitions")
         if recorded is not None and int(recorded) != int(bucket_partitions):
             raise ValueError(
                 f"{out_path} was created with bucket_partitions="
@@ -428,6 +377,7 @@ def scd2_merge_on_read(
                 "PK-hash layout is fixed at creation — pass the recorded "
                 "value (or rewrite the history to re-bucket)"
             )
+        props["bucket_partitions"] = int(bucket_partitions)
 
     changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
     live = manifest_mod.read_table_with_positions(spark, out_path)
@@ -450,12 +400,6 @@ def scd2_merge_on_read(
             live = live.withColumn(
                 c, F.lit(None).cast(changes.schema[c].dataType)
             )
-    # pre-pruning view: the hwm backfill below must see EVERY bucket —
-    # an aggregate over the isin-pruned frame misses untouched buckets
-    # whose committed seqs may exceed this batch's, and a too-low mark
-    # would let a replayed committed batch through the fast path
-    # (double-apply)
-    live_all = live
     if bucketed:
         # bucket values derive from the batch's keys: a bounded isin
         # list (≤ n_buckets) that turns both scans below into
@@ -469,114 +413,17 @@ def scd2_merge_on_read(
             .collect()
         ]
         live = live.where(F.col(PK_BUCKET_COL).isin(buckets))
-    # replay guard. seq_monotonic first tries the global high-water
-    # mark: one tiny batch-side aggregate (which doubles as the change
-    # cache pin) decides full-replay no-op / all-fresh / fall back to
-    # the exact per-key guard scan (see docstring).
-    prev_props = dict(man.get("properties") or {})
-    hwm_new = None
-    drop_hwm = False
-    guard_skip = False
-    hi_m = None
-    prev_mark = prev_props.get("scd2_seq_hwm")
-    # TRUST GATE (round-11): only a mark stamped with the invariant
-    # flag was provably maintained under the every-fold rule. A legacy
-    # pre-upgrade mark may under-bound committed seqs (a pre-round-10
-    # non-monotonic fold carried it forward stale), so it must not
-    # enable the fast path and must be healed by the unpruned-history
-    # aggregate below before the flag rides this fold's commit.
-    hwm_trusted = prev_mark is not None and bool(
-        prev_props.get(HWM_INVARIANT_FLAG)
-    )
-    if not seq_monotonic and prev_mark is not None:
-        # INVARIANT: a recorded mark upper-bounds EVERY committed seq —
-        # the monotonic fast path trusts exactly that. A non-monotonic
-        # fold interleaved on a marked table (backfill job, mixed
-        # callers) must therefore advance the mark over its own batch,
-        # or REMOVE it when the batch's seqs aren't mark-comparable;
-        # carrying it stale would let a later replay of this very batch
-        # slip past the fast path and double-apply (round-10 review).
-        hi = _seq_mark(
-            changes.agg(F.max(F.col(seq_col)).alias("hi")).first()["hi"]
-        )
-        if hi is not None and type(hi) is type(prev_mark):
-            if hwm_trusted:
-                hwm_new = max(prev_mark, hi)
-            else:
-                # legacy mark: max(prev, hi) would carry a possibly
-                # too-low bound forever — heal it once from the full
-                # history, then the stamped flag skips this aggregate
-                # on every later fold
-                gm_m = _history_seq_max(live_all)
-                cands = [v for v in (gm_m, hi, prev_mark) if v is not None]
-                if all(type(v) is type(cands[0]) for v in cands):
-                    hwm_new = max(cands)
-                else:
-                    drop_hwm = True
-        else:
-            drop_hwm = True
-    if seq_monotonic:
-        prev_hwm = prev_mark
-        mm = changes.agg(
-            F.min(F.col(seq_col)).alias("lo"), F.max(F.col(seq_col)).alias("hi")
-        ).first()
-        lo_m, hi_m = _seq_mark(mm["lo"]), _seq_mark(mm["hi"])
-        comparable = (
-            hi_m is not None
-            and prev_hwm is not None
-            and hwm_trusted  # an unflagged legacy mark never fast-paths
-            and type(prev_hwm) is type(hi_m)
-        )
-        if comparable and lo_m > prev_hwm:
-            guard_skip = True  # strictly-after batch: every row is fresh
-            hwm_new = hi_m
-        # anything else — replays, straddles, a stream whose names are
-        # only PER-KEY monotonic (disjoint keys per batch) — takes the
-        # exact per-key guard below: the mark is an optimization, never
-        # a correctness gate, so a batch can never be silently dropped
-    if guard_skip:
-        fresh = changes  # already persisted; the agg above pinned it
-    else:
-        # per-key guard (column-pruned scan: pk + the two seqs). When a
-        # monotonic caller lands here (legacy pre-hwm manifest, or a
-        # straddling batch after a broken contract), also record the
-        # GLOBAL max seq across history ∪ batch so the mark becomes
-        # (or stays) a true upper bound for the next fold's fast path.
-        fresh = cdc.scd2_fresh_changes(live, changes, pks, seq_col).persist(
+    # replay guard: a batch after a version the caller already recorded
+    # is all fresh (see docstring); any other batch takes the exact
+    # per-key guard (column-pruned scan: pk + the two seqs)
+    guard_skip = _txn_seen(snap, txn) is not None
+    fresh = (
+        changes
+        if guard_skip
+        else cdc.scd2_fresh_changes(live, changes, pks, seq_col).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        if seq_monotonic:
-            # the mark must upper-bound EVERY committed seq. A prior
-            # TRUSTED mark already does (induction: EVERY flag-stamped
-            # fold — monotonic or not, see the non-monotonic
-            # maintenance above — advances or removes it; the flag IS
-            # the induction base), so max(prev, hi) suffices and the
-            # history aggregate is skipped. A legacy pre-hwm manifest,
-            # an UNFLAGGED mark (pre-upgrade writer — possibly stale-
-            # low, round-10 review), or an incomparable prior mark
-            # needs the backfill aggregate — and it runs over LIVE_ALL,
-            # the unpruned history: on a bucketed table the isin-pruned
-            # `live` misses untouched buckets (see live_all note above).
-            prev_m = prev_mark
-            gm_m = None
-            if (
-                prev_m is None
-                or not hwm_trusted
-                or (hi_m is not None and type(prev_m) is not type(hi_m))
-            ):
-                gm_m = _history_seq_max(live_all)
-            cands = [v for v in (gm_m, hi_m, prev_m) if v is not None]
-            if (
-                hi_m is not None
-                and cands
-                and all(type(v) is type(cands[0]) for v in cands)
-            ):
-                hwm_new = max(cands)
-            elif prev_m is not None:
-                # no sound new mark covers this batch (unmarkable seq
-                # type, or mixed types across folds): remove the stale
-                # one rather than leave a bound the fast path would trust
-                drop_hwm = True
+    )
     open_rows = None
     try:
         if not guard_skip and fresh.isEmpty():
@@ -615,27 +462,9 @@ def scd2_merge_on_read(
             appended = appended.withColumn(
                 PK_BUCKET_COL, _pk_bucket_expr(pks, bucket_partitions)
             )
-        # merge into the carried properties: bucket count validated
-        # against the recorded value above (also backfills legacy
-        # pre-guard manifests), the seq high-water mark advanced by
-        # this fold's batch — or REMOVED when no sound bound exists
-        # (an empty dict, unlike None, tells commit_manifest to write
-        # no properties rather than carry the stale ones forward)
-        props = _merged_props(
-            prev_props,
-            bucket_partitions=(int(bucket_partitions) if bucketed else None),
-            scd2_seq_hwm=hwm_new,
-            # every mark written here was maintained (or healed) under
-            # the every-fold rule — stamp the trust flag with it
-            **({HWM_INVARIANT_FLAG: 1} if hwm_new is not None else {}),
-        )
-        if drop_hwm:
-            props = dict(props or {})
-            props.pop("scd2_seq_hwm", None)
-            props.pop(HWM_INVARIANT_FLAG, None)
         _commit_write(
             spark, appended, out_path, snap, stats_cols=stats_cols,
-            properties=props, deletes=open_rows,
+            properties=props, deletes=open_rows, txn=txn,
         )
     finally:
         fresh.unpersist()
@@ -670,6 +499,30 @@ def _snapshot(spark: SparkSession, out_path: str) -> _Snapshot:
     )
 
 
+def _txn_seen(snap: _Snapshot, txn: tuple[str, object] | None):
+    """The version ``snap`` records for ``txn``'s app id (None: none)."""
+    return ((snap.manifest or {}).get("txn") or {}).get(txn[0]) if txn else None
+
+
+def _applied(snap: _Snapshot, txn: tuple[str, object] | None) -> bool:
+    """Whether ``snap`` already records ``txn``'s version, or a later
+    one, for its app id: that write committed, and its replay is a no-op."""
+    seen = _txn_seen(snap, txn)
+    return seen is not None and seen >= txn[1]
+
+
+def delete_unlisted(spark: SparkSession, out_path: str) -> None:
+    """Finish a commit whose delete step did not run: delete every data
+    file in the table directory that the committed version does not list
+    (``_commit_write``'s last step). A crash between a commit and its
+    delete leaves those files until the table's next commit; a caller
+    that knows no commit is coming (the controller, for a table whose
+    last pass stopped after committing) finishes it here."""
+    snap = _snapshot(spark, out_path)
+    if snap.manifest is not None:
+        manifest_mod.delete_data_files(spark, out_path, snap.listed.difference(snap.live))
+
+
 def _commit_write(
     spark: SparkSession,
     df: DataFrame,
@@ -682,6 +535,7 @@ def _commit_write(
     properties: dict | None = None,
     deletes: DataFrame | None = None,
     feed: DataFrame | None = None,
+    txn: tuple[str, object] | None = None,
 ) -> None:
     """The one commit protocol: append ``df`` beside the live files,
     commit (live − ``superseded``) + the appended files as the next
@@ -711,8 +565,13 @@ def _commit_write(
     overlapped). ``list_data_files`` skips ``_deletes/``, so a staged
     deletion vector is never taken for an appended data file. A
     ``deletes`` version that would add neither a data file nor a delete
-    file and sets no ``properties`` (an empty merge-on-read batch) would
-    equal the previous one, and is not committed.
+    file and sets no ``properties`` or ``txn`` (an empty merge-on-read
+    batch from a caller that records no mark) would equal the previous
+    one, and is not committed.
+
+    ``txn`` (app id, version) is recorded in the version's ``txn`` map
+    (``manifest.commit_manifest``), so the caller's progress commits
+    with the data.
 
     ``feed`` (a merge's collapsed change rows) is written after the
     append, with mode ``overwrite``, to ``_change_feed/version=N/``,
@@ -756,7 +615,9 @@ def _commit_write(
         delete_files = snap.manifest.get("delete_files", []) + added_dv
     after = manifest_mod.list_data_files(spark, out_path, recursive=True)
     added = [f for f in after if f not in snap.listed]
-    if deletes is not None and properties is None and not (added or dv_targets):
+    if deletes is not None and properties is None and txn is None and not (
+        added or dv_targets
+    ):
         return
     feed_files = None
     if feed is not None:
@@ -771,7 +632,7 @@ def _commit_write(
     manifest_mod.commit_manifest(
         spark, out_path, live, stats=stats, delete_files=delete_files,
         dv_targets=dv_targets, schema_json=schema.json(), partition_keys=keys,
-        properties=properties, feed_files=feed_files,
+        properties=properties, feed_files=feed_files, txn=txn,
     )
     if not retain_history:
         manifest_mod.delete_data_files(spark, out_path, set(after).difference(live))
@@ -814,6 +675,7 @@ def _merge_cow(
     retain_history: bool,
     stats_cols: Sequence[str],
     feed: DataFrame | None,
+    txn: tuple[str, object] | None,
 ) -> None:
     """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87), the
     one keyed merge for a table with live files, partitioned or not.
@@ -897,6 +759,7 @@ def _merge_cow(
     _commit_write(
         spark, merged, out_path, snap, superseded=set(impacted),
         stats_cols=stats_cols, retain_history=retain_history, feed=feed,
+        txn=txn,
     )
 
 

@@ -27,12 +27,11 @@ columns, not only the first file's.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import _jclass
+from .manifest import _jclass, glob_status
 
 
 @dataclass
@@ -63,28 +62,6 @@ class TableFolder:
 def _fs_and_path(spark: SparkSession, uri: str):
     path = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(uri)
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
-
-
-def glob_status(spark: SparkSession, root: str, pattern: str) -> list[tuple[str, bool]]:
-    """(path, is a directory) of every entry under ``root`` that the
-    Hadoop glob ``pattern`` matches, sorted by path; ``pattern`` matches
-    entries at one depth. ``listStatus`` of a file path lists the file
-    itself, so one ``listStatus`` of every match tells the files from
-    the directories, and the paths cross py4j as one string each way:
-    the round trips do not grow with the entry count, as a per-entry
-    ``isDirectory``/``getPath`` walk's do. (``FileStatus.toString``
-    would carry the kind too, but on the local file system it loads
-    permissions, a process per entry.)"""
-    jvm = spark._jvm
-    path = _jclass(jvm, "org.apache.hadoop.fs.Path")(
-        re.sub(r"([\\*?\[\]{}])", r"\\\1", root.rstrip("/")) + "/" + pattern
-    )
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    as_seq = _jclass(jvm, "scala.collection.immutable.ArraySeq.unsafeWrapArray")
-    to_paths = _jclass(jvm, "org.apache.hadoop.fs.FileUtil.stat2Paths")
-    found = to_paths(fs.globStatus(path))
-    files = set(as_seq(to_paths(fs.listStatus(found))).mkString("\n").split("\n"))
-    return sorted((p, p not in files) for p in as_seq(found).mkString("\n").split("\n") if p)
 
 
 def file_mtime(spark: SparkSession, uri: str) -> int:

@@ -30,6 +30,10 @@ reader reads the listed files in it (``table_schema``, ``read_files``),
 so no read infers a schema, and a file written before an additive
 column reads that column as NULL.
 
+A commit also carries its writers' progress marks (``txn``: app id →
+the last version that app committed), so what a table has consumed
+commits with the data that consumed it.
+
 Partitioned tables commit through the same single manifest: ``files``
 entries are paths RELATIVE to the table root (``dept=a/part-x.parquet``),
 the manifest records the partition keys, and a partitioned merge appends
@@ -47,6 +51,7 @@ import datetime as _dt
 import functools
 import json
 import posixpath
+import re
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +63,7 @@ DELETES_DIR = "_deletes"
 CHANGE_FEED_DIR = "_change_feed"
 DV_FILE_COL = "_dv_file"
 DV_POS_COL = "_dv_pos"
+DV_SCHEMA = f"{DV_FILE_COL} string, {DV_POS_COL} long"
 
 
 @functools.lru_cache(maxsize=None)
@@ -125,32 +131,52 @@ def relative_name(uri: str, levels: int) -> str:
     return unquote("/".join(uri.split("/")[-(levels + 1):]))
 
 
+def glob_status(spark: SparkSession, root: str, pattern: str) -> list[tuple[str, bool]]:
+    """(path, is a directory) of every entry under ``root`` that the
+    Hadoop glob ``pattern`` matches, sorted by path; ``pattern`` matches
+    entries at one depth. ``listStatus`` of a file path lists the file
+    itself, so one ``listStatus`` of every match tells the files from
+    the directories, and the paths cross py4j as one string each way:
+    the round trips do not grow with the entry count, as a per-entry
+    ``isDirectory``/``getPath`` walk's do. (``FileStatus.toString``
+    would carry the kind too, but on the local file system it loads
+    permissions, a process per entry.)"""
+    jvm = spark._jvm
+    path = _jclass(jvm, "org.apache.hadoop.fs.Path")(
+        re.sub(r"([\\*?\[\]{}])", r"\\\1", root.rstrip("/")) + "/" + pattern
+    )
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    as_seq = _jclass(jvm, "scala.collection.immutable.ArraySeq.unsafeWrapArray")
+    to_paths = _jclass(jvm, "org.apache.hadoop.fs.FileUtil.stat2Paths")
+    found = to_paths(fs.globStatus(path))
+    if found is None:  # a literal path that does not exist
+        return []
+    files = set(as_seq(to_paths(fs.listStatus(found))).mkString("\n").split("\n"))
+    return sorted((p, p not in files) for p in as_seq(found).mkString("\n").split("\n") if p)
+
+
 def list_data_files(
     spark: SparkSession, path: str, recursive: bool = False
 ) -> list[str]:
     """Paths of the table's parquet data files RELATIVE to the table
-    root. Flat listing by default; ``recursive`` walks partition
-    directories too (hidden ``_``/``.`` entries skipped at every level),
-    so a flat table yields identical output either way."""
-    Path, fs = _fs(spark, path)
-    root = Path(path)
-    if not fs.exists(root):
-        return []
+    root. Flat listing by default; ``recursive`` lists partition
+    directories too, one ``glob_status`` per directory level (hidden
+    ``_``/``.`` entries skipped at every level), so the py4j round trips
+    grow with the table's depth, not its file count. A flat table yields
+    identical output either way."""
     out: list[str] = []
-    # skip hidden entries JVM-side: each returned entry costs py4j round
-    # trips, and a local table holds a hidden .crc beside every file
-    visible = _jclass(spark._jvm, "org.apache.hadoop.fs.GlobFilter")("[!._]*")
-
-    def walk(p, prefix: str) -> None:
-        for status in fs.listStatus(p, visible):
-            name = status.getPath().getName()
-            if status.isFile() and name.endswith(".parquet"):
-                out.append(prefix + name)
-            elif recursive and status.isDirectory():
-                walk(status.getPath(), prefix + name + "/")
-
-    walk(root, "")
-    return sorted(out)
+    pattern = "[!._]*"
+    while True:
+        entries = glob_status(spark, path, pattern)
+        depth = pattern.count("/") + 1
+        out += [
+            "/".join(p.split("/")[-depth:])
+            for p, is_dir in entries
+            if not is_dir and p.endswith(".parquet")
+        ]
+        if not (recursive and any(is_dir for _, is_dir in entries)):
+            return sorted(out)
+        pattern += "/[!._]*"
 
 
 def read_manifest(spark: SparkSession, path: str) -> dict | None:
@@ -284,6 +310,7 @@ def commit_manifest(
     properties: dict | None = None,
     expected_base_version: int | None = None,
     feed_files: list[str] | None = None,
+    txn: tuple[str, object] | None = None,
 ) -> int:
     """Atomically publish the live-file list; returns the new version.
 
@@ -336,6 +363,13 @@ def commit_manifest(
     ``feed_files`` (change-feed files under ``_change_feed/``, relative
     to it) are this version's own change rows; unlike every other field
     they are never carried forward.
+
+    ``txn`` = (app id, version) records a writer's progress in the
+    commit itself (Delta's ``txn`` action): the manifest's ``txn`` map
+    (app id → last committed version) is carried forward with this
+    entry merged in, so a writer that replays a version it already
+    committed can tell (``lake_writer``'s writers return without
+    writing).
     """
     prev = read_manifest(spark, path)
     if expected_base_version is not None:
@@ -387,6 +421,11 @@ def commit_manifest(
         doc["dv_targets"] = targets_doc
     if feed_files:
         doc["feed_files"] = sorted(feed_files)
+    marks = dict((prev or {}).get("txn") or {})
+    if txn is not None:
+        marks[txn[0]] = txn[1]
+    if marks:
+        doc["txn"] = marks
     payload = json.dumps(doc, sort_keys=True).encode("utf-8")
     Path, fs = _fs(spark, path)
     tmp = Path(
@@ -439,16 +478,8 @@ def commit_manifest(
 
 def list_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed versions with a retained history entry, ascending."""
-    Path, fs = _fs(spark, path)
-    hist = Path(path.rstrip("/") + "/" + HISTORY_DIR)
-    if not fs.exists(hist):
-        return []
-    out = []
-    for status in fs.listStatus(hist):
-        name = status.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    entries = glob_status(spark, path.rstrip("/") + "/" + HISTORY_DIR, "v*.json")
+    return sorted(int(p.rsplit("/v", 1)[1][:-5]) for p, _ in entries)
 
 
 def read_version(spark: SparkSession, path: str, version: int) -> dict:
@@ -640,15 +671,16 @@ def read_deletion_vectors(
 ) -> DataFrame | None:
     """The manifest version's merged deletion vector: one
     (manifest-relative data-file path, row position) row per superseded
-    data row.
-    None when the version carries no delete files."""
+    data row, read in the vectors' fixed schema, so building a read runs
+    no schema-inference job. None when the version carries no delete
+    files."""
     dv_names = man.get("delete_files") or []
     if not dv_names:
         return None
     base = path.rstrip("/") + "/" + DELETES_DIR
-    return spark.read.parquet(
+    return spark.read.schema(DV_SCHEMA).parquet(
         *[posixpath.join(base, f) for f in dv_names]
-    ).select(DV_FILE_COL, DV_POS_COL).distinct()
+    ).distinct()
 
 
 def read_table_with_positions(spark: SparkSession, path: str) -> DataFrame:
@@ -866,12 +898,11 @@ def vacuum(
             if _old_enough(target):
                 fs.delete(target, False)
                 removed.append(DELETES_DIR + "/" + name)
-    feed_root = Path(f"{base}/{CHANGE_FEED_DIR}")
     feed_dirs = {f.split("/", 1)[0] for f in live_feed}
-    for status in fs.listStatus(feed_root) if fs.exists(feed_root) else []:
-        name = status.getPath().getName()
-        if name not in feed_dirs and _old_enough(status.getPath()):
-            fs.delete(status.getPath(), True)
+    for p, _ in glob_status(spark, f"{base}/{CHANGE_FEED_DIR}", "*"):
+        name = p.rsplit("/", 1)[1]
+        if name not in feed_dirs and _old_enough(Path(p)):
+            fs.delete(Path(p), True)
             removed.append(f"{CHANGE_FEED_DIR}/{name}")
     for v in versions:
         if v not in keep:

@@ -8,6 +8,13 @@ table. Same record shape here, behind a small interface; the default
 backend is an atomically-rewritten JSON file (state is one tiny record
 per table — thousands of tables fit in KBs; a JDBC/dynamo-style backend
 can implement the same three methods).
+
+The record holds operator intent (keys, ``active``, per-table options)
+and the controller's ``catalog_pending`` flag. What a table consumed is
+committed with its data, in its manifest's ``txn`` marks
+(pipeline/controller.py); ``last_full_load_ts`` and
+``last_incremental_file`` are read only to adopt a table whose manifest
+records no mark, and the controller never writes them.
 """
 
 from __future__ import annotations
@@ -29,11 +36,13 @@ class TableState:
     # load and every full reload; merges keep the layout the manifest
     # records, so an edit takes effect at the next full load.
     partition_key: str = ""
-    last_full_load_ts: int = 0     # epoch millis of processed LOAD file
+    # adoption only: the marks of a lake written before they moved to
+    # the manifest (epoch millis of the processed LOAD file; last CDC file)
+    last_full_load_ts: int = 0
     last_incremental_file: str = ""
     active: bool = False           # reference: ActiveFlag gate
     schema_ddl: str = ""           # column DDL for headerless CSV landings
-    catalog_pending: bool = False  # lake written since the last registration
+    catalog_pending: bool = False  # a pass began writing; not yet registered
     extra: dict = field(default_factory=dict)
 
     @property
@@ -98,7 +107,7 @@ class JsonStateStore:
     (the reference gets per-item atomicity for free from DynamoDB,
     DMSCDC_Controller.py:94-100); here a single process-wide lock
     serializes mutation + snapshot + rename so a slow flush can never
-    overwrite a newer table's high-water mark with a stale snapshot.
+    overwrite a newer table's record with a stale snapshot.
     """
 
     def __init__(self, file_path: str):

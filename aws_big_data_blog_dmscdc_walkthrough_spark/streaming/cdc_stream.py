@@ -9,6 +9,15 @@ the state table's LastIncrementalFile column disappears into the
 checkpoint. Each micro-batch applies the same latest-wins merge as the
 batch path (operators/cdc.apply_changes), so batch and streaming share
 one merge implementation.
+
+Every mode commits its micro-batch with the mark ``txn=(checkpoint_dir,
+batch_id)`` (``lake_writer``): Structured Streaming re-runs a batch whose
+sink did not finish with the same batch id and files, and a batch id the
+table already records is a no-op, so a crash after the commit applies
+nothing twice (the offset log plus an idempotent sink, as in the
+Structured Streaming paper). A checkpoint directory deleted and started
+again at the same path restarts its batch ids at 0, which the table
+takes for replays: give a new checkpoint a new path.
 """
 
 from __future__ import annotations
@@ -56,16 +65,18 @@ def start_cdc_stream(
     need rewriting). ``history_buckets=N`` hash-partitions the history
     by primary key so the replay-guard and open-version scans prune to
     the batch's buckets; ``compact_every`` schedules the DV
-    materialization pass, same as MOR mode. Replay-safe via the per-key
-    seq high-water mark: the version sequence is the (file, row) order
-    flattened to one lexically-ordered string, so — unlike the
-    latest-state modes, where only within-batch order matters — landing
-    file names MUST be lexically monotonic across batches (the DMS S3
-    contract the reference's incremental discovery already depends on:
-    files named after their timestamp, each sorting after the last
-    processed one). A non-monotonic name would make a later change sort
-    below the recorded high-water mark and be dropped as
-    already-applied.
+    materialization pass, same as MOR mode. A batch after one this
+    checkpoint already committed is all fresh, so the fold skips its
+    per-key replay guard scan; the first batch of a new checkpoint (a
+    replay of files another checkpoint applied, say) runs the exact
+    guard, which drops the seqs the history already holds. The version
+    sequence is the (file, row) order flattened to one lexically-ordered
+    string, so — unlike the latest-state modes, where only within-batch
+    order matters — landing file names MUST be lexically monotonic
+    across batches (the DMS S3 contract the reference's incremental
+    discovery already depends on: files named after their timestamp,
+    each sorting after the last processed one). A name that sorts below
+    a committed one would close and open versions out of order.
 
     ``merge_on_read=True`` applies each micro-batch through
     ``lake_writer.merge_on_read_incremental`` — position deletes + an
@@ -75,8 +86,8 @@ def start_cdc_stream(
     ``compact_every`` then schedules the deferred rewrite: every N
     micro-batches a manifest-gated compaction materializes the
     accumulated deletion vectors so read amplification stays bounded.
-    Replay stays idempotent in both modes (a retried batch supersedes
-    the copy its first attempt appended).
+    A retried batch that crashed before its commit supersedes the copy
+    its first attempt appended; one that crashed after it is a no-op.
     """
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -94,13 +105,15 @@ def start_cdc_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        txn = (checkpoint_dir, batch_id)
         if history_mode:
             # The same file-physical (file_path, row_index) pair as
             # prepare_dms_batch's _seq — delivery-invariant, so a replay
             # that re-batches the files re-derives identical seqs — but
-            # flattened to one byte-ordered string: history seqs persist
-            # in the manifest's JSON high-water mark, which holds str/int
-            # only (lake_writer._seq_mark), not a struct.
+            # flattened to one byte-ordered string: a history stores it
+            # as valid_from_seq/valid_to_seq, string columns in every
+            # history written so far, and a seq of another type would
+            # be a type change the fold rejects (cdc.align_schemas).
             sess = batch_df.sparkSession
             flat = (
                 batch_df.withColumn(
@@ -119,13 +132,7 @@ def start_cdc_stream(
             lake_writer.scd2_merge_on_read(
                 sess, flat, out_path, primary_keys,
                 seq_col="_hseq", op_col="op",
-                bucket_partitions=history_buckets,
-                # the lexical-monotonicity contract documented above
-                # (landing names sort after all processed ones) makes
-                # every batch's seqs strictly later than every committed
-                # fold's — the global-hwm replay guard applies, and the
-                # per-fold history guard scan disappears
-                seq_monotonic=True,
+                bucket_partitions=history_buckets, txn=txn,
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
                 lake_writer.compact_table(sess, out_path)
@@ -135,7 +142,7 @@ def start_cdc_stream(
             lake_writer.merge_on_read_incremental(
                 batch_df.sparkSession, changes, out_path, primary_keys,
                 seq_col="_seq", op_col="op",
-                partition_keys=partition_keys,
+                partition_keys=partition_keys, txn=txn,
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
                 lake_writer.compact_table(batch_df.sparkSession, out_path)
@@ -148,6 +155,7 @@ def start_cdc_stream(
             partition_keys,
             seq_col="_seq",
             op_col="op",
+            txn=txn,
         )
 
     writer = (

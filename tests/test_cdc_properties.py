@@ -355,10 +355,11 @@ def test_scd2_merge_on_read_bucket_count_guards(spark, tmp_path):
 )
 @given(batch=batches(), split=st.integers(0, 12))
 @pytest.mark.slow
-def test_scd2_merge_on_read_monotonic_equals_one_shot(spark, tmp_path, batch, split):
-    """seq_monotonic folds (global-hwm guard, no history guard scan)
-    must land exactly the one-shot rows when batches really are
-    seq-ordered — including a full replay of each batch (no-op)."""
+def test_scd2_merge_on_read_txn_folds_equal_one_shot(spark, tmp_path, batch, split):
+    """Folds that carry a ``txn`` batch id (the stream's shape: every
+    batch after the first skips the per-key guard scan) land exactly
+    the one-shot rows at any split, and replaying any batch id is a
+    no-op that commits no version."""
     import uuid
 
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
@@ -370,45 +371,41 @@ def test_scd2_merge_on_read_monotonic_equals_one_shot(spark, tmp_path, batch, sp
         [(k, op, seq + 1, val) for k, op, seq, val in batch], key=lambda r: r[2]
     )
     cut = min(split, len(rows))
-    b1, b2 = rows[:cut], rows[cut:]
+    pieces = [p for p in (rows[:cut], rows[cut:]) if p]
 
     def frame(rs):
         return spark.createDataFrame(
-            rs or [(0, "U", -1, 0)], "pk int, op string, seq int, v int"
-        ).where("seq >= 0").select("pk", "v", "op", "seq")
+            rs, "pk int, op string, seq int, v int"
+        ).select("pk", "v", "op", "seq")
 
     empty = frame(rows).drop("op", "seq").limit(0)
     want = sorted(
         map(tuple, cdc.scd2_history(empty, frame(rows), ["pk"], "seq").collect())
     )
     out = str(tmp_path / f"hm_{uuid.uuid4().hex[:8]}")
-    for piece in (b1, b2):
-        if piece:
-            lake_writer.scd2_merge_on_read(
-                spark, frame(piece), out, ["pk"], seq_col="seq",
-                seq_monotonic=True,
-            )
-            # replay the same batch: the per-key guard leaves nothing
-            # fresh, so the content must not change (a D on a
-            # never-seen key may commit an empty version — same as the
-            # pre-hwm behavior — so the version number is not asserted;
-            # the final one-shot equality below covers content)
-            lake_writer.scd2_merge_on_read(
-                spark, frame(piece), out, ["pk"], seq_col="seq",
-                seq_monotonic=True,
-            )
-    got = sorted(map(tuple, manifest.read_table(spark, out).collect())) if rows else []
-    assert got == want
-    if rows:
-        man = manifest.read_manifest(spark, out)
-        assert man["properties"]["scd2_seq_hwm"] == max(r[2] for r in rows)
+
+    def fold(batch_id):
+        lake_writer.scd2_merge_on_read(
+            spark, frame(pieces[batch_id]), out, ["pk"], seq_col="seq",
+            txn=("stream", batch_id),
+        )
+
+    for batch_id in range(len(pieces)):
+        fold(batch_id)
+    man = manifest.read_manifest(spark, out)
+    for batch_id in range(len(pieces)):
+        fold(batch_id)
+    assert manifest.read_manifest(spark, out)["version"] == man["version"]
+    assert man["txn"] == {"stream": len(pieces) - 1}
+    assert sorted(map(tuple, manifest.read_table(spark, out).collect())) == want
 
 
 def test_scd2_monotonic_straddling_batch_falls_back_exact(spark, tmp_path):
-    """A batch that straddles the recorded hwm (broken contract) must
-    still fold EXACTLY via the per-key guard — already-recorded seqs
-    drop, new ones apply — and the hwm must advance to the true global
-    max, never regress."""
+    """A fold with no ``txn`` entry of its own (a direct caller beside a
+    stream) runs the exact per-key guard: a batch that straddles the
+    committed history — one seq already applied, others new, one of
+    them below the committed maximum — folds exactly, and replaying it
+    no-ops. The stream's mark is carried forward untouched."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
         lake_writer,
         manifest,
@@ -420,97 +417,32 @@ def test_scd2_monotonic_straddling_batch_falls_back_exact(spark, tmp_path):
     out = str(tmp_path / "hist_straddle")
     lake_writer.scd2_merge_on_read(
         spark, frame([(1, 10, "I", 1), (2, 20, "I", 5)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
+        seq_col="seq", txn=("stream", 0),
     )
-    # straddles hwm=5: seq 3 is NEW (key 3, below hwm), seq 7 is new
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(3, 30, "I", 3), (1, 11, "U", 7)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    got = {
-        (r.pk, r.v): (r.valid_from_seq, r.valid_to_seq, r.is_current)
-        for r in manifest.read_table(spark, out).collect()
-    }
-    assert got[(3, 30)] == (3, None, True)   # below-hwm NEW key applied
-    assert got[(1, 10)] == (1, 7, False)
-    assert got[(1, 11)] == (7, None, True)
-    man = manifest.read_manifest(spark, out)
-    assert man["properties"]["scd2_seq_hwm"] == 7
-    # replaying the straddling batch no-ops (per-key guard: nothing fresh)
-    v = man["version"]
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(3, 30, "I", 3), (1, 11, "U", 7)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    assert manifest.read_manifest(spark, out)["version"] == v
-
-
-def test_scd2_bucketed_legacy_hwm_backfill_sees_all_buckets(spark, tmp_path):
-    """Round-9 advice repro (lake_writer.py hwm backfill): on a BUCKETED
-    legacy history (no recorded hwm) the backfill aggregate must run
-    over the UNPRUNED history. If it only sees the batch's buckets, a
-    history row in an untouched bucket with a higher committed seq
-    leaves the mark too low, and a later replay of that committed batch
-    takes the fast path and is double-applied (history corruption)."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
-        lake_writer,
-        manifest,
-    )
-
-    def frame(rs):
-        return spark.createDataFrame(rs, "pk int, v int, op string, seq int")
-
-    # pick a key whose pk-hash bucket differs from key 1's, so the
-    # legacy row's bucket is untouched by the backfilling fold
-    n_buckets = 8
-    b_of = {
-        r.pk: r.b
-        for r in frame([(k, 0, "I", 0) for k in range(1, 20)])
-        .select("pk", lake_writer._pk_bucket_expr(["pk"], n_buckets).alias("b"))
-        .collect()
-    }
-    other = next(k for k in range(2, 20) if b_of[k] != b_of[1])
-
-    out = str(tmp_path / "hist_legacy_bucketed")
-    # legacy fold: bucketed, NO seq_monotonic -> manifest has no hwm
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(1, 10, "I", 100)]), out, ["pk"],
-        seq_col="seq", bucket_partitions=n_buckets,
-    )
-    assert "scd2_seq_hwm" not in (
-        manifest.read_manifest(spark, out)["properties"] or {}
-    )
-    # backfilling fold touches ONLY `other`'s bucket, with a LOWER seq
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(other, 20, "I", 50)]), out, ["pk"],
-        seq_col="seq", bucket_partitions=n_buckets, seq_monotonic=True,
-    )
-    man = manifest.read_manifest(spark, out)
-    # the mark must upper-bound EVERY committed seq, incl. bucket 1's 100
-    assert man["properties"]["scd2_seq_hwm"] == 100
-    # replay the committed seq-100 batch: min seq 100 is NOT above the
-    # mark, so the exact per-key guard runs and the fold no-ops
-    v = man["version"]
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(1, 10, "I", 100)]), out, ["pk"],
-        seq_col="seq", bucket_partitions=n_buckets, seq_monotonic=True,
-    )
-    assert manifest.read_manifest(spark, out)["version"] == v
+    straddle = [(2, 20, "I", 5), (3, 30, "I", 3), (1, 11, "U", 7)]
+    lake_writer.scd2_merge_on_read(spark, frame(straddle), out, ["pk"], seq_col="seq")
     got = {
         (r.pk, r.v): (r.valid_from_seq, r.valid_to_seq, r.is_current)
         for r in manifest.read_table(spark, out).collect()
     }
     assert got == {
-        (1, 10): (100, None, True),
-        (other, 20): (50, None, True),
+        (1, 10): (1, 7, False),
+        (1, 11): (7, None, True),
+        (2, 20): (5, None, True),  # applied once, not twice
+        (3, 30): (3, None, True),  # below the committed maximum, new
     }
+    man = manifest.read_manifest(spark, out)
+    assert man["txn"] == {"stream": 0}
+    lake_writer.scd2_merge_on_read(spark, frame(straddle), out, ["pk"], seq_col="seq")
+    assert manifest.read_manifest(spark, out)["version"] == man["version"]
 
 
-def test_scd2_hwm_survives_interleaved_non_monotonic_folds(spark, tmp_path):
-    """Round-10 review repro: a seq_monotonic=False fold interleaved on
-    a marked table commits seqs ABOVE the mark. The mark must advance
-    over that batch (or be removed), or a later monotonic replay of the
-    very same batch takes the fast path and double-applies."""
+def test_scd2_fold_after_a_recorded_batch_skips_the_guard_scan(
+    spark, tmp_path, monkeypatch
+):
+    """Only a fold whose app id has an earlier batch recorded skips the
+    per-key guard (``cdc.scd2_fresh_changes``); the first fold of an app
+    id runs it, and the history equals the one-shot fold either way."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
         lake_writer,
         manifest,
@@ -519,143 +451,33 @@ def test_scd2_hwm_survives_interleaved_non_monotonic_folds(spark, tmp_path):
     def frame(rs):
         return spark.createDataFrame(rs, "pk int, v int, op string, seq int")
 
-    out = str(tmp_path / "hist_interleaved")
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(1, 10, "I", 100)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    assert manifest.read_manifest(spark, out)["properties"]["scd2_seq_hwm"] == 100
-    # interleaved backfill job, NOT declaring monotonicity, seq 300
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(2, 20, "I", 300)]), out, ["pk"], seq_col="seq",
-    )
-    man = manifest.read_manifest(spark, out)
-    # the mark now covers the non-monotonic fold's seqs
-    assert man["properties"]["scd2_seq_hwm"] == 300
-    v = man["version"]
-    # replay the backfill batch WITH monotonicity declared: lo=300 is
-    # NOT above the mark, so the exact guard runs and the fold no-ops
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(2, 20, "I", 300)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    assert manifest.read_manifest(spark, out)["version"] == v
-    got = {
-        (r.pk, r.v): (r.valid_from_seq, r.valid_to_seq, r.is_current)
-        for r in manifest.read_table(spark, out).collect()
-    }
-    assert got == {(1, 10): (100, None, True), (2, 20): (300, None, True)}
+    guarded = []
+    real = cdc.scd2_fresh_changes
 
+    def counted(*a, **kw):
+        guarded.append(1)
+        return real(*a, **kw)
 
-def test_scd2_hwm_removed_when_mark_is_not_comparable(spark, tmp_path):
-    """A mark the batch's seqs can't be compared against (foreign
-    writer, hand-edited manifest — a seq TYPE change can't happen
-    through the API, align_schemas rejects it) must be REMOVED by the
-    next fold rather than carried forward as a bound the fast path
-    would wrongly trust."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
-        lake_writer,
-        manifest,
-    )
-
-    def frame(rs):
-        return spark.createDataFrame(rs, "pk int, v int, op string, seq int")
-
-    out = str(tmp_path / "hist_foreign_mark")
+    monkeypatch.setattr(cdc, "scd2_fresh_changes", counted)
+    out = str(tmp_path / "hist_txn")
+    batches = [
+        [(1, 10, "I", 1), (2, 20, "I", 2)],
+        [(1, 11, "U", 3), (3, 30, "I", 4)],
+        [(2, None, "D", 5), (1, 12, "U", 6)],
+    ]
     lake_writer.scd2_merge_on_read(
-        spark, frame([(1, 10, "I", 100)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    man = manifest.read_manifest(spark, out)
-    assert man["properties"]["scd2_seq_hwm"] == 100
-    # a foreign writer re-commits with a string mark over int seqs
-    manifest.commit_manifest(
-        spark, out, man["files"],
-        properties={**man["properties"], "scd2_seq_hwm": "zzz"},
+        spark, frame(batches[0]), out, ["pk"], seq_col="seq", txn=("a", 0)
     )
     lake_writer.scd2_merge_on_read(
-        spark, frame([(2, 20, "I", 300)]), out, ["pk"], seq_col="seq",
+        spark, frame(batches[1]), out, ["pk"], seq_col="seq", txn=("a", 1)
     )
-    props = manifest.read_manifest(spark, out).get("properties") or {}
-    assert "scd2_seq_hwm" not in props
-    # and the monotonic path heals it: the backfill aggregate restores
-    # a TRUE bound on the next declared-monotonic fold
+    assert guarded == []
     lake_writer.scd2_merge_on_read(
-        spark, frame([(3, 30, "I", 50)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
+        spark, frame(batches[2]), out, ["pk"], seq_col="seq", txn=("b", 0)
     )
-    assert manifest.read_manifest(spark, out)["properties"]["scd2_seq_hwm"] == 300
-
-
-def test_scd2_unflagged_legacy_hwm_not_trusted_and_healed(spark, tmp_path):
-    """Round-10 advice repro (lake_writer.py hwm trust): the every-fold
-    mark maintenance is an induction whose BASE fails for manifests
-    written by pre-round-10 code — a legacy non-monotonic fold carried
-    the mark forward stale-low. Such a mark (present but missing the
-    scd2_hwm_invariant flag) must (1) never enable the monotonic fast
-    path — a replay of a committed batch above the stale mark would
-    double-apply — and (2) be healed from the unpruned history by the
-    next committing fold, which stamps the flag so later folds skip the
-    backfill aggregate."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import (
-        lake_writer,
-        manifest,
-    )
-
-    def frame(rs):
-        return spark.createDataFrame(rs, "pk int, v int, op string, seq int")
-
-    out = str(tmp_path / "hist_legacy_mark")
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(1, 10, "I", 1), (2, 20, "I", 2)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    b2 = [(1, 11, "U", 3), (2, 21, "U", 4)]
-    lake_writer.scd2_merge_on_read(
-        spark, frame(b2), out, ["pk"], seq_col="seq", seq_monotonic=True,
-    )
-    man = manifest.read_manifest(spark, out)
-    assert man["properties"]["scd2_seq_hwm"] == 4
-    assert man["properties"][lake_writer.HWM_INVARIANT_FLAG] == 1
-
-    # simulate the legacy pre-upgrade manifest: a STALE-LOW mark (2 —
-    # committed seqs 3 and 4 exceed it) without the invariant flag
-    manifest.commit_manifest(
-        spark, out, man["files"], properties={"scd2_seq_hwm": 2},
-    )
-    before = sorted(map(tuple, manifest.read_table(spark, out).collect()))
-
-    # replay the COMMITTED batch b2: its lo (3) sorts above the stale
-    # mark (2), so a trusting fast path would re-apply it wholesale;
-    # the untrusted mark must route through the per-key guard -> no-op
-    lake_writer.scd2_merge_on_read(
-        spark, frame(b2), out, ["pk"], seq_col="seq", seq_monotonic=True,
-    )
-    after = sorted(map(tuple, manifest.read_table(spark, out).collect()))
-    assert after == before  # no double-apply
-
-    # a genuinely new monotonic fold heals the mark from the UNPRUNED
-    # history (true committed max is 4, not max(stale=2, batch hi=5)=5
-    # by accident — here both agree at 5; the flag is the real assert)
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(3, 30, "I", 5)]), out, ["pk"],
-        seq_col="seq", seq_monotonic=True,
-    )
-    man2 = manifest.read_manifest(spark, out)
-    assert man2["properties"]["scd2_seq_hwm"] == 5
-    assert man2["properties"][lake_writer.HWM_INVARIANT_FLAG] == 1
-
-    # re-stale the mark and fold NON-monotonically with a batch whose
-    # own hi (4) is BELOW the true committed max (5): the legacy-code
-    # behavior max(stale, hi)=4 would under-bound; the heal must reach
-    # the history aggregate's 5 and stamp the flag
-    man2 = manifest.read_manifest(spark, out)
-    manifest.commit_manifest(
-        spark, out, man2["files"], properties={"scd2_seq_hwm": 2},
-    )
-    lake_writer.scd2_merge_on_read(
-        spark, frame([(4, 40, "I", 4)]), out, ["pk"], seq_col="seq",
-    )
-    man3 = manifest.read_manifest(spark, out)
-    assert man3["properties"]["scd2_seq_hwm"] == 5
-    assert man3["properties"][lake_writer.HWM_INVARIANT_FLAG] == 1
+    assert guarded == [1]
+    assert manifest.read_manifest(spark, out)["txn"] == {"a": 1, "b": 0}
+    log = frame([r for b in batches for r in b])
+    want = cdc.scd2_history(log.drop("op", "seq").limit(0), log, ["pk"], "seq")
+    got = manifest.read_table(spark, out)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

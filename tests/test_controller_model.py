@@ -13,12 +13,16 @@ must have written one file per table (or per partition it touched): the
 tables are far below one ``openCostInBytes``. A partition may keep an
 untouched file beside the new one, since a merge rewrites only the files
 that hold a changed key. A pass whose manifest commits crash, rerun,
-must converge to the same state, and so must a full reload that crashes
-at any of its steps. A ``partition_key`` edited after the first load
-leaves every table in the layout its manifest records.
+must converge to the same state, and so must an incremental pass or a
+full reload that crashes at any of its steps: no CDC file is lost or
+applied twice, keyless appends included. A lake whose manifests record
+no consumption mark continues from the state store's marks. A
+``partition_key`` edited after the first load leaves every table in the
+layout its manifest records.
 """
 
 import glob
+import json
 import os
 
 import pyarrow as pa
@@ -255,6 +259,29 @@ RELOAD_STEPS = [
     ("state", JsonStateStore, "put", False),
     ("catalog", catalog, "register_table", False),
 ]
+# an incremental pass has the same steps: the merge's append, commit and
+# delete, the store write and the registration
+MERGE_STEPS = RELOAD_STEPS
+
+
+def _pass_crashing_at(spark, landing, lake, store, monkeypatch, step, owner, attr, after):
+    """One pass in which ``owner.attr`` raises once per table (after
+    the call when ``after``); every table must report the crash."""
+    real, crashed = getattr(owner, attr), set()
+
+    def crash_once(*a, **kw):
+        table = getattr(a[1], "path", a[1])
+        if table in crashed:
+            return real(*a, **kw)
+        crashed.add(table)
+        if after:
+            real(*a, **kw)
+        raise RuntimeError(f"crash at {step}")
+
+    with monkeypatch.context() as m:
+        m.setattr(owner, attr, crash_once)
+        report = controller.run_once(spark, landing, lake, store)
+    assert all(f"crash at {step}" in t.error for t in report.tables), report
 
 
 def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeypatch):
@@ -271,21 +298,7 @@ def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeyp
             d = os.path.join(landing, SCHEMA, mode)
             _write(rows, ["id", "name", "grp"], os.path.join(d, "LOAD00000001.parquet"))
             _write(CDC[2], ["Op", "id", "name", "grp"], os.path.join(d, _cdc_name(3 + i)))
-        real, crashed = getattr(owner, attr), set()
-
-        def crash_once(*a, **kw):
-            table = getattr(a[1], "path", a[1])
-            if table in crashed:
-                return real(*a, **kw)
-            crashed.add(table)
-            if after:
-                real(*a, **kw)
-            raise RuntimeError(f"crash at {step}")
-
-        with monkeypatch.context() as m:
-            m.setattr(owner, attr, crash_once)
-            report = controller.run_once(spark, landing, lake, store)
-        assert all(f"crash at {step}" in t.error for t in report.tables), report
+        _pass_crashing_at(spark, landing, lake, store, monkeypatch, step, owner, attr, after)
         store = JsonStateStore(str(tmp_path / "state.json"))
         report = controller.run_once(spark, landing, lake, store)
         assert not any(t.error for t in report.tables), report
@@ -296,6 +309,59 @@ def test_reload_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeyp
     report = controller.run_once(spark, landing, lake, store)
     assert not any(t.error or t.did_initial or t.incremental_files for t in report.tables)
     assert registered == []
+
+
+def test_merge_crash_at_each_step_then_rerun_converges(spark, tmp_path, monkeypatch):
+    """One new CDC file lands per step, and each step of the incremental
+    pass in turn raises once per table. The rerun, from the state on
+    disk, must leave every mode, keyless included, equal to the model of
+    the files landed so far through the manifest, the directory and the
+    catalog: a file whose commit went through is not applied again."""
+    landing, lake, store = _loaded_lake(spark, tmp_path)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    landed = []
+    for i, (step, owner, attr, after) in enumerate(MERGE_STEPS):
+        rows = CDC[i % len(CDC)]
+        for mode in MODES:
+            path = os.path.join(landing, SCHEMA, mode, _cdc_name(3 + i))
+            _write(rows, ["Op", "id", "name", "grp"], path)
+        landed.append(rows)
+        _pass_crashing_at(spark, landing, lake, store, monkeypatch, step, owner, attr, after)
+        store = JsonStateStore(str(tmp_path / "state.json"))
+        report = controller.run_once(spark, landing, lake, store)
+        assert not any(t.error for t in report.tables), (step, report)
+        _check(spark, lake, landed, n_load)
+
+
+def test_lake_without_marks_continues_from_the_store(spark, tmp_path):
+    """A lake written before its manifests recorded what they consumed:
+    the marks are in the state store only. The first pass continues
+    from them, neither reloading nor re-merging, and its commit records
+    the mark in the manifest."""
+    landing, lake, store = _loaded_lake(spark, tmp_path)
+    n_load = len(_data_files(f"{lake}/{SCHEMA}/keyless"))
+    _land(landing, [0])
+    controller.run_once(spark, landing, lake, store)
+    for st in store.all():
+        path = f"{lake}/{SCHEMA}/{st.table}/{manifest.MANIFEST_NAME}"
+        with open(path) as fh:
+            doc = json.load(fh)
+        marks = doc.pop("txn")
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
+        os.remove(f"{os.path.dirname(path)}/.{manifest.MANIFEST_NAME}.crc")
+        st.last_full_load_ts = marks[controller.LOAD_TXN]
+        st.last_incremental_file = marks[controller.CDC_TXN]
+        store.put(st)
+    _land(landing, [1])
+    report = controller.run_once(spark, landing, lake, store)
+    assert all(
+        t.incremental_files == 1 and not (t.did_initial or t.error) for t in report.tables
+    ), report
+    _check(spark, lake, CDC[:2], n_load)
+    for st in store.all():
+        man = manifest.read_manifest(spark, f"{lake}/{SCHEMA}/{st.table}")
+        assert man["txn"] == {controller.CDC_TXN: f"{st.path}/{_cdc_name(1)}"}
 
 
 @pytest.fixture()

@@ -426,24 +426,27 @@ def test_scd2_fold_that_writes_nothing_still_commits_its_properties(
 ):
     """A fold whose fresh rows close no open version and append no file
     (a delete of an unknown key on a bucketed history) still commits:
-    its version records the advanced ``scd2_seq_hwm``."""
+    its version records the fold's ``txn`` mark and keeps the bucket
+    count, and replaying that batch id commits nothing."""
     out = str(tmp_path / "h")
 
-    def fold(rows):
+    def fold(rows, batch_id):
         lake_writer.scd2_merge_on_read(
             spark, spark.createDataFrame(rows, "pk int, v int, op string, seq int"),
-            out, ["pk"], seq_col="seq", bucket_partitions=4, seq_monotonic=True,
+            out, ["pk"], seq_col="seq", bucket_partitions=4, txn=("ck", batch_id),
         )
 
-    fold([(1, 10, "I", 1)])
+    fold([(1, 10, "I", 1)], 0)
     first = manifest.read_manifest(spark, out)
-    fold([(99, None, "D", 5)])
+    fold([(99, None, "D", 5)], 1)
     man = manifest.read_manifest(spark, out)
     assert man["version"] == first["version"] + 1
     assert man["files"] == first["files"]
-    assert man["properties"]["scd2_seq_hwm"] == 5
+    assert man["txn"] == {"ck": 1}
     assert man["properties"]["bucket_partitions"] == 4
     assert manifest.read_table(spark, out).count() == 1
+    fold([(99, None, "D", 5)], 1)
+    assert manifest.read_manifest(spark, out)["version"] == man["version"]
 
 
 def test_partitioned_mor_compaction_materializes_dvs(spark, tmp_path):
@@ -946,3 +949,140 @@ def test_cas_commit_on_fresh_table_base_zero(spark, tmp_path):
     )
     assert v == 1
     assert manifest.read_manifest(spark, out)["version"] == 1
+
+
+def test_deletion_vector_read_runs_no_job(spark, tmp_path):
+    """Building a read of a table with a deletion vector runs no Spark
+    job: the vectors are read in their fixed schema, not inferred."""
+    out = str(tmp_path / "t")
+    _init(spark, out)
+    manifest.delete_where(spark, out, ("id", "=", 1))
+    sc = spark.sparkContext
+    for i, build in enumerate((
+        lambda: manifest.read_table(spark, out),
+        lambda: manifest.read_table_with_positions(spark, out),
+    )):
+        group = f"dv-read-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(r.id for r in df.collect()) == [0, 2]
+
+
+def _py4j_calls(monkeypatch, fn):
+    """py4j round trips ``fn()`` makes, not counting the releases py4j
+    sends when Python drops a JVM reference (the collector times those)."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send = GatewayClient.send_command
+    calls = []
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(not command.startswith(release))
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", counted)
+        fn()
+    return sum(calls)
+
+
+def test_listing_round_trips_do_not_grow_with_file_count(spark, tmp_path, monkeypatch):
+    """A recursive listing of a table partitioned two levels deep costs
+    the same py4j round trips for 4 files as for 64: one glob per
+    directory level, the paths crossing as one string."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    counts = []
+    for n in (4, 64):
+        out = str(tmp_path / f"t{n}")
+        for i in range(n):
+            os.makedirs(f"{out}/a={i % 2}/b={i % 4}", exist_ok=True)
+            pq.write_table(pa.table({"id": [i]}), f"{out}/a={i % 2}/b={i % 4}/{i}.parquet")
+        assert len(manifest.list_data_files(spark, out, recursive=True)) == n
+        counts.append(_py4j_calls(
+            monkeypatch, lambda: manifest.list_data_files(spark, out, recursive=True)
+        ))
+    assert counts[0] == counts[1], counts
+
+
+def test_listing_names_escaped_and_null_partitions_as_on_disk(spark, tmp_path):
+    """The listing names every visible data file by its on-disk relative
+    path: partition values Spark escapes (``%`` as ``%25``, ``[`` as
+    ``%5B``), spaces and the null partition, under a root with a space;
+    hidden files and directories are skipped at every level. A merge
+    then finds its impacted file under the same name."""
+    import os
+
+    out = str(tmp_path / "a b" / "t")
+    rows = [(1, "50%", "x y"), (2, None, "[z]"), (3, "a b", None)]
+    spark.createDataFrame(rows, "id long, p string, q string").write.partitionBy(
+        "p", "q"
+    ).parquet(out)
+    os.makedirs(os.path.join(out, "_hidden"))
+    open(os.path.join(out, "_hidden", "x.parquet"), "w").close()
+    want = []
+    for d, dirs, files in os.walk(out):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        want += [
+            os.path.relpath(os.path.join(d, f), out)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    got = manifest.list_data_files(spark, out, recursive=True)
+    assert got == sorted(want)
+    assert {g.split("/")[0] for g in got} == {
+        "p=50%25", "p=__HIVE_DEFAULT_PARTITION__", "p=a b"
+    }
+    assert manifest.list_data_files(spark, out) == []
+    lake_writer.merge_incremental(
+        spark, _changes(spark, [("U", 1, 1, "b")]).withColumnRenamed("name", "q")
+        .withColumn("p", F.lit("50%")), out, ["id"],
+    )
+    got = sorted(
+        (r.id, r.p, r.q) for r in manifest.read_table(spark, out).collect()
+    )
+    assert got == [(1, "50%", "b"), (2, None, "[z]"), (3, "a b", None)]
+
+
+def test_txn_marks_commit_with_the_data(spark, tmp_path):
+    """Each writer records its ``txn`` mark in its commit, the map is
+    carried forward, a replay of a recorded (or earlier) version returns
+    without writing, and a commit that carries a mark is made even when
+    it changes no file."""
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame([(0, "n0"), (1, "n1")], "id long, name string")
+    lake_writer.write_initial(df, out, txn=("load", 100))
+    lake_writer.write_initial(df, out, txn=("load", 99))  # an earlier mark
+    assert manifest.read_manifest(spark, out)["version"] == 1
+
+    def keyless(rows, version):
+        lake_writer.merge_incremental(
+            spark, _changes(spark, rows), out, [], txn=("cdc", version)
+        )
+
+    keyless([("I", 1, 2, "n2")], "f1")
+    keyless([("I", 1, 2, "n2")], "f1")  # replayed after its commit
+    man = manifest.read_manifest(spark, out)
+    assert (man["version"], man["txn"]) == (2, {"load": 100, "cdc": "f1"})
+    assert sorted(r.id for r in manifest.read_table(spark, out).collect()) == [0, 1, 2]
+    # a merge-on-read batch that matches and appends nothing still commits
+    lake_writer.merge_on_read_incremental(
+        spark, _changes(spark, [("D", 1, 7, None)]), out, ["id"], txn=("mor", 0)
+    )
+    man = manifest.read_manifest(spark, out)
+    assert (man["version"], man["txn"]["mor"]) == (3, 0)
+    assert man["txn"]["load"] == 100
+    lake_writer.merge_on_read_incremental(
+        spark, _changes(spark, [("D", 1, 0, None)]), out, ["id"], txn=("mor", 0)
+    )
+    assert manifest.read_manifest(spark, out)["version"] == 3
+    assert sorted(r.id for r in manifest.read_table(spark, out).collect()) == [0, 1, 2]

@@ -62,6 +62,52 @@ def test_stream_restart_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1
 
 
+@pytest.mark.parametrize(
+    "mode", [{}, {"merge_on_read": True}, {"history_mode": True}],
+    ids=["cow", "mor", "scd2"],
+)
+def test_stream_replay_after_commit_adds_no_version(spark, tmp_path, monkeypatch, mode):
+    """A batch whose commit went through but whose sink then raised is
+    re-run, with the same batch id, by the restart from the same
+    checkpoint: the table records that id, so the replay commits no
+    version, and the rows equal one batch over the same files."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    src = str(tmp_path / "src")
+    _drop_file(spark, [("I", 1, "a"), ("I", 2, "b")], src, "20240101-01.parquet")
+    _drop_file(spark, [("U", 1, "a2"), ("D", 2, None), ("I", 3, "c")], src, "20240102-01.parquet")
+
+    def run(out, ckpt, per_trigger=None):
+        q = cdc_stream.start_cdc_stream(
+            spark, src, out, ["id"], SCHEMA, ckpt, available_now=True,
+            max_files_per_trigger=per_trigger, **mode,
+        )
+        q.awaitTermination(120)
+
+    def rows(out):
+        return sorted(map(tuple, manifest.read_table(spark, out).collect()))
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    real = manifest.commit_manifest
+
+    def commit_then_crash(*a, **kw):
+        version = real(*a, **kw)
+        if version == 2:
+            raise RuntimeError("crash after commit")
+        return version
+
+    with monkeypatch.context() as m:
+        m.setattr(manifest, "commit_manifest", commit_then_crash)
+        with pytest.raises(Exception, match="crash after commit"):
+            run(out, ckpt, per_trigger=1)
+    assert manifest.read_manifest(spark, out)["txn"] == {ckpt: 1}
+    run(out, ckpt, per_trigger=1)
+    assert manifest.read_manifest(spark, out)["version"] == 2
+    one_shot = str(tmp_path / "one_shot")
+    run(one_shot, str(tmp_path / "ck1"))
+    assert rows(out) == rows(one_shot)
+
+
 @pytest.mark.slow
 def test_stream_merge_on_read_mode(spark, tmp_path):
     """MOR streaming: same merge semantics through DVs+appends, one
@@ -287,8 +333,9 @@ def test_stream_scd2_history_mode(spark, tmp_path):
     assert files_v1 <= set(man2["files"])
     assert man2.get("delete_files")
 
-    # replay: a FRESH checkpoint re-delivers both files; the seq
-    # high-water mark must make the re-application a no-op
+    # replay: a FRESH checkpoint re-delivers both files; its first
+    # batch runs the exact per-key guard, which makes the
+    # re-application a no-op
     run(ck2)
     h3 = manifest.read_table(spark, out)
     assert sorted(map(tuple, h3.collect())) == sorted(map(tuple, h2.collect()))
@@ -365,7 +412,7 @@ def test_scd2_merge_on_read_equals_one_shot(spark, tmp_path):
             if buckets:
                 got = got.drop(lake_writer.PK_BUCKET_COL)
             assert sorted(map(tuple, got.collect())) == want, (buckets, split)
-            # replay the last batch: high-water guard makes it a no-op
+            # replay the last batch: the per-key guard makes it a no-op
             v = manifest.read_manifest(spark, out)["version"]
             lake_writer.scd2_merge_on_read(
                 spark, batches[-1], out, ["id"], bucket_partitions=buckets
