@@ -622,8 +622,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition), and estimates any word's count as min over its d cells.
     Everything here is deterministic integer arithmetic — word hash via
     the polynomial fold, cell via (a·h + b) mod P mod w — so the DuckDB
-    twin reproduces the sketch bit-for-bit; estimator error bounds are
-    pinned in tests.
+    twin reproduces the sketch bit-for-bit.
 
     Plan shape (round 10): count words FIRST, hash the DISTINCT
     vocabulary after. The cell sum over tokens equals the
@@ -637,15 +636,8 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     size gate applies like the other word-count queries.
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return count_min_cells(docs, "text")
-
-
-def count_min_cells(df: DataFrame, text_col: str) -> DataFrame:
-    """(row, col, n) cell sums of the corpus count-min sketch — the
-    mergeable form :func:`sketch_count_min` gates and
-    :func:`fold_count_min` maintains incrementally."""
     counts = (
-        df.select(F.explode(_tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("_cnt"))
     )
@@ -661,94 +653,6 @@ def count_min_cells(df: DataFrame, text_col: str) -> DataFrame:
         .groupBy("row", "col")
         .agg(F.sum("_cnt").alias("n"))
     )
-
-
-def fold_count_min(
-    spark: SparkSession,
-    batch: DataFrame,
-    text_col: str,
-    out_path: str,
-    batch_id: int | None = None,
-) -> bool:
-    """Incrementally maintain a persisted count-min sketch table (#125).
-
-    The sketch twin of the incremental materialized-view family
-    (operators/cdc.py grouped_agg_state): cell-wise addition is the CMS
-    merge operation, so per ingest batch the stored sketch advances by
-    ONE batch-sized pass — never a corpus recompute. The stored table
-    is FIXED SIZE (≤ d·w cells) regardless of corpus width, so the
-    state rewrite is O(1) by construction. At 100 TB the per-batch cost
-    is the batch's own tokenize + a d·w-bounded shuffle; the corpus
-    never re-enters. Read via ``manifest.read_table(spark, out_path)``.
-
-    Storage is MANIFEST-COMMITTED, the repo's lake format: each fold
-    appends the merged cells as new files and commits a manifest
-    listing ONLY them (the old state's files become unreferenced —
-    ``manifest.vacuum`` reclaims them), so a crash before the commit
-    leaves orphans and the retry re-runs cleanly; nothing is ever
-    partially visible. ``batch_id`` (e.g. the foreachBatch id) rides
-    the SAME commit as the ``cms_folded_through`` property, which makes
-    replays idempotent — a retried micro-batch whose id is already
-    committed returns False without touching the sketch. Cell sums are
-    NOT idempotent on their own (unlike the CDC merges' replay guards),
-    so streaming callers must pass it; :func:`start_sketch_stream`
-    (streaming/sketch_stream.py) does.
-
-    Fold(b1) ∘ fold(b2) ≡ sketch(b1 ∪ b2) exactly (integer cell sums;
-    pinned by the property test).
-
-    SINGLE-WRITER contract (round-10 advice): two concurrent folds of
-    the same sketch path would each read the same prior state and the
-    later commit would silently drop the earlier fold's counts (the
-    manifest is last-writer-wins). Each fold therefore (a) stages its
-    cells in a UNIQUE per-fold subdirectory and attributes exactly those
-    files — a before/after directory diff would absorb a concurrent
-    writer's uncommitted files into this fold's manifest, double-
-    counting cells — and (b) re-reads the manifest version right before
-    committing and raises on a mid-fold change, so a lost-update race
-    fails loudly instead of silently. The staged orphans of a failed
-    fold are reclaimed by ``manifest.vacuum`` (recursive walk +
-    empty-dir collapse).
-    """
-    import uuid
-
-    from ..sources import manifest as manifest_mod
-
-    man = manifest_mod.read_manifest(spark, out_path)
-    if man is not None and batch_id is not None:
-        done = (man.get("properties") or {}).get("cms_folded_through")
-        if isinstance(done, int) and batch_id <= done:
-            return False  # replayed micro-batch: already folded
-    merged = count_min_cells(batch, text_col)
-    if man is not None:
-        prev = manifest_mod.read_table(spark, out_path)
-        merged = (
-            prev.unionByName(merged)
-            .groupBy("row", "col")
-            .agg(F.sum("n").alias("n"))
-        )
-    sub = f"fold-{uuid.uuid4().hex[:12]}"
-    merged.write.parquet(f"{out_path.rstrip('/')}/{sub}")
-    added = [
-        f"{sub}/{name}"
-        for name in manifest_mod.list_data_files(
-            spark, f"{out_path.rstrip('/')}/{sub}"
-        )
-    ]
-    props = dict((man or {}).get("properties") or {})
-    if batch_id is not None:
-        props["cms_folded_through"] = int(batch_id)
-    # CAS commit pinned to the version this fold READ (round-13 ADVICE,
-    # same fix as fold_heavy_hitters): a concurrent fold raises
-    # ConcurrentCommitError inside commit_manifest's atomic history
-    # create — no check-then-commit window. Staged files under sub/
-    # stay orphans; vacuum reclaims them.
-    manifest_mod.commit_manifest(
-        spark, out_path, added, schema_json=merged.schema.json(),
-        properties=props or None,
-        expected_base_version=(man or {}).get("version") or 0,
-    )
-    return True
 
 
 _CMS_POLY = (
@@ -768,19 +672,6 @@ cells AS (
 )
 SELECT row, col, COUNT(*) AS n FROM cells GROUP BY row, col
 """
-
-
-def cms_estimate(sketch_rows, word: str) -> int:
-    """Point-estimate a word's count from collected sketch rows (the min
-    over its d cells) — the client-side read path of the sketch."""
-    h = 0
-    for ch in word:
-        h = (h * POLY_MUL + ord(ch)) % POLY_MOD
-    cells = {(r["row"], r["col"]): r["n"] for r in sketch_rows}
-    return min(
-        cells.get((i, (a * h + b) % CMS_P % CMS_WIDTH), 0)
-        for i, (a, b) in enumerate(zip(CMS_A, CMS_B))
-    )
 
 
 # ------------------------------------------------- repetition filters
@@ -1495,8 +1386,7 @@ def _mg_screen_fn(k: int):
     """mapInPandas body: per-partition bounded MG summary over a
     single ``word`` column, emitting ≤ k counter rows plus one
     word=NULL sentinel row carrying the partition's token count — the
-    shared screen for the batch heavy hitters (#151) and the
-    incremental fold (#175)."""
+    candidate screen of the batch heavy hitters (#151)."""
 
     def screen(batches):
         counts: dict = {}
@@ -1565,7 +1455,7 @@ def text_heavy_hitters(
     # release_persisted() with the other tracked frames
     scr = _dedup_track(toks.mapInPandas(screen, "word string, part_n long").persist())
     cands = scr.where(F.col("word").isNotNull()).select("word").distinct()
-    # counter rows now carry MG estimates (the #175 fold consumes them);
+    # counter rows carry MG estimates, used here only as candidates;
     # the corpus total is the sentinel rows alone
     total = scr.where(F.col("word").isNull()).agg(F.sum("part_n").alias("_n"))
     return (
@@ -1616,160 +1506,3 @@ def nfc_canonical(col) -> "F.Column":
         )
 
     return F.trim(F.regexp_replace(_nfc(col), r"\s+", " "))
-
-
-# --------- incremental Misra-Gries heavy-hitter state + fold (#175)
-
-MG_STATE_K = 64  # counters kept in the persisted summary
-
-
-def fold_heavy_hitters(
-    spark: SparkSession,
-    batch: DataFrame,
-    text_col: str,
-    out_path: str,
-    k: int = MG_STATE_K,
-    batch_id: int | None = None,
-) -> bool:
-    """Incrementally maintain a persisted Misra-Gries heavy-hitter
-    summary (#175) — the heavy-hitter twin of the count-min fold
-    (#125, :func:`fold_count_min`), with the same manifest-committed,
-    replay-idempotent, single-writer contract.
-
-    Per ingest batch: ONE batch-sized tokenize + the shared bounded
-    per-partition MG screen (:func:`_mg_screen_fn` — ≤ k rows per
-    partition, the long tail never accumulates anywhere), then a
-    driver-side merge of the ≤ k·P batch counters into the stored ≤ k
-    counters (mergeable summaries: counter addition + one prune is a
-    legal MG merge, Agarwal et al. PODS'12). The stored table is FIXED
-    SIZE — ≤ k counter rows plus one word=NULL sentinel carrying the
-    all-time token total — so state rewrite cost is O(k) whatever has
-    ever streamed. The corpus never re-enters.
-
-    Read back via :func:`heavy_hitter_state_candidates`: every stored
-    counter is a LOWER bound on the word's true all-time count, with
-    undercount ≤ total/(k+1) (the MG bound survives any merge
-    schedule), so the readout can certify hitters and enumerate a
-    guaranteed superset of the true > total/K set for K ≤ k.
-
-    ``batch_id`` rides the commit as ``mg_folded_through`` (replayed
-    micro-batches are committed no-ops); ``k`` rides as ``mg_k`` and a
-    later fold with a different k raises — counters pruned at one k
-    are not a valid summary at another.
-    """
-    import uuid
-
-    from ..sources import manifest as manifest_mod
-
-    man = manifest_mod.read_manifest(spark, out_path)
-    props_prev = dict((man or {}).get("properties") or {})
-    if man is not None and batch_id is not None:
-        done = props_prev.get("mg_folded_through")
-        if isinstance(done, int) and batch_id <= done:
-            return False  # replayed micro-batch: already folded
-    if man is not None:
-        k_prev = props_prev.get("mg_k")
-        if isinstance(k_prev, int) and k_prev != k:
-            raise ValueError(
-                f"heavy-hitter state at {out_path} was built with k={k_prev}; "
-                f"folding with k={k} would break the MG error bound"
-            )
-    toks = batch.select(F.explode(_tokens(F.col(text_col))).alias("word"))
-    scr = toks.mapInPandas(_mg_screen_fn(k), "word string, part_n long")
-    # bounded collect: <= k rows per partition + 1 sentinel each
-    counts: dict = {}
-    n_batch = 0
-    for r in scr.collect():
-        if r["word"] is None:
-            n_batch += int(r["part_n"])
-        else:
-            counts[r["word"]] = counts.get(r["word"], 0) + int(r["part_n"])
-    n_total = n_batch
-    if man is not None:
-        for r in manifest_mod.read_table(spark, out_path).collect():
-            if r["word"] is None:
-                n_total += int(r["n"])
-            else:
-                counts[r["word"]] = counts.get(r["word"], 0) + int(r["n"])
-    _mg_prune(counts, k)
-    rows = [(w, int(c)) for w, c in sorted(counts.items())] + [(None, int(n_total))]
-    merged = spark.createDataFrame(rows, "word string, n long")
-    sub = f"fold-{uuid.uuid4().hex[:12]}"
-    merged.coalesce(1).write.parquet(f"{out_path.rstrip('/')}/{sub}")
-    added = [
-        f"{sub}/{name}"
-        for name in manifest_mod.list_data_files(
-            spark, f"{out_path.rstrip('/')}/{sub}"
-        )
-    ]
-    props = props_prev
-    props["mg_k"] = int(k)
-    if batch_id is not None:
-        props["mg_folded_through"] = int(batch_id)
-    # Compare-and-swap commit (round-13 ADVICE): the old check-then-
-    # commit re-read left a TOCTOU window where a second fold landing
-    # between the re-check and the rename silently dropped this fold's
-    # counters. expected_base_version pins the commit to the manifest
-    # version this fold READ its counters from; a racing fold raises
-    # ConcurrentCommitError inside commit_manifest's atomic history
-    # create instead (staged files under the sub/ dir are orphans,
-    # vacuum reclaims them).
-    manifest_mod.commit_manifest(
-        spark, out_path, added, schema_json=merged.schema.json(),
-        properties=props,
-        expected_base_version=(man or {}).get("version") or 0,
-    )
-    return True
-
-
-def heavy_hitter_state_candidates(
-    spark: SparkSession, out_path: str, top_fraction_k: int
-) -> DataFrame:
-    """Read the persisted MG state (#175) as certified/candidate heavy
-    hitters for the > total/``top_fraction_k`` threshold.
-
-    Every stored counter c satisfies c ≤ true ≤ c + total/(k+1), so:
-    ``certified`` (c·K > total) words are PROVEN hitters, and the
-    returned set (c·K·(k+1) > total·(k+1−K)... equivalently
-    c + total/(k+1) > total/K, evaluated as the exact integer
-    inequality c·K·(k+1) > total·(k+1) − total·K) is a guaranteed
-    SUPERSET of the true hitters — integer arithmetic only, no float
-    thresholds. Requires ``top_fraction_k`` ≤ the state's mg_k.
-    """
-    from ..sources import manifest as manifest_mod
-
-    man = manifest_mod.read_manifest(spark, out_path) or {}
-    k_state = (man.get("properties") or {}).get("mg_k")
-    # The superset guarantee is derived from the state's OWN k — a
-    # state without a recorded mg_k (not written by fold_heavy_hitters)
-    # has an unknown undercount bound, so guessing kp1 from the query's
-    # top_fraction_k would silently void the certification. Refuse,
-    # mirroring fold_heavy_hitters' k-mismatch guard (round-13 ADVICE).
-    if not isinstance(k_state, int) or isinstance(k_state, bool):
-        raise ValueError(
-            f"state at {out_path} has no integer mg_k property "
-            f"(got {k_state!r}): not a fold_heavy_hitters state, its "
-            "undercount bound is unknown — refusing to certify hitters"
-        )
-    if top_fraction_k > k_state:
-        raise ValueError(
-            f"state built with mg_k={k_state} cannot answer a "
-            f"top-1/{top_fraction_k} query: undercount may hide hitters"
-        )
-    rows = manifest_mod.read_table(spark, out_path)
-    total = rows.where(F.col("word").isNull()).select(
-        F.col("n").alias("_tot")
-    )
-    kk = F.lit(int(top_fraction_k))
-    kp1 = F.lit(int(k_state + 1))
-    return (
-        rows.where(F.col("word").isNotNull())
-        .crossJoin(F.broadcast(total))
-        .where(F.col("n") * kk * kp1 > F.col("_tot") * (kp1 - kk))
-        .select(
-            "word",
-            F.col("n").alias("count_lower_bound"),
-            F.col("_tot").alias("total_tokens"),
-            (F.col("n") * kk > F.col("_tot")).alias("certified"),
-        )
-    )

@@ -244,14 +244,16 @@ def compute_file_stats(
     its types for ``cols`` only, so no schema-inference job runs (a file
     written before a column was added reads it as NULL).
 
-    ``files`` may be partition-relative paths; output keys match the
-    given names (Spark part files carry write-UUID basenames, so a
-    basename maps to exactly one listed path). ``cols`` must be DATA
-    columns — partition columns live in the path, not the files, and
-    are pruned by partition value instead."""
+    ``files`` are the table-relative names the manifest lists, all at
+    one depth (the table's partition levels); output keys are those
+    names, decoded from each row's URI by :func:`relative_name`. A
+    basename alone does not name a file: one write task gives its files
+    the same basename in every partition directory it writes. ``cols``
+    must be DATA columns — partition columns live in the path, not the
+    files, and are pruned by partition value instead."""
     if not files or not cols:
         return {}
-    by_basename = {posixpath.basename(f): f for f in files}
+    levels = files[0].count("/")
     aggs = []
     for c in cols:
         aggs.append(F.min(c).alias(f"_min_{c}"))
@@ -264,8 +266,7 @@ def compute_file_stats(
     )
     out: dict[str, dict] = {}
     for r in rows:
-        name = posixpath.basename(r["_f"].split("?", 1)[0])
-        out[by_basename.get(name, name)] = {
+        out[relative_name(r["_f"], levels)] = {
             c: {
                 "min": _stat_encode(r[f"_min_{c}"]),
                 "max": _stat_encode(r[f"_max_{c}"]),
@@ -322,9 +323,9 @@ def commit_manifest(
     one create succeeds — the loser raises
     :class:`ConcurrentCommitError` before the LATEST pointer moves.
     This closes the check-then-commit window a pre-commit version
-    re-read leaves open (round-13 ADVICE on fold_heavy_hitters).
-    ``None`` keeps the last-writer-wins behavior every non-CAS caller
-    relies on.
+    re-read leaves open. No package writer passes it yet; ``None``
+    keeps the last-writer-wins behavior every writer relies on today
+    (one writer per table).
 
     ``partition_keys`` (recorded once, carried forward when ``None``)
     marks a partitioned table: ``files`` are then partition-relative

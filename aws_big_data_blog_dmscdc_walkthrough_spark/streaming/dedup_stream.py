@@ -31,9 +31,8 @@ exact within the TTL window, by design not across it (unbounded exact
 dedup would need unbounded state; the batch operators #19/#79 own that
 job).
 
-Like the sessionizer (streaming/sessions.py), each micro-batch group
-concatenates its Arrow chunks and sorts by event time once — chunk
-boundaries are shuffle order, not time order.
+Each micro-batch group concatenates its Arrow chunks and sorts by
+event time once — chunk boundaries are shuffle order, not time order.
 """
 
 from __future__ import annotations

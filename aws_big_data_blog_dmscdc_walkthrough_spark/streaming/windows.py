@@ -1,11 +1,11 @@
-"""Streaming event-time aggregations: tumbling/sliding windows + watermark.
+"""Streaming event-time aggregation: tumbling windows + watermark.
 
-The batch twins live in plans/analytics.py (`q_events_tumbling`,
-`q_events_sliding`); these run the same logical aggregation over a file
-stream, with a watermark bounding state: windows older than the
-watermark are finalized and evicted, so state size is
-O(active windows × groups), not O(stream length) — the property that
-lets the aggregation run forever on an unbounded CDC/event feed.
+The batch twin lives in plans/analytics.py (`q_events_tumbling`); this
+runs the same logical aggregation over a file stream, with a watermark
+bounding state: windows older than the watermark are finalized and
+evicted, so state size is O(active windows × groups), not O(stream
+length) — the property that lets the aggregation run forever on an
+unbounded CDC/event feed. `stream_bench.py` times it.
 
 Late data: rows later than ``watermark`` past the max seen event time
 are dropped by the engine (append mode) — the deterministic, documented
@@ -65,27 +65,6 @@ def tumbling_counts(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window_size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked hopping-window aggregation (each row in size/slide windows)."""
-    return (
-        _watermarkable(events, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), window_size, slide).alias("w"),
-            F.col(group_col),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("w_start"), group_col, "n_events")
     )
 
 

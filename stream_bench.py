@@ -55,6 +55,17 @@ def _total_output_bytes(spark) -> int | None:
         return None
 
 
+def _land(batch, src: str, name: str) -> None:
+    """Land ``batch`` as the one file ``src/name``: DMS-shaped, one file
+    per batch with a lexically MONOTONIC name (the reference's discovery
+    contract, and what lets history mode persist file-derived seqs)."""
+    tmp = f"{src}/_tmp"
+    batch.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = glob.glob(f"{tmp}/part-*.parquet")[0]
+    os.rename(part, f"{src}/{name}")
+    shutil.rmtree(tmp)
+
+
 def _stage_update_heavy_landing(spark, sf_dir: str, src: str, n_batches: int):
     """Replay orders as an UPDATE-HEAVY change stream: batch k inserts
     key group k (o_orderkey ≡ k mod n) and updates ALL of group k-1 —
@@ -80,14 +91,7 @@ def _stage_update_heavy_landing(spark, sf_dir: str, src: str, n_batches: int):
                 (F.col("o_totalprice") + 1.0).alias("o_totalprice"),
             )
             batch = ins.unionByName(upd)
-        # DMS-shaped landing: one file per batch with a lexically
-        # MONOTONIC name (the reference's discovery contract — and what
-        # lets history mode persist file-derived seqs)
-        tmp = f"{src}/_tmp"
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        os.rename(part, f"{src}/20240101-{b:04d}.parquet")
-        shutil.rmtree(tmp)
+        _land(batch, src, f"20240101-{b:04d}.parquet")
         total += batch.count()
     return total, orders.count(), spark.read.parquet(src).schema
 
@@ -157,7 +161,7 @@ def bench_sparse_updates(spark, sf_dir: str, work: str, n_batches: int = 8) -> d
             "o_orderkey", "o_custkey",
             (F.col("o_totalprice") + 1.0).alias("o_totalprice"),
         )
-        upd.coalesce(1).write.mode("append").parquet(src)
+        _land(upd, src, f"{b:06d}.parquet")
         n_changes += upd.count()
     schema = spark.read.parquet(src).schema
 
@@ -215,8 +219,7 @@ def bench_sparse_updates(spark, sf_dir: str, work: str, n_batches: int = 8) -> d
     # SCD2 history under the same sparse-update stream: the incremental
     # fold (DV + append per batch) must write ~batch-sized MBs, never
     # history-sized — the workload the old full-table swap rewrite was
-    # fatal on. Keys are disjoint across batches (k % 977 == b), so the
-    # random landing file names can't violate per-key seq monotonicity.
+    # fatal on.
     lake, ckpt = f"{work}/sparse_lake_scd2", f"{work}/sparse_ckpt_scd2"
     init = base.select(
         F.lit("I").alias("op"),
@@ -265,13 +268,8 @@ def bench_windowed_agg(spark, sf_dir: str, work: str) -> dict:
     stream = windows.stream_events(spark, src, schema, max_files_per_trigger=2)
     agg = windows.tumbling_counts(stream)
     t0 = time.perf_counter()
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sb_windows")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{work}/wckpt")
-        .trigger(availableNow=True)
-        .start()
+    q = windows.run_to_sink(
+        agg, f"{work}/wckpt", "sb_windows", output_mode="complete"
     )
     q.awaitTermination()
     wall = time.perf_counter() - t0
@@ -300,14 +298,7 @@ def bench_dedup_stream(spark, sf_dir: str, work: str) -> dict:
     stream = windows.stream_events(spark, src, schema, max_files_per_trigger=2)
     out = ds.dedup_stream(stream, key_col="key", ts_col="ts")
     t0 = time.perf_counter()
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sb_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", f"{work}/dckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = windows.run_to_sink(out, f"{work}/dckpt", "sb_dedup")
     q.awaitTermination()
     wall = time.perf_counter() - t0
     # State size is the axis that decides whether this scales: the

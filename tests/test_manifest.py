@@ -124,6 +124,26 @@ def _pinit(spark, path):
     return df
 
 
+def test_stats_keyed_by_path_when_basenames_repeat(spark, tmp_path):
+    """One write task names its file in every partition directory with
+    the same basename: each file keeps its own stats, so a predicate
+    prunes neither partition's rows wrongly."""
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a", 1), (2, "a", 2), (3, "a", 3)]
+        + [(i, "b", 100 + i) for i in range(4, 8)],
+        "id long, dept string, v long",
+    ).coalesce(1)
+    lake_writer.write_initial(df, out, partition_keys=["dept"], stats_cols=["v"])
+    man = manifest.read_manifest(spark, out)
+    assert len({f.rsplit("/", 1)[1] for f in man["files"]}) == 1
+    assert {f.split("/")[0]: (s["v"]["min"], s["v"]["max"])
+            for f, s in man["stats"].items()} == {
+        "dept=a": (1, 3), "dept=b": (104, 107)}
+    got = manifest.read_table(spark, out, predicate=("v", ">=", 100))
+    assert sorted(r.id for r in got.collect()) == [4, 5, 6, 7]
+
+
 def test_partitioned_manifest_end_to_end(spark, tmp_path):
     """The flagship table shape: partitioned + manifest. One merge
     commits atomically across partitions; time travel spans it;

@@ -7,11 +7,11 @@ surfaces are the query registry (``__spark_entry__.py``), the CLI
 ``perfbench/``.
 
 The module walk follows the import graph; imports inside functions
-count, including relative ``from . import x``, and every ``streaming/``
-module is an entry. The definition walk works by name: a top-level
-function, class or assignment is reached when its name appears in an
-entry surface, in a module-level statement of any package module, or in
-the body of a reached definition. Code that no entry surface reaches is
+count, including relative ``from . import x``. No directory is a root:
+a module is reached only through an import. The definition walk works
+by name: a top-level function, class or assignment is reached when its
+name appears in an entry surface, in a module-level statement of any
+package module, or in the body of a reached definition. Code that no entry surface reaches is
 a capability nothing uses: delete it, wire it to an entry surface, or
 list it (``UNWIRED`` for a module, ``ENTRY_POINTS`` for a definition)
 with the reason it stays.
@@ -41,24 +41,6 @@ UNWIRED: dict[str, str] = {}
 # Top-level definitions kept although no entry surface names them, as
 # "<module under the package>.<name>" -> reason. Exact, like UNWIRED.
 ENTRY_POINTS = {
-    "streaming.sketch_stream.start_sketch_stream": "Structured Streaming "
-    "entry point: landing files into the persisted count-min sketch",
-    "streaming.sketch_stream.start_heavy_hitter_stream": "Structured "
-    "Streaming entry point: landing files into the Misra-Gries state",
-    "streaming.sessions.sessionize_stream": "Structured Streaming entry "
-    "point: closed gap sessions from an event stream",
-    "streaming.joins.stream_interval_join": "Structured Streaming entry "
-    "point: watermarked stream-stream interval join",
-    "streaming.rate_stream.burst_screen": "Structured Streaming entry "
-    "point: per-user burst-rate screen",
-    "streaming.windows.sliding_counts": "Structured Streaming entry "
-    "point: watermarked hopping-window counts",
-    "streaming.windows.run_to_sink": "Structured Streaming entry point: "
-    "drains a windowed stream into a sink table",
-    "operators.text.cms_estimate": "readout of the state "
-    "start_sketch_stream writes",
-    "operators.text.heavy_hitter_state_candidates": "readout of the state "
-    "start_heavy_hitter_stream writes",
     "sources.lake_writer.read_change_feed": "subscriber side of the "
     "controller's change_feed flag: the feed files committed versions list",
     "operators.text.poly_fingerprint": "reference implementation "
@@ -126,12 +108,14 @@ def _imported(path: str, module: str | None, mods: dict[str, str]) -> set[str]:
     return found
 
 
-def _unreached() -> list[str]:
-    mods = _package_modules()
-    seen = {f"{PKG}.__main__", f"{PKG}.pipeline.controller"}
-    seen |= {m for m in mods if m.startswith(f"{PKG}.streaming.")}
+def _unreached(
+    mods: dict[str, str], entry_files: list[str], root_modules: set[str]
+) -> list[str]:
+    """Modules in ``mods`` that neither ``root_modules`` nor the
+    ``entry_files`` import, directly or through another module."""
+    seen = set(root_modules)
     todo = list(seen)
-    for path in _entry_files():
+    for path in entry_files:
         for m in _imported(path, None, mods) - seen:
             seen.add(m)
             todo.append(m)
@@ -144,7 +128,11 @@ def _unreached() -> list[str]:
 
 
 def test_every_package_module_is_reached_from_an_entry_surface():
-    unreached = _unreached()
+    unreached = _unreached(
+        _package_modules(),
+        _entry_files(),
+        {f"{PKG}.__main__", f"{PKG}.pipeline.controller"},
+    )
     unlisted = [m for m in unreached if m not in UNWIRED]
     assert not unlisted, (
         "package modules no entry surface imports (delete them, wire "
@@ -300,15 +288,19 @@ def test_definition_walk_roots_and_exactness(tmp_path):
 
 def test_walk_follows_function_local_relative_imports(tmp_path):
     """The walk sees ``from . import x`` inside a function body, and a
-    package ``__init__``'s ``.`` is the package itself."""
+    package ``__init__``'s ``.`` is the package itself. No directory is
+    a root: a ``streaming/`` module nothing imports is unreached."""
     pkg = tmp_path / "p"
     (pkg / "sub").mkdir(parents=True)
+    (pkg / "streaming").mkdir()
     files = {
         "p": pkg / "__init__.py",
         "p.a": pkg / "a.py",
         "p.b": pkg / "b.py",
         "p.sub": pkg / "sub" / "__init__.py",
         "p.sub.x": pkg / "sub" / "x.py",
+        "p.streaming": pkg / "streaming" / "__init__.py",
+        "p.streaming.s": pkg / "streaming" / "s.py",
     }
     for f in files.values():
         f.write_text("")
@@ -317,3 +309,4 @@ def test_walk_follows_function_local_relative_imports(tmp_path):
     mods = {name: str(f) for name, f in files.items()}
     assert _imported(mods["p.a"], "p.a", mods) == {"p", "p.b"}
     assert _imported(mods["p.sub"], "p.sub", mods) == {"p", "p.a", "p.sub", "p.sub.x"}
+    assert _unreached(mods, [], {"p.sub"}) == ["p.streaming", "p.streaming.s"]

@@ -3,7 +3,6 @@
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -105,88 +104,6 @@ def test_streaming_tumbling_watermark(spark, tmp_path):
     assert got == {(1, "click"): (2, 3.0), (2, "view"): (1, 3.0)}
 
 
-@pytest.mark.slow
-def test_streaming_sliding_late_row_dropped(spark, tmp_path):
-    import time
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
-    # The watermark that FILTERS batch N is the one committed after batch
-    # N-2 (one-batch lag, observed + documented "at least delay" contract):
-    # file a advances it, file b rides the lag, file c is truly dropped.
-    _write_events(spark, [(_t(1, 10), "click", 1.0, 1), (_t(9, 0), "x", 0.0, 2)], src, "a")
-    time.sleep(1.1)  # file-source batches order by mod time
-    _write_events(spark, [(_t(1, 20), "click", 1.0, 3)], src, "b")
-    time.sleep(1.1)
-    _write_events(spark, [(_t(1, 25), "click", 1.0, 4)], src, "c")  # dropped
-    stream = sw.stream_events(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    agg = sw.sliding_counts(stream, "1 hour", "30 minutes", "2 hours")
-    q = sw.run_to_sink(agg, ckpt, "sliding_sink")
-    q.awaitTermination(120)
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for op in p.get("stateOperators", [])
-    )
-    rows = {
-        (r.w_start.hour, r.w_start.minute, r.event_type): r.n_events
-        for r in spark.sql("select * from sliding_sink").collect()
-    }
-    # hopping: each click lands in two windows; the 1:25 row (6 h behind
-    # the 7:00 watermark) was dropped from both of its windows
-    assert dropped == 2
-    assert rows.get((0, 30, "click")) == 2 and rows.get((1, 0, "click")) == 2
-
-
-# ------------------------------------- stateful streaming sessionization
-
-
-@pytest.mark.slow
-def test_streaming_sessionize_gap_and_timeout(spark, tmp_path):
-    import time
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import sessions as ss
-
-    src, ckpt = str(tmp_path / "ssrc"), str(tmp_path / "sck")
-    # user 1: two events 10 min apart (one session), then a 2 h gap, then
-    # one more (second session). user 2: a single event.
-    _write_events(
-        spark,
-        [
-            (_t(1, 0), "u", 1.0, 1),
-            (_t(1, 10), "u", 2.0, 1),
-            (_t(3, 30), "u", 4.0, 1),
-            (_t(1, 5), "u", 8.0, 2),
-        ],
-        src,
-        "a",
-    )
-    time.sleep(1.1)
-    # watermark pusher: advances event time far enough that every open
-    # session's timeout fires (batch N filter lag: give it two batches)
-    _write_events(spark, [(_t(20, 0), "u", 0.0, 99)], src, "b")
-    time.sleep(1.1)
-    _write_events(spark, [(_t(21, 0), "u", 0.0, 99)], src, "c")
-
-    stream = sw.stream_events(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    ev = stream.select(
-        F.col("ts"), F.col("event_id").alias("user_id"), F.col("value")
-    )
-    agg = ss.sessionize_stream(ev)
-    q = sw.run_to_sink(agg, ckpt, "sessions_sink", output_mode="append")
-    q.awaitTermination(180)
-    rows = sorted(
-        (r.user_id, r.session_start.hour, r.session_start.minute, r.n_events, r.sum_value)
-        for r in spark.sql("select * from sessions_sink where user_id in (1, 2)").collect()
-    )
-    # user 1 session A: 1:00-1:10, 2 events, sum 3; session B: 3:30, 1 event
-    # user 2: single-event session at 1:05
-    assert rows == [
-        (1, 1, 0, 2, 3.0),
-        (1, 3, 30, 1, 4.0),
-        (2, 1, 5, 1, 8.0),
-    ]
-
-
 def test_skew_report_flags_hot_key(spark):
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators import skew
 
@@ -261,60 +178,3 @@ def test_streaming_dedup_ttl_first_suppress_expire(spark, tmp_path):
     assert ("B", "first", 1, 10, 0) in rows
     b_exp = [r for r in rows if r[0] == "B" and r[1] == "expired"]
     assert b_exp and b_exp[0][4] == 0               # B saw no dups
-
-
-@pytest.mark.slow
-def test_burst_screen_flags_and_summarizes(spark, tmp_path):
-    """Streaming burst screen (#186's twin): user A fires 5 events
-    inside one hour (threshold 5) -> exactly ONE 'flag' row at the
-    crossing; user B stays below threshold -> no flag. After both go
-    quiet past window + watermark, each emits one 'summary' with the
-    true peak and lifetime totals."""
-    import time
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import (
-        rate_stream as rs,
-    )
-
-    src, ckpt = str(tmp_path / "rsrc"), str(tmp_path / "rck")
-    # A: 5 events in hour 1 (bucket granularity 1h, window 4h)
-    _write_events(
-        spark,
-        [(_t(1, m), "A", 1.0, m) for m in (0, 5, 10, 15, 20)]
-        + [(_t(1, 30), "B", 1.0, 50), (_t(1, 45), "B", 1.0, 51)],
-        src,
-        "a",
-    )
-    time.sleep(1.1)
-    # a 6th A event later: already flagged -> no second flag row
-    _write_events(spark, [(_t(2, 0), "A", 1.0, 6)], src, "b")
-    time.sleep(1.1)
-    # watermark pushers: past window (4h) + watermark (2h) for both
-    _write_events(spark, [(_t(12, 0), "wm1", 0.0, 90)], src, "c")
-    time.sleep(1.1)
-    _write_events(spark, [(_t(23, 0), "wm2", 0.0, 91)], src, "d")
-
-    stream = sw.stream_events(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    out = rs.burst_screen(
-        stream,
-        user_col="event_type",
-        ts_col="ts",
-        window_seconds=4 * 3600,
-        bucket_seconds=3600,
-        threshold=5,
-    )
-    q = sw.run_to_sink(out, ckpt, "burst_sink", output_mode="append")
-    q.awaitTermination(240)
-    rows = sorted(
-        (r.user, r.row_type, r.burst, r.n_events)
-        for r in spark.sql(
-            "select * from burst_sink where user in ('A','B')"
-        ).collect()
-    )
-    flags = [r for r in rows if r[1] == "flag"]
-    assert flags == [("A", "flag", 5, 0)]  # one crossing, at burst=5
-    summaries = {r[0]: r for r in rows if r[1] == "summary"}
-    # A's peak is 6 (the 6th event lands inside the same 4h window);
-    # lifetime totals count every event
-    assert summaries["A"][2:] == (6, 6)
-    assert summaries["B"][2:] == (2, 2)

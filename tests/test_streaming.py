@@ -237,59 +237,6 @@ def test_streaming_tumbling_equals_batch_on_events_table(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_interval_join_equals_batch(spark, tmp_path):
-    """Stream-stream interval join, drained with availableNow, must
-    produce exactly the batch join's rows: same keys, same pairs."""
-    from pyspark.sql import functions as F
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import joins as sj
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import windows as sw
-
-    # two tiny correlated event streams: clicks and purchases per user
-    clicks = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00"),
-            (1, "2024-01-01 12:00:00"),
-            (2, "2024-01-01 10:30:00"),
-            (3, "2024-01-01 09:00:00"),
-        ],
-        "user_id long, ts_s string",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    purchases = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:20:00", 9.99),   # joins click@10:00 (within 1h)
-            (1, "2024-01-01 13:30:00", 5.00),   # joins nothing (>1h after 12:00)
-            (2, "2024-01-01 10:45:00", 3.50),   # joins click@10:30
-            (4, "2024-01-01 10:00:00", 1.00),   # no matching user
-        ],
-        "user_id long, ts_s string, amount double",
-    ).select(
-        "user_id", F.col("ts_s").cast("timestamp").alias("ts"), "amount"
-    )
-    cdir, pdir = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    clicks.coalesce(1).write.parquet(cdir)
-    purchases.coalesce(1).write.parquet(pdir)
-
-    cs = sw.stream_events(spark, cdir, clicks.schema)
-    ps = sw.stream_events(spark, pdir, purchases.schema)
-    joined = sj.stream_interval_join(
-        cs, ps, on=["user_id"], lower="0 seconds", upper="1 hour"
-    )
-    q = sw.run_to_sink(joined, str(tmp_path / "ck"), "ssj_out")
-    q.awaitTermination(120)
-
-    got = {
-        (r.user_id, str(r.ts), str(r.ts_r), r.amount)
-        for r in spark.sql("SELECT * FROM ssj_out").collect()
-    }
-    want = {
-        (1, "2024-01-01 10:00:00", "2024-01-01 10:20:00", 9.99),
-        (2, "2024-01-01 10:30:00", "2024-01-01 10:45:00", 3.50),
-    }
-    assert got == want
-
-
-@pytest.mark.slow
 def test_stream_scd2_history_mode(spark, tmp_path):
     """History mode: versions accumulate with validity intervals; a
     replayed batch (fresh checkpoint over the same files) is a no-op.
@@ -486,39 +433,3 @@ def test_scd2_history_additive_schema_evolution(spark, tmp_path):
     )
     with pytest.raises(Exception, match="type|Type"):
         lake_writer.scd2_merge_on_read(spark, bad, out, ["id"])
-
-
-def test_sketch_stream_folds_batches_and_restarts(spark, tmp_path):
-    """The streaming sketch fold: drain a backlog, then new files after
-    a restart increment the SAME sketch — final cells equal the one-shot
-    sketch of everything streamed (replay-safe via the batch-id marker
-    on the manifest commit)."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming.sketch_stream import (
-        start_sketch_stream,
-    )
-
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    d1 = spark.createDataFrame(
-        [(0, "alpha beta gamma"), (1, "alpha alpha")], "doc_id long, text string"
-    )
-    d1.write.parquet(src)
-    q = start_sketch_stream(
-        spark, src, out, "text", "doc_id long, text string", ckpt
-    )
-    q.awaitTermination(120)
-    d2 = spark.createDataFrame([(2, "beta delta")], "doc_id long, text string")
-    d2.write.mode("append").parquet(src)
-    q2 = start_sketch_stream(
-        spark, src, out, "text", "doc_id long, text string", ckpt
-    )
-    q2.awaitTermination(120)
-    got = {(r.row, r.col): r.n for r in manifest.read_table(spark, out).collect()}
-    want = {
-        (r.row, r.col): r.n
-        for r in text_ops.count_min_cells(d1.unionByName(d2), "text").collect()
-    }
-    assert got == want

@@ -1,6 +1,5 @@
 """Text operator semantics: known-value fingerprints and counts."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text
@@ -93,13 +92,6 @@ def test_count_min_sketch_estimates_bound_exact_counts(spark):
     sketch = text_ops.sketch_count_min(spark, SF_SMOKE).collect()
     # fixed size regardless of vocabulary
     assert len(sketch) <= text_ops.CMS_DEPTH * text_ops.CMS_WIDTH
-    exact = {r.word: r.n for r in text_ops.text_word_topk(spark, SF_SMOKE, 15).collect()}
-    for w, n in exact.items():
-        est = text_ops.cms_estimate(sketch, w)
-        # CMS never underestimates; overestimate bounded by collisions
-        assert n <= est <= n + 3 * (sum(exact.values()) // text_ops.CMS_WIDTH + 1)
-    # absent word estimates only collision noise
-    assert text_ops.cms_estimate(sketch, "zzz-not-a-word") < min(exact.values())
 
 
 def test_split_assignment_stable_under_corpus_growth(spark):
@@ -335,110 +327,6 @@ def test_sample_weighted_prefers_heavy_rows(spark, monkeypatch, tmp_path):
     assert top == max(ks)
 
 
-def test_fold_count_min_equals_one_shot(spark, tmp_path):
-    """fold(b1) ∘ fold(b2) ∘ fold(b3) must equal the one-shot sketch of
-    the union, cell-for-cell (integer sums — the CMS merge property),
-    and the estimator must read identically from the folded store."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-
-    texts = [
-        "alpha beta gamma alpha", "beta beta delta", "gamma alpha epsilon",
-        "zeta eta theta", "alpha alpha alpha", "delta epsilon zeta eta",
-    ]
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = str(tmp_path / "cms_store")
-    for lo, hi in ((0, 2), (2, 3), (3, 6)):
-        text_ops.fold_count_min(
-            spark, df.where(f"doc_id >= {lo} AND doc_id < {hi}"), "text", out
-        )
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-
-    folded = {
-        (r.row, r.col): r.n for r in manifest.read_table(spark, out).collect()
-    }
-    want = {
-        (r.row, r.col): r.n
-        for r in text_ops.count_min_cells(df, "text").collect()
-    }
-    assert folded == want
-    est = text_ops.cms_estimate(manifest.read_table(spark, out).collect(), "alpha")
-    assert est >= 6  # true count 6; CMS never underestimates
-
-
-def test_fold_count_min_replay_and_crash_safety(spark, tmp_path):
-    """Manifest-committed folds: a replayed micro-batch (same batch_id)
-    is a no-op returning False, and orphan files from a crash before
-    the commit are invisible to the manifest read — counts never
-    double, never reset."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-
-    df = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "alpha gamma")], "doc_id long, text string"
-    )
-    out = str(tmp_path / "cms_store")
-    assert text_ops.fold_count_min(spark, df.where("doc_id = 0"), "text", out, batch_id=0)
-    # crash-before-commit simulation: an orphan data file in the dir
-    spark.createDataFrame([(0, 0, 999)], "row int, col int, n long").write.mode(
-        "append"
-    ).parquet(out)
-    assert text_ops.fold_count_min(spark, df.where("doc_id = 1"), "text", out, batch_id=1)
-    # replay of batch 1: already folded -> untouched
-    assert not text_ops.fold_count_min(spark, df.where("doc_id = 1"), "text", out, batch_id=1)
-    folded = {(r.row, r.col): r.n for r in manifest.read_table(spark, out).collect()}
-    want = {
-        (r.row, r.col): r.n
-        for r in text_ops.count_min_cells(df, "text").collect()
-    }
-    assert folded == want  # orphan ignored, replay ignored, both batches in
-
-
-def test_fold_count_min_detects_concurrent_writer(spark, tmp_path):
-    """Round-10 advice: the sketch store is single-writer — a fold whose
-    manifest advanced underneath it (another fold committed in between)
-    must raise instead of silently dropping the other fold's counts, and
-    its staged files must stay orphans (invisible to read_table)."""
-    import pytest
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-
-    df = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "beta gamma")], "doc_id long, text string"
-    )
-    out = str(tmp_path / "cms_racy")
-    text_ops.fold_count_min(spark, df.where("doc_id = 0"), "text", out)
-    want = sorted(map(tuple, manifest.read_table(spark, out).collect()))
-
-    # simulate the race: the fold reads the manifest for its state,
-    # then a concurrent fold commits before this fold's CAS commit
-    # (the interleaved commit fires from inside commit_manifest's own
-    # base read — the worst-case ordering the old check-then-commit
-    # version re-read could not catch)
-    orig = manifest.read_manifest
-    calls = {"n": 0}
-
-    def racing_read(sp, path):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            man = orig(sp, path)
-            manifest.commit_manifest(sp, path, man["files"])
-        return orig(sp, path)
-
-    manifest.read_manifest = racing_read
-    try:
-        with pytest.raises(manifest.ConcurrentCommitError):
-            text_ops.fold_count_min(spark, df.where("doc_id = 1"), "text", out)
-    finally:
-        manifest.read_manifest = orig
-
-    # the failed fold's staged files are orphans: the committed state is
-    # exactly what the interleaved commit published (the first fold's)
-    got = sorted(map(tuple, manifest.read_table(spark, out).collect()))
-    assert got == want
-
-
 def test_heavy_hitters_candidate_screen_is_lossless(spark, tmp_path):
     """Long-tail construction: thousands of unique words and two heavy
     ones spread across many partitions. The per-partition screen must
@@ -518,115 +406,3 @@ def test_heavy_hitters_bounded_summary_forces_prune(spark, tmp_path):
     # brute force: only 'heavy' exceeds n/50 = 432
     assert got == {("heavy", 1600)}, got
     assert 1600 * 50 > n_total
-
-
-@pytest.mark.slow
-def test_fold_heavy_hitters_bounds_and_superset(spark, tmp_path):
-    """MG invariants across a two-batch fold: every stored counter is a
-    lower bound on the true all-time count with undercount <= total/(k+1);
-    the candidate readout is a superset of the true > total/K hitters and
-    every certified row truly passes the threshold. State stays <= k+1
-    rows."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-
-    out = str(tmp_path / "mg_state")
-    # skewed corpus: 'hot' dominates, 'warm' borderline, long tail w{i}
-    b1 = spark.createDataFrame(
-        [(0, "hot " * 30 + "warm " * 8 + " ".join(f"w{i}" for i in range(40)))],
-        ["doc_id", "text"],
-    )
-    b2 = spark.createDataFrame(
-        [(1, "hot " * 25 + "warm " * 7 + " ".join(f"v{i}" for i in range(35)))],
-        ["doc_id", "text"],
-    )
-    k = 8
-    assert text_ops.fold_heavy_hitters(spark, b1, "text", out, k=k, batch_id=0)
-    assert text_ops.fold_heavy_hitters(spark, b2, "text", out, k=k, batch_id=1)
-    # replay is a committed no-op
-    assert not text_ops.fold_heavy_hitters(spark, b2, "text", out, k=k, batch_id=1)
-
-    union = b1.unionByName(b2)
-    true_counts = {
-        r["word"]: r["n"]
-        for r in union.selectExpr(
-            r"explode(split(trim(text), '\\s+')) AS word"
-        ).groupBy("word").count().withColumnRenamed("count", "n").collect()
-    }
-    total = sum(true_counts.values())
-
-    state = {r["word"]: r["n"] for r in manifest.read_table(spark, out).collect()}
-    assert state.pop(None) == total
-    assert len(state) <= k
-    for w, c in state.items():
-        assert c <= true_counts[w]
-        assert true_counts[w] - c <= total / (k + 1)
-
-    K = 5
-    cands = text_ops.heavy_hitter_state_candidates(spark, out, K)
-    rows = {r.word: (r.count_lower_bound, r.certified) for r in cands.collect()}
-    true_hitters = {w for w, c in true_counts.items() if c * K > total}
-    assert true_hitters <= set(rows)  # superset guarantee
-    for w, (c, certified) in rows.items():
-        if certified:
-            assert w in true_hitters  # certified rows are proven
-
-
-@pytest.mark.slow
-def test_fold_heavy_hitters_k_mismatch_and_query_guard(spark, tmp_path):
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-
-    out = str(tmp_path / "mg_state")
-    df = spark.createDataFrame([(0, "a a b")], ["doc_id", "text"])
-    text_ops.fold_heavy_hitters(spark, df, "text", out, k=8)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="k=8"):
-        text_ops.fold_heavy_hitters(spark, df, "text", out, k=16)
-    with _pytest.raises(ValueError, match="top-1/32"):
-        text_ops.heavy_hitter_state_candidates(spark, out, 32).collect()
-
-    # a state WITHOUT a recorded mg_k (not written by fold_heavy_hitters)
-    # has an unknown undercount bound: the readout must refuse rather
-    # than guess kp1 from the query's k (round-13 ADVICE)
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-
-    alien = str(tmp_path / "alien_state")
-    spark.createDataFrame(
-        [("a", 2), (None, 3)], "word string, n long"
-    ).coalesce(1).write.parquet(alien)
-    manifest.commit_manifest(
-        spark, alien, manifest.list_data_files(spark, alien)
-    )
-    with _pytest.raises(ValueError, match="no integer mg_k"):
-        text_ops.heavy_hitter_state_candidates(spark, alien, 4)
-
-
-@pytest.mark.slow
-def test_heavy_hitter_stream_drains_and_matches_fold(spark, tmp_path):
-    """The streaming twin over a 3-file landing folder produces the
-    same state as sequential folds of the same batches."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import text as text_ops
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
-    from aws_big_data_blog_dmscdc_walkthrough_spark.streaming import sketch_stream
-
-    src = str(tmp_path / "landing")
-    texts = ["hot hot hot cold", "hot warm warm", "hot hot tail1 tail2"]
-    for i, t in enumerate(texts):
-        spark.createDataFrame([(i, t)], ["doc_id", "text"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    out = str(tmp_path / "mg_stream")
-    q = sketch_stream.start_heavy_hitter_stream(
-        spark, src, out, "text", schema,
-        checkpoint_dir=str(tmp_path / "ckpt"), k=8, max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    state = {r["word"]: r["n"] for r in manifest.read_table(spark, out).collect()}
-    assert state[None] == 11  # total tokens across all files
-    assert state["hot"] >= 1 and state["hot"] <= 6
-    # certified at K=3: hot (6 of 11 > 11/3)
-    cands = text_ops.heavy_hitter_state_candidates(spark, out, 3)
-    certified = {r.word for r in cands.collect() if r.certified}
-    assert "hot" in certified or state["hot"] * 3 <= 11
