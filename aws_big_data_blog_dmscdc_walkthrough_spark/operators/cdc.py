@@ -24,6 +24,8 @@ Spark-first re-expression of the reference incremental merge
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -64,8 +66,9 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     size-only stats visitor propagates the same file-scan bytes through
     either, but the optimizer pass costs ~10 ms of driver time per call
     (measured: identical estimates, 6× cheaper) — and this probe runs
-    twice on every keyed lake merge: the key broadcast guard here, and
-    the rewrite's file sizing (``lake_writer._coalesce_to_open_cost``).
+    on every keyed lake merge: the key broadcast guard here, and the
+    file sizing of the batch, the table and the rewrite
+    (:func:`_coalesce_to_open_cost`).
     Where the two could differ (optimizer-pruned subtrees) the analyzed
     estimate is LARGER, i.e. conservative: it declines a borderline
     broadcast rather than risking driver OOM (AQE still re-broadcasts
@@ -75,6 +78,33 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 - estimate only; caller degrades safely
         return None
+
+
+def _open_cost_tasks(df: DataFrame) -> int | None:
+    """ceil(Catalyst's size estimate / ``spark.sql.files.openCostInBytes``):
+    the tasks a write of ``df`` is sized to, so that no task emits a file
+    smaller than what the scan planner charges every later reader to
+    open one. ``None`` for frames with no real estimate (placeholder
+    stats)."""
+    est = _plan_size_bytes(df)
+    if est is None or est >= _UNKNOWN_SIZE_SENTINEL:
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return max(1, -(-est // conf.filesOpenCostInBytes()))
+
+
+def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
+    """Cap ``df`` at one task per ``openCostInBytes`` of its estimate
+    (:func:`_open_cost_tasks`). A frame that fits in one task becomes
+    ``SinglePartition``, which satisfies every clustered distribution: a
+    window or aggregate over it (or over a union of such frames) plans no
+    ``Exchange``, so it runs in the job that consumes it.
+
+    ``coalesce`` never adds a shuffle or raises the partition count: a
+    frame larger than ``openCost × upstream tasks`` keeps its plan
+    unchanged. Frames with no real estimate are returned as they are."""
+    n = _open_cost_tasks(df)
+    return df if n is None else df.coalesce(n)
 
 
 def _maybe_broadcast(keys: DataFrame, max_bytes: int) -> DataFrame:
@@ -283,7 +313,10 @@ def merge_parts(
     outranks the target row, so no target row can win and the target
     side of the window would be dead weight (a second scan of the
     target plus its share of the window shuffle). ``impacted`` stays a
-    lazy frame that only the callers reading it execute.
+    lazy frame that only the callers reading it execute. Unpruned, the
+    target's rows rank with the batch's, as the reference does; a
+    target row whose key has a NULL survives on both paths, since no
+    change row can match it.
 
     ``prune_keys``, when given, must be exactly the batch's keys
     (``changes.select(*primary_keys)``, duplicates allowed, size-guarded
@@ -331,9 +364,17 @@ def merge_parts(
     window = Window.partitionBy(*pks).orderBy(
         F.col("_src").desc(), F.col("_seq").desc_nulls_last()
     )
+    keep = F.col("_rnk") == 1
+    if not prune_with_broadcast:
+        # the window groups NULL keys as one key, but no change row can
+        # match a target row whose key has a NULL (the pruned path's
+        # anti-join keeps them all): every such target row survives
+        keep = keep | (
+            (F.col("_src") == 0)
+            & functools.reduce(operator.or_, [F.col(k).isNull() for k in pks])
+        )
     survivors = (
-        ranked.withColumn("_rnk", F.row_number().over(window))
-        .where(F.col("_rnk") == 1)
+        ranked.withColumn("_rnk", F.row_number().over(window)).where(keep)
     )
     return survivors, untouched, impacted
 

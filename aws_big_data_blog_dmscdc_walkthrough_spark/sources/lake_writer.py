@@ -44,19 +44,23 @@ reload, a compaction) records the frame's schema.
 
 Scale-correct replacement:
   * every keyed merge, partitioned or not: FILE-level copy-on-write
-    matching the reference (DMSCDC_LoadIncremental.py:64-87): tag
-    target rows with ``input_file_name()``, broadcast-semi-join on the
-    batch's keys to find impacted files, merge only those files' rows,
-    append the rewritten survivors as new files, commit, then delete
-    the superseded files. Untouched files are never read in full, never
-    rewritten. Discovery by PK, not by the batch's partition values, is
-    what catches an update that MOVES a row across partitions and a
-    partition whose rows are all deleted (it loses its files and its
-    directory). The only driver materialization is the impacted-file
-    list (bounded by files actually containing changed keys — the same
-    list the reference's boto3 loop holds). The rewrite coalesces to
-    one task per ``spark.sql.files.openCostInBytes`` of Catalyst's
-    size estimate (``_coalesce_to_open_cost``) instead of the
+    matching the reference (DMSCDC_LoadIncremental.py:64-87). A table
+    whose live files fit in one rewrite task (one
+    ``spark.sql.files.openCostInBytes`` of Catalyst's size estimate)
+    is rewritten whole: its rows rank together with the batch, as the
+    reference's union-and-rank does, in the one Spark job that writes
+    them. Above that size, tag target rows with ``input_file_name()``,
+    broadcast-semi-join on the batch's keys to find impacted files,
+    merge only those files' rows, append the rewritten survivors as new
+    files, commit, then delete the superseded files: untouched files
+    are never read in full, never rewritten. Discovery by PK, not by
+    the batch's partition values, is what catches an update that MOVES
+    a row across partitions and a partition whose rows are all deleted
+    (it loses its files and its directory). The only driver
+    materialization is the impacted-file list (bounded by files
+    actually containing changed keys — the same list the reference's
+    boto3 loop holds). The rewrite coalesces to one task per open cost
+    of its estimate (``cdc._coalesce_to_open_cost``) instead of the
     reference's coalesce(1): a small rewrite writes one file per table
     or touched partition, a large one keeps its parallelism, and no
     shuffle is added.
@@ -137,7 +141,14 @@ def merge_incremental(
     key, ``op`` kept so deletes are visible tombstones; a keyless batch's
     inserts) in the same commit, as the version's feed files
     (``_commit_write``'s ``feed``; read with ``read_change_feed``).
+
+    A keyed batch is coalesced to one task per open cost of its
+    estimate (``cdc._coalesce_to_open_cost``): a batch that fits in one
+    task is one partition, so the windows that rank it shuffle nothing.
+    A keyless batch, which no window ranks, appends as it was read.
     """
+    if primary_keys:
+        changes = cdc._coalesce_to_open_cost(changes)
     feed = None
     if change_feed:
         for col in (op_col, *((seq_col,) if primary_keys else ())):
@@ -648,22 +659,6 @@ def _commit_write(
             )
 
 
-def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
-    """Cap a merge rewrite at one task per ``openCostInBytes`` of
-    Catalyst's size estimate, so no rewrite emits files smaller than
-    what the scan planner charges every later reader to open one.
-
-    ``coalesce`` never adds a shuffle or raises the partition count: a
-    rewrite larger than ``openCost × upstream tasks`` keeps its plan
-    unchanged. Frames with no real estimate (placeholder stats) are
-    written as they are."""
-    est = cdc._plan_size_bytes(df)
-    if est is None or est >= cdc._UNKNOWN_SIZE_SENTINEL:
-        return df
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    return df.coalesce(max(1, -(-est // conf.filesOpenCostInBytes())))
-
-
 def _merge_cow(
     spark: SparkSession,
     changes: DataFrame,
@@ -679,6 +674,19 @@ def _merge_cow(
 ) -> None:
     """File-level copy-on-write (DMSCDC_LoadIncremental.py:64-87), the
     one keyed merge for a table with live files, partitioned or not.
+
+    A table whose live files fit in one rewrite task (Catalyst's
+    estimate at most ``spark.sql.files.openCostInBytes``, the bound
+    ``cdc._coalesce_to_open_cost`` sizes every rewrite by) is merged as
+    the reference merges it (DMSCDC_LoadIncremental.py:60-73): every
+    live file counts as impacted, and its rows, committed deletion
+    vectors applied, rank together with the batch in one window
+    (``cdc.apply_changes`` unpruned). Both inputs sit in one partition,
+    so the window plans no exchange and the write is the merge's only
+    Spark job. It replaces every live file, even for an insert-only
+    batch: at most one open cost of data is rewritten.
+
+    A larger table:
 
     1. discover impacted files: ``input_file_name()`` tag + broadcast
        semi-join on the batch's keys, column-pruned to pk only, with the
@@ -697,8 +705,9 @@ def _merge_cow(
     Every name comes from Spark itself, so a row that moves to another
     partition, a partition whose rows are all deleted (its directory
     goes with its last file), null partitions and escaped values need no
-    case of their own. An untouched file stays where it is, beside the
-    new files of its partition; ``compact_table`` merges them.
+    case of their own. Above one open cost, an untouched file stays
+    where it is, beside the new files of its partition; ``compact_table``
+    merges them.
 
     The reference's coalesce(1) append and boto3 deletes leave a window
     in which readers see both copies of the merged rows; here the
@@ -707,41 +716,48 @@ def _merge_cow(
     """
     pks = list(primary_keys)
     levels = len(snap.partition_keys)
-    # Impacted-file discovery needs input_file_name(), which requires a
-    # SINGLE-source plan — read_table's DV anti-join is two sources, so
-    # tag a raw read of the live files instead. Skipping the DV filter
-    # here is conservative: a file whose only key matches are DV-deleted
-    # rows still counts as impacted and simply gets rewritten (its
-    # deletes materialize). The DVs ARE applied to the merge input below.
     target_df = manifest_mod.read_files(spark, out_path, snap.live, snap.schema)
-    tagged = target_df.withColumn("_file", F.input_file_name())
-    # size-guarded broadcast: a backfill batch with 10^8+ PKs degrades
-    # to a shuffled semi-join instead of OOMing the driver. No distinct:
-    # the semi/anti joins ignore duplicate keys (cdc.BROADCAST_KEYS_MAX_BYTES)
-    change_keys = cdc._maybe_broadcast(
-        changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
-    )
-    # The distinct file names arrive as an observed metric of a noop
-    # write: each task folds its rows into a set of at most the live
-    # file count and the driver merges the sets, so no shuffle and no
-    # result stage run (a .distinct().collect() costs both).
-    seen = Observation()
-    tagged.join(change_keys, pks, "left_semi").observe(
-        seen, F.collect_set("_file").alias("files")
-    ).write.format("noop").mode("overwrite").save()
-    impacted = sorted(
-        manifest_mod.relative_name(f, levels) for f in seen.get["files"]
-    )
+    if cdc._open_cost_tasks(target_df) == 1:
+        impacted, old, change_keys = list(snap.live), target_df, None
+    else:
+        # Impacted-file discovery needs input_file_name(), which requires
+        # a SINGLE-source plan — read_table's DV anti-join is two sources,
+        # so tag a raw read of the live files instead. Skipping the DV
+        # filter here is conservative: a file whose only key matches are
+        # DV-deleted rows still counts as impacted and simply gets
+        # rewritten (its deletes materialize). The DVs ARE applied to the
+        # merge input below.
+        tagged = target_df.withColumn("_file", F.input_file_name())
+        # size-guarded broadcast: a backfill batch with 10^8+ PKs
+        # degrades to a shuffled semi-join instead of OOMing the driver.
+        # No distinct: the semi/anti joins ignore duplicate keys
+        # (cdc.BROADCAST_KEYS_MAX_BYTES)
+        change_keys = cdc._maybe_broadcast(
+            changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
+        )
+        # The distinct file names arrive as an observed metric of a noop
+        # write: each task folds its rows into a set of at most the live
+        # file count and the driver merges the sets, so no shuffle and no
+        # result stage run (a .distinct().collect() costs both).
+        seen = Observation()
+        tagged.join(change_keys, pks, "left_semi").observe(
+            seen, F.collect_set("_file").alias("files")
+        ).write.format("noop").mode("overwrite").save()
+        impacted = sorted(
+            manifest_mod.relative_name(f, levels) for f in seen.get["files"]
+        )
+        old = manifest_mod.read_files(spark, out_path, impacted, snap.schema)
 
     if impacted:
-        old = manifest_mod.read_files(spark, out_path, impacted, snap.schema)
-        # the impacted-file re-read bypasses read_table, so apply the
+        # the impacted-file read bypasses read_table, so apply the
         # committed deletion vectors here too — otherwise DV-deleted
         # rows in impacted files would be merged back into the
         # rewritten output (resurrected)
         dv = manifest_mod.read_deletion_vectors(spark, out_path, snap.manifest or {})
         if dv is not None:
             old = manifest_mod.apply_deletion_vectors(old, dv, levels)
+        if change_keys is None:
+            old = old.coalesce(1)  # fits one task: no exchange under the window
     else:
         # pure-insert batch: merge against an empty frame with the
         # target's schema so collapsed inserts just append
@@ -753,8 +769,9 @@ def _merge_cow(
     # NULLs. Type changes raise (see cdc.align_schemas).
     old, changes = cdc.align_schemas(old, changes, extra_cols=(op_col, seq_col))
 
-    merged = _coalesce_to_open_cost(cdc.apply_changes(
-        old, changes, pks, seq_col, op_col, prune_keys=change_keys
+    merged = cdc._coalesce_to_open_cost(cdc.apply_changes(
+        old, changes, pks, seq_col, op_col,
+        prune_with_broadcast=change_keys is not None, prune_keys=change_keys,
     ))
     _commit_write(
         spark, merged, out_path, snap, superseded=set(impacted),
@@ -835,11 +852,12 @@ def compact_table(
     """Bin-pack a table's small files toward ``target_file_bytes``.
 
     A keyed merge sizes its rewrite to the scan's open cost
-    (``_coalesce_to_open_cost``), but it rewrites only the files that
-    hold a changed key: the new files sit beside the untouched ones, in
-    a table or in a partition. Keyless appends add one file per landing
-    file per batch, and no merge restores clustering: a rewrite mixes
-    updated keys into whatever file they land in. Compaction is the
+    (``cdc._coalesce_to_open_cost``), but above one open cost it
+    rewrites only the files that hold a changed key: the new files sit
+    beside the untouched ones, in a table or in a partition. Keyless
+    appends add files with every batch, and no merge restores
+    clustering: a rewrite mixes updated keys into whatever file they
+    land in. Compaction is the
     explicit maintenance pass for all of these, like Delta/Iceberg
     OPTIMIZE:
 

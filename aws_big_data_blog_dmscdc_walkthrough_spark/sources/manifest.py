@@ -238,7 +238,9 @@ def compute_file_stats(
     grouped on ``input_file_name()``, not a driver loop over footers, so
     stats collection costs a single scan however many files there are.
     Output rows are bounded by file count (small), so the collect is
-    driver-safe.
+    driver-safe. The scan is coalesced to one task per open cost of its
+    estimate (``cdc._coalesce_to_open_cost``): files that fit in one
+    task aggregate with no exchange, in one Spark job.
 
     ``schema`` is the committed table's schema: the files are read with
     its types for ``cols`` only, so no schema-inference job runs (a file
@@ -251,6 +253,8 @@ def compute_file_stats(
     the same basename in every partition directory it writes. ``cols``
     must be DATA columns — partition columns live in the path, not the
     files, and are pruned by partition value instead."""
+    from ..operators import cdc as _cdc
+
     if not files or not cols:
         return {}
     levels = files[0].count("/")
@@ -258,8 +262,9 @@ def compute_file_stats(
     for c in cols:
         aggs.append(F.min(c).alias(f"_min_{c}"))
         aggs.append(F.max(c).alias(f"_max_{c}"))
+    scan = read_files(spark, path, files, StructType([schema[c] for c in cols]))
     rows = (
-        read_files(spark, path, files, StructType([schema[c] for c in cols]))
+        _cdc._coalesce_to_open_cost(scan)
         .groupBy(F.input_file_name().alias("_f"))
         .agg(*aggs)
         .collect()

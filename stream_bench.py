@@ -147,7 +147,6 @@ def bench_sparse_updates(spark, sf_dir: str, work: str, n_batches: int = 8) -> d
     tiny deletion vector + the new row images. Reported per-mode:
     drained batches/sec over the pre-loaded table (row conservation
     checked against the expected final state)."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import cdc as cdc_ops
     from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer, manifest
 
     orders = load_table(spark, sf_dir, "orders")

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -16,3 +17,24 @@ def spark():
     s = get_spark("dmscdc-tests")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def open_cost(spark):
+    """``with open_cost(n):`` runs its block with
+    ``spark.sql.files.openCostInBytes`` set to ``n`` bytes. A keyed lake
+    merge rewrites a table whole while its live files fit in one open
+    cost (``lake_writer._merge_cow``), so ``open_cost(1)`` forces the
+    discovery side, which rewrites only impacted files, on any table."""
+    key = "spark.sql.files.openCostInBytes"
+
+    @contextlib.contextmanager
+    def setting(n_bytes):
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(n_bytes))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+    return setting

@@ -86,6 +86,24 @@ def test_merge_no_pruning_same_result(spark):
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, full.collect()))
 
 
+def test_merge_paths_agree_on_null_keys(spark):
+    """No change row can match a target row whose key is NULL, so both
+    merge paths keep every such row — the pruned path through its
+    anti-join, the unpruned one although its window groups NULL keys as
+    one — and a NULL-key insert lands beside them."""
+    target = spark.createDataFrame(
+        [(None, "a"), (None, "b"), (1, "c"), (2, "d")], "id long, v string"
+    )
+    changes = spark.createDataFrame(
+        [(1, "c2", "U", 1), (None, "n1", "I", 2)], "id long, v string, op string, seq long"
+    )
+    want = [(1, "c2"), (2, "d"), (None, "a"), (None, "b"), (None, "n1")]
+    for prune in (True, False):
+        got = cdc.apply_changes(target, changes, ["id"], "seq", prune_with_broadcast=prune)
+        rows = sorted(map(tuple, got.collect()), key=lambda r: (r[0] is None, r[0] or 0, r[1]))
+        assert rows == want, (prune, rows)
+
+
 def test_pruned_merge_reads_the_target_once(spark, tmp_path):
     """Pruned, the window ranks the batch's rows only (a change row
     outranks the target row of its key), so the target is scanned once,

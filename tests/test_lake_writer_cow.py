@@ -6,6 +6,7 @@ and full-partition deletes)."""
 import pytest
 import datetime
 import glob
+import itertools
 import os
 
 from pyspark.sql import functions as F
@@ -34,8 +35,7 @@ def _data_files(path):
     ]
 
 
-def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path):
-    out = str(tmp_path / "t")
+def _unpartitioned_cow(spark, out):
     # three separate files, 10 rows each
     for lo in (0, 10, 20):
         spark.createDataFrame(
@@ -43,8 +43,6 @@ def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path):
             "id long, name string, dept string",
         ).coalesce(1).write.mode("append").parquet(out)
     before = _file_bytes(f"{out}/*.parquet")
-    assert len(before) == 3
-
     # batch touches keys 0 and 5 — both live in the first file only
     lake_writer.merge_incremental(
         spark,
@@ -52,7 +50,14 @@ def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path):
         out,
         ["id"],
     )
-    after = _file_bytes(f"{out}/*.parquet")
+    return before, _file_bytes(f"{out}/*.parquet")
+
+
+def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path, open_cost):
+    out = str(tmp_path / "t")
+    with open_cost(1):
+        before, after = _unpartitioned_cow(spark, out)
+    assert len(before) == 3
     # exactly one original file was rewritten (replaced by a new file);
     # the other two survive byte-identical under their original names
     survivors = set(before) & set(after)
@@ -65,17 +70,21 @@ def test_unpartitioned_cow_touches_only_impacted_files(spark, tmp_path):
     assert got[0].name == "zero-x"
 
 
-def test_unpartitioned_insert_only_batch_appends_without_rewrite(spark, tmp_path):
-    out = str(tmp_path / "t2")
+def _unpartitioned_insert_only(spark, out):
     spark.createDataFrame(
         [(1, "a", "d"), (2, "b", "d")], "id long, name string, dept string"
     ).coalesce(1).write.mode("append").parquet(out)
     before = _file_bytes(f"{out}/*.parquet")
-
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 3, "c", "d")]), out, ["id"]
     )
-    after = _file_bytes(f"{out}/*.parquet")
+    return before, _file_bytes(f"{out}/*.parquet")
+
+
+def test_unpartitioned_insert_only_batch_appends_without_rewrite(spark, tmp_path, open_cost):
+    out = str(tmp_path / "t2")
+    with open_cost(1):
+        before, after = _unpartitioned_insert_only(spark, out)
     # original file untouched, one new file appended
     for name, body in before.items():
         assert after[name] == body
@@ -173,25 +182,29 @@ def test_fully_deleted_partition_with_brace_value_removed(spark, tmp_path):
     assert not os.path.isdir(out + "/dept=a}b")
 
 
-def test_partitioned_cow_touches_only_impacted_files(spark, tmp_path):
-    """A partitioned merge rewrites the files that hold a changed key,
-    not their partitions: the other file of the touched partition and
-    every file of the other partitions survive byte-identical."""
-    out = str(tmp_path / "t")
+def _partitioned_cow(spark, out):
     for rows in ([(0, "a0", "a"), (1, "a1", "a")], [(2, "a2", "a"), (3, "a3", "a")],
                  [(4, "b4", "b"), (5, "b5", "b")]):
         df = spark.createDataFrame(rows, "id long, name string, dept string")
         df.coalesce(1).write.mode("append").partitionBy("dept").parquet(out)
     before = _file_bytes(f"{out}/*/*.parquet")
-    assert len(before) == 3
-
     # both keys live in the first dept=a file
     lake_writer.merge_incremental(
         spark,
         _changes(spark, [("U", 1, 0, "a0-x", "a"), ("D", 2, 1, None, None)]),
         out, ["id"], partition_keys=["dept"],
     )
-    after = _file_bytes(f"{out}/*/*.parquet")
+    return before, _file_bytes(f"{out}/*/*.parquet")
+
+
+def test_partitioned_cow_touches_only_impacted_files(spark, tmp_path, open_cost):
+    """A partitioned merge rewrites the files that hold a changed key,
+    not their partitions: the other file of the touched partition and
+    every file of the other partitions survive byte-identical."""
+    out = str(tmp_path / "t")
+    with open_cost(1):
+        before, after = _partitioned_cow(spark, out)
+    assert len(before) == 3
     survivors = set(before) & set(after)
     assert len(survivors) == 2 and len(after) == 3, sorted(after)
     for name in survivors:
@@ -201,8 +214,7 @@ def test_partitioned_cow_touches_only_impacted_files(spark, tmp_path):
     ]
 
 
-def test_partitioned_insert_only_batch_rewrites_no_file(spark, tmp_path):
-    out = str(tmp_path / "t")
+def _partitioned_insert_only(spark, out):
     lake_writer.write_initial(
         spark.createDataFrame(
             [(1, "a", "x"), (2, "b", "y")], "id long, name string, dept string"
@@ -210,19 +222,41 @@ def test_partitioned_insert_only_batch_rewrites_no_file(spark, tmp_path):
         out, partition_keys=["dept"],
     )
     before = _file_bytes(f"{out}/*/*.parquet")
-
     lake_writer.merge_incremental(
         spark, _changes(spark, [("I", 1, 3, "c", "x")]), out, ["id"],
         partition_keys=["dept"],
     )
-    after = _file_bytes(f"{out}/*/*.parquet")
+    return before, _file_bytes(f"{out}/*/*.parquet")
+
+
+def test_partitioned_insert_only_batch_rewrites_no_file(spark, tmp_path, open_cost):
+    out = str(tmp_path / "t")
+    with open_cost(1):
+        before, after = _partitioned_insert_only(spark, out)
     for name, body in before.items():
         assert after[name] == body
     assert len(after) == len(before) + 1
     assert _rows(spark.read.parquet(out)) == [(1, "a", "x"), (2, "b", "y"), (3, "c", "x")]
 
 
-def test_mor_delete_survives_cow_merge_on_escaped_partition(spark, tmp_path):
+@pytest.mark.parametrize(
+    "scenario",
+    [_unpartitioned_cow, _unpartitioned_insert_only, _partitioned_cow, _partitioned_insert_only],
+    ids=lambda scenario: scenario.__name__.lstrip("_"),
+)
+def test_small_table_merge_replaces_every_live_file(spark, tmp_path, scenario, open_cost):
+    """The four discovery scenarios above, on the small side of the size
+    rule (the default open cost holds each table): the merge replaces
+    every live file, and the rows equal the discovery side's."""
+    large, small = str(tmp_path / "large"), str(tmp_path / "small")
+    with open_cost(1):
+        scenario(spark, large)
+    before, after = scenario(spark, small)
+    assert before and after and set(before).isdisjoint(after), (sorted(before), sorted(after))
+    assert _rows(spark.read.parquet(small)) == _rows(spark.read.parquet(large))
+
+
+def test_mor_delete_survives_cow_merge_on_escaped_partition(spark, tmp_path, open_cost):
     """A deletion vector on a file under an escaped partition value
     (``dept=a b``) stays in force through a copy-on-write merge of
     another partition: its target is recorded in the manifest's name
@@ -240,10 +274,11 @@ def test_mor_delete_survives_cow_merge_on_escaped_partition(spark, tmp_path):
     lake_writer.merge_on_read_incremental(
         spark, _changes(spark, [("U", 1, 1, "a2", "a b")]), out, ["id"]
     )
-    lake_writer.merge_incremental(
-        spark, _changes(spark, [("U", 2, 2, "b2", "c")]), out, ["id"],
-        partition_keys=["dept"],
-    )
+    with open_cost(1):
+        lake_writer.merge_incremental(
+            spark, _changes(spark, [("U", 2, 2, "b2", "c")]), out, ["id"],
+            partition_keys=["dept"],
+        )
     assert _rows(manifest.read_table(spark, out)) == [(1, "a2", "a b"), (2, "b2", "c")]
     man = manifest.read_manifest(spark, out)
     assert man["dv_targets"] and all(
@@ -304,13 +339,13 @@ def test_merge_rewrite_scales_out_past_one_open_cost(
     key = "spark.sql.files.openCostInBytes"
     open_cost = 4096
     estimates = []
-    real = lake_writer._coalesce_to_open_cost
+    real = cdc._coalesce_to_open_cost
 
     def spy(df):
         estimates.append(cdc._plan_size_bytes(df))
         return real(df)
 
-    monkeypatch.setattr(lake_writer, "_coalesce_to_open_cost", spy)
+    monkeypatch.setattr(cdc, "_coalesce_to_open_cost", spy)
     out = str(tmp_path / "t")
     rows = {i: (i, f"name-{i:05d}", f"d{i % 3}") for i in range(3000)}
     changes = (
@@ -338,7 +373,8 @@ def test_merge_rewrite_scales_out_past_one_open_cost(
     finally:
         spark.conf.set(key, prev)
 
-    (est,) = estimates
+    # the batch is sized first, the rewrite last
+    _, est = estimates
     assert est is not None and est < cdc._UNKNOWN_SIZE_SENTINEL
     bound = -(-est // open_cost)
     per_rewrite = {}
@@ -690,7 +726,7 @@ def test_reload_keeps_retained_versions_readable(spark, tmp_path):
     assert _rows(spark.read.parquet(out)) == sorted(reloaded)
 
 
-def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
+def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path, open_cost):
     """An update that rewrites one of four loaded files leaves exactly
     the loaded columns, with no op column, in the manifest read, the raw
     directory, the catalog table and the recorded schema."""
@@ -711,9 +747,10 @@ def test_partial_rewrite_keeps_loaded_schema(spark, tmp_path):
     lake_writer.write_initial(loaded, out)
     files = set(_data_files(out))
     assert len(files) == 4
-    lake_writer.merge_incremental(
-        spark, _changes(spark, [("U", 1, 0, "n0-x", "d0")]), out, ["id"]
-    )
+    with open_cost(1):
+        lake_writer.merge_incremental(
+            spark, _changes(spark, [("U", 1, 0, "n0-x", "d0")]), out, ["id"]
+        )
     assert len(files - set(_data_files(out))) == 1
 
     def cols(schema):
@@ -980,10 +1017,14 @@ def test_narrow_keyless_batch_keeps_recorded_column(spark, tmp_path):
     assert rows == [(1, 5, "n"), (2, 6, None)]
 
 
+_job_groups = itertools.count()
+
+
 def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through its own job group."""
+    """Spark jobs ``fn`` launches, counted through a job group of its
+    own (numbered: an ``id()`` is reused once its object is freed)."""
     sc = spark.sparkContext
-    group = f"count-{id(fn)}"
+    group = f"count-{next(_job_groups)}"
     sc.setJobGroup(group, group)
     try:
         fn()
@@ -992,16 +1033,10 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("partition_keys,merge_jobs", [([], 5), (["dept"], 5)])
-def test_merge_and_reregistration_job_counts(spark, tmp_path, partition_keys, merge_jobs):
-    """A 50-row keyed merge runs at most 5 jobs, partitioned or not:
-    the table schema comes from the manifest (no schema-inference job),
-    discovery is the key broadcast plus one noop write whose observed
-    metric carries the file names (no distinct shuffle), and a
-    partitioned merge finds its impacted files as an unpartitioned one
-    does. Re-registering an unchanged table runs no job at all."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog
-
+def _job_count_table(spark, tmp_path, partition_keys):
+    """A 200-row table and a 50-row keyed batch read from one parquet
+    file, as the controller reads a landing file: a file-backed batch
+    has a size estimate, which a ``createDataFrame`` one lacks."""
     out = str(tmp_path / "t")
     lake_writer.write_initial(
         spark.createDataFrame(
@@ -1010,10 +1045,155 @@ def test_merge_and_reregistration_job_counts(spark, tmp_path, partition_keys, me
         ),
         out, partition_keys=partition_keys,
     )
-    batch = _changes(spark, [("U", i, i, f"m{i}", f"d{i % 3}") for i in range(0, 100, 2)])
-    assert _jobs(spark, lambda: lake_writer.merge_incremental(
+    _changes(spark, [("U", i, i, f"m{i}", f"d{i % 3}") for i in range(0, 100, 2)]).coalesce(
+        1
+    ).write.parquet(str(tmp_path / "batch"))
+    return out, spark.read.parquet(str(tmp_path / "batch"))
+
+
+@pytest.mark.parametrize("partition_keys", [[], ["dept"]])
+def test_merge_and_reregistration_job_counts(spark, tmp_path, partition_keys, open_cost):
+    """A 50-row keyed merge, partitioned or not, runs ONE job (the
+    write) on a table that fits in one open cost, and at most 4 above
+    it: the table schema comes from the manifest (no schema-inference
+    job), discovery is the key broadcast plus one noop write whose
+    observed metric carries the file names (no distinct shuffle), and a
+    batch that fits in one open cost is ranked with no shuffle. A
+    ``stats_cols`` commit's stats scan is one job. Re-registering an
+    unchanged table runs no job at all."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import catalog, manifest
+
+    out, batch = _job_count_table(spark, tmp_path, partition_keys)
+    merge = lambda: lake_writer.merge_incremental(  # noqa: E731
         spark, batch, out, ["id"], partition_keys=partition_keys
-    )) <= merge_jobs
+    )
+    assert _jobs(spark, merge) == 1
+    man = manifest.read_manifest(spark, out)
+    schema = manifest.table_schema(spark, out, man)
+    assert _jobs(spark, lambda: manifest.compute_file_stats(
+        spark, out, man["files"], ["id"], schema
+    )) == 1
+    # above one open cost: the table no longer fits in it, the batch's
+    # one file still does
+    (batch_file,) = glob.glob(f"{tmp_path}/batch/*.parquet")
+    batch_bytes = os.path.getsize(batch_file)
+    assert sum(os.path.getsize(f"{out}/{f}") for f in man["files"]) > batch_bytes
+    with open_cost(batch_bytes):
+        assert _jobs(spark, merge) <= 4
     spark.sql("DROP DATABASE IF EXISTS jobs_db CASCADE")
     catalog.register_table(spark, out, "jobs_db", "t")
     assert _jobs(spark, lambda: catalog.register_table(spark, out, "jobs_db", "t")) == 0
+
+
+@pytest.mark.parametrize("partition_keys", [[], ["dept"]])
+def test_small_table_merge_plans_no_exchange(spark, tmp_path, monkeypatch, partition_keys):
+    """On a table that fits in one open cost, the batch and the table's
+    rows sit in one partition each, so the union-and-rank window plans
+    no ``Exchange`` and no ``BroadcastExchange``: the write is the
+    merge's only job."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    out, batch = _job_count_table(spark, tmp_path, partition_keys)
+    written = []
+    real = lake_writer._commit_write
+
+    def spy(spark, df, *args, **kwargs):
+        written.append(df)
+        return real(spark, df, *args, **kwargs)
+
+    monkeypatch.setattr(lake_writer, "_commit_write", spy)
+    lake_writer.merge_incremental(spark, batch, out, ["id"], partition_keys=partition_keys)
+    (df,) = written
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan, plan
+    assert "Exchange" not in plan, plan  # BroadcastExchange included
+    assert _rows(manifest.read_table(spark, out)) == sorted(
+        (i, f"m{i}" if i % 2 == 0 and i < 100 else f"n{i}", f"d{i % 3}") for i in range(200)
+    )
+
+
+# (table rows, batch rows, partition keys, merge-on-read batch applied
+# first or None, expected rows); batch rows are (op, _seq, id, name, dept)
+_SIZE_RULE_CASES = {
+    "null_keys": (
+        [(None, "a", "d"), (None, "b", "d"), (1, "c", "d"), (2, "d", "d")],
+        [("U", 1, 1, "c2", "d"), ("I", 2, None, "n1", "d")], [], None,
+        [(None, "a", "d"), (None, "b", "d"), (None, "n1", "d"), (1, "c2", "d"),
+         (2, "d", "d")],
+    ),
+    "empty_batch": (
+        [(1, "a", "d"), (2, "b", "d")], [], [], None, [(1, "a", "d"), (2, "b", "d")],
+    ),
+    "delete_every_row": (
+        [(1, "a", "d"), (2, "b", "d")], [("D", 1, 1, None, None), ("D", 2, 2, None, None)],
+        [], None, [],
+    ),
+    "single_row_table": (
+        [(1, "a", "d")], [("U", 1, 1, "a2", "d")], [], None, [(1, "a2", "d")],
+    ),
+    "insert_update_delete_chain": (
+        [(1, "a", "d"), (2, "b", "d")],
+        [("I", 1, 3, "c", "d"), ("U", 2, 3, "c2", "d"), ("D", 3, 3, None, None),
+         ("U", 4, 1, "a2", "d")],
+        [], None, [(1, "a2", "d"), (2, "b", "d")],
+    ),
+    "deletion_vector": (
+        [(1, "a", "d"), (2, "b", "d"), (3, "c", "d")],
+        [("U", 3, 3, "c2", "d"), ("I", 4, 4, "e", "d")], [], [("D", 2, 2, None, None)],
+        [(1, "a", "d"), (3, "c2", "d"), (4, "e", "d")],
+    ),
+    "partition_move": (
+        [(1, "a", "x"), (2, "b", "x"), (3, "c", "y")], [("U", 1, 1, "a2", "y")], ["dept"],
+        None, [(1, "a2", "y"), (2, "b", "x"), (3, "c", "y")],
+    ),
+}
+
+
+def _nullsafe_rows(df):
+    return sorted(
+        (tuple(r) for r in df.select("id", "name", "dept").collect()),
+        key=lambda r: tuple((v is not None, v if v is not None else "") for v in r),
+    )
+
+
+@pytest.mark.parametrize("case", list(_SIZE_RULE_CASES))
+def test_merge_sides_of_the_size_rule_agree(spark, tmp_path, monkeypatch, case, open_cost):
+    """Hostile inputs on both sides of the size rule — discovery with a
+    1-byte open cost, the union-and-rank of the whole table with the
+    default one — give the same ``read_table`` rows: the expected ones."""
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import manifest
+
+    table, batch, partition_keys, mor, want = _SIZE_RULE_CASES[case]
+    pruned = []
+    real = cdc.apply_changes
+
+    def spy(*args, **kwargs):
+        pruned.append(kwargs["prune_with_broadcast"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cdc, "apply_changes", spy)
+    batch_path = str(tmp_path / "batch")
+    _changes(spark, batch).coalesce(1).write.parquet(batch_path)
+    got = {}
+    for side, n_bytes in (("discovery", 1), ("whole_table", None)):
+        out = str(tmp_path / side)
+        lake_writer.write_initial(
+            spark.createDataFrame(table, "id long, name string, dept string"),
+            out, partition_keys=partition_keys,
+        )
+        if mor:
+            lake_writer.merge_on_read_incremental(spark, _changes(spark, mor), out, ["id"])
+        merge = lambda: lake_writer.merge_incremental(  # noqa: E731
+            spark, spark.read.parquet(batch_path), out, ["id"],
+            partition_keys=partition_keys,
+        )
+        if n_bytes is None:
+            merge()
+        else:
+            with open_cost(n_bytes):
+                merge()
+        got[side] = _nullsafe_rows(manifest.read_table(spark, out))
+    assert pruned == [True, False]
+    assert got["discovery"] == got["whole_table"] == _nullsafe_rows(
+        spark.createDataFrame(want, "id long, name string, dept string")
+    )

@@ -254,14 +254,16 @@ def test_partitioned_merge_drops_emptied_partition(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_partitioned_compact_through_manifest(spark, tmp_path):
+def test_partitioned_compact_through_manifest(spark, tmp_path, open_cost):
     out = str(tmp_path / "t")
     _pinit(spark, out)
-    for i in range(3):  # accrete small files
-        lake_writer.merge_incremental(
-            spark, _pchanges(spark, [("I", 1, 10 + i, "a", 100 + i)]),
-            out, ["id"], partition_keys=["dept"],
-        )
+    # accrete small files: the discovery side appends an insert-only batch
+    with open_cost(1):
+        for i in range(3):
+            lake_writer.merge_incremental(
+                spark, _pchanges(spark, [("I", 1, 10 + i, "a", 100 + i)]),
+                out, ["id"], partition_keys=["dept"],
+            )
     before = {(r.id, r.v) for r in manifest.read_table(spark, out).collect()}
     n_before = len(manifest.read_manifest(spark, out)["files"])
     lake_writer.compact_table(
@@ -601,17 +603,18 @@ def test_predicate_without_stats_reads_everything(spark, tmp_path):
     assert [r.id for r in df.collect()] == [1]
 
 
-def test_stats_survive_cow_merge(spark, tmp_path):
+def test_stats_survive_cow_merge(spark, tmp_path, open_cost):
     out = str(tmp_path / "t")
     _init_ranged(spark, out)
     # update one key in the middle file; other files' stats must carry over.
     # The batch is file-backed, as the controller reads it, so the merge
     # has a size estimate and coalesces its rewrite.
     _changes(spark, [("U", 2, 105, "upd")]).write.parquet(str(tmp_path / "batch"))
-    lake_writer.merge_incremental(
-        spark, spark.read.parquet(str(tmp_path / "batch")), out, ["id"],
-        stats_cols=["id"],
-    )
+    with open_cost(1):  # the discovery side, which keeps untouched files
+        lake_writer.merge_incremental(
+            spark, spark.read.parquet(str(tmp_path / "batch")), out, ["id"],
+            stats_cols=["id"],
+        )
     man = manifest.read_manifest(spark, out)
     assert set(man["files"]) == set(man["stats"])  # every live file has stats
     pruned = manifest.read_table(spark, out, predicate=("id", ">=", 200))
@@ -701,16 +704,18 @@ def test_delete_where_no_matches_keeps_version(spark, tmp_path):
     assert not manifest.read_manifest(spark, out).get("delete_files")
 
 
-def test_append_after_delete_carries_delete_files_forward(spark, tmp_path):
+def test_append_after_delete_carries_delete_files_forward(spark, tmp_path, open_cost):
     """ADVICE(high): the first commit after a DV-bearing one must not
     silently resurrect positionally-deleted rows."""
     out = str(tmp_path / "t")
     _init(spark, out, n=4)
     manifest.delete_where(spark, out, ("id", "=", 2))
-    # insert-only append commit (does not pass delete_files)
-    lake_writer.merge_incremental(
-        spark, _changes(spark, [("I", 1, 10, "n10")]), out, ["id"],
-    )
+    # insert-only append commit (does not pass delete_files); on the
+    # discovery side, which appends an insert-only batch
+    with open_cost(1):
+        lake_writer.merge_incremental(
+            spark, _changes(spark, [("I", 1, 10, "n10")]), out, ["id"],
+        )
     man = manifest.read_manifest(spark, out)
     assert man.get("delete_files"), "delete files dropped by append commit"
     got = {r.id for r in manifest.read_table(spark, out).collect()}

@@ -154,7 +154,7 @@ def test_full_flow_with_manifest_and_feed_via_state_flags(spark, env):
     }
 
 
-def test_partitioned_cow_only_touches_impacted_partitions(spark, env):
+def test_partitioned_cow_only_touches_impacted_partitions(spark, env, open_cost):
     _write_initial(spark, env)
     store = JsonStateStore(env["state"])
     controller.run_once(spark, env["landing"], env["lake"], store)
@@ -179,7 +179,8 @@ def test_partitioned_cow_only_touches_impacted_partitions(spark, env):
     os.rename(src, f"{env['landing']}/sampledb/product/20240102-000000001.parquet")
     shutil.rmtree(f"{env['landing']}/sampledb/product/_t")
 
-    controller.run_once(spark, env["landing"], env["lake"], store)
+    with open_cost(1):  # the discovery side, which keeps untouched files
+        controller.run_once(spark, env["landing"], env["lake"], store)
     rows = {r.id: r for r in spark.read.parquet(f"{env['lake']}/sampledb/product").collect()}
     assert set(rows) == {1001, 1003, 1004}
     # the merge must not have rewritten the untouched partition
