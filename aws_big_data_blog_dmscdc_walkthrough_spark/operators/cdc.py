@@ -107,18 +107,19 @@ def _coalesce_to_open_cost(df: DataFrame) -> DataFrame:
     return df if n is None else df.coalesce(n)
 
 
-def _maybe_broadcast(keys: DataFrame, max_bytes: int) -> DataFrame:
+def _maybe_broadcast(keys: DataFrame) -> DataFrame:
     """Broadcast-hint ``keys`` only when it is safe.
 
     File-backed batches (the real CDC/backfill path) carry true size
-    estimates: above ``max_bytes`` the plain frame is returned and the
-    join shuffles instead of OOMing the driver. Frames with no
+    estimates: above ``BROADCAST_KEYS_MAX_BYTES`` (read per call) the
+    plain frame is returned and the join shuffles instead of OOMing the
+    driver. Frames with no
     statistics source (placeholder estimate) already originate
     driver-side (createDataFrame/RDD), so broadcasting them adds no new
     driver exposure — keep the hint.
     """
     est = _plan_size_bytes(keys)
-    if est is None or est >= _UNKNOWN_SIZE_SENTINEL or est <= max_bytes:
+    if est is None or est >= _UNKNOWN_SIZE_SENTINEL or est <= BROADCAST_KEYS_MAX_BYTES:
         return F.broadcast(keys)
     return keys
 
@@ -155,7 +156,6 @@ def impacted_keys(
     target: DataFrame,
     changes: DataFrame,
     primary_keys: Sequence[str],
-    broadcast_max_bytes: int = BROADCAST_KEYS_MAX_BYTES,
     prune_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct change keys that exist in the target.
@@ -164,7 +164,7 @@ def impacted_keys(
     (DMSCDC_LoadIncremental.py:68-70, inner join + ``collect()``): a
     left-semi join, nothing on the driver. The key side is broadcast
     only while Catalyst's size estimate stays under
-    ``broadcast_max_bytes`` — a bulk-reload batch takes the shuffled
+    ``BROADCAST_KEYS_MAX_BYTES`` — a bulk-reload batch takes the shuffled
     semi-join instead of OOMing the driver.
 
     ``prune_keys`` mirrors :func:`apply_changes`: a caller that already
@@ -175,7 +175,7 @@ def impacted_keys(
     keys = (
         prune_keys
         if prune_keys is not None
-        else _maybe_broadcast(changes.select(*primary_keys), broadcast_max_bytes)
+        else _maybe_broadcast(changes.select(*primary_keys))
     )
     return (
         target.join(keys, list(primary_keys), "left_semi")
@@ -291,7 +291,6 @@ def merge_parts(
     seq_col: str,
     op_col: str = OP_COL,
     prune_with_broadcast: bool = True,
-    broadcast_max_bytes: int = BROADCAST_KEYS_MAX_BYTES,
     prune_keys: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
     """The merge's internal frames, for consumers that don't need the
@@ -340,7 +339,7 @@ def merge_parts(
         keys = (
             prune_keys
             if prune_keys is not None
-            else _maybe_broadcast(changes.select(*pks), broadcast_max_bytes)
+            else _maybe_broadcast(changes.select(*pks))
         )
         impacted = target.join(keys, pks, "left_semi")
         untouched = target.join(keys, pks, "left_anti")
@@ -388,7 +387,6 @@ def apply_changes(
     soft_delete: bool = False,
     deleted_col: str = "deleted",
     prune_with_broadcast: bool = True,
-    broadcast_max_bytes: int = BROADCAST_KEYS_MAX_BYTES,
     prune_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Merge a change batch into a target: latest-wins upsert + delete.
@@ -408,7 +406,7 @@ def apply_changes(
     target row of its key); target rows bypass the window shuffle and,
     through the broadcast anti-join, the join shuffle too. The key
     set is broadcast only while Catalyst estimates it under
-    ``broadcast_max_bytes`` — a huge backfill batch degrades to a
+    ``BROADCAST_KEYS_MAX_BYTES`` — a huge backfill batch degrades to a
     shuffled semi/anti join instead of OOMing the driver (AQE may still
     re-broadcast at runtime if the key set turns out small).
 
@@ -427,7 +425,6 @@ def apply_changes(
         seq_col,
         op_col=op_col,
         prune_with_broadcast=prune_with_broadcast,
-        broadcast_max_bytes=broadcast_max_bytes,
         prune_keys=prune_keys,
     )
 
@@ -675,103 +672,17 @@ def agg_state_report(state: DataFrame, group_cols: Sequence[str], sum_alias: str
     )
 
 
-def scd2_apply(
-    history: DataFrame,
-    changes: DataFrame,
-    pks: Sequence[str],
-    seq_col: str,
-    op_col: str = OP_COL,
-) -> DataFrame:
-    """Fold one change batch into an EXISTING SCD2 history table.
-
-    The incremental form of :func:`scd2_history` — what a foreachBatch
-    loop or a daily merge job runs so the history table never needs
-    rebuilding from the full change log. ``history`` carries the
-    ``scd2_history`` output columns; ``changes`` must sequence strictly
-    AFTER every recorded version of the keys it touches (true by
-    construction when batches apply in landing order).
-
-    Per impacted key: the open version (if any) is closed at the
-    batch's first change seq; the batch's own ``I``/``U`` rows become
-    versions exactly as in the one-shot operator. Everything else
-    passes through untouched. Folding batches one at a time is
-    IDENTICAL to one-shot history over the concatenated change log —
-    tests/test_cdc.py pins that invariant.
-
-    Plan shape: the impacted-open split is a broadcast-guarded semi
-    join on the change keys (the merge's own pruning primitive) and
-    the batch windows shuffle only the batch — history itself is never
-    window-shuffled again.
-    """
-    pks = list(pks)
-    hist_cols = history.columns
-    data_cols = [
-        c for c in hist_cols
-        if c not in ("valid_from_seq", "valid_to_seq", "is_current")
-    ]
-    seq_type = changes.schema[seq_col].dataType
-    # no .distinct(): both consumers are semi-joins (duplicate-insensitive),
-    # so the distinct only added a shuffle + two aggregate passes
-    keys = _maybe_broadcast(
-        changes.select(*pks), BROADCAST_KEYS_MAX_BYTES
-    )
-    first_seq = changes.groupBy(*pks).agg(
-        F.min(F.col(seq_col)).alias("_close_seq")
-    )
-    open_impacted = (
-        history.where(F.col("is_current"))
-        .join(keys, pks, "leftsemi")
-        .join(first_seq, pks, "left")
-        .select(
-            *data_cols,
-            F.col("valid_from_seq"),
-            F.col("_close_seq").cast(
-                history.schema["valid_to_seq"].dataType
-            ).alias("valid_to_seq"),
-            F.lit(False).alias("is_current"),
-        )
-    )
-    untouched = history.join(
-        history.where(F.col("is_current")).join(keys, pks, "leftsemi").select(
-            *pks, F.col("valid_from_seq")
-        ),
-        [*pks, "valid_from_seq"],
-        "left_anti",
-    )
-    window = Window.partitionBy(*pks).orderBy(F.col("_scd2_seq").asc())
-    new_versions = (
-        changes.select(
-            *data_cols,
-            F.col(op_col).alias("_scd2_op"),
-            F.col(seq_col).cast(seq_type).alias("_scd2_seq"),
-        )
-        .withColumn("_scd2_next", F.lead("_scd2_seq").over(window))
-        .where(F.col("_scd2_op") != OP_DELETE)
-        .select(
-            *data_cols,
-            F.col("_scd2_seq").cast(history.schema["valid_from_seq"].dataType).alias(
-                "valid_from_seq"
-            ),
-            F.col("_scd2_next").cast(
-                history.schema["valid_to_seq"].dataType
-            ).alias("valid_to_seq"),
-            F.col("_scd2_next").isNull().alias("is_current"),
-        )
-    )
-    return untouched.unionByName(open_impacted).unionByName(new_versions)
-
-
 def scd2_fresh_changes(
     history: DataFrame,
     changes: DataFrame,
     pks: Sequence[str],
     seq_col: str,
 ) -> DataFrame:
-    """The not-yet-recorded subset of ``changes``: what makes
-    :func:`scd2_apply` replay-safe.
+    """The not-yet-recorded subset of ``changes``: what makes an SCD2
+    fold (``lake_writer.scd2_merge_on_read``) replay-safe.
 
-    A restarted foreachBatch loop re-delivers its last micro-batch; raw
-    ``scd2_apply`` would then close the open version at a seq BEFORE its
+    A restarted foreachBatch loop re-delivers its last micro-batch; an
+    unguarded fold would then close the open version at a seq BEFORE its
     own valid_from and duplicate versions. Every applied change leaves
     its seq in the history — as a version's ``valid_from_seq`` (I/U) or
     as the ``valid_to_seq`` it closed (D) — so filtering the batch to

@@ -70,34 +70,14 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     tokenization instead of racing the unpopulated cache and each
     re-running the explode+count (measured at sf10: 35 s racing vs
     10.5 s pinned). Below the spread threshold the recompute is cheaper
-    than the extra materialize pass (sf0.1: 0.9 s vs 1.6 s), so small
-    inputs skip the pin — the same size gate spread() uses.
+    than the extra materialize pass (sf0.1: 0.9 s vs 1.6 s), so inputs
+    that pass the shared small-input gate (``dedup._small_scan``, read
+    through any ``spread()``) skip the pin.
     """
-    from .dedup import SPREAD_MIN_INPUT_BYTES, _materialize, _track, scan_bytes
+    from .dedup import _materialize, _small_scan, _track
 
     terms = _doc_terms(docs)
-    # scan_bytes (NOT _scan_sizes): spread() outputs report no input
-    # files, so a direct probe here returned None and the round-9
-    # inputFiles() fallback ALSO saw nothing — pin never engaged on the
-    # exact inputs it exists for (the round-10 sf10 regression, ~27 s
-    # vs ~8 s). spread() now stamps the raw frame's measured bytes on
-    # its output; scan_bytes reads the stamp first.
-    total = scan_bytes(docs)
-    if total is not None:
-        pin = total >= SPREAD_MIN_INPUT_BYTES
-    else:
-        # size unknown: pin only when the frame is backed by a real
-        # file scan (object stores report URIs but not local sizes —
-        # those inputs are presumed large). createDataFrame fixtures
-        # have no input files at all; for them the recompute is cheaper
-        # than an eager materialize + a tracked cache entry the caller
-        # must remember to release — the same small-input default
-        # spread() takes.
-        try:
-            pin = bool(docs.inputFiles())
-        except Exception:
-            pin = False
-    if pin:
+    if not _small_scan(docs):
         terms = _materialize(_track(terms.persist()))
     df_tbl = terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n"))

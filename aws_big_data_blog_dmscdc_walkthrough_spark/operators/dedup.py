@@ -79,40 +79,6 @@ def release_persisted() -> int:
     return n
 
 
-def _scan_sizes(df: DataFrame) -> list[int] | None:
-    """On-disk byte sizes of the frame's leaf scan files, or None for
-    non-local / non-file sources (createDataFrame fixtures, object
-    stores), where callers fall back to the RDD probe."""
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    sizes: list[int] = []
-    for uri in files:
-        if not uri.startswith("file:"):
-            return None
-        path = uri[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    return sizes
-
-
-# Attribute spread() stamps on the frames it returns, carrying the
-# RAW input's measured scan bytes across the repartition+persist (whose
-# own inputFiles() is empty — a post-spread _scan_sizes probe is blind,
-# the round-10 tfidf pin regression). Downstream adaptive gates read it
-# via scan_bytes() instead of probing the frame directly.
-_SCAN_BYTES_ATTR = "_sg_scan_bytes"
-
-
 # Distributed-truth probe (round 15): with SPARK_GRAFT_FORCE_DISTRIBUTED
 # set, every size gate sees "huge input" and takes the distributed plan
 # regardless of the actual scan bytes. The sf0.1 bench otherwise runs
@@ -131,105 +97,52 @@ def force_distributed() -> bool:
     return os.environ.get(_FORCE_DISTRIBUTED_ENV, "") not in ("", "0")
 
 
-def scan_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes behind this frame, or None when unknown.
+def _leaves(plan) -> list:
+    """The leaf nodes of a JVM query plan, as py4j handles."""
+    seq = plan.collectLeaves()
+    return [seq.apply(i) for i in range(seq.size())]
 
-    Prefers the measurement ``spread()`` stamped on its output (the
-    repartitioned frame itself reports no input files, so a direct
-    probe would wrongly say "unknown" — exactly how the round-10
-    tfidf pin regression happened); falls back to a live leaf-file
-    probe for raw frames. EVERY adaptive size gate downstream of a
-    possible spread() must use this, never _scan_sizes directly.
-    With ``SPARK_GRAFT_FORCE_DISTRIBUTED`` set it reports a huge size,
-    so every gate falls through to its distributed plan.
+
+def scan_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of the files behind this frame, or None when no leaf
+    of its analyzed plan is a file scan (createDataFrame, RDD and
+    checkpointed frames).
+
+    Summed over the file-relation leaves of the analyzed plan, whose
+    file listing Spark already holds: no job, no file-system call. The
+    analyzed plan keeps those leaves under a repartition or a persist,
+    so a frame derived from :func:`spread`'s output reports the same
+    bytes as its raw input. A relation reached twice (a self-union, two
+    reads of one path) counts once, as ``inputFiles()`` does. With
+    ``SPARK_GRAFT_FORCE_DISTRIBUTED`` set it reports a huge size, so
+    every gate falls through to its distributed plan.
     """
     if force_distributed():
         return _FORCED_SCAN_BYTES
-    cached = getattr(df, _SCAN_BYTES_ATTR, None)
-    if cached is not None:
-        return cached
-    sizes = _scan_sizes(df)
-    return None if sizes is None else sum(sizes)
+    sizes = {}
+    for leaf in _leaves(df._jdf.queryExecution().analyzed()):
+        if leaf.nodeName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            index = rel.location()
+            sizes[index.rootPaths().toString()] = index.sizeInBytes()
+    return sum(sizes.values()) if sizes else None
 
 
-def _stamp_scan_bytes(df: DataFrame, total: int | None) -> DataFrame:
-    if total is not None:
-        setattr(df, _SCAN_BYTES_ATTR, int(total))
-    return df
-
-
-def _estimated_scan_partitions(
-    df: DataFrame, sizes: list[int] | None = None
-) -> int | None:
-    """Estimate how many partitions this frame's file scan will produce.
-
-    Mirrors Spark's FilePartition packing (FilePartition.maxSplitBytes +
-    getFilePartitions, public source) by SIMULATING it over the leaf
-    files' on-disk sizes: the ``openCostInBytes`` padding, the
-    bytes-per-core shrink of the split size, oversized-file chunking,
-    and the greedy descending-size bin close — so the estimate tracks
-    the REAL partition count on both tiny-many-files inputs (Spark
-    packs them into few partitions) and single-big-file inputs (Spark
-    splits it):
-
-        bytesPerCore = (Σ size + openCost·nFiles) / defaultParallelism
-        maxSplit     = min(maxPartitionBytes, max(openCost, bytesPerCore))
-
-    All WITHOUT converting the frame to an RDD: the first
-    ``df.rdd.getNumPartitions()`` on a fresh frame costs ~1 s of plan
-    conversion (measured), which taxed every dedup query with
-    driver-side fixed overhead. Returns None for non-local or non-file
-    sources (createDataFrame fixtures, object stores), where the caller
-    should fall back to the RDD probe.
-    """
-    if sizes is None:
-        sizes = _scan_sizes(df)
-    if sizes is None:
-        return None
-    conf = df.sparkSession.conf
-    max_bytes = _parse_bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-    )
-    open_cost = _parse_bytes(
-        conf.get("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
-    )
-    parallelism = max(1, df.sparkSession.sparkContext.defaultParallelism)
-    padded_total = sum(sizes) + open_cost * len(sizes)
-    bytes_per_core = padded_total // parallelism
-    max_split = max(1, min(max_bytes, max(open_cost, bytes_per_core)))
-    # chunk oversized files, then greedy-pack descending (Spark's loop:
-    # close when currentSize + length would exceed maxSplit; open cost
-    # is added to currentSize but not length-checked)
-    chunks: list[int] = []
-    for sz in sizes:
-        while sz > max_split:
-            chunks.append(max_split)
-            sz -= max_split
-        if sz > 0:
-            chunks.append(sz)
-    chunks.sort(reverse=True)
-    parts, cur = 0, 0
-    for ch in chunks:
-        if cur + ch > max_split and cur > 0:
-            parts += 1
-            cur = 0
-        cur += ch + open_cost
-    if cur > 0:
-        parts += 1
-    return max(1, parts)
-
-
-def _parse_bytes(raw: str) -> int:
-    """Parse a Spark byte-size conf value ("134217728", "128m", "128MB")."""
-    s = str(raw).strip().lower()
-    for suffix, mult in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            return int(float(s[: -len(suffix)]) * mult)
-    return int(s)
+def _planned_scan_partitions(df: DataFrame) -> int | None:
+    """Partitions of the frame's planned file scans, as Spark's
+    FilePartition packing lays them out, or None when the physical plan
+    scans no file (a non-file source, or a persisted frame's cache).
+    Read from the scan nodes' input RDDs of ``sparkPlan()``: it plans
+    the query but runs no job, where ``df.rdd`` under AQE would run the
+    shuffle stages of any plan with an exchange."""
+    parts = [
+        leaf.inputRDD().getNumPartitions()
+        for leaf in _leaves(df._jdf.queryExecution().sparkPlan())
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    return sum(parts) if parts else None
 
 
 # Below this many scan bytes (compressed, on disk) a single task
@@ -259,12 +172,14 @@ def spread(df: DataFrame, min_bytes: int | None = SPREAD_MIN_INPUT_BYTES) -> Dat
     (tf-idf's tf→df reuse) from recomputing tokenization per branch
     (tfidf sf10: 5.3 s with vs 24.4 s without). Round 8 made the trade
     ADAPTIVE on scan size: an under-split input below
-    ``SPREAD_MIN_INPUT_BYTES`` is cheap even serial (sf0.1 documents is
-    one 0.6 MB file; its whole tokenize-and-count ran 0.29 s
-    single-task in r5), so the shuffle+cache round-trip can only add
-    wall there and is skipped; past the threshold the serial cost
-    crosses into seconds and spreading dominates. The threshold reads
-    the same leaf-file listing the partition estimate uses — no job.
+    ``SPREAD_MIN_INPUT_BYTES`` of :func:`scan_bytes` is cheap even
+    serial (sf0.1 documents is one 0.6 MB file; its whole
+    tokenize-and-count ran 0.29 s single-task in r5), so the
+    shuffle+cache round-trip can only add wall there and is skipped;
+    past the threshold the serial cost crosses into seconds and
+    spreading dominates. Under-split is read from the planned file scan
+    (:func:`_planned_scan_partitions`); only a frame with no file scan
+    falls back to ``df.rdd.getNumPartitions()``.
 
     Callers whose downstream chain is expensive PER BYTE pass
     ``min_bytes=0`` to spread unconditionally: the r8 per-query deltas
@@ -275,29 +190,17 @@ def spread(df: DataFrame, min_bytes: int | None = SPREAD_MIN_INPUT_BYTES) -> Dat
     (feeds both sides of a self-join). (The count-min explode was a
     third such caller until round 10 moved its fan-out behind the word
     shuffle; it now uses the adaptive default.)
-
-    Every return path stamps the RAW input's measured scan bytes on the
-    returned frame (``scan_bytes()`` reads it): the repartitioned
-    output's own ``inputFiles()`` is empty, so a downstream adaptive
-    gate probing the spread output directly sees "unknown size" and
-    mis-decides — the round-10 tfidf pin regression. Probe-before-
-    spread is the rule; the stamp makes probe-after-spread equivalent.
     """
+    total = scan_bytes(df)
+    if min_bytes and total is not None and total < min_bytes:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    sizes = _scan_sizes(df)
-    total = None if sizes is None else sum(sizes)
-    # distributed-truth probe: under force_distributed() never take the
-    # small-input skip — repartition exactly as a big under-split input
-    # would (the stamp still carries the real bytes; downstream gates
-    # read the forced size through scan_bytes() anyway)
-    if min_bytes and total is not None and total < min_bytes and not force_distributed():
-        return _stamp_scan_bytes(df, total)
-    est = _estimated_scan_partitions(df, sizes)
-    if est is None:
-        est = df.rdd.getNumPartitions()
-    if est < target:
-        return _stamp_scan_bytes(_track(df.repartition(target).persist()), total)
-    return _stamp_scan_bytes(df, total)
+    parts = _planned_scan_partitions(df)
+    if parts is None:
+        parts = df.rdd.getNumPartitions()
+    if parts < target:
+        return _track(df.repartition(target).persist())
+    return df
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -442,26 +345,12 @@ def ngram_jaccard_pairs(
             "quadratic scan no formulation survives at scale)"
         )
     bc = list(block_cols)
-    if bc:
-        # Decide the small-input plan BEFORE building the shingle frame:
-        # the fused direct path (one grouped Arrow stage) needs no
-        # spread exchange, no ArrowEvalPython node, and no persisted
-        # intermediate at all — gating first skips all three.
-        total = scan_bytes(df)
-        if total is not None:
-            small = total < SPREAD_MIN_INPUT_BYTES
-        else:
-            # unknown size: createDataFrame fixtures (no input files)
-            # are small; a file scan without local sizes (object store)
-            # is presumed large
-            try:
-                small = not df.inputFiles()
-            except Exception:
-                small = True
-        if small:
-            return _ngram_pairs_direct(
-                df, id_col, text_col, bc, threshold, k, block_cap
-            )
+    # Decide the small-input plan BEFORE building the shingle frame: the
+    # fused direct path (one grouped Arrow stage) needs no spread
+    # exchange, no ArrowEvalPython node, and no persisted intermediate
+    # at all — gating first skips all three.
+    if bc and _small_scan(df):
+        return _ngram_pairs_direct(df, id_col, text_col, bc, threshold, k, block_cap)
     sh = _materialize(
         _track(
             # min_bytes=0: the shingle hash chain is expensive per byte
@@ -991,17 +880,10 @@ def _minhash_pairs_direct(
 def _small_scan(df: DataFrame) -> bool:
     """The shared small-input test behind every fused direct plan: the
     same byte threshold as :func:`spread`, decided BEFORE any derived
-    frame is built. Unknown-size frames follow the
-    :func:`ngram_jaccard_pairs` convention — createDataFrame fixtures
-    (no input files) are small, a file scan without local sizes (object
-    store) is presumed large."""
+    frame is built. A frame that reads no file (a createDataFrame
+    fixture) originates on the driver, so it is small."""
     total = scan_bytes(df)
-    if total is not None:
-        return total < SPREAD_MIN_INPUT_BYTES
-    try:
-        return not df.inputFiles()
-    except Exception:
-        return True
+    return total is None or total < SPREAD_MIN_INPUT_BYTES
 
 
 def _minhash_direct_eligible(

@@ -29,7 +29,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc import BROADCAST_KEYS_MAX_BYTES, _maybe_broadcast
+from .cdc import _maybe_broadcast
 
 
 def _flags(
@@ -78,8 +78,7 @@ def _flags(
         present = _maybe_broadcast(
             dim.select(F.col(dim_col).alias(c)).distinct().select(
                 c, F.lit(True).alias("_present")
-            ),
-            BROADCAST_KEYS_MAX_BYTES,
+            )
         )
         out = out.join(present, c, "left").withColumn(
             # NULL FKs are not violations (declare not_null separately)

@@ -191,7 +191,6 @@ def merge_on_read_incremental(
     primary_keys: Sequence[str],
     seq_col: str = "_seq",
     op_col: str = cdc.OP_COL,
-    stats_cols: Sequence[str] = (),
     partition_keys: Sequence[str] = (),
     txn: tuple[str, object] | None = None,
 ) -> None:
@@ -229,27 +228,19 @@ def merge_on_read_incremental(
     if _applied(snap, txn):
         return
     if not snap.live:
-        _commit_write(
-            spark, survivors, out_path, snap, partition_keys,
-            stats_cols=stats_cols, txn=txn,
-        )
+        _commit_write(spark, survivors, out_path, snap, partition_keys, txn=txn)
         return
     if snap.manifest is None:
         raise ValueError(
             f"{out_path} has no manifest; merge-on-read requires a "
             "manifest-committed table (any lake_writer write commits one)"
         )
-    keys = cdc._maybe_broadcast(
-        collapsed.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
-    )
+    keys = cdc._maybe_broadcast(collapsed.select(*pks).distinct())
     positions = manifest_mod.read_table_with_positions(spark, out_path).select(
         *pks, manifest_mod.DV_FILE_COL, manifest_mod.DV_POS_COL
     )
     hits = positions.join(keys, pks, "left_semi")
-    _commit_write(
-        spark, survivors, out_path, snap, stats_cols=stats_cols, deletes=hits,
-        txn=txn,
-    )
+    _commit_write(spark, survivors, out_path, snap, deletes=hits, txn=txn)
 
 
 PK_BUCKET_COL = "pk_bucket"
@@ -273,7 +264,6 @@ def scd2_merge_on_read(
     seq_col: str = "_seq",
     op_col: str = cdc.OP_COL,
     bucket_partitions: int | None = None,
-    stats_cols: Sequence[str] = (),
     txn: tuple[str, object] | None = None,
 ) -> None:
     """Incremental SCD2 history maintenance with O(batch) writes.
@@ -346,8 +336,7 @@ def scd2_merge_on_read(
             )
             props = {"bucket_partitions": int(bucket_partitions)}
         _commit_write(
-            spark, folded, out_path, snap, part_keys,
-            stats_cols=stats_cols, properties=props, txn=txn,
+            spark, folded, out_path, snap, part_keys, properties=props, txn=txn
         )
         return
 
@@ -440,9 +429,7 @@ def scd2_merge_on_read(
         if not guard_skip and fresh.isEmpty():
             # full replay after a committed fold: no-op
             return
-        fresh_keys = cdc._maybe_broadcast(
-            fresh.select(*pks).distinct(), cdc.BROADCAST_KEYS_MAX_BYTES
-        )
+        fresh_keys = cdc._maybe_broadcast(fresh.select(*pks).distinct())
         open_rows = (
             live.where(F.col("is_current"))
             .join(fresh_keys, pks, "left_semi")
@@ -462,11 +449,11 @@ def scd2_merge_on_read(
             .withColumn("is_current", F.lit(False))
             .drop("_close_seq")
         )
-        # scd2_apply against a zero-row history emits exactly the
-        # batch's own versions (chained valid_from/valid_to within the
-        # batch) — one code path with the batch operator
-        new_versions = cdc.scd2_apply(
-            live.drop(*drop_cols).limit(0), fresh, pks, seq_col, op_col
+        # scd2_history over an empty target emits exactly the batch's
+        # own versions (chained valid_from/valid_to within the batch),
+        # as in the first fold above
+        new_versions = cdc.scd2_history(
+            fresh.drop(op_col, seq_col).limit(0), fresh, pks, seq_col, op_col
         )
         appended = closed.unionByName(new_versions)
         if bucketed:
@@ -474,8 +461,8 @@ def scd2_merge_on_read(
                 PK_BUCKET_COL, _pk_bucket_expr(pks, bucket_partitions)
             )
         _commit_write(
-            spark, appended, out_path, snap, stats_cols=stats_cols,
-            properties=props, deletes=open_rows, txn=txn,
+            spark, appended, out_path, snap, properties=props,
+            deletes=open_rows, txn=txn,
         )
     finally:
         fresh.unpersist()
@@ -732,9 +719,7 @@ def _merge_cow(
         # degrades to a shuffled semi-join instead of OOMing the driver.
         # No distinct: the semi/anti joins ignore duplicate keys
         # (cdc.BROADCAST_KEYS_MAX_BYTES)
-        change_keys = cdc._maybe_broadcast(
-            changes.select(*pks), cdc.BROADCAST_KEYS_MAX_BYTES
-        )
+        change_keys = cdc._maybe_broadcast(changes.select(*pks))
         # The distinct file names arrive as an observed metric of a noop
         # write: each task folds its rows into a set of at most the live
         # file count and the driver merges the sets, so no shuffle and no

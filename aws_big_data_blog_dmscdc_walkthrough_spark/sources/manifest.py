@@ -713,7 +713,7 @@ def read_table_with_positions(spark: SparkSession, path: str) -> DataFrame:
     if dv is not None:
         from ..operators import cdc as _cdc
 
-        dv = _cdc._maybe_broadcast(dv, _cdc.BROADCAST_KEYS_MAX_BYTES)
+        dv = _cdc._maybe_broadcast(dv)
         tagged = tagged.join(dv, [DV_FILE_COL, DV_POS_COL], "left_anti")
     return tagged
 
@@ -824,7 +824,7 @@ def apply_deletion_vectors(df: DataFrame, dv: DataFrame, levels: int = 0) -> Dat
     """
     from ..operators import cdc as _cdc
 
-    dv = _cdc._maybe_broadcast(dv, _cdc.BROADCAST_KEYS_MAX_BYTES)
+    dv = _cdc._maybe_broadcast(dv)
     return _tag_positions(df, levels).join(
         dv, [DV_FILE_COL, DV_POS_COL], "left_anti"
     ).drop(DV_FILE_COL, DV_POS_COL)

@@ -38,3 +38,18 @@ def open_cost(spark):
             spark.conf.set(key, prev)
 
     return setting
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """``with distributed():`` runs its block with
+    ``SPARK_GRAFT_FORCE_DISTRIBUTED=1``: every size gate takes its
+    distributed plan, as the forced bench run does."""
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+            yield
+
+    return forced

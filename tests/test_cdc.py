@@ -156,7 +156,7 @@ def _no_auto_broadcast(spark):
     return ctx()
 
 
-def test_huge_batch_falls_back_to_shuffle_join(spark, tmp_path):
+def test_huge_batch_falls_back_to_shuffle_join(spark, tmp_path, monkeypatch):
     """A file-backed change batch whose estimated key volume exceeds the
     broadcast threshold must take the shuffled semi/anti join path (no
     FORCED broadcast of the key set) and still produce the identical
@@ -168,9 +168,8 @@ def test_huge_batch_falls_back_to_shuffle_join(spark, tmp_path):
     )
     with _no_auto_broadcast(spark):
         small = cdc.apply_changes(_target(spark), changes, ["id"], "seq")
-        huge = cdc.apply_changes(
-            _target(spark), changes, ["id"], "seq", broadcast_max_bytes=0
-        )
+        monkeypatch.setattr(cdc, "BROADCAST_KEYS_MAX_BYTES", 0)
+        huge = cdc.apply_changes(_target(spark), changes, ["id"], "seq")
         # default path hint-broadcasts the key set; above-threshold must not
         assert "broadcastexchange" in _plan_str(small)
         assert "broadcastexchange" not in _plan_str(huge)
@@ -180,13 +179,14 @@ def test_huge_batch_falls_back_to_shuffle_join(spark, tmp_path):
         )
 
 
-def test_impacted_keys_shuffle_fallback_matches(spark, tmp_path):
+def test_impacted_keys_shuffle_fallback_matches(spark, tmp_path, monkeypatch):
     changes = _parquet_changes(
         spark, tmp_path, [(2, "x", 0.0, "U", 1), (9, "y", 0.0, "I", 1)]
     )
     with _no_auto_broadcast(spark):
         bc = cdc.impacted_keys(_target(spark), changes, ["id"])
-        sh = cdc.impacted_keys(_target(spark), changes, ["id"], broadcast_max_bytes=0)
+        monkeypatch.setattr(cdc, "BROADCAST_KEYS_MAX_BYTES", 0)
+        sh = cdc.impacted_keys(_target(spark), changes, ["id"])
         assert "broadcastexchange" in _plan_str(bc)
         assert "broadcastexchange" not in _plan_str(sh)
         assert (
@@ -334,34 +334,6 @@ def test_incremental_agg_matches_recompute_and_chains(spark):
     assert got == want
     assert "b" not in got  # vanished group dropped, not kept at zero
     assert got["c"] == (2, 18.0)
-
-
-def test_scd2_apply_incremental_equals_one_shot(spark):
-    target = _target(spark)
-    b1 = [
-        (2, "bob2", 21.0, "U", 1),
-        (3, None, 0.0, "D", 1),      # delete carol
-        (4, "dave", 40.0, "I", 1),
-    ]
-    b2 = [
-        (2, "bob3", 22.0, "U", 2),   # second update on bob
-        (3, "carol2", 33.0, "I", 2),  # re-insert a deleted key
-        (4, None, 0.0, "D", 2),       # delete the key b1 inserted
-        (5, "eve", 50.0, "I", 2),
-    ]
-    one_shot = cdc.scd2_history(target, _changes(spark, b1 + b2), ["id"], "seq")
-    h = cdc.scd2_history(target, _changes(spark, b1), ["id"], "seq")
-    folded = cdc.scd2_apply(h, _changes(spark, b2), ["id"], "seq")
-    key = lambda r: (r.id, r.valid_from_seq)
-    a = sorted(map(tuple, one_shot.collect()))
-    b = sorted(map(tuple, folded.select(*one_shot.columns).collect()))
-    assert a == b
-    # spot checks: bob has three versions, last open; dave closed with
-    # no open version; carol re-opened
-    rows = {(r.id, r.valid_from_seq): r for r in folded.collect()}
-    assert rows[(2, 2)].is_current is True and rows[(2, 1)].valid_to_seq == 2
-    assert rows[(4, 1)].valid_to_seq == 2 and (4, 2) not in rows
-    assert rows[(3, 2)].is_current is True
 
 
 def test_scd2_history_change_at_seq_zero_deterministic(spark):

@@ -150,40 +150,6 @@ def test_scd2_versions_match_model(spark, batch, target_keys):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(batch=batches(), target_keys=st.sets(KEYS, max_size=8), split=st.integers(0, 12))
-@pytest.mark.slow
-def test_scd2_fold_equals_one_shot_at_any_split(spark, batch, target_keys, split):
-    """Folding the change log in two arbitrary (seq-ordered) pieces is
-    identical to one-shot history — for ANY split point."""
-    target = spark.createDataFrame(
-        [(k, 1000 + k) for k in sorted(target_keys)] or [(99, 0)], "pk int, v int"
-    )
-    rows = sorted(
-        [(k, op, seq + 1, val) for k, op, seq, val in batch], key=lambda r: r[2]
-    )
-    cut = min(split, len(rows))
-    b1, b2 = rows[:cut], rows[cut:]
-
-    def frame(rs):
-        return spark.createDataFrame(
-            rs or [(0, "U", -1, 0)], "pk int, op string, seq int, v int"
-        ).where("seq >= 0").select("pk", "v", "op", "seq")
-
-    one_shot = cdc.scd2_history(target, frame(rows), ["pk"], "seq")
-    h = cdc.scd2_history(target, frame(b1), ["pk"], "seq")
-    folded = cdc.scd2_apply(
-        h, cdc.scd2_fresh_changes(h, frame(b2), ["pk"], "seq"), ["pk"], "seq"
-    )
-    a = sorted(map(tuple, one_shot.collect()))
-    b = sorted(map(tuple, folded.select(*one_shot.columns).collect()))
-    assert a == b
-
-
-@settings(
-    max_examples=20,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 @given(
     old_rows=st.dictionaries(KEYS, st.integers(0, 100), max_size=8),
     new_rows=st.dictionaries(KEYS, st.integers(0, 100), max_size=8),

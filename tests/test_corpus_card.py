@@ -16,12 +16,10 @@ from aws_big_data_blog_dmscdc_walkthrough_spark.plans import corpus_ml
 SF = "/root/testdata/sf0.001"
 
 
-def test_ingest_novelty_fused_and_distributed_paths_agree(spark):
+def test_ingest_novelty_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused novelty solver (one numpy pass in one task)
     and the distributed explode/distinct/min-batch plan emit the same
     per-batch rows with bit-identical new-share doubles."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
-
     def run():
         release_persisted()
         return sorted(
@@ -32,22 +30,16 @@ def test_ingest_novelty_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     release_persisted()
 
 
-def test_emb_covariance_fused_and_distributed_paths_agree(spark):
+def test_emb_covariance_fused_and_distributed_paths_agree(spark, distributed):
     """The fused covariance kernel (Dekker HALF_UP quantization + int64
     sums + Fraction->double) and the distributed 153-DECIMAL-aggregate
     plan emit bit-identical cov/corr doubles."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
-
     def run():
         release_persisted()
         return sorted(
@@ -58,25 +50,21 @@ def test_emb_covariance_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     release_persisted()
 
 
-def test_emb_covariance_paths_agree_on_constant_dimensions(spark, tmp_path):
+def test_emb_covariance_paths_agree_on_constant_dimensions(
+    spark, tmp_path, distributed
+):
     """A constant dimension has zero variance: every corr that divides by
     it is NULL in both paths (the fused kernel must not emit numpy's
     inf/NaN), and every other cov/corr double stays bit-identical."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
 
     src = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
     emb = np.array(src["embedding"].to_pylist(), dtype=np.float32)
@@ -100,12 +88,8 @@ def test_emb_covariance_paths_agree_on_constant_dimensions(spark, tmp_path):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     for i, j, _, corr in fused:
         assert (corr is None) == (i in const or j in const), (i, j, corr)

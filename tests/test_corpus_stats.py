@@ -77,17 +77,15 @@ def test_oracle_constants_in_sync():
 
 
 def test_tfidf_pin_engages_on_spread_frames(spark, tmp_path):
-    """Round-11 regression for the r10 sf10 pin break: text_tfidf_topk
-    spreads its input FIRST, and spread outputs report no inputFiles —
-    so the r9 size probe (and its inputFiles fallback) both saw nothing
-    and the tf→df branches raced the unpopulated cache again. The pin
-    decision must now ride the scan bytes spread() stamps on its output:
-    a spread frame backed by >SPREAD_MIN_INPUT_BYTES of files pins (one
+    """text_tfidf_topk spreads its input FIRST, and spread outputs
+    report no inputFiles; the pin decision must still see the bytes of
+    the files under the spread (scan_bytes reads the analyzed plan): a
+    spread frame backed by >SPREAD_MIN_INPUT_BYTES of files pins (one
     extra tracked persist beyond spread's own), a small one does not."""
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
         SPREAD_MIN_INPUT_BYTES,
-        _estimated_scan_partitions,
+        _planned_scan_partitions,
         release_persisted,
         spread,
     )
@@ -114,7 +112,7 @@ def test_tfidf_pin_engages_on_spread_frames(spark, tmp_path):
     spark.conf.set(key, str(64 * 1024 * 1024))
     try:
         raw = spark.read.parquet(big_p)
-        assert _estimated_scan_partitions(raw) < spark.sparkContext.defaultParallelism
+        assert _planned_scan_partitions(raw) < spark.sparkContext.defaultParallelism
         big = spread(raw)
     finally:
         spark.conf.set(key, prev)

@@ -131,7 +131,7 @@ def test_ngram_block_cap_rescores_cold_survivors_exactly(spark):
     assert set(capped) <= set(exact)
 
 
-def test_release_persisted_drains_all_caches(spark):
+def test_release_persisted_drains_all_caches(spark, distributed):
     import __spark_entry__ as entry_mod
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup
     from tests.conftest import SF_SMOKE
@@ -147,9 +147,7 @@ def test_release_persisted_drains_all_caches(spark):
     # Force the DISTRIBUTED plans: the round-14 fused small-input paths
     # persist nothing (one mapInPandas task), so only the distributed
     # shapes exercise the tracker this test pins.
-    orig = dedup._scan_sizes
-    dedup._scan_sizes = lambda df: [10**9]
-    try:
+    with distributed():
         qs["dedup_minhash_lsh"](spark, SF_SMOKE).count()
         assert len(live_ids() - baseline) > 0
         dedup.release_persisted()
@@ -160,8 +158,6 @@ def test_release_persisted_drains_all_caches(spark):
         qs["dedup_exact"](spark, SF_SMOKE).count()
         assert len(live_ids() - baseline) < max(n_after_simhash, 1)
         dedup.release_persisted()
-    finally:
-        dedup._scan_sizes = orig
 
 
 @pytest.mark.slow
@@ -193,29 +189,55 @@ def test_decontaminate_flags_eval_overlap(spark):
     assert 2 not in out and 3 not in out
 
 
-def test_estimated_scan_partitions_tracks_spark_packing(spark, tmp_path):
-    """The no-RDD estimate must mirror Spark's FilePartition packing on
-    the two shapes that diverge without open-cost/bytes-per-core math:
-    many tiny files (packed into FEW partitions, not len(files)) and a
-    parquet directory read back whole."""
+def test_scan_bytes_and_planned_partitions_read_spark_plan(spark, tmp_path):
+    """scan_bytes sums the file-relation leaves of the analyzed plan: the
+    on-disk bytes of the files, before and after spread(), counted once
+    for a self-union, None when no file is read. The planned-partition
+    count equals the partitions of Spark's own scan. Checked on a
+    multi-file parquet directory and on a lake table read through
+    manifest.read_files."""
+    import glob
+    import os
+
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
-        _estimated_scan_partitions,
+        _planned_scan_partitions,
+        release_persisted,
+        scan_bytes,
+        spread,
     )
+    from aws_big_data_blog_dmscdc_walkthrough_spark.sources import lake_writer, manifest
 
-    # many tiny files: 64 single-row files
-    p = str(tmp_path / "tiny")
-    spark.range(64).repartition(64).write.parquet(p)
-    df = spark.read.parquet(p)
-    est = _estimated_scan_partitions(df)
-    actual = df.rdd.getNumPartitions()
-    assert est is not None
-    # the estimate may be off by packing greediness but NOT by the old
-    # len(files) overshoot (64 vs ~32); allow 50% slack
-    assert est <= max(actual * 1.5, actual + 2)
-    assert est >= max(1, actual // 2)
-
-    # non-file source → None (caller falls back to the RDD probe)
-    assert _estimated_scan_partitions(spark.range(10).toDF("x")) is None
+    rows = spark.range(64).selectExpr("id", "cast(id * 7 as string) AS s")
+    parts_dir = str(tmp_path / "parts")
+    rows.repartition(8).write.parquet(parts_dir)
+    lake = str(tmp_path / "lake")
+    lake_writer.write_initial(rows.repartition(3), lake)
+    man = manifest.read_manifest(spark, lake)
+    frames = {
+        parts_dir: spark.read.parquet(parts_dir),
+        lake: manifest.read_files(
+            spark, lake, man["files"], manifest.table_schema(spark, lake, man)
+        ),
+    }
+    for path, df in frames.items():
+        on_disk = sum(
+            os.path.getsize(f)
+            for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
+        )
+        assert on_disk > 0
+        assert scan_bytes(df) == on_disk
+        assert scan_bytes(df.union(df)) == on_disk
+        assert _planned_scan_partitions(df) == df.rdd.getNumPartitions()
+        # spread's two outcomes: the frame itself, or a repartitioned
+        # persisted frame, whose inputFiles() reads the cache
+        persisted = df.repartition(2).persist()
+        for out in (spread(df, min_bytes=0), persisted):
+            assert scan_bytes(out) == on_disk
+            assert scan_bytes(out.select("id")) == on_disk
+        persisted.unpersist()
+    release_persisted()
+    assert scan_bytes(spark.createDataFrame([(1,)], "x long")) is None
+    assert _planned_scan_partitions(spark.createDataFrame([(1,)], "x long")) is None
 
 
 def test_split_minhash_pairs_matches_two_frame_form(spark):
@@ -249,7 +271,7 @@ def test_split_minhash_pairs_matches_two_frame_form(spark):
 
 
 @pytest.mark.slow
-def test_minhash_fused_and_distributed_paths_agree(spark):
+def test_minhash_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused MinHash-LSH plan (one mapInPandas task)
     and the distributed banded-join plan emit the same pairs with
     bit-identical jaccard doubles — the fused band test and posting
@@ -282,20 +304,15 @@ def test_minhash_fused_and_distributed_paths_agree(spark):
 
     # bucket_cap / threshold<=0 callers must keep the distributed plan
     # (the cap's recall set is defined on band buckets there; the fused
-    # composition argument needs threshold > 0). Checked BEFORE the
-    # forced-distributed run below: spread() stamps the (faked) scan
-    # size onto the fixture frame, which would poison the gate probe.
+    # composition argument needs threshold > 0). Checked outside the
+    # forced-distributed block below, where every gate reads "huge".
     assert dd._minhash_direct_eligible(docs, 0.5, None)
     assert not dd._minhash_direct_eligible(docs, 0.5, 500)
     assert not dd._minhash_direct_eligible(docs, 0.0, None)
 
     fused = run(0.3)  # fixture input -> small -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run(0.3)
-    finally:
-        dd._scan_sizes = orig
     assert len(fused) > 30  # the corpus really is dense
     assert fused == dist  # same pairs AND bit-identical doubles
 
@@ -320,7 +337,7 @@ def test_minhash_fused_and_distributed_paths_agree(spark):
     dd.release_persisted()
 
 
-def test_tf_cosine_fused_and_distributed_paths_agree(spark):
+def test_tf_cosine_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused TF-cosine plan (Catalyst-built term
     arrays, weighted posting dots in one task) and the distributed
     prefix-filtered plan emit the same pairs with bit-identical
@@ -340,17 +357,13 @@ def test_tf_cosine_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     dd.release_persisted()
 
 
-def test_containment_fused_and_distributed_paths_agree(spark):
+def test_containment_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused containment plan and the distributed
     inverted-index plan emit the same directed pairs with bit-identical
     containment doubles."""
@@ -368,17 +381,13 @@ def test_containment_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     dd.release_persisted()
 
 
-def test_decontaminate_fused_and_distributed_paths_agree(spark):
+def test_decontaminate_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused decontamination plan (tagged union, one
     mapInPandas task) and the distributed broadcast-join plan emit the
     same (id, overlap) rows."""
@@ -399,17 +408,13 @@ def test_decontaminate_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     dd.release_persisted()
 
 
-def test_simhash_fused_and_distributed_paths_agree(spark):
+def test_simhash_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused SimHash plan (one mapInPandas task) and
     the distributed composite-key self-join emit the same pairs with
     the same hamming integers — including empty-text docs, whose
@@ -440,12 +445,8 @@ def test_simhash_fused_and_distributed_paths_agree(spark):
         }
 
     fused = run()  # fixture input -> small -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert (9001, 9002) in fused  # the empty-doc pair really is there
     assert len(fused) > 20
     assert fused == dist
@@ -553,12 +554,14 @@ def test_fuzzy_match_relinks_clipped_names(spark):
 def test_spread_adaptive_size_gate(spark, tmp_path):
     """spread() contract (round 8): a small under-split scan passes
     through untouched (no shuffle, no cache); past the byte threshold it
-    repartitions+persists; min_bytes=0 forces the spread regardless."""
+    repartitions+persists; min_bytes=0 forces the spread regardless.
+    Both scan_bytes and the under-split test read Spark's plan, so the
+    size survives the repartition+persist."""
     from pyspark.sql import functions as F
 
     from aws_big_data_blog_dmscdc_walkthrough_spark.operators.dedup import (
         SPREAD_MIN_INPUT_BYTES,
-        _estimated_scan_partitions,
+        _planned_scan_partitions,
         release_persisted,
         scan_bytes,
         spread,
@@ -569,7 +572,7 @@ def test_spread_adaptive_size_gate(spark, tmp_path):
     small = spark.read.parquet(small_p)
     out = spread(small)
     assert out is small  # no repartition, no persist
-    # even the pass-through stamps the measured bytes for downstream gates
+    # the pass-through frame reports its file bytes to downstream gates
     assert scan_bytes(out) is not None and scan_bytes(out) < SPREAD_MIN_INPUT_BYTES
 
     forced = spread(small, min_bytes=0)
@@ -591,23 +594,22 @@ def test_spread_adaptive_size_gate(spark, tmp_path):
     prev = spark.conf.get(key)
     spark.conf.set(key, str(64 * 1024 * 1024))
     try:
-        assert _estimated_scan_partitions(big) < spark.sparkContext.defaultParallelism
+        assert _planned_scan_partitions(big) < spark.sparkContext.defaultParallelism
         out_big = spread(big)
     finally:
         spark.conf.set(key, prev)
     assert out_big is not big
     assert out_big.storageLevel.useMemory or out_big.storageLevel.useDisk
-    # round-11 regression (the r10 tfidf pin break): the repartitioned
-    # output itself reports no inputFiles, so a direct probe is blind —
-    # the stamped measurement must survive the spread and report the
-    # RAW frame's size to downstream adaptive gates
+    # the repartitioned output reports no inputFiles (its optimized plan
+    # reads the cache), yet downstream adaptive gates must see the RAW
+    # frame's size: the analyzed plan keeps the file leaf
     assert not out_big.inputFiles()
     assert scan_bytes(out_big) == scan_bytes(big)
     assert scan_bytes(out_big) >= SPREAD_MIN_INPUT_BYTES
     release_persisted()
 
 
-def test_ngram_index_and_direct_paths_agree(spark):
+def test_ngram_index_and_direct_paths_agree(spark, distributed):
     """The round-9 inverted-index plan (large inputs) and the direct
     blocked-join plan (small inputs) are both exact — same pairs, same
     bit-exact jaccard values — on a corpus dense with near-dups."""
@@ -637,12 +639,8 @@ def test_ngram_index_and_direct_paths_agree(spark):
         }
 
     direct = run()  # fixture input -> small -> direct path
-    orig = dedup._scan_sizes
-    dedup._scan_sizes = lambda df: [10**9]  # force the index path
-    try:
+    with distributed():  # force the index path
         indexed = run()
-    finally:
-        dedup._scan_sizes = orig
     assert len(direct) > 50  # the corpus really is dense
     assert direct == indexed  # same pairs AND bit-identical doubles
 
@@ -843,7 +841,7 @@ def test_tf_cosine_ngram_terms_match_bruteforce(spark):
     assert got == want and want
 
 
-def test_substring_fused_and_distributed_paths_agree(spark):
+def test_substring_fused_and_distributed_paths_agree(spark, distributed):
     """The small-input fused substring-dup report (one numpy pass in one
     task) and the distributed explode + hash-window plan emit the same
     per-doc rows with bit-identical dup fractions."""
@@ -859,17 +857,13 @@ def test_substring_fused_and_distributed_paths_agree(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused and fused == dist
     dd.release_persisted()
 
 
-def test_substring_fused_and_distributed_paths_agree_on_null_ids(spark):
+def test_substring_fused_and_distributed_paths_agree_on_null_ids(spark, distributed):
     """Null ids form one group of their own in both paths, as the
     distributed groupBy(id, hash) makes them (the fused kernel's factorize
     must not drop them into a -1 code)."""
@@ -891,12 +885,8 @@ def test_substring_fused_and_distributed_paths_agree_on_null_ids(spark):
         )
 
     fused = run()  # small scan -> fused path
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed path
-    try:
+    with distributed():  # force the distributed path
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert fused == dist
     assert sum(1 for r in fused if r[0][0]) == 1  # exactly one null-id row
     dd.release_persisted()

@@ -717,9 +717,7 @@ def test_peak_concurrency_no_day_grain_window(spark, monkeypatch, tmp_path):
     # force the DISTRIBUTED sweep: this test pins its plan shape (the
     # round-14 local solve has no window at all; its values are pinned
     # by test_peak_concurrency_local_and_distributed_paths_agree)
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as _dd
-
-    monkeypatch.setattr(_dd, "_scan_sizes", lambda df: [10**9])
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     res = analytics.q_events_peak_concurrency(spark, "ignored")
     got = {
         str(r.day)[:10]: (r.peak_concurrency, r.ts_at_peak_us)
@@ -1269,11 +1267,10 @@ def test_customer_cadence_hand_computed(spark, monkeypatch, tmp_path):
     assert got == {1: (3, 0, 10, 5.0, 10)}
 
 
-def test_peak_concurrency_local_and_distributed_paths_agree(spark):
+def test_peak_concurrency_local_and_distributed_paths_agree(spark, distributed):
     """The driver-side #148 sweep (small-scan gate) and the two-level
     distributed sweep emit identical rows — the computation is integer
     epoch-microsecond arithmetic end to end."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
     from aws_big_data_blog_dmscdc_walkthrough_spark.plans import analytics as A
 
     sf = "/root/testdata/sf0.001"
@@ -1284,21 +1281,16 @@ def test_peak_concurrency_local_and_distributed_paths_agree(spark):
         )
 
     local = rows()  # small scan -> local sweep
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed sweep
-    try:
+    with distributed():  # force the distributed sweep
         dist = rows()
-    finally:
-        dd._scan_sizes = orig
     assert local and local == dist
 
 
-def test_mad_outliers_local_and_distributed_paths_agree(spark):
+def test_mad_outliers_local_and_distributed_paths_agree(spark, distributed):
     """The driver-side #146 report (small-scan gate) matches the
     distributed two-median plan bit-for-bit — the local medians
     replicate Spark's Percentile(0.5) interpolation on the sorted
     doubles."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
     from aws_big_data_blog_dmscdc_walkthrough_spark.plans import analytics as A
 
     sf = "/root/testdata/sf0.001"
@@ -1309,20 +1301,15 @@ def test_mad_outliers_local_and_distributed_paths_agree(spark):
         )
 
     local = rows()  # small scan -> local solve
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed plan
-    try:
+    with distributed():  # force the distributed plan
         dist = rows()
-    finally:
-        dd._scan_sizes = orig
     assert local and local == dist
 
 
-def test_attribution_linear_local_and_distributed_paths_agree(spark):
+def test_attribution_linear_local_and_distributed_paths_agree(spark, distributed):
     """The driver-side #131 report (small-scan gate) matches the
     distributed range-join plan — IEEE per-pair credit division plus a
     Python-Decimal replay of the DECIMAL(30,10) sums."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import dedup as dd
     from aws_big_data_blog_dmscdc_walkthrough_spark.plans import analytics as A
 
     sf = "/root/testdata/sf0.001"
@@ -1334,10 +1321,6 @@ def test_attribution_linear_local_and_distributed_paths_agree(spark):
         )
 
     local = rows()  # small scan -> local solve
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed plan
-    try:
+    with distributed():  # force the distributed plan
         dist = rows()
-    finally:
-        dd._scan_sizes = orig
     assert local and local == dist

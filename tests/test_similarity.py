@@ -426,15 +426,12 @@ def test_mmr_deterministic_and_selected_sims_monotone(spark):
     assert rel[0] == max(rel)
 
 
-def test_knn_propagate_local_and_distributed_paths_agree(spark):
+def test_knn_propagate_local_and_distributed_paths_agree(spark, distributed):
     """The driver-side local solve (small-scan gate) and the distributed
     banded-join plan emit identical rows — including the bit-sensitive
     cosine-rank boundaries (the local fold reproduces the JVM left
     fold's IEEE rounding one dimension at a time)."""
-    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import (
-        dedup as dd,
-        similarity as S,
-    )
+    from aws_big_data_blog_dmscdc_walkthrough_spark.operators import similarity as S
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     from pyspark.sql import functions as F
@@ -451,10 +448,6 @@ def test_knn_propagate_local_and_distributed_paths_agree(spark):
         )
 
     local = run()  # small scan -> local solve
-    orig = dd._scan_sizes
-    dd._scan_sizes = lambda df: [10**9]  # force the distributed plan
-    try:
+    with distributed():  # force the distributed plan
         dist = run()
-    finally:
-        dd._scan_sizes = orig
     assert local and local == dist
